@@ -1487,6 +1487,8 @@ def dsir_bucket_counts(
         raise ValueError("n_buckets must be >= 2")
     if not ns or any(n < 1 for n in ns):
         raise ValueError("ns must be a non-empty tuple of orders >= 1")
+    if reference is None and doc_counts is None:
+        raise ValueError("dsir_bucket_counts needs reference or doc_counts; both are None")
     if doc_counts is not None:
         counts = doc_counts.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
     else:

@@ -45,8 +45,8 @@ the standardized Arrow batch, reduced to an (M+1)-float64 accumulator
 per partition. This replaces the round-2 design (|k_grid|×|alphas|
 aggregate expressions of up to max_k terms each in one select), which
 hit Spark's codegen width cliff at the default ``max_k=100`` — the same
-planning/codegen-width cost class that drove ``GRAM_JVM_MAX_P`` down to
-trivial widths in ``kernels.py``.
+planning/codegen-width cost class that makes every moment and Gram scan
+in ``kernels.py`` an Arrow reduction.
 Expression width is now O(p) regardless of the k grid.
 
 The k grid replicates ``_build_k_grid`` exactly (auto_k.py:35-48);

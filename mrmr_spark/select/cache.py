@@ -110,21 +110,11 @@ def build_cache(
                 f"{n_rows} rows but {n_keys} distinct keys."
             )
 
-    if len(feature_cols) > kernels.MOMENTS_JVM_MAX_P:
-        # wide frames: one O(p) Arrow scan (JVM aggregate planning cliff)
-        p1 = kernels.moments_singlepass_pass(
-            src, feature_cols, None, "weight", quantize_f32=False
-        )
-        x_ss_unw = p1["x_ss_unw"]
-    else:
-        p1 = kernels.impute_mean_pass(src, feature_cols, "weight", None, quantize_f32=False)
-        p2 = kernels.centered_moments_pass(
-            src, feature_cols, None, "weight", p1["impute_means"], p1["col_wmeans"],
-            quantize_f32=False,
-        )
-        x_ss_unw = p2["x_ss_unw"]
+    p1 = kernels.moments_singlepass_pass(
+        src, feature_cols, None, "weight", quantize_f32=False
+    )
     n = max(p1["n"], 1.0)
-    stds = np.sqrt(np.maximum(x_ss_unw / n, 0.0))
+    stds = np.sqrt(np.maximum(p1["x_ss_unw"] / n, 0.0))
     valid = np.where(stds > min_std)[0]
     if valid.size == 0:
         raise ValueError("All features were filtered out (constant or invalid).")

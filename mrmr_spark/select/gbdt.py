@@ -151,13 +151,9 @@ def select_gbdt(
     # mean-impute with the engine's standard finite-mean pass
     from mrmr_spark.select import kernels
 
-    if len(feature_cols) > kernels.MOMENTS_JVM_MAX_P:
-        # wide frames: one O(p) Arrow scan (JVM aggregate planning cliff)
-        p1 = kernels.moments_singlepass_pass(
-            df, feature_cols, None, wcol, quantize_f32=False
-        )
-    else:
-        p1 = kernels.impute_mean_pass(df, feature_cols, wcol, None, quantize_f32=False)
+    p1 = kernels.moments_singlepass_pass(
+        df, feature_cols, None, wcol, quantize_f32=False
+    )
     imputed = []
     for j, c in enumerate(feature_cols):
         x = F.col(c).cast("double")

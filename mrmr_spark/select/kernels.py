@@ -1,14 +1,13 @@
 """Distributed reduction kernels for the selection layer.
 
-Two tiers, chosen by output shape (SURVEY.md §4.2):
+Every selection statistic — O(p) moments (imputation means, weighted and
+centered moments, per-class ANOVA sums) and the O(p²) Gram (the redundancy
+matrix) — is ONE ``mapInArrow`` block reduction: per partition, NumPy
+accumulates the statistic over Arrow batches (``G += Zᵀ(w⊙Z)`` for the
+Gram, per-batch centering plus Chan merging for the moments), then the
+driver merges the per-partition accumulators:
 
-- **O(p) moments** (imputation means, weighted/centered moments, per-class
-  ANOVA sums): built-in aggregate expressions — one whole-stage-codegen scan
-  computes all p columns' statistics JVM-side, zero Python in the hot path.
-- **O(p²) Gram** (the redundancy matrix): a ``mapInArrow`` block reduction —
-  per partition ``G += Zᵀ(w⊙Z)`` via NumPy GEMM, then a driver sum:
-
-    mapInArrow(partition -> float64 accumulator vector)  ->  driver np.sum
+    mapInArrow(partition -> float64 accumulator vector)  ->  driver merge
 
 Each partition emits ONE row containing its accumulator (serialized float64
 bytes), i.e. communication is ``numPartitions × out_len × 8`` bytes — for the
@@ -41,16 +40,12 @@ _ACC_SCHEMA = "pid long, acc binary"
 #: partition counts above this get a two-level (tree) combine before collect
 TREE_COMBINE_THRESHOLD = 64
 
-#: plan-audit hook (tools/audit_plans.py): when set to a list, every ARROW
-#: kernel scan (everything routed through ``_merge_collect``) appends its
-#: executed physical plan string after its collect. The selection passes
-#: drive their own Spark jobs internally (the caller only sees numpy
-#: results), so the PLANS.md audit cannot reach these plans from any
-#: returned DataFrame — this is the tap. The JVM-aggregate kernels for
-#: narrow frames (impute_mean_pass, centered_moments_pass,
-#: class_moments_pass, _gram_jvm) collect directly and are NOT captured —
-#: the audit targets the wide/fused Arrow paths, which are the default
-#: plans. None (the default) is free.
+#: plan-audit hook (tools/audit_plans.py): when set to a list, every kernel
+#: scan (all of them go through ``_merge_collect``) appends its executed
+#: physical plan string after its collect. The selection passes drive their
+#: own Spark jobs internally (the caller only sees numpy results), so the
+#: PLANS.md audit cannot reach these plans from any returned DataFrame —
+#: this is the tap. None (the default) is free.
 PLAN_LOG: list[str] | None = None
 
 
@@ -734,8 +729,8 @@ def fused_singlepass_class_stats(
     C_imp = Caa - afm - afm.T + np.outer(m, m) * Cff
     col_wmeans = mu_a + m * (1.0 - mu_f)
 
-    # centered at the global weighted mean, like class_moments_pass —
-    # from the per-class centered blocks (no raw-sum cancellation)
+    # centered at the global weighted mean — from the per-class centered
+    # blocks (no raw-sum cancellation)
     class_w, B, A = _class_anova_moments(cls, m, col_wmeans, p)
     return {
         "sw": np.float64(sw),
@@ -747,15 +742,6 @@ def fused_singlepass_class_stats(
         "B": B,
         "A": A,
     }
-
-
-#: width above which the per-column moment statistics run as ONE Arrow
-#: scan instead of the 6p+3 / 3p+1 JVM aggregate selects. Same cost class
-#: as the Gram crossover: Catalyst planning + codegen of O(p) deep
-#: expression trees dominates — measured 5.7 s at p=50, 11.1 s at p=100,
-#: 24 s (with janino 64KB-method overflow → interpreted fallback) at
-#: p=200 for the JVM 2-pass, vs a flat sub-second Arrow pass.
-MOMENTS_JVM_MAX_P = 24
 
 
 def _colwise_chan_merge(sw_a, st_a, sw_b, st_b, p):
@@ -793,13 +779,14 @@ def moments_singlepass_pass(
     weight_col: str | None,
     quantize_f32: bool = True,
 ) -> dict:
-    """ONE Arrow scan replacing impute_mean_pass + centered_moments_pass
-    for wide frames: per-column weighted moments of the indicator pair
-    ``(f⊙x_q, f)`` and y, centered per batch and Chan-merged (stable), plus
-    exact raw-f64 finite sums. O(p) accumulator — never the p×p Gram.
-    Driver algebra (the same affine identities as the fused Gram kernels)
-    yields impute means, weighted means, x_ss, xy_cov, y_ss and the
-    unweighted centered sumsq used for constant-column pruning."""
+    """The O(p) moments scan (imputation, weighted centering, relevance,
+    constant-column pruning) at every width: per-column weighted moments of
+    the indicator pair ``(f⊙x_q, f)`` and y, centered per batch and
+    Chan-merged (stable), plus exact raw-f64 finite sums. O(p) accumulator
+    — never the p×p Gram. Driver algebra (the same affine identities as the
+    fused Gram kernels) yields impute means, weighted means, x_ss, xy_cov,
+    y_ss and the unweighted centered sumsq used for constant-column
+    pruning."""
     p = len(feature_cols)
     cols = list(feature_cols)
     HAS_Y = y_col is not None
@@ -938,131 +925,6 @@ def moments_singlepass_pass(
     }
 
 
-# ---------------------------------------------------------------------------
-# Pass 1: finite-value means (imputation) + weighted means — pure JVM aggs
-# ---------------------------------------------------------------------------
-
-def _fin(col):
-    return ~F.isnull(col) & ~F.isnan(col) & (F.abs(col) != float("inf"))
-
-
-def _q32(col, quantize_f32: bool):
-    return col.cast("float").cast("double") if quantize_f32 else col
-
-
-def impute_mean_pass(
-    df: DataFrame,
-    feature_cols: list[str],
-    weight_col: str | None,
-    y_col: str | None,
-    quantize_f32: bool = True,
-) -> dict:
-    """One whole-stage-codegen scan -> everything needed to impute and
-    weighted-center: per-column finite counts/sums (raw f64, matching the
-    reference's ``np.nanmean`` before the f32 cast), weighted sums of the
-    f32-quantized finite values, non-finite weight mass, and globals.
-
-    Expressed as built-in aggregate expressions (4p + 4 aggs in one
-    ``select``) — per-column moments stay entirely JVM-side; Python is
-    reserved for the O(p²) Gram kernel (SURVEY.md §4.2 'column-parallel
-    loops → per-column aggregate expressions')."""
-    p = len(feature_cols)
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    aggs = []
-    for c in feature_cols:
-        x = F.col(c).cast("double")
-        xq = _q32(x, quantize_f32)
-        fin = _fin(x)
-        zero = F.lit(0.0)
-        aggs += [
-            F.count(F.when(fin, 1)),                                   # n_fin
-            F.sum(F.when(fin, x).otherwise(zero)),                      # sum_fin raw f64
-            F.sum(F.when(fin, w * xq).otherwise(zero)),                 # wx quantized
-            F.sum(F.when(~fin, w).otherwise(zero)),                     # w_nonfin
-        ]
-    if y_col is not None:
-        yraw = F.col(y_col).cast("double")
-        yq = _q32(yraw, quantize_f32)
-        aggs += [
-            F.sum(w), F.count(F.lit(1)), F.sum(w * yq),
-            F.count(F.when(~_fin(yraw), 1)),                            # y_nonfinite
-        ]
-    else:
-        aggs += [F.sum(w), F.count(F.lit(1)), F.sum(F.lit(0.0)),
-                 F.sum(F.lit(0))]
-
-    row = df.select(*[a.alias(f"a{i}") for i, a in enumerate(aggs)]).collect()[0]
-    vals = np.array([0.0 if v is None else float(v) for v in row], dtype=np.float64)
-    per = vals[: 4 * p].reshape(p, 4).T
-    n_fin, sum_fin, wx, w_nonfin = per
-    sw, n, swy = vals[4 * p], vals[4 * p + 1], vals[4 * p + 2]
-    y_nonfinite = vals[4 * p + 3]
-
-    impute_means = np.where(n_fin > 0, sum_fin / np.maximum(n_fin, 1), 0.0)
-    m_q = _quantize(impute_means, quantize_f32)
-    wx_imputed = wx + w_nonfin * m_q
-    return {
-        "impute_means": m_q,
-        "n_fin": n_fin,
-        "w_nonfin": w_nonfin,
-        "sw": sw,
-        "n": n,
-        "wy": swy,
-        "y_nonfinite": y_nonfinite,
-        "col_wmeans": wx_imputed / sw,
-    }
-
-
-# ---------------------------------------------------------------------------
-# Pass 2: centered second moments (x_ss, xy_cov, y_ss) — regression relevance
-# ---------------------------------------------------------------------------
-
-def centered_moments_pass(
-    df: DataFrame,
-    feature_cols: list[str],
-    y_col: str | None,
-    weight_col: str | None,
-    impute_means: np.ndarray,
-    col_wmeans: np.ndarray,
-    y_wmean: float = 0.0,
-    quantize_f32: bool = True,
-) -> dict:
-    """Exact two-pass centering, mirroring the reference's shape
-    (/root/reference/sift/estimators/relevance.py:39-45): weighted x_ss,
-    xy_cov per column, global y_ss, plus the *unweighted* centered sumsq
-    around the impute mean (for constant-column pruning, copula.py:64-69 —
-    exact zero for truly constant columns, no cancellation)."""
-    p = len(feature_cols)
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    HAS_Y = y_col is not None
-    yc = None
-    if HAS_Y:
-        yc = _q32(F.col(y_col).cast("double"), quantize_f32) - F.lit(float(y_wmean))
-
-    aggs = []
-    for j, c in enumerate(feature_cols):
-        x = F.col(c).cast("double")
-        xi = F.when(_fin(x), _q32(x, quantize_f32)).otherwise(F.lit(float(impute_means[j])))
-        xc = xi - F.lit(float(col_wmeans[j]))
-        xu = xi - F.lit(float(impute_means[j]))
-        aggs += [
-            F.sum(w * xc * xc),                                  # x_ss weighted
-            F.sum(w * xc * yc) if HAS_Y else F.sum(F.lit(0.0)),  # xy_cov
-            F.sum(xu * xu),                                      # unweighted ss
-        ]
-    aggs.append(F.sum(w * yc * yc) if HAS_Y else F.sum(F.lit(0.0)))
-
-    row = df.select(*[a.alias(f"a{i}") for i, a in enumerate(aggs)]).collect()[0]
-    vals = np.array([0.0 if v is None else float(v) for v in row], dtype=np.float64)
-    per = vals[: 3 * p].reshape(p, 3).T
-    return {
-        "x_ss": per[0],
-        "xy_cov": per[1],
-        "x_ss_unw": per[2],
-        "y_ss": float(vals[3 * p]),
-    }
-
-
 def class_moments_singlepass_pass(
     df: DataFrame,
     feature_cols: list[str],
@@ -1071,8 +933,7 @@ def class_moments_singlepass_pass(
     weight_col: str | None = None,
     quantize_f32: bool = True,
 ) -> dict:
-    """O(C·p)-accumulator Arrow twin of impute_mean_pass +
-    class_moments_pass for wide frames (no Gram): per-class CENTERED
+    """The O(C·p) classification moments scan (no Gram): per-class CENTERED
     weighted blocks of the indicator pair ``(f⊙x_q, f)`` (per-batch
     centering + Chan merge — stable at any |mean|/std, unlike the raw
     Σw·a² sums this replaced) plus exact f64 finite sums; the ANOVA
@@ -1174,128 +1035,6 @@ def class_moments_singlepass_pass(
     }
 
 
-# ---------------------------------------------------------------------------
-# Pass 2 (classification): per-class centered moments
-# ---------------------------------------------------------------------------
-
-def class_moments_pass(
-    df: DataFrame,
-    feature_cols: list[str],
-    ycode_col: str,
-    weight_col: str | None,
-    n_classes: int,
-    impute_means: np.ndarray,
-    col_wmeans: np.ndarray,
-    quantize_f32: bool = True,
-) -> dict:
-    """Per-class weighted sums needed by the weighted-ANOVA F
-    (/root/reference/sift/estimators/relevance.py:57-107), centered at the
-    global weighted mean for numerical stability (algebraically identical).
-
-    Returns B[c,j] = Σ_{i∈c} w·(x−x̄_j), A[c,j] = Σ_{i∈c} w·(x−x̄_j)²,
-    class_w[c] = Σ_{i∈c} w.
-    """
-    p = len(feature_cols)
-    C = int(n_classes)
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    aggs = [F.sum(w).alias("cw")]
-    for j, c in enumerate(feature_cols):
-        x = F.col(c).cast("double")
-        xi = F.when(_fin(x), _q32(x, quantize_f32)).otherwise(F.lit(float(impute_means[j])))
-        xc = xi - F.lit(float(col_wmeans[j]))
-        aggs += [F.sum(w * xc).alias(f"b{j}"), F.sum(w * xc * xc).alias(f"s{j}")]
-
-    rows = df.groupBy(F.col(ycode_col).cast("int").alias("_yc")).agg(*aggs).collect()
-    B = np.zeros((C, p))
-    A = np.zeros((C, p))
-    class_w = np.zeros(C)
-    for r in rows:
-        # skip malformed codes (null, negative, >= C) like the Arrow twins —
-        # int(None) would raise and a -1 would silently merge into class C-1
-        if r["_yc"] is None or not (0 <= int(r["_yc"]) < C):
-            continue
-        c = int(r["_yc"])
-        class_w[c] = float(r["cw"])
-        for j in range(p):
-            B[c, j] = float(r[f"b{j}"] or 0.0)
-            A[c, j] = float(r[f"s{j}"] or 0.0)
-    return {"B": B, "A": A, "class_w": class_w}
-
-
-# ---------------------------------------------------------------------------
-# Pass 3: weighted Gram of standardized columns -> correlation matrix
-# ---------------------------------------------------------------------------
-
-def centered_gram_pass(
-    df: DataFrame,
-    feature_cols: list[str],
-    weight_col: str | None,
-    impute_means: np.ndarray,
-    col_wmeans: np.ndarray,
-    y_col: str | None = None,
-    y_wmean: float = 0.0,
-    quantize_f32: bool = True,
-) -> dict:
-    """ONE scan -> centered weighted Gram C[q,q] (q = p + y) + Σw.
-
-    C_ij = Σ w (x_i − μ_i)(x_j − μ_j); standardization is exact scalar
-    algebra on the driver (R_ij = C_ij/(σ_i σ_j)/Σw), so this single pass
-    yields relevance moments (diag, y column) AND the redundancy matrix —
-    the fused fast path that makes classic mRMR two scans total.
-    JVM aggregates for q <= GRAM_JVM_MAX_P, Arrow GEMM beyond.
-    """
-    ones = np.ones(len(feature_cols))
-    return gram_pass(
-        df, feature_cols, weight_col, impute_means, col_wmeans, ones,
-        y_col=y_col, y_wmean=y_wmean, y_wstd=1.0,
-        quantize_f32=quantize_f32, clip=None, normalize=False,
-    )
-
-
-#: below this width the Gram is computed as p(p+1)/2 JVM aggregate
-#: expressions in one codegen scan (no Python at all); above it, the Arrow
-#: GEMM block reduction wins. Round-3 re-measurement (after worker-BLAS
-#: pinning and warm Python worker pools) moved the crossover far below the
-#: round-2 estimate of 24: per-call wall at p=20 is 2.4 s JVM vs 0.41 s
-#: Arrow even on 500 ROWS (the cost is Catalyst planning + codegen of
-#: ~p²/2 deep expression trees, not execution), and at p=10 it is 0.94 vs
-#: 0.31. The backends tie around p=3 (0.32 vs 0.27), so the JVM path is
-#: kept only for trivial widths where the Python-worker round-trip buys
-#: nothing.
-GRAM_JVM_MAX_P = 4
-
-
-def _gram_jvm(
-    df, feature_cols, weight_col, impute_means, col_wmeans, col_wstds,
-    y_col, y_wmean, y_wstd, quantize_f32,
-) -> tuple[np.ndarray, float]:
-    p = len(feature_cols)
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    zs = []
-    for j, c in enumerate(feature_cols):
-        x = F.col(c).cast("double")
-        xi = F.when(_fin(x), _q32(x, quantize_f32)).otherwise(F.lit(float(impute_means[j])))
-        zs.append((xi - F.lit(float(col_wmeans[j]))) / F.lit(float(col_wstds[j])))
-    if y_col is not None:
-        yq = _q32(F.col(y_col).cast("double"), quantize_f32)
-        zs.append((yq - F.lit(float(y_wmean))) / F.lit(float(y_wstd)))
-    q = len(zs)
-    aggs = []
-    for i in range(q):
-        for j in range(i, q):
-            aggs.append(F.sum(w * zs[i] * zs[j]))
-    aggs.append(F.sum(w))
-    row = df.select(*[a.alias(f"g{i}") for i, a in enumerate(aggs)]).collect()[0]
-    vals = [0.0 if v is None else float(v) for v in row]
-    G = np.zeros((q, q))
-    idx = 0
-    for i in range(q):
-        for j in range(i, q):
-            G[i, j] = G[j, i] = vals[idx]
-            idx += 1
-    return G, float(vals[idx])
-
-
 def gram_pass(
     df: DataFrame,
     feature_cols: list[str],
@@ -1322,12 +1061,6 @@ def gram_pass(
     mq = np.asarray(impute_means, dtype=np.float64)
     HAS_Y = y_col is not None
     q = p + (1 if HAS_Y else 0)
-
-    if p <= GRAM_JVM_MAX_P:
-        G, sw = _gram_jvm(
-            df, cols, weight_col, mq, mu, sd, y_col, y_wmean, y_wstd, quantize_f32
-        )
-        return _finish_gram(G, sw, p, HAS_Y, clip, normalize)
 
     # mapInArrow cannot column-prune: project exactly what the kernel reads
     proj = [F.col(c).cast("double").alias(c) for c in cols]

@@ -27,9 +27,8 @@ from mrmr_spark.select import kernels
 def _require_finite_y(stats: dict) -> None:
     """Reference y-validation (/root/reference/sift/_preprocess.py:199-201),
     enforced from a counter folded into the existing moment pass — no extra
-    scan. Both backends raise identically; without this the single-pass
-    kernel would NaN-poison every score (silently empty selection) while
-    the JVM two-pass silently dropped null-y rows — divergent and wrong."""
+    scan. Without it a non-finite y would NaN-poison every score (silently
+    empty selection)."""
     if float(stats.get("y_nonfinite", 0.0)) > 0:
         raise ValueError("Non-finite values in y are not allowed for regression.")
 
@@ -40,34 +39,18 @@ def f_regression_scores(
     y_col: str,
     weight_col: str | None = None,
     quantize_f32: bool = True,
-    stats: dict | None = None,
 ) -> dict:
     """Returns {'scores', 'x_ss', 'xy_cov', 'y_ss', 'sw', 'wmeans',
-    'wstds', 'impute_means', ...} — the moments are reused by the Gram pass
-    so the full classic-mRMR pipeline costs exactly 3 scans. Beyond
-    MOMENTS_JVM_MAX_P columns the two JVM moment selects are replaced by
-    ONE O(p)-accumulator Arrow scan (kernels.moments_singlepass_pass) —
-    the 6p+3 / 3p+1 aggregate plans hit the measured Catalyst planning
-    cliff (24 s + janino overflow at p=200)."""
-    if stats is None and len(feature_cols) > kernels.MOMENTS_JVM_MAX_P:
-        mo = kernels.moments_singlepass_pass(
-            df, feature_cols, y_col, weight_col, quantize_f32
-        )
-        p1 = mo
-        sw = mo["sw"]
-        y_wmean = mo["wy"] / sw
-        x_ss, xy, y_ss = mo["x_ss"], mo["xy_cov"], mo["y_ss"]
-        x_ss_unw = mo["x_ss_unw"]
-    else:
-        p1 = stats or kernels.impute_mean_pass(df, feature_cols, weight_col, y_col, quantize_f32)
-        sw = p1["sw"]
-        y_wmean = p1["wy"] / sw
-        p2 = kernels.centered_moments_pass(
-            df, feature_cols, y_col, weight_col,
-            p1["impute_means"], p1["col_wmeans"], y_wmean, quantize_f32,
-        )
-        x_ss, xy, y_ss = p2["x_ss"], p2["xy_cov"], p2["y_ss"]
-        x_ss_unw = p2["x_ss_unw"]
+    'wstds', 'impute_means', ...} from ONE O(p)-accumulator Arrow scan
+    (kernels.moments_singlepass_pass) — the moments are reused by the Gram
+    pass so the full classic-mRMR pipeline costs exactly 2 scans."""
+    p1 = kernels.moments_singlepass_pass(
+        df, feature_cols, y_col, weight_col, quantize_f32
+    )
+    sw = p1["sw"]
+    y_wmean = p1["wy"] / sw
+    x_ss, xy, y_ss = p1["x_ss"], p1["xy_cov"], p1["y_ss"]
+    x_ss_unw = p1["x_ss_unw"]
 
     _require_finite_y(p1)
     scores = np.zeros(len(feature_cols), dtype=np.float64)
@@ -108,11 +91,13 @@ def fused_regression_stats(
     scores AND the full correlation matrix + target-correlation vector —
     everything classic mRMR / JMI-r2 needs.
 
-    Two backends computing the same statistics (parity-tested against each
+    Two plans computing the same statistics (parity-tested against each
     other at float64 rounding):
 
-    - ``single_pass=False``: pass 1 = JVM means scan, pass 2 = JVM centered
-      Gram scan (zero Python; caller persists the matrix between passes).
+    - ``single_pass=False``: pass 1 = the O(p) Arrow moments scan
+      (kernels.moments_singlepass_pass), pass 2 = the Arrow centered Gram
+      scan (kernels.gram_pass); the caller persists the matrix between
+      passes.
     - ``single_pass=True``: ONE ``mapInArrow`` scan via the
       indicator-augmented Gram (kernels.fused_singlepass_stats) — NO
       persist needed; the caller should NOT cache. Halves memory traffic:
@@ -128,18 +113,15 @@ def fused_regression_stats(
         col_wmeans, impute_means, n = st["col_wmeans"], st["impute_means"], st["n"]
         p1 = st
     else:
-        if len(feature_cols) > kernels.MOMENTS_JVM_MAX_P:
-            # keep the persisted-path pass 1 off the JVM planning cliff too
-            p1 = kernels.moments_singlepass_pass(
-                df, feature_cols, y_col, weight_col, quantize_f32
-            )
-        else:
-            p1 = kernels.impute_mean_pass(df, feature_cols, weight_col, y_col, quantize_f32)
+        p1 = kernels.moments_singlepass_pass(
+            df, feature_cols, y_col, weight_col, quantize_f32
+        )
         sw = p1["sw"]
         y_wmean = p1["wy"] / sw
-        cg = kernels.centered_gram_pass(
+        cg = kernels.gram_pass(
             df, feature_cols, weight_col, p1["impute_means"], p1["col_wmeans"],
-            y_col=y_col, y_wmean=y_wmean, quantize_f32=quantize_f32,
+            np.ones(len(feature_cols)), y_col=y_col, y_wmean=y_wmean,
+            quantize_f32=quantize_f32, clip=None, normalize=False,
         )
         C, c_y, y_ss = cg["C"], cg["c_y"], cg["c_yy"]
         col_wmeans, impute_means, n = p1["col_wmeans"], p1["impute_means"], p1["n"]
@@ -249,23 +231,13 @@ def f_classif_scores(
     n_classes: int,
     weight_col: str | None = None,
     quantize_f32: bool = True,
-    stats: dict | None = None,
 ) -> dict:
-    if stats is None and len(feature_cols) > kernels.MOMENTS_JVM_MAX_P:
-        # wide frames: one O(C·p) Arrow scan instead of the two JVM
-        # aggregate selects (same planning-cliff rationale as regression)
-        cm = kernels.class_moments_singlepass_pass(
-            df, feature_cols, ycode_col, n_classes, weight_col, quantize_f32
-        )
-        p1 = cm
-        sw = cm["sw"]
-    else:
-        p1 = stats or kernels.impute_mean_pass(df, feature_cols, weight_col, None, quantize_f32)
-        sw = p1["sw"]
-        cm = kernels.class_moments_pass(
-            df, feature_cols, ycode_col, weight_col, n_classes,
-            p1["impute_means"], p1["col_wmeans"], quantize_f32,
-        )
+    """Weighted-ANOVA F relevance from ONE O(C·p)-accumulator Arrow scan
+    (kernels.class_moments_singlepass_pass)."""
+    cm = kernels.class_moments_singlepass_pass(
+        df, feature_cols, ycode_col, n_classes, weight_col, quantize_f32
+    )
+    sw = cm["sw"]
     A, B, class_w = cm["A"], cm["B"], cm["class_w"]  # (C,p),(C,p),(C,)
 
     scores, ss_between, ss_within = _anova_f_from_moments(
@@ -278,11 +250,11 @@ def f_classif_scores(
     return {
         "scores": scores,
         "sw": sw,
-        "wmeans": p1["col_wmeans"],
+        "wmeans": cm["col_wmeans"],
         "wstds": wstds,
-        "impute_means": p1["impute_means"],
-        "n": p1["n"],
-        "pass1": p1,
+        "impute_means": cm["impute_means"],
+        "n": cm["n"],
+        "pass1": cm,
     }
 
 

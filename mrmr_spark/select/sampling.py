@@ -121,21 +121,9 @@ def smart_sample(
     # ---- moments + Gram (float32 matrix like the reference, smart.py:169) --
     df = df.persist()
     try:
-        if d > kernels.MOMENTS_JVM_MAX_P:
-            # wide frames: one O(p) Arrow scan (the JVM aggregate selects
-            # hit the measured Catalyst planning cliff past ~24 columns)
-            p1 = kernels.moments_singlepass_pass(df, cols, None, None, quantize_f32=True)
-            n = int(p1["n"])
-            x_ss = p1["x_ss"]
-        else:
-            p1 = kernels.impute_mean_pass(df, cols, None, y_col, quantize_f32=True)
-            n = int(p1["n"])
-            p2 = kernels.centered_moments_pass(
-                df, cols, None, None, p1["impute_means"], p1["col_wmeans"],
-                quantize_f32=True,
-            )
-            x_ss = p2["x_ss"]
-        var = x_ss / max(n, 1)
+        p1 = kernels.moments_singlepass_pass(df, cols, None, None, quantize_f32=True)
+        n = int(p1["n"])
+        var = p1["x_ss"] / max(n, 1)
         sds = np.where(var > 1e-24, np.sqrt(var), 1.0)
         mus = p1["col_wmeans"]
         gram = kernels.gram_pass(

@@ -883,6 +883,16 @@ def test_dsir_sample_equals_weighted_sample_on_exp_weights(dsir_docs):
         assert a == b and len(a) == 30
 
 
+def test_dsir_bucket_counts_requires_an_input():
+    """With neither a reference corpus nor precomputed doc counts there is
+    nothing to count: a ValueError naming both arguments, not an
+    AttributeError on None."""
+    from mrmr_spark.operators.curation import dsir_bucket_counts
+
+    with pytest.raises(ValueError, match="reference or doc_counts"):
+        dsir_bucket_counts(None, doc_counts=None)
+
+
 def test_dsir_validation(dsir_docs):
     from mrmr_spark.operators.curation import (
         dsir_bucket_counts,

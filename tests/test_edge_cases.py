@@ -27,9 +27,9 @@ def test_constant_and_allnan_features_skipped(edge_df):
 
 def test_nonfinite_regression_target_raises_on_both_backends(edge_df):
     """Reference contract (_preprocess.py:199-201): non-finite regression y
-    raises. Both kernel backends must enforce it identically — without the
-    check, the single-pass scan NaN-poisons every score (silently empty
-    selection) while the JVM two-pass silently drops null-y rows."""
+    raises. The single-pass and two-pass plans must enforce it identically
+    — without the check, a non-finite y NaN-poisons every score (silently
+    empty selection)."""
     from pyspark.sql import functions as F
 
     cols = ["x0", "x1", "x2"]
@@ -41,8 +41,8 @@ def test_nonfinite_regression_target_raises_on_both_backends(edge_df):
             with pytest.raises(ValueError, match="Non-finite values in y"):
                 select_mrmr(df_bad, cols, "yb", 2, task="regression",
                             single_pass=sp, subsample=None)
-    # the O(p) Arrow moments kernel (p > MOMENTS_JVM_MAX_P, two-pass
-    # backend) enforces it too
+    # and at a wider p=30 on the two-pass plan (Arrow moments scan +
+    # Gram)
     rng = np.random.default_rng(5)
     n, p = 150, 30
     wide = pd.DataFrame(rng.normal(size=(n, p)), columns=[f"w{j}" for j in range(p)])

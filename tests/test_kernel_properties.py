@@ -151,9 +151,9 @@ def test_foldwise_loo_matches_subset(sp, params, n_folds):
 @SET
 @given(matrix_strategy(max_p=6))
 def test_gram_pass_matches_numpy(sp, params):
-    """Both Gram backends (JVM aggregate at p<=GRAM_JVM_MAX_P=4, Arrow
-    reduce beyond) must equal the naive weighted second-moment matrix of
-    the imputed standardized columns; max_p=6 crosses the backend cut."""
+    """The Arrow Gram reduction must equal the naive weighted
+    second-moment matrix of the imputed standardized columns at every
+    width from p=1 to p=6."""
     n, p, seed, nan_rate, weighted, parts = params
     X, y, w = make_matrix(n, p, seed, nan_rate, weighted)
     exp = np_imputed_stats(X, y, w)

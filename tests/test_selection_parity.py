@@ -526,24 +526,38 @@ def test_single_pass_default_and_forced_2scan(fixture_small, monkeypatch):
     assert r_sp.names == r_2s.names
 
 
-def test_wide_moments_singlepass_parity(spark, monkeypatch):
-    """Beyond MOMENTS_JVM_MAX_P columns the relevance moment statistics run
-    as one O(p) Arrow scan (the 6p+3 / 3p+1 JVM aggregate selects hit the
-    measured Catalyst planning cliff). Must equal the JVM 2-pass results —
-    regression AND classification — under NaN/inf + weights.
+def _np_moments(X, y32, w):
+    """NumPy definition of the moment statistics the relevance scans
+    return: f32 impute of non-finite entries with the raw f64 finite mean,
+    then weighted means/stds, the unweighted sumsq around the impute mean
+    (constant-column pruning) and the weighted y mean."""
+    fin = np.isfinite(X)
+    nfin = fin.sum(axis=0)
+    m = np.where(nfin > 0, np.where(fin, X, 0.0).sum(axis=0) / np.maximum(nfin, 1), 0.0)
+    m32 = m.astype(np.float32).astype(np.float64)
+    X32 = oracle.impute_f32(X).astype(np.float64)
+    sw = w.sum()
+    wm = (w @ X32) / sw
+    var = (w @ ((X32 - wm) ** 2)) / sw
+    return {
+        "impute_means": m32,
+        "wmeans": wm,
+        "wstds": np.where(var > 1e-12, np.sqrt(var), 1.0),
+        "x_ss_unw": ((X32 - m32) ** 2).sum(axis=0),
+        "y_wmean": float(w @ y32.astype(np.float64)) / sw,
+    }
 
-    The threshold is patched down so the parity check runs at p=10: route
-    selection is a single attribute comparison, and the per-column algebra
-    of both routes is identical at any p — testing at p=30 would only pay
-    the JVM route's Catalyst planning cliff (~70 s) that the Arrow route
-    exists to avoid, without strengthening the parity claim."""
-    from mrmr_spark.select import kernels
+
+def test_wide_moments_singlepass_parity(spark):
+    """The O(p) Arrow moment scans behind ``f_regression_scores`` and
+    ``f_classif_scores`` must reproduce the NumPy oracle — F scores from
+    ``oracle_sift`` plus the impute means, weighted means/stds and pruning
+    sumsq the downstream Gram and cache reuse — under NaN/−inf entries and
+    weights, at a narrow (p=3) and a wider (p=10) width."""
     from mrmr_spark.select.preprocess import factorize_target
-    from mrmr_spark.select.relevance import f_classif_scores, f_regression_scores
 
-    monkeypatch.setattr(kernels, "MOMENTS_JVM_MAX_P", 6)
     rng = np.random.default_rng(33)
-    n, p = 2500, 10  # p > patched MOMENTS_JVM_MAX_P -> default route = Arrow
+    n, p = 2500, 10
     X = rng.normal(loc=rng.uniform(-8, 8, p), scale=rng.uniform(0.5, 3, p),
                    size=(n, p))
     y_clean = X[:, 0] * 0.4 + rng.normal(size=n)  # y must stay finite
@@ -556,36 +570,42 @@ def test_wide_moments_singlepass_parity(spark, monkeypatch):
     pdf["w"] = rng.uniform(0.2, 2.5, size=n)
     sdf = spark.createDataFrame(pdf).repartition(7).cache()
     sdf.count()
+    sdf2, labels = factorize_target(sdf, "yc")
+    codes = oracle.factorize_sorted(pdf["yc"])
+    y32 = pdf["y"].to_numpy(np.float32)
 
-    for wcol in (None, "w"):
-        # regression: arrow route (p>24) vs forced JVM route (stats=pass1)
-        arrow = f_regression_scores(sdf, cols, "y", wcol)
-        p1 = kernels.impute_mean_pass(sdf, cols, wcol, "y")
-        jvm = f_regression_scores(sdf, cols, "y", wcol, stats=p1)
-        for key in ("scores", "wmeans", "wstds", "impute_means", "x_ss_unw"):
-            np.testing.assert_allclose(arrow[key], jvm[key], rtol=1e-9,
-                                       atol=1e-9, err_msg=f"{key} w={wcol}")
-        assert np.isclose(arrow["y_wmean"], jvm["y_wmean"])
+    for width in (3, p):
+        use = cols[:width]
+        Xw = X[:, :width]
+        X32 = oracle.impute_f32(Xw)
+        for wcol in (None, "w"):
+            w = pdf["w"].to_numpy() if wcol else np.ones(n)
+            exp = _np_moments(Xw, y32, w)
+            tag = f"p={width} w={wcol}"
 
-        # classification
-        sdf2, labels = factorize_target(sdf, "yc")
-        arrow_c = f_classif_scores(sdf2, cols, "_y_code", len(labels), wcol)
-        p1c = kernels.impute_mean_pass(sdf2, cols, wcol, None)
-        jvm_c = f_classif_scores(sdf2, cols, "_y_code", len(labels), wcol, stats=p1c)
-        for key in ("scores", "wmeans", "wstds", "impute_means"):
-            np.testing.assert_allclose(arrow_c[key], jvm_c[key], rtol=1e-9,
-                                       atol=1e-9, err_msg=f"cls {key} w={wcol}")
+            got = f_regression_scores(sdf, use, "y", wcol)
+            np.testing.assert_allclose(got["scores"], oracle.f_regression(X32, y32, w),
+                                       rtol=1e-8, err_msg=f"scores {tag}")
+            for key in ("wmeans", "wstds", "impute_means", "x_ss_unw"):
+                np.testing.assert_allclose(got[key], exp[key], rtol=1e-9,
+                                           atol=1e-9, err_msg=f"{key} {tag}")
+            assert got["y_wmean"] == pytest.approx(exp["y_wmean"], rel=1e-9)
+
+            got_c = f_classif_scores(sdf2, use, "_y_code", len(labels), wcol)
+            np.testing.assert_allclose(got_c["scores"], oracle.f_classif(X32, codes, w),
+                                       rtol=1e-8, err_msg=f"cls scores {tag}")
+            for key in ("wmeans", "wstds", "impute_means"):
+                np.testing.assert_allclose(got_c[key], exp[key], rtol=1e-9,
+                                           atol=1e-9, err_msg=f"cls {key} {tag}")
+    sdf.unpersist()
 
 
-def test_wide_cache_build_oracle_parity(spark, monkeypatch):
-    """build_cache/select_cached at p>MOMENTS_JVM_MAX_P routes the pruning
-    moments through the Arrow scan — the gaussian selection must still
-    match the pandas oracle exactly. (Threshold patched down: the route
-    switch is an attribute comparison; see test_wide_moments_singlepass_parity.)"""
-    from mrmr_spark.select import kernels
+def test_wide_cache_build_oracle_parity(spark):
+    """build_cache/select_cached route the pruning moments through the
+    Arrow moments scan — the gaussian selection must match the pandas
+    oracle exactly."""
     from mrmr_spark.select.cache import build_cache, select_cached
 
-    monkeypatch.setattr(kernels, "MOMENTS_JVM_MAX_P", 6)
     rng = np.random.default_rng(41)
     n, p = 600, 12
     X = rng.normal(size=(n, p))
@@ -602,6 +622,43 @@ def test_wide_cache_build_oracle_parity(spark, monkeypatch):
         cache.unpersist()
     exp = oracle.gaussian_select(X, pdf["y"].to_numpy(), 5, method="mrmr_quot")
     assert got.names == [cols[i] for i in exp]
+
+
+def test_plan_log_captures_narrow_selection_scans(spark, monkeypatch):
+    """Every selection scan goes through ``kernels.PLAN_LOG`` — the narrow
+    (p=3) relevance and cache-build moment scans included — and each
+    captured plan is a single Arrow reduction: exactly one Python node."""
+    import re
+
+    from mrmr_spark.select import kernels
+    from mrmr_spark.select.cache import build_cache
+    from mrmr_spark.select.preprocess import factorize_target
+
+    rng = np.random.default_rng(3)
+    n = 400
+    cols = ["a", "b", "c"]
+    pdf = pd.DataFrame(rng.normal(size=(n, 3)), columns=cols)
+    pdf["y"] = pdf["a"] + 0.1 * rng.normal(size=n)
+    pdf["yc"] = (pdf["b"] > 0).astype(int)
+    sdf = spark.createDataFrame(pdf).repartition(3)
+    sdf2, labels = factorize_target(sdf, "yc")
+
+    log: list[str] = []
+    monkeypatch.setattr(kernels, "PLAN_LOG", log)
+    calls = {
+        "f_regression_scores": lambda: f_regression_scores(sdf, cols, "y"),
+        "f_classif_scores": lambda: f_classif_scores(sdf2, cols, "_y_code", len(labels)),
+        "build_cache": lambda: build_cache(sdf, cols, subsample=None).unpersist(),
+    }
+    python_node = r"(ArrowEvalPython|BatchEvalPython|MapInArrow|FlatMapGroupsInPandas|MapInPandas)"
+    for name, call in calls.items():
+        before = len(log)
+        call()
+        plans = log[before:]
+        assert plans, f"{name}: no plan captured"
+        for plan in plans:
+            final = plan.split("== Initial Plan ==")[0]
+            assert len(re.findall(python_node, final)) == 1, (name, final)
 
 
 def test_cached_top_m_two_job_lifecycle(spark, monkeypatch):

@@ -526,8 +526,33 @@ def main():
         "relevance AND the full |corr| redundancy from ONE MapInArrow scan",
         classes=3, task="classification", relevance="f")
 
-    # auto-k evaluate: the shared-scan contract — 2 kernel scans total for
-    # the whole strategy (fold-keyed fused stats + fold-grouped loss)
+    # gaussian cache build: the pruning moments are one Arrow scan at every
+    # width; it reads the source the cache persists (its own pin)
+    from mrmr_spark.select.cache import build_cache
+
+    df_c, cols_c = feature_frame(20)
+    sel_kernels.PLAN_LOG = []
+    try:
+        build_cache(df_c, cols_c, subsample=None).unpersist()
+        scans = [summarize_str(s) for s in sel_kernels.PLAN_LOG]
+    finally:
+        sel_kernels.PLAN_LOG = None
+    name = "build_cache (p=20, pruning moments)"
+    sel_sections.append((name, scans,
+        "ONE MapInArrow O(p) moments scan (imputation means + pruning "
+        "sumsq) over the persisted cache source; no exchange"))
+    if len(scans) != 1:
+        violations.append(f"{name}: expected 1 scan, saw {len(scans)}")
+    for i, m in enumerate(scans):
+        if m["python_nodes"] != 1:
+            violations.append(f"{name} scan{i}: expected exactly 1 Python stage, "
+                              f"saw {m['python_nodes']}")
+        if m["exchanges"] + m["range_or_single_exchanges"] > 0:
+            violations.append(f"{name} scan{i}: unexpected exchange")
+
+    # auto-k evaluate: the shared-scan contract — ONE kernel scan for the
+    # whole regression strategy (fold-keyed fused stats; the squared-error
+    # losses follow from the fold accumulators on the driver)
     from mrmr_spark.select.autok import AutoKConfig, select_k_evaluate
 
     df_ak, cols_ak = feature_frame(12)
@@ -544,11 +569,11 @@ def main():
         sel_kernels.PLAN_LOG = None
     name = "auto-k evaluate group_cv (n_splits=4, shared-scan)"
     sel_sections.append((name, scans,
-        "TWO kernel scans for the WHOLE strategy (was 3 x n_splits): "
-        "fold-keyed fused stats + fold-grouped loss; no persisted split "
-        "frames"))
-    if len(scans) != 2:
-        violations.append(f"{name}: expected 2 scans, saw {len(scans)}")
+        "ONE kernel scan for the WHOLE strategy: fold-keyed fused stats; "
+        "the squared-error losses follow driver-side from the fold "
+        "accumulators; no persisted split frames"))
+    if len(scans) != 1:
+        violations.append(f"{name}: expected 1 scan, saw {len(scans)}")
     for i, m in enumerate(scans):
         if m["python_nodes"] != 1 or m["inmemory"] > 0:
             violations.append(f"{name} scan{i}: unexpected plan shape")
@@ -582,9 +607,10 @@ def main():
         "# Selection scans (captured via `mrmr_spark.select.kernels.PLAN_LOG`)",
         "",
         "The selection kernels drive their own Spark jobs and return numpy, so",
-        "their plans are captured at collect time. Asserted per scan: exactly",
-        "one Python stage (the Arrow reduction), zero exchanges, zero",
-        "InMemoryRelation (the default paths run no-persist).",
+        "their plans are captured at collect time. Every moments and Gram scan",
+        "is a MapInArrow reduction. Asserted per scan: exactly one Python stage",
+        "(the Arrow reduction), zero exchanges, and zero InMemoryRelation on the",
+        "no-persist paths (`build_cache` reads the source it persists itself).",
         "",
         "| selection path | scan | hash exch | other exch | codegen spans | python nodes | in-memory |",
         "|---|---|---|---|---|---|---|",
