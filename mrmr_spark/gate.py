@@ -2318,14 +2318,11 @@ WHERE d.doc_id % 97 <> 0
 
 def q_repetition_stats(spark, sf_dir):
     """Gopher-style repetition quality signals (word 2- and 3-grams) —
-    the single-fold Column implementation vs an unnest+GROUP BY oracle."""
+    the fused Arrow kernel vs an unnest+GROUP BY oracle."""
     from mrmr_spark.operators.curation import with_repetition_stats
 
     d = _t(spark, sf_dir, "documents", spread=True)
-    # arrow backend: bit-identical to the Column fold (pytest
-    # test_repetition_stats_arrow_bit_identical) at ~10-20x the speed —
-    # the corpus-scale default per the operator's own docstring
-    out = with_repetition_stats(d.select("doc_id", "text"), ns=(2, 3), backend="arrow")
+    out = with_repetition_stats(d.select("doc_id", "text"), ns=(2, 3))
     cols = ["doc_id"]
     for n in (2, 3):
         cols += [

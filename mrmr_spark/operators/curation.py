@@ -6,9 +6,8 @@ exact deterministic stratified sampling for per-source domain balancing.
 These extend the dedup/textstats family (no reference counterpart —
 the reference repo is selection-only); the design rules are the same:
 
-- Everything that can be a codegen Column expression is one — the
-  repetition statistics are a single JVM fold per document, zero
-  shuffle, zero Python.
+- Per-row statistics are projections, zero shuffle — the repetition
+  statistics are one Arrow kernel per document for every n-gram order.
 - Decontamination never shuffles corpus text: the benchmark n-gram set
   is distinct-hashed (small — eval sets are KBs–MBs against a 100 TB
   corpus) and broadcast; corpus grams meet it map-side, and only the
@@ -42,9 +41,9 @@ def _bind(x: Column, f) -> Column:
 
     Catalyst evaluates higher-order functions interpreted; naming an
     intermediate as a Python variable embeds its producer tree at every
-    reference site and re-runs it per element (see
-    textstats.winnow_fingerprints for the measured cost of getting this
-    wrong).
+    reference site and re-runs it per element (a regex normalization
+    re-run per character per window measured ~3 s per 300-char
+    document).
     """
     return F.get(F.transform(F.array(x), f), 0)
 
@@ -205,135 +204,23 @@ def _decontaminate_hits(
     )
 
 
-def repetition_stats(text_col: str | Column = "text", n: int = 2, split: str = " ") -> Column:
-    """Intra-document repetition statistics over word ``n``-grams, as ONE
-    struct Column computed by a single JVM fold — the
-    MassiveText/Gopher-style repetitious-text quality signals
-    (Rae et al. 2021, "Scaling Language Models", table A1), re-based on
-    word n-grams since the synthetic corpus has no line structure:
+def _repetition_stats_arrow(text_col: str, ns: tuple[int, ...], split: str) -> Column:
+    """Repetition stats for every order in ``ns`` as ONE Arrow kernel: the
+    text ships through the Python boundary once and is tokenized and
+    factorized once; only the per-order key combine + unique repeats.
 
-    - ``total``      — number of (overlapping) n-grams.
-    - ``dup_frac``   — fraction of n-gram occurrences belonging to a gram
-      that occurs more than once (Gopher's "fraction ... contained within
-      all duplicate n-grams").
-    - ``top_frac``   — fraction belonging to the single most frequent
-      gram (Gopher's "fraction ... within the most frequently-occurring
-      n-gram").
-
-    Implementation: sort the gram array, then one ``aggregate`` fold
-    tracking (prev gram, current run, best run, singleton-run count);
-    dup occurrences = total − singletons. Zero shuffle, zero Python,
-    O(g log g) per document. Catalyst evaluates the fold interpreted
-    (HOFs never codegen) but it is still JVM-side and columnar-batch
-    driven. Documents with fewer than ``n`` tokens yield
-    (0, 0.0, 0.0). Use :func:`with_repetition_stats` to expand the
-    struct into flat columns without re-evaluating the fold.
-    """
-    init = F.struct(
-        F.lit("").alias("prev"),
-        F.lit(0).cast("long").alias("run"),
-        F.lit(0).cast("long").alias("best"),
-        F.lit(0).cast("long").alias("singles"),
-    )
-
-    def step(acc, x):
-        is_run = x == acc["prev"]
-        run = F.when(is_run, acc["run"] + 1).otherwise(F.lit(1).cast("long"))
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.greatest(acc["best"], run).alias("best"),
-            # a run closes when the gram changes; it was a singleton iff
-            # its length was exactly 1 (run>0 guards the very first gram)
-            (
-                acc["singles"]
-                + F.when(~is_run & (acc["run"] == 1), F.lit(1)).otherwise(F.lit(0))
-            ).alias("singles"),
-        )
-
-    def finish(total):
-        def _fin(acc):
-            # close the trailing run
-            singles = acc["singles"] + F.when(acc["run"] == 1, F.lit(1)).otherwise(F.lit(0))
-            t = total.cast("double")
-            return F.struct(
-                total.alias("total"),
-                F.when(total > 0, (total - singles) / t).otherwise(F.lit(0.0)).alias("dup_frac"),
-                F.when(total > 0, acc["best"] / t).otherwise(F.lit(0.0)).alias("top_frac"),
-            )
-
-        return _fin
-
-    return _bind(
-        F.array_sort(word_ngrams(text_col, n, split)),
-        lambda grams: _bind(
-            F.size(grams).cast("long"),
-            lambda total: F.aggregate(grams, init, step, finish(total)),
-        ),
-    )
-
-
-def repetition_stats_arrow(text_col: str = "text", n: int = 2, split: str = " ") -> Column:
-    """Arrow-vectorized twin of :func:`repetition_stats` — bit-identical
-    output (pytest-parametrized equality; the fractions are the same
-    int64-exact counts under the same IEEE double division). Catalyst
-    evaluates the sort+fold interpreted (~0.4 ms/doc measured at ~150
-    tokens); here each document is one `pd.factorize` + a base-B n-gram
-    code combine + `np.unique(return_counts)` (~20 µs/doc), shipped
-    through one Arrow batch exchange. The backend of choice for corpus
-    scale; the Column twin remains the zero-Python path, and both
-    hash-match the same DuckDB gate oracle."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("total long, dup_frac double, top_frac double")
-    def _stats(texts: pd.Series) -> pd.DataFrame:
-        total = np.zeros(len(texts), np.int64)
-        dupf = np.zeros(len(texts), np.float64)
-        topf = np.zeros(len(texts), np.float64)
-        for i, t in enumerate(texts):
-            toks = t.split(split)
-            ln = len(toks)
-            if ln < n:
-                continue
-            codes, uniq = pd.factorize(np.asarray(toks, dtype=object))
-            codes = codes.astype(np.int64)
-            b = np.int64(len(uniq))
-            m = ln - n + 1
-            if n * np.log2(max(int(b), 2)) > 62:
-                # base-B combine would overflow int64 (needs >2^21 distinct
-                # tokens in ONE document at n=3) — count tuples directly
-                from collections import Counter
-
-                c = Counter(zip(*[codes[j : j + m] for j in range(n)]))
-                cnts = np.fromiter(c.values(), np.int64)
-            else:
-                key = codes[:m].copy()
-                for j in range(1, n):
-                    key *= b
-                    key += codes[j : j + m]
-                _, cnts = np.unique(key, return_counts=True)
-            total[i] = m
-            dupf[i] = float(m - int((cnts == 1).sum())) / m
-            topf[i] = float(int(cnts.max())) / m
-        return pd.DataFrame({"total": total, "dup_frac": dupf, "top_frac": topf})
-
-    return _stats(F.col(text_col))
-
-
-def repetition_stats_arrow_multi(
-    text_col: str, ns: tuple[int, ...], split: str
-) -> Column:
-    """All orders of :func:`repetition_stats_arrow` in ONE kernel: the text
-    ships through the Python boundary once and is tokenized/factorized once,
-    with only the per-order key combine + unique repeated. Field-for-field
-    bit-identical to the per-order kernels (same codes, same int counts,
-    same IEEE divisions) — pytest-asserted via the arrow≡column test."""
+    Per document: split on the regex ``split`` (``re``, the same pattern
+    semantics as ``F.split``; NULL reads as zero tokens), `pd.factorize`
+    the tokens, combine each window of ``n`` codes into one base-B int64
+    key, and count keys with `np.unique(return_counts)`. The fractions are
+    int64-exact counts under one IEEE double division."""
     from pyspark.sql.functions import pandas_udf
 
     fields = ", ".join(
         f"rep{n}_total long, rep{n}_dup_frac double, rep{n}_top_frac double"
         for n in ns
     )
+    pattern = re.compile(split)
 
     @pandas_udf(fields)
     def _stats(texts: pd.Series) -> pd.DataFrame:
@@ -343,7 +230,9 @@ def repetition_stats_arrow_multi(
             cols[f"rep{n}_dup_frac"] = np.zeros(len(texts), np.float64)
             cols[f"rep{n}_top_frac"] = np.zeros(len(texts), np.float64)
         for i, t in enumerate(texts):
-            toks = t.split(split)
+            if t is None:
+                continue
+            toks = pattern.split(t)
             ln = len(toks)
             if ln < min(ns):
                 continue
@@ -355,6 +244,9 @@ def repetition_stats_arrow_multi(
                     continue
                 m = ln - n + 1
                 if n * np.log2(max(int(b), 2)) > 62:
+                    # base-B combine would overflow int64 (needs >2^21
+                    # distinct tokens in ONE document at n=3) — count
+                    # tuples directly
                     from collections import Counter
 
                     c = Counter(zip(*[codes[j : j + m] for j in range(n)]))
@@ -378,43 +270,31 @@ def with_repetition_stats(
     text_col: str = "text",
     ns: tuple[int, ...] = (2, 3),
     split: str = " ",
-    backend: str = "column",
 ) -> DataFrame:
-    """Add ``rep{n}_total``, ``rep{n}_dup_frac``, ``rep{n}_top_frac`` per
-    ``n``. Each struct is expanded via ``inline`` (a generator), which
-    guarantees the producer is evaluated once per row per ``n`` —
-    selecting struct fields individually would let projection collapse
-    duplicate the (interpreted fold / Arrow UDF) once per field.
+    """Intra-document repetition statistics over word ``n``-grams — the
+    MassiveText/Gopher-style repetitious-text quality signals (Rae et al.
+    2021, "Scaling Language Models", table A1), re-based on word n-grams
+    since the synthetic corpus has no line structure. Adds, per ``n`` in
+    ``ns``:
 
-    ``backend="column"`` (default): pure JVM sort+fold, zero Python —
-    the plan whose zero-shuffle/zero-Python shape is pytest-asserted.
-    ``backend="arrow"``: the bit-identical vectorized twin, ~10-20x
-    faster per document — prefer it for corpus-scale scans.
+    - ``rep{n}_total``    — number of (overlapping) n-grams.
+    - ``rep{n}_dup_frac`` — fraction of n-gram occurrences belonging to a
+      gram that occurs more than once (Gopher's "fraction ... contained
+      within all duplicate n-grams").
+    - ``rep{n}_top_frac`` — fraction belonging to the single most frequent
+      gram (Gopher's "fraction ... within the most frequently-occurring
+      n-gram").
+
+    Tokens are the pieces of ``split`` taken as a regex (the
+    :func:`word_ngrams` tokenization). Documents with fewer than ``n``
+    tokens, and NULL texts, yield (0, 0.0, 0.0). Every order comes from
+    one Arrow kernel — zero shuffle, one text ship and tokenization per
+    row. The struct is expanded via ``inline`` (a generator), which
+    evaluates the kernel once per row; selecting struct fields
+    individually would let projection collapse run it once per field.
     """
-    if backend not in ("column", "arrow"):
-        raise ValueError(f"backend must be 'column' or 'arrow', got {backend!r}")
-    if backend == "arrow":
-        # one fused kernel for every order: single text ship + tokenize
-        # (vs one ArrowEvalPython per n); inline() keeps the single-eval
-        # guarantee. Bit-identical to the per-order kernels.
-        st = repetition_stats_arrow_multi(text_col, ns, split)
-        return df.select("*", F.inline(F.array(st)))
-    make = repetition_stats
-
-    def _rename(n):
-        # NB: a plain `lambda s, n=n:` would be treated by F.transform as
-        # the (element, index) two-arg lambda form, shadowing n with the
-        # index column — hence the closure factory.
-        return lambda s: F.struct(
-            s["total"].alias(f"rep{n}_total"),
-            s["dup_frac"].alias(f"rep{n}_dup_frac"),
-            s["top_frac"].alias(f"rep{n}_top_frac"),
-        )
-
-    for n in ns:
-        st = _bind(make(text_col, n, split), _rename(n))
-        df = df.select("*", F.inline(F.array(st)))
-    return df
+    st = _repetition_stats_arrow(text_col, ns, split)
+    return df.select("*", F.inline(F.array(st)))
 
 
 def _hash_slices(th: Column, n: int) -> Column:
@@ -1016,10 +896,9 @@ def gopher_quality_filter(
     mode="flag": adds one boolean per rule (``q_words``, ``q_word_len``,
     ``q_symbols``, ``q_stopwords``, ``q_rep2``, ``q_rep3``) plus the
     conjunction ``keep``. mode="drop": only rows passing all rules,
-    original columns. One zero-shuffle, zero-Python projection — the
-    repetition folds are the dominant cost (see
-    ``with_repetition_stats`` for the Arrow alternative when filtering
-    petabytes).
+    original columns. One zero-shuffle projection: the word, length,
+    symbol and stopword rules are Column expressions, the repetition caps
+    come from the single Arrow kernel of :func:`with_repetition_stats`.
     """
     from mrmr_spark.operators.textstats import EN_STOPWORDS
 

@@ -5,13 +5,16 @@ Completes the eval-harness layer next to ``textstats.qa_scores`` /
 ``textstats.pass_at_k`` and ``chat.preference_pairs``:
 
 - :func:`bleu_scores` / :func:`corpus_bleu` — Papineni et al. 2002
-  modified-n-gram-precision BLEU, sentence- and corpus-level, as pure
-  Column expressions (zero shuffle, zero Python — composes with
-  streaming frames unchanged).
-- :func:`rouge_l_scores` — Lin 2004 ROUGE-L over an LCS computed with a
-  prefix-max reformulation of the classic DP (no within-row sequential
-  dependency), with an Arrow default backend and a bit-identical pure
-  Column twin that an ANSI recursive CTE mirrors step for step.
+  modified-n-gram-precision BLEU, sentence- and corpus-level; the exact
+  integer gram counts come from one Arrow kernel, the float score is a
+  Column formula (zero shuffle — composes with streaming frames
+  unchanged). :func:`chrf_scores` / :func:`corpus_chrf` are the
+  character-n-gram counterpart, same shape.
+- :func:`rouge_l_scores` / :func:`wer_scores` — Lin 2004 ROUGE-L and
+  word error rate over numpy LCS / edit-distance DPs in prefix-max /
+  prefix-min form (no within-row sequential dependency), one Arrow
+  kernel each; the gate's ANSI recursive CTEs compute the same
+  recurrences independently.
 - :func:`bradley_terry` — Bradley-Terry 1952 strength fitting over
   pairwise preference outcomes via Hunter 2004 MM updates: the pair
   statistics are ONE distributed aggregation (shuffle ∝ distinct pairs,
@@ -56,8 +59,6 @@ __all__ = [
     "corpus_chrf",
     "krippendorff_alpha",
     "rouge_l_scores",
-    "lcs_length",
-    "edit_distance",
     "wer_scores",
     "bradley_terry",
     "majority_vote",
@@ -73,10 +74,6 @@ __all__ = [
 #: whitespace split so they can never contain it; gram keys stay unambiguous
 _GRAM_SEP = " "
 
-def _empty_int_arr() -> Column:
-    return F.array().cast("array<int>")
-
-
 def _ws_tokens(col: Column) -> Column:
     """Whitespace tokens of a string column; NULL -> [] (empty text)."""
     return F.filter(
@@ -91,22 +88,8 @@ def _grams(toks: Column, n: int) -> Column:
         return toks
     cnt = F.size(toks) - (n - 1)
     # sequence(1, cnt) DESCENDS when cnt < 1 — guard to an empty array
-    seq = F.when(cnt >= 1, F.sequence(F.lit(1), cnt)).otherwise(_empty_int_arr())
+    seq = F.when(cnt >= 1, F.sequence(F.lit(1), cnt)).otherwise(F.array().cast("array<int>"))
     return F.transform(seq, lambda i: F.array_join(F.slice(toks, i, n), _GRAM_SEP))
-
-
-def _clipped_matches(cand: Column, ref: Column) -> Column:
-    """Σ_g min(count_cand(g), count_ref(g)) over the candidate's distinct
-    grams — the modified (clipped) n-gram match count."""
-
-    def _cnt(arr: Column, g: Column) -> Column:
-        return F.size(F.filter(arr, lambda x: x == g))
-
-    return F.aggregate(
-        F.array_distinct(cand),
-        F.lit(0),
-        lambda acc, g: acc + F.least(_cnt(cand, g), _cnt(ref, g)),
-    )
 
 
 def _geo_mean(prod: Column, max_n: int) -> Column:
@@ -124,8 +107,8 @@ def _geo_mean(prod: Column, max_n: int) -> Column:
 
 def _bleu_formula(mf, tf, np_, nr_, max_n: int) -> tuple[Column, Column]:
     """(brevity_penalty, bleu) from per-order match/total accessors —
-    shared between the Column and Arrow backends so the score expression
-    (and therefore every bit of the result) is identical."""
+    shared by :func:`bleu_scores` and :func:`corpus_bleu` so sentence and
+    corpus scores are the same expression."""
     prod = F.lit(1.0)
     nonzero = F.lit(True)
     for n in range(1, max_n + 1):
@@ -175,12 +158,10 @@ def bleu_scores(
     pred_col: str = "pred",
     ref_col: str = "ref",
     max_n: int = 4,
-    backend: str = "column",
 ) -> DataFrame:
     """Per-row sentence BLEU (Papineni et al. 2002) between a candidate
-    and a single reference, as pure Column expressions — zero shuffle,
-    zero Python (plan-asserted in tests; runs on streaming frames
-    unchanged).
+    and a single reference — zero shuffle, one Arrow kernel
+    (plan-asserted in tests; runs on streaming frames unchanged).
 
     Tokenization is whitespace splitting (BLEU assumes pre-tokenized
     text); NULL reads as empty. For each n ≤ ``max_n`` the clipped match
@@ -200,56 +181,30 @@ def bleu_scores(
     keeping the value reproducible bit for bit outside the one ``exp``
     in the brevity penalty.
 
-    ``backend="column"`` (default) is the zero-Python, ANSI-mirrorable
-    form the gate oracles — O(G²) interpreted gram folds per order.
-    ``backend="arrow"`` computes the SAME integer match/total stats as
-    one Arrow batch (Counter clipping over the Column-tokenized arrays)
-    and leaves the float score as the identical Column formula — exactly
-    bit-identical (pytest-parametrized) and the right cost for corpus-
-    scale scoring.
+    The integer match/total stats are Counter-clipped in one Arrow batch
+    over the Column-tokenized arrays; the float score is the same Column
+    formula :func:`corpus_bleu` applies.
     """
     if max_n < 1:
         raise ValueError(f"bleu_scores: max_n must be >= 1, got {max_n}")
-    if backend not in ("column", "arrow"):
-        raise ValueError(f"bleu_scores: unknown backend {backend!r}")
     tp = _ws_tokens(F.col(pred_col))
     tr = _ws_tokens(F.col(ref_col))
-    np_, nr_ = F.size(tp), F.size(tr)
-
-    if backend == "arrow":
-        st = df.select("*", np_.cast("int").alias("n_pred"),
-                       nr_.cast("int").alias("n_ref"),
-                       _bleu_stats_arrow(tp, tr, max_n).alias("_st"))
-        cols = []
-        for n in range(1, max_n + 1):
-            cols.append(F.element_at("_st", 2 * n - 1).alias(f"match_{n}"))
-            cols.append(F.element_at("_st", 2 * n).alias(f"total_{n}"))
-        bp, bleu = _bleu_formula(
-            lambda n: F.element_at("_st", 2 * n - 1),
-            lambda n: F.element_at("_st", 2 * n),
-            F.col("n_pred"), F.col("n_ref"), max_n,
-        )
-        return st.select(
-            *[c for c in st.columns if c != "_st"], *cols,
-            bp.alias("brevity_penalty"), bleu.alias("bleu"),
-        )
-
-    cols = [
-        np_.cast("int").alias("n_pred"),
-        nr_.cast("int").alias("n_ref"),
-    ]
-    ms: dict[int, Column] = {}
-    ts: dict[int, Column] = {}
+    st = df.select("*", F.size(tp).cast("int").alias("n_pred"),
+                   F.size(tr).cast("int").alias("n_ref"),
+                   _bleu_stats_arrow(tp, tr, max_n).alias("_st"))
+    cols = []
     for n in range(1, max_n + 1):
-        cg = _grams(tp, n)
-        ms[n] = _clipped_matches(cg, _grams(tr, n))
-        ts[n] = F.size(cg)
-        cols.append(ms[n].cast("int").alias(f"match_{n}"))
-        cols.append(ts[n].cast("int").alias(f"total_{n}"))
-    bp, bleu = _bleu_formula(lambda n: ms[n], lambda n: ts[n], np_, nr_, max_n)
-    cols.append(bp.alias("brevity_penalty"))
-    cols.append(bleu.alias("bleu"))
-    return df.select("*", *cols)
+        cols.append(F.element_at("_st", 2 * n - 1).alias(f"match_{n}"))
+        cols.append(F.element_at("_st", 2 * n).alias(f"total_{n}"))
+    bp, bleu = _bleu_formula(
+        lambda n: F.element_at("_st", 2 * n - 1),
+        lambda n: F.element_at("_st", 2 * n),
+        F.col("n_pred"), F.col("n_ref"), max_n,
+    )
+    return st.select(
+        *[c for c in st.columns if c != "_st"], *cols,
+        bp.alias("brevity_penalty"), bleu.alias("bleu"),
+    )
 
 
 def corpus_bleu(scored: DataFrame, max_n: int = 4) -> DataFrame:
@@ -277,19 +232,9 @@ def corpus_bleu(scored: DataFrame, max_n: int = 4) -> DataFrame:
 # chrF (character n-gram F-score)
 # ---------------------------------------------------------------------------
 
-def _char_grams(s: Column, n: int) -> Column:
-    """Order-n character grams of a string via substr over a position
-    sequence (no char-array materialization — the identical construction
-    exists in ANSI SQL, which is what the gate oracle mirrors)."""
-    cnt = F.length(s) - (n - 1)
-    seq = F.when(cnt >= 1, F.sequence(F.lit(1), cnt)).otherwise(_empty_int_arr())
-    return F.transform(seq, lambda i: s.substr(i, F.lit(n)))
-
-
 def _chrf_formula(mf, tcf, trf, max_n: int, beta: float) -> Column:
-    """Order-averaged chrF from per-order accessors — shared between the
-    Column and Arrow backends (identical expression tree → identical
-    bits)."""
+    """Order-averaged chrF from per-order accessors — shared by
+    :func:`chrf_scores` and :func:`corpus_chrf`."""
     psum = F.lit(0.0)
     rsum = F.lit(0.0)
     for n in range(1, max_n + 1):
@@ -306,7 +251,7 @@ def _chrf_formula(mf, tcf, trf, max_n: int, beta: float) -> Column:
 def _chrf_stats_arrow(sp: Column, sr: Column, max_n: int) -> Column:
     """Per-row [match_1, total_c_1, total_r_1, ...] as one Arrow batch
     over the Column-side whitespace-stripped strings (stripping stays in
-    the engine so regex semantics cannot diverge between backends)."""
+    the engine, with Java-regex ``\\s`` semantics)."""
     from collections import Counter
 
     import pandas as pd
@@ -338,12 +283,11 @@ def chrf_scores(
     ref_col: str = "ref",
     max_n: int = 6,
     beta: float = 2.0,
-    backend: str = "column",
 ) -> DataFrame:
     """Per-row chrF (Popović 2015): character-n-gram F-score between a
     candidate and a reference — the tokenization-free companion to
-    :func:`bleu_scores` (robust to morphology and segmentation choices),
-    as pure Column expressions: zero shuffle, zero Python.
+    :func:`bleu_scores` (robust to morphology and segmentation choices):
+    zero shuffle, one Arrow kernel.
 
     All whitespace is removed first (the chrF convention — word boundaries
     carry no credit), then for each order n ≤ ``max_n`` the clipped match
@@ -358,56 +302,31 @@ def chrf_scores(
 
     β = 2 weights recall twice — the standard chrF2.
 
-    ``backend="column"`` (default) is the zero-Python, ANSI-mirrorable
-    form the gate oracles — but its per-order clipped folds are O(G²)
-    interpreted, the costliest expression in the eval family (measured
-    ~3.5 ms/row on 50-char texts). ``backend="arrow"`` computes the SAME
-    integer stats in one Arrow batch over the Column-side stripped
-    strings and reuses the identical Column score formula — exactly
-    bit-identical (pytest-parametrized), ~50× cheaper, the backend for
-    corpus-scale scoring.
+    The integer stats are Counter-clipped in one Arrow batch over the
+    Column-side stripped strings; the float score is the same Column
+    formula :func:`corpus_chrf` applies.
     """
     if max_n < 1:
         raise ValueError(f"chrf_scores: max_n must be >= 1, got {max_n}")
     if beta <= 0:
         raise ValueError(f"chrf_scores: beta must be > 0, got {beta}")
-    if backend not in ("column", "arrow"):
-        raise ValueError(f"chrf_scores: unknown backend {backend!r}")
     sp = F.regexp_replace(F.coalesce(F.col(pred_col).cast("string"), F.lit("")), r"\s+", "")
     sr = F.regexp_replace(F.coalesce(F.col(ref_col).cast("string"), F.lit("")), r"\s+", "")
-
-    if backend == "arrow":
-        st = df.select("*", _chrf_stats_arrow(sp, sr, max_n).alias("_st"))
-        cols = []
-        for n in range(1, max_n + 1):
-            cols.append(F.element_at("_st", 3 * n - 2).alias(f"match_{n}"))
-            cols.append(F.element_at("_st", 3 * n - 1).alias(f"total_c_{n}"))
-            cols.append(F.element_at("_st", 3 * n).alias(f"total_r_{n}"))
-        chrf = _chrf_formula(
-            lambda n: F.element_at("_st", 3 * n - 2),
-            lambda n: F.element_at("_st", 3 * n - 1),
-            lambda n: F.element_at("_st", 3 * n),
-            max_n, beta,
-        )
-        return st.select(
-            *[c for c in st.columns if c != "_st"], *cols, chrf.alias("chrf")
-        )
-
+    st = df.select("*", _chrf_stats_arrow(sp, sr, max_n).alias("_st"))
     cols = []
-    ms: dict[int, Column] = {}
-    tcs: dict[int, Column] = {}
-    trs: dict[int, Column] = {}
     for n in range(1, max_n + 1):
-        cg, rg = _char_grams(sp, n), _char_grams(sr, n)
-        ms[n] = _clipped_matches(cg, rg)
-        tcs[n], trs[n] = F.size(cg), F.size(rg)
-        cols.append(ms[n].cast("int").alias(f"match_{n}"))
-        cols.append(tcs[n].cast("int").alias(f"total_c_{n}"))
-        cols.append(trs[n].cast("int").alias(f"total_r_{n}"))
+        cols.append(F.element_at("_st", 3 * n - 2).alias(f"match_{n}"))
+        cols.append(F.element_at("_st", 3 * n - 1).alias(f"total_c_{n}"))
+        cols.append(F.element_at("_st", 3 * n).alias(f"total_r_{n}"))
     chrf = _chrf_formula(
-        lambda n: ms[n], lambda n: tcs[n], lambda n: trs[n], max_n, beta
+        lambda n: F.element_at("_st", 3 * n - 2),
+        lambda n: F.element_at("_st", 3 * n - 1),
+        lambda n: F.element_at("_st", 3 * n),
+        max_n, beta,
     )
-    return df.select("*", *cols, chrf.alias("chrf"))
+    return st.select(
+        *[c for c in st.columns if c != "_st"], *cols, chrf.alias("chrf")
+    )
 
 
 def corpus_chrf(scored: DataFrame, max_n: int = 6, beta: float = 2.0) -> DataFrame:
@@ -433,50 +352,16 @@ def corpus_chrf(scored: DataFrame, max_n: int = 6, beta: float = 2.0) -> DataFra
 # ROUGE-L (LCS)
 # ---------------------------------------------------------------------------
 
-def lcs_length(pred_toks: Column, ref_toks: Column) -> Column:
-    """Longest-common-subsequence length of two token arrays as a pure
-    Column expression (zero Python).
+def _lcs_arrow(pred_col: Column, ref_col: Column) -> Column:
+    """Arrow-vectorized LCS length over token arrays, O(np·nr) per row.
 
-    Uses the prefix-max reformulation of the LCS row update: with rows
-    nondecreasing in j, dp_new[j] = max(dp_prev[j], dp_new[j-1],
-    dp_prev[j-1] + match_j) unrolls to
+    With DP rows nondecreasing in j, the classic update dp_new[j] =
+    max(dp_prev[j], dp_new[j-1], dp_prev[j-1] + match_j) unrolls to
 
         dp_new[j] = max(dp_prev[j], max_{k<=j}(dp_prev[k-1] + match_k))
 
-    which has NO dependency on dp_new — each row is a transform +
-    sliced array_max instead of a sequential fold, so the whole DP is
-    one ``aggregate`` over the candidate tokens carrying the dp row as
-    the accumulator, and an ANSI recursive CTE can mirror it exactly
-    (the gate oracle does). O(np·nr²) interpreted — use the Arrow
-    backend of :func:`rouge_l_scores` for long texts; this form is the
-    SQL-reproducible reference."""
-    nr = F.size(ref_toks)
-    seq_j = F.when(nr >= 1, F.sequence(F.lit(1), nr)).otherwise(_empty_int_arr())
-    init = F.transform(F.sequence(F.lit(0), nr), lambda _: F.lit(0))
-
-    def _step(dp: Column, tok: Column) -> Column:
-        # ms[k] = dp_prev[k-1] + match_k (1-indexed arrays: dp[k] IS dp_{k-1})
-        ms = F.transform(
-            seq_j,
-            lambda k: F.element_at(dp, k)
-            + F.when(F.element_at(ref_toks, k) == tok, 1).otherwise(0),
-        )
-        tail = F.transform(
-            seq_j,
-            lambda j: F.greatest(
-                F.element_at(dp, j + 1), F.array_max(F.slice(ms, 1, j))
-            ),
-        )
-        return F.concat(F.array(F.lit(0)), tail)
-
-    return F.element_at(F.aggregate(pred_toks, init, _step), -1)
-
-
-def _lcs_arrow(pred_col: Column, ref_col: Column) -> Column:
-    """Arrow-vectorized LCS over token arrays: the identical prefix-max
-    recurrence with numpy (maximum.accumulate per candidate token) —
-    O(np·nr) per row, one Arrow batch exchange, bit-identical to
-    :func:`lcs_length` (tested)."""
+    which has no dp_new dependency: each candidate token is one vector
+    add + ``maximum.accumulate`` over the reference row."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -508,27 +393,19 @@ def rouge_l_scores(
     pred_col: str = "pred",
     ref_col: str = "ref",
     beta: float = 1.0,
-    backend: str = "arrow",
 ) -> DataFrame:
     """Per-row ROUGE-L (Lin 2004): LCS-based precision/recall/F between
     a candidate and a reference (whitespace tokens, NULL reads empty).
 
     Appends ``lcs, n_pred, n_ref, rouge_l_precision, rouge_l_recall,
     rouge_l_f`` with P = LCS/len_pred, R = LCS/len_ref, and
-    F = (1+β²)PR / (R + β²P); an empty side yields all zeros.
-
-    ``backend="arrow"`` (default) runs the numpy DP — O(np·nr) per row
-    through one Arrow exchange, the right cost for real eval texts.
-    ``backend="column"`` is the bit-identical zero-Python twin
-    (:func:`lcs_length`): O(np·nr²) interpreted, but expressible in
-    ANSI SQL — it is the form the gate's recursive-CTE oracle mirrors,
-    and the equality of the two backends is pytest-parametrized.
+    F = (1+β²)PR / (R + β²P); an empty side yields all zeros. The LCS
+    is the numpy DP of :func:`_lcs_arrow` — O(np·nr) per row through one
+    Arrow exchange.
     """
-    if backend not in ("arrow", "column"):
-        raise ValueError(f"rouge_l_scores: unknown backend {backend!r}")
     tp = _ws_tokens(F.col(pred_col))
     tr = _ws_tokens(F.col(ref_col))
-    lcs = lcs_length(tp, tr) if backend == "column" else _lcs_arrow(tp, tr)
+    lcs = _lcs_arrow(tp, tr)
     np_, nr_ = F.size(tp), F.size(tr)
     lc = lcs.cast("double")
     prec = F.when(np_ > 0, lc / np_).otherwise(F.lit(0.0))
@@ -551,53 +428,18 @@ def rouge_l_scores(
 # WER (word-level edit distance)
 # ---------------------------------------------------------------------------
 
-def edit_distance(pred_toks: Column, ref_toks: Column) -> Column:
-    """Token-level Levenshtein distance as a pure Column expression (zero
-    Python) — the :func:`lcs_length` treatment applied to edit distance.
+def _edit_distance_arrow(pred_col: Column, ref_col: Column) -> Column:
+    """Arrow-vectorized token-level Levenshtein distance, O(np·nr) per
+    row, integer arithmetic throughout.
 
     The classic row update dp_new[j] = min(dp_prev[j]+1, dp_new[j−1]+1,
-    dp_prev[j−1]+cost_j) has an intra-row dependency through the
-    insertion term, but insertion chains cost 1 per step, so with
-    m_k = min(dp_prev[k]+1, dp_prev[k−1]+cost_k) (and m_0 = dp_prev[0]+1)
+    dp_prev[j−1]+cost_j) depends on dp_new through the insertion term,
+    but insertion chains cost 1 per step, so with m_k = min(dp_prev[k]+1,
+    dp_prev[k−1]+cost_k) (and m_0 = dp_prev[0]+1)
 
         dp_new[j] = j + min_{0≤k≤j} (m_k − k)
 
-    — a prefix-min with NO dp_new dependency: each row is a transform +
-    sliced array_min, the whole DP one ``aggregate`` fold carrying the dp
-    row. Every quantity is an integer, so the Arrow backend is exactly
-    identical (not just within float tolerance). O(np·nr²) interpreted —
-    the SQL-reproducible reference form the gate's recursive CTE mirrors;
-    use the Arrow backend of :func:`wer_scores` for long texts."""
-    nr = F.size(ref_toks)
-    seq_j = F.when(nr >= 1, F.sequence(F.lit(1), nr)).otherwise(_empty_int_arr())
-    init = F.sequence(F.lit(0), nr)  # dp[0][j] = j
-
-    def _step(dp: Column, tok: Column) -> Column:
-        # array position k holds dp_prev[k-1]; m[k] (k=1..nr) =
-        # min(delete, substitute), prepended with m_0 = dp_prev[0]+1
-        ms = F.transform(
-            seq_j,
-            lambda k: F.least(
-                F.element_at(dp, k + 1) + 1,
-                F.element_at(dp, k)
-                + F.when(F.element_at(ref_toks, k) == tok, 0).otherwise(1),
-            )
-            - k,
-        )
-        a = F.concat(F.array(F.element_at(dp, 1) + 1), ms)
-        return F.transform(
-            F.sequence(F.lit(0), nr),
-            lambda j: j + F.array_min(F.slice(a, 1, j + 1)),
-        )
-
-    return F.element_at(F.aggregate(pred_toks, init, _step), -1)
-
-
-def _edit_distance_arrow(pred_col: Column, ref_col: Column) -> Column:
-    """Arrow-vectorized token edit distance: the identical prefix-min
-    recurrence with numpy (minimum.accumulate per candidate token) —
-    O(np·nr) per row, one Arrow batch exchange, integer arithmetic
-    throughout so it is exactly identical to :func:`edit_distance`."""
+    — a prefix-min (``minimum.accumulate``) per candidate token."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -628,7 +470,6 @@ def wer_scores(
     df: DataFrame,
     pred_col: str = "pred",
     ref_col: str = "ref",
-    backend: str = "arrow",
 ) -> DataFrame:
     """Per-row word error rate: token-level Levenshtein distance between
     a hypothesis and a reference (whitespace tokens, NULL reads empty),
@@ -637,19 +478,12 @@ def wer_scores(
 
     Appends ``edit_dist, n_pred, n_ref, wer`` with wer = dist/n_ref;
     when the reference is empty, wer is 0.0 against an empty hypothesis
-    and NULL otherwise (no defined normalization). ``backend="arrow"``
-    (default) runs the numpy DP — O(np·nr) per row; ``backend="column"``
-    is the exactly-identical zero-Python twin (:func:`edit_distance`) the
-    gate's recursive-CTE oracle mirrors. Integer DP → the backends agree
-    exactly, pytest-parametrized."""
-    if backend not in ("arrow", "column"):
-        raise ValueError(f"wer_scores: unknown backend {backend!r}")
+    and NULL otherwise (no defined normalization). The distance is the
+    numpy DP of :func:`_edit_distance_arrow` — O(np·nr) per row through
+    one Arrow exchange."""
     tp = _ws_tokens(F.col(pred_col))
     tr = _ws_tokens(F.col(ref_col))
-    dist = (
-        edit_distance(tp, tr) if backend == "column"
-        else _edit_distance_arrow(tp, tr)
-    )
+    dist = _edit_distance_arrow(tp, tr)
     np_, nr_ = F.size(tp), F.size(tr)
     wer = (
         F.when(nr_ > 0, dist.cast("double") / nr_.cast("double"))

@@ -1,6 +1,7 @@
 """Text-analysis column builders: token counting, quality scoring,
-language-ID heuristic, document fingerprinting. All pure JVM column
-expressions (codegen) — reusable in the FE pipeline and the gate queries.
+language-ID heuristic, document fingerprinting. Pure JVM column
+expressions (codegen), except the winnowing fingerprints (one Arrow
+kernel) — reusable in the FE pipeline and the gate queries.
 
 ``split`` selects the tokenizer regex (default any-whitespace); the gate
 queries pass a literal space so the DuckDB oracle can reproduce the
@@ -130,76 +131,14 @@ def winnow_fingerprints(
     The polynomial-mod hash (base 257 mod 2^31-1) — rather than xxhash64 —
     keeps every step reproducible in ANSI SQL, so the operator is fully
     oracle-able; values fit in int64 with no overflow (acc < 2^31, so
-    acc*257 + 126 < 2^40). One pure-codegen Column expression, no Python:
-    O(len·k) work per document, no shuffle.
+    acc*257 + 126 < 2^40). One Arrow kernel, no shuffle: per document,
+    ``k`` numpy vector ops over the char-code array, a sliding-window min
+    and a unique — O(len·k) work.
 
     Documents shorter than ``k`` (post-normalization) contribute a single
-    hash over their full text; documents empty post-normalization yield an
-    empty array.
-
-    Each intermediate (normalized text, char codes, k-gram hashes) is bound
-    to a lambda variable via ``transform(array(x), v -> ...)[0]`` so it is
-    evaluated ONCE per row. Naively naming these as Python variables embeds
-    the whole producer tree at every reference site, and Catalyst's
-    interpreted higher-order-function eval re-runs it per element — the
-    normalization regex would re-execute per character per window,
-    O(len²·k) regex work per document (measured ~3 s/doc at 300 chars).
+    hash over their full text; documents empty post-normalization (and
+    NULL texts) yield an empty array.
     """
-    norm = F.lower(
-        F.trim(
-            F.regexp_replace(F.regexp_replace(F.col(text_col), r"[^ -~]", ""), r"\s+", " ")
-        )
-    )
-
-    def _wins(hashes):
-        return F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(hashes) - F.lit(window - 1), F.lit(1))),
-            lambda j: F.array_min(F.slice(hashes, j, F.lit(window))),
-        )
-
-    def _hashes(codes):
-        return F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(codes) - F.lit(k - 1), F.lit(1))),
-            lambda i: F.aggregate(
-                F.slice(codes, i, F.lit(k)),
-                F.lit(0).cast("long"),
-                lambda acc, c: (acc * F.lit(_WINNOW_BASE) + c) % F.lit(_WINNOW_MOD),
-            ),
-        )
-
-    def _codes(t):
-        return F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(t), F.lit(1))),
-            lambda i: F.ascii(F.substring(t, i, F.lit(1))).cast("long"),
-        )
-
-    def _bind(x, f):  # evaluate x once, feed it to f as a lambda variable
-        return F.get(F.transform(F.array(x), f), 0)
-
-    fps = _bind(
-        norm,
-        lambda t: _bind(
-            _codes(t),
-            lambda codes: _bind(
-                _hashes(codes),
-                lambda hashes: F.array_sort(F.array_distinct(_wins(hashes))),
-            ),
-        ),
-    )
-    return F.when(F.length(norm) > 0, fps).otherwise(F.array().cast("array<bigint>"))
-
-
-def winnow_fingerprints_arrow(
-    text_col: str = "text", k: int = WINNOW_K, window: int = WINNOW_WINDOW
-) -> Column:
-    """Arrow-vectorized twin of :func:`winnow_fingerprints` — bit-identical
-    output (tested), ~50× faster. Catalyst evaluates higher-order functions
-    interpreted (never codegen), and the nested slice/aggregate fold costs
-    ~2.5 ms/doc at 300 chars; the numpy rolling hash (k vector ops over the
-    code array per doc, sliding-window min, unique) costs ~50 µs/doc and
-    ships through one Arrow batch exchange. Default backend for the
-    candidate-pair operator; the Column version stays as the pure-SQL
-    reference the DuckDB oracle mirrors step for step."""
     import re
 
     from pyspark.sql.functions import pandas_udf
@@ -245,7 +184,6 @@ def winnow_candidate_pairs(
     window: int = WINNOW_WINDOW,
     min_shared: int = 2,
     max_df: int | None = 1000,
-    backend: str = "arrow",
     pin: list | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs by shared winnowing fingerprints:
@@ -256,8 +194,7 @@ def winnow_candidate_pairs(
     ``max_df`` drops stop-fingerprints appearing in more than that many
     documents (candidate work per fingerprint is bounded by max_df²/2;
     a fingerprint half the corpus shares identifies nothing anyway).
-    ``backend``: 'arrow' (default — vectorized pandas UDF) or 'column'
-    (pure Column expression); identical fingerprints, tested.
+    Fingerprints come from :func:`winnow_fingerprints`.
 
     The exploded fingerprint frame is persisted for its multiple
     consumers; pass ``pin`` (a list) to receive the handle and unpersist
@@ -265,10 +202,9 @@ def winnow_candidate_pairs(
     stays cached until evicted/session end."""
     from pyspark.sql import Window
 
-    fingerprint = winnow_fingerprints_arrow if backend == "arrow" else winnow_fingerprints
     fp = df.select(
         F.col(id_col),
-        F.explode(fingerprint(text_col, k, window)).alias("fp"),
+        F.explode(winnow_fingerprints(text_col, k, window)).alias("fp"),
     )
     if max_df is not None:
         # document frequency as a window count over fp — (id, fp) is distinct

@@ -1,14 +1,16 @@
-"""Hypothesis property tests for the curation text kernels: the JVM
-sort+fold repetition statistics, the Arrow twin, and word_ngrams, on
-adversarial token streams — repeated separators (empty tokens), single
-tokens, unicode, long repeats — each against a plain-Python Counter
-oracle. Same harness conventions as test_kernel_properties.py."""
+"""Hypothesis property tests for the curation text kernels: the Arrow
+repetition statistics and word_ngrams, on adversarial token streams —
+repeated separators (empty tokens), single tokens, unicode, long
+repeats — each against a plain-Python Counter oracle. Same harness
+conventions as test_kernel_properties.py."""
 
+import re
 from collections import Counter
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 SET = settings(
     max_examples=8,
@@ -30,8 +32,8 @@ def texts_strategy():
     )
 
 
-def _py_stats(text: str, n: int):
-    toks = text.split(" ")
+def _py_stats(text: str, n: int, split: str = " "):
+    toks = re.split(split, text)
     if len(toks) < n:
         return 0, 0.0, 0.0
     grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
@@ -43,20 +45,25 @@ def _py_stats(text: str, n: int):
 
 @SET
 @given(texts_strategy(), st.integers(min_value=2, max_value=4))
-@pytest.mark.parametrize("backend", ["column", "arrow"])
-def test_repetition_stats_property(spark, backend, texts, n):
+def test_repetition_stats_property(spark, texts, n):
     from mrmr_spark.operators.curation import with_repetition_stats
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    out = with_repetition_stats(df, ns=(n,), backend=backend).collect()
-    assert len(out) == len(texts)
-    for r in out:
-        total, dup, top = _py_stats(texts[r.doc_id], n)
-        assert r[f"rep{n}_total"] == total, (backend, texts[r.doc_id])
-        assert r[f"rep{n}_dup_frac"] == pytest.approx(dup, abs=1e-15)
-        assert r[f"rep{n}_top_frac"] == pytest.approx(top, abs=1e-15)
+    # `split` is a regex, as in F.split: the default literal space, any
+    # whitespace run, and an escaped dot (which str.split would read as a
+    # two-character literal)
+    for split, data in ((" ", df),
+                        (r"\s+", df),
+                        (r"\.", df.withColumn("text", F.translate("text", " ", ".")))):
+        out = with_repetition_stats(data, ns=(n,), split=split).collect()
+        assert len(out) == len(texts)
+        for r in out:
+            total, dup, top = _py_stats(r.text, n, split)
+            assert r[f"rep{n}_total"] == total, (split, r.text)
+            assert r[f"rep{n}_dup_frac"] == pytest.approx(dup, abs=1e-15)
+            assert r[f"rep{n}_top_frac"] == pytest.approx(top, abs=1e-15)
 
 
 @SET

@@ -1,5 +1,5 @@
 """Eval-metric operators: BLEU / ROUGE-L / Bradley-Terry / kappas vs
-independent Python oracles, backend equality, plan asserts, validation."""
+independent Python oracles, plan asserts, validation."""
 
 import math
 from collections import Counter
@@ -77,12 +77,17 @@ def test_bleu_matches_python_oracle(spark):
         assert abs(row["bleu"] - bleu) < 1e-12, label
 
 
-def test_bleu_is_pure_projection(spark):
-    df = spark.createDataFrame([(0, "a b", "a b")], "id long, pred string, ref string")
-    out = bleu_scores(df)
+def _assert_one_arrow_projection(out):
+    """The per-row metrics are one ArrowEvalPython kernel over the input:
+    no shuffle, no second Python node."""
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    assert "Python" not in plan and "ArrowEval" not in plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_bleu_is_pure_projection(spark):
+    df = spark.createDataFrame([(0, "a b", "a b")], "id long, pred string, ref string")
+    _assert_one_arrow_projection(bleu_scores(df))
 
 
 def test_corpus_bleu_sums_and_partition_invariance(spark):
@@ -145,18 +150,17 @@ ROUGE_CASES = [
 ]
 
 
-@pytest.mark.parametrize("backend", ["column", "arrow"])
-def test_rouge_l_matches_python_dp(spark, backend):
+def test_rouge_l_matches_python_dp(spark):
     df = spark.createDataFrame(
         [(i, p, r) for i, (p, r) in enumerate(ROUGE_CASES)],
         "id long, pred string, ref string",
     )
-    out = rouge_l_scores(df, backend=backend).toPandas().set_index("id")
+    out = rouge_l_scores(df).toPandas().set_index("id")
     for i, (p, r) in enumerate(ROUGE_CASES):
         lcs = _py_lcs(p, r)
         np_, nr_ = len((p or "").split()), len((r or "").split())
         row = out.loc[i]
-        assert row["lcs"] == lcs, (backend, p, r)
+        assert row["lcs"] == lcs, (p, r)
         prec = lcs / np_ if np_ else 0.0
         rec = lcs / nr_ if nr_ else 0.0
         fm = 2 * prec * rec / (prec + rec) if prec + rec > 0 else 0.0
@@ -165,23 +169,9 @@ def test_rouge_l_matches_python_dp(spark, backend):
         assert abs(row["rouge_l_f"] - fm) < 1e-12
 
 
-def test_rouge_backends_identical(spark):
-    df = spark.createDataFrame(
-        [(i, p, r) for i, (p, r) in enumerate(ROUGE_CASES)],
-        "id long, pred string, ref string",
-    )
-    a = rouge_l_scores(df, backend="column").toPandas().set_index("id")
-    b = rouge_l_scores(df, backend="arrow").toPandas().set_index("id")
-    assert (a["lcs"] == b["lcs"]).all()
-    assert (a["rouge_l_f"] == b["rouge_l_f"]).all()  # bit-identical
-
-
 def test_rouge_column_backend_pure_projection(spark):
     df = spark.createDataFrame([(0, "a b", "b a")], "id long, pred string, ref string")
-    out = rouge_l_scores(df, backend="column")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "Python" not in plan and "ArrowEval" not in plan
+    _assert_one_arrow_projection(rouge_l_scores(df))
 
 
 def test_rouge_beta_weighting(spark):
@@ -192,11 +182,6 @@ def test_rouge_beta_weighting(spark):
     p, r, b2 = 1.0, 2 / 6, 9.0
     assert abs(got["rouge_l_f"] - (1 + b2) * p * r / (r + b2 * p)) < 1e-12
 
-
-def test_rouge_unknown_backend(spark):
-    df = spark.createDataFrame([("a", "a")], "pred string, ref string")
-    with pytest.raises(ValueError, match="backend"):
-        rouge_l_scores(df, backend="gpu")
 
 
 # ---------------------------------------------------------------------------
@@ -829,9 +814,7 @@ def test_chrf_matches_python_oracle(spark):
 def test_chrf_pure_projection_and_corpus(spark):
     rows = [(i, p, r) for i, (p, r, _) in enumerate(CHRF_CASES)]
     df = spark.createDataFrame(rows, "id long, pred string, ref string")
-    out = chrf_scores(df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "Python" not in plan
+    _assert_one_arrow_projection(chrf_scores(df))
 
     per_row = [_py_chrf_stats(p, r) for _, p, r in rows]
     sums = [
@@ -945,18 +928,17 @@ WER_CASES = [
 ]
 
 
-@pytest.mark.parametrize("backend", ["column", "arrow"])
-def test_wer_matches_python_dp(spark, backend):
+def test_wer_matches_python_dp(spark):
     df = spark.createDataFrame(
         [(i, p, r) for i, (p, r) in enumerate(WER_CASES)],
         "id long, pred string, ref string",
     )
-    out = wer_scores(df, backend=backend).toPandas().set_index("id")
+    out = wer_scores(df).toPandas().set_index("id")
     for i, (p, r) in enumerate(WER_CASES):
         d = _py_edit(p, r)
         np_, nr_ = len((p or "").split()), len((r or "").split())
         row = out.loc[i]
-        assert row["edit_dist"] == d, (backend, p, r)
+        assert row["edit_dist"] == d, (p, r)
         if nr_ > 0:
             assert abs(row["wer"] - d / nr_) < 1e-12
         elif np_ == 0:
@@ -965,25 +947,13 @@ def test_wer_matches_python_dp(spark, backend):
             assert math.isnan(row["wer"]) or row["wer"] is None
 
 
-def test_wer_backends_exactly_identical(spark):
-    df = spark.createDataFrame(
-        [(i, p, r) for i, (p, r) in enumerate(WER_CASES)],
-        "id long, pred string, ref string",
-    )
-    a = wer_scores(df, backend="column").toPandas().set_index("id")
-    b = wer_scores(df, backend="arrow").toPandas().set_index("id")
-    assert (a["edit_dist"] == b["edit_dist"]).all()   # integer DP: exact
-
-
 def test_wer_column_pure_projection_and_validation(spark):
     df = spark.createDataFrame([(0, "a b", "b a")], "id long, pred string, ref string")
-    plan = (
-        wer_scores(df, backend="column")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan and "Python" not in plan
-    with pytest.raises(ValueError, match="backend"):
-        wer_scores(df, backend="gpu")
+    _assert_one_arrow_projection(wer_scores(df))
+    # one kernel per metric: no backend selector is accepted
+    for metric in (bleu_scores, chrf_scores, rouge_l_scores, wer_scores):
+        with pytest.raises(TypeError, match="backend"):
+            metric(df, backend="arrow")
 
 
 # ---------------------------------------------------------------------------
@@ -1014,12 +984,10 @@ def test_property_wer_and_lcs_match_python(spark, pairs):
         [(i, p, r) for i, (p, r) in enumerate(pairs)],
         "id long, pred string, ref string",
     )
-    wer = wer_scores(df, backend="column").toPandas().set_index("id")
-    wer_a = wer_scores(df, backend="arrow").toPandas().set_index("id")
-    rl = rouge_l_scores(df, backend="column").toPandas().set_index("id")
+    wer = wer_scores(df).toPandas().set_index("id")
+    rl = rouge_l_scores(df).toPandas().set_index("id")
     for i, (p, r) in enumerate(pairs):
         assert wer.loc[i, "edit_dist"] == _py_edit(p, r), (p, r)
-        assert wer_a.loc[i, "edit_dist"] == _py_edit(p, r), (p, r)
         assert rl.loc[i, "lcs"] == _py_lcs(p, r), (p, r)
         # metric sanity: LCS and edit distance bound each other
         np_, nr_ = len(p.split()), len(r.split())
@@ -1076,23 +1044,6 @@ def test_property_bootstrap_matches_python(spark, data, n_boot, seed, parts):
         else:
             num = sum(w * x for (_, x), w in zip(rows, ws))
             assert abs(r["est"] - num / sum(ws)) < 1e-7
-
-
-def test_bleu_chrf_arrow_backends_bit_identical(spark):
-    rows = [(i, p, r) for i, (p, r, _) in enumerate(BLEU_CASES)] + [
-        (100 + i, p, r) for i, (p, r, _) in enumerate(CHRF_CASES)
-    ]
-    df = spark.createDataFrame(rows, "id long, pred string, ref string")
-    bc = bleu_scores(df, backend="column").toPandas().set_index("id")
-    ba = bleu_scores(df, backend="arrow").toPandas().set_index("id")
-    assert bc.equals(ba)                   # ints exact, floats same formula
-    cc = chrf_scores(df, backend="column").toPandas().set_index("id")
-    ca = chrf_scores(df, backend="arrow").toPandas().set_index("id")
-    assert cc.equals(ca)
-    with pytest.raises(ValueError, match="backend"):
-        bleu_scores(df, backend="gpu")
-    with pytest.raises(ValueError, match="backend"):
-        chrf_scores(df, backend="gpu")
 
 
 def test_bootstrap_ci_degenerate_contract(spark):

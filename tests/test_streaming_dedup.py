@@ -470,59 +470,48 @@ def test_eval_and_pca_stateless_on_streams(spark, doc_stream_dir):
 
 
 def test_bleu_rouge_stateless_on_streams(spark, doc_stream_dir):
-    """bleu_scores and both rouge_l backends are stateless projections
-    (Arrow included) — they run on a streaming frame unchanged and
-    replay-match the batch result row for row."""
+    """bleu_scores and rouge_l_scores are stateless Arrow projections —
+    they run on a streaming frame unchanged and replay-match the batch
+    result row for row."""
     from mrmr_spark.operators.evalmetrics import bleu_scores, rouge_l_scores
 
     d, schema, pdf = doc_stream_dir
 
-    def chain(df, backend):
+    def chain(df):
         toks = F.split(F.col("text"), " ")
         out = df.withColumn("pred", F.col("text")).withColumn(
             "ref", F.array_join(F.reverse(toks), " ")
         )
         out = bleu_scores(out)
-        out = rouge_l_scores(
-            out.drop("n_pred", "n_ref"), backend=backend
-        )
+        out = rouge_l_scores(out.drop("n_pred", "n_ref"))
         return out.select("doc_id", "match_1", "match_4", "bleu", "lcs", "rouge_l_f")
 
-    for backend in ("column", "arrow"):
-        got = _run_stream(spark, chain(_read_stream(spark, d, schema), backend),
-                          f"s_bleu_{backend}")
-        batch = chain(
-            spark.createDataFrame(pdf.drop(columns=["slice"])), backend
-        ).toPandas()
-        a = got.sort_values("doc_id").reset_index(drop=True)
-        b = batch.sort_values("doc_id").reset_index(drop=True)
-        pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)])
+    got = _run_stream(spark, chain(_read_stream(spark, d, schema)), "s_bleu")
+    batch = chain(spark.createDataFrame(pdf.drop(columns=["slice"]))).toPandas()
+    a = got.sort_values("doc_id").reset_index(drop=True)
+    b = batch.sort_values("doc_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)])
 
 
 def test_chrf_wer_stateless_on_streams(spark, doc_stream_dir):
-    """chrf_scores and wer_scores (both backends each, Arrow included)
-    are stateless projections — they run on a streaming frame unchanged
-    and replay-match the batch result row for row."""
+    """chrf_scores and wer_scores are stateless Arrow projections — they
+    run on a streaming frame unchanged and replay-match the batch result
+    row for row."""
     from mrmr_spark.operators.evalmetrics import chrf_scores, wer_scores
 
     d, schema, pdf = doc_stream_dir
 
-    def chain(df, backend):
+    def chain(df):
         toks = F.split(F.col("text"), " ")
         out = df.withColumn("pred", F.col("text")).withColumn(
             "ref", F.array_join(F.reverse(toks), " ")
         )
-        out = chrf_scores(out, backend=backend)
-        out = wer_scores(out, backend=backend)
+        out = wer_scores(chrf_scores(out))
         return out.select("doc_id", "match_1", "match_6", "chrf",
                           "edit_dist", "wer")
 
-    for backend in ("column", "arrow"):
-        got = _run_stream(spark, chain(_read_stream(spark, d, schema), backend),
-                          f"s_chrfwer_{backend}")
-        batch = chain(
-            spark.createDataFrame(pdf.drop(columns=["slice"])), backend
-        ).toPandas()
-        a = got.sort_values("doc_id").reset_index(drop=True)
-        b = batch.sort_values("doc_id").reset_index(drop=True)
-        pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)])
+    got = _run_stream(spark, chain(_read_stream(spark, d, schema)), "s_chrfwer")
+    batch = chain(spark.createDataFrame(pdf.drop(columns=["slice"]))).toPandas()
+    a = got.sort_values("doc_id").reset_index(drop=True)
+    b = batch.sort_values("doc_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)])

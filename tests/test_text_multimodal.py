@@ -94,10 +94,7 @@ def _py_winnow(text, k=None, window=None, base=257, mod=2_147_483_647):
 
 
 def test_winnow_fingerprints_match_python_oracle(spark):
-    from mrmr_spark.operators.textstats import (
-        winnow_fingerprints,
-        winnow_fingerprints_arrow,
-    )
+    from mrmr_spark.operators.textstats import winnow_fingerprints
 
     docs = [
         ("a", "The quick brown fox jumps over the lazy dog"),
@@ -115,12 +112,6 @@ def test_winnow_fingerprints_match_python_oracle(spark):
         assert got[doc_id] == _py_winnow(text), doc_id
     assert got["c"] == [] and got["e"] == []
     assert len(got["g"]) == 1
-    # the Arrow backend is bit-identical to the Column reference
-    arrow = {
-        r.doc_id: list(r.fps)
-        for r in df.select("doc_id", winnow_fingerprints_arrow().alias("fps")).collect()
-    }
-    assert arrow == got
 
 
 def test_winnow_guarantee_and_candidate_pairs(spark):
@@ -242,10 +233,7 @@ def _texts_strategy():
 )
 @given(_texts_strategy())
 def test_winnow_property_backends_match_oracle(spark, case):
-    from mrmr_spark.operators.textstats import (
-        winnow_fingerprints,
-        winnow_fingerprints_arrow,
-    )
+    from mrmr_spark.operators.textstats import winnow_fingerprints
 
     docs, shared, inject = case
     if inject and len(docs) >= 2:  # plant a shared >= k+w-1 chunk in two docs
@@ -255,12 +243,11 @@ def test_winnow_property_backends_match_oracle(spark, case):
     rows = [(str(i), t) for i, t in enumerate(docs)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     exp = {doc_id: _py_winnow(text) for doc_id, text in rows}
-    for fp in (winnow_fingerprints, winnow_fingerprints_arrow):
-        got = {
-            r.doc_id: list(r.fps)
-            for r in df.select("doc_id", fp().alias("fps")).collect()
-        }
-        assert got == exp, fp.__name__
+    got = {
+        r.doc_id: list(r.fps)
+        for r in df.select("doc_id", winnow_fingerprints().alias("fps")).collect()
+    }
+    assert got == exp
     if inject and len(rows) >= 2:
         # the winnowing theorem: the planted >= k+w-1 shared substring
         # guarantees at least one common fingerprint

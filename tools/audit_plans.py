@@ -99,7 +99,7 @@ def main():
           "band bucket join — never all-pairs")
     audit("winnow_pairs (winnowing fingerprint candidate gen)",
           gate.QUERIES["winnow_pairs"](spark, SF),
-          "ONE ArrowEvalPython fingerprint scan; max_df as a window count "
+          "ONE ArrowEvalPython fingerprint kernel; max_df as a window count "
           "over fp (one exchange, no aggregate-plus-join-back), filtered "
           "frame persisted and read by both self-join sides (the deliberate "
           "pin); bucketed fp-key join — never all-pairs")
@@ -125,11 +125,12 @@ def main():
           "agg ∝ contamination; flag join keyed on doc_id")
     audit("repetition_stats (Gopher repetition signals)",
           gate.QUERIES["repetition_stats"](spark, SF),
-          "pure projection: ZERO exchanges, ZERO Python nodes — one JVM "
-          "sort+fold per document per n")
+          "projection: ZERO exchanges, ONE ArrowEvalPython — the fused "
+          "kernel computes every n from one tokenization per document")
     audit("gopher_filter (composite quality rules)",
           gate.QUERIES["gopher_filter"](spark, SF),
-          "pure projection like repetition_stats; all six rules + the "
+          "projection like repetition_stats: ZERO exchanges, ONE "
+          "ArrowEvalPython for both repetition caps; all six rules + the "
           "conjunction in one pass over the scan")
     audit("pii_redact (regex scrub + audit counts)",
           gate.QUERIES["pii_redact"](spark, SF),
@@ -410,12 +411,12 @@ def main():
           "presentation only")
     audit("bleu_scores (sentence BLEU-4 eval metric)",
           gate.QUERIES["bleu_scores"](spark, SF),
-          "pure Column projection — zero exchanges, zero Python; the "
-          "clipped-gram folds are higher-order functions over the scan")
+          "projection: zero exchanges, ONE ArrowEvalPython for the "
+          "clipped gram counts; the score is a Column formula over them")
     audit("rouge_l (LCS eval metric, Arrow backend)",
           gate.QUERIES["rouge_l"](spark, SF),
           "one ArrowEvalPython stage for the numpy LCS DP over the scan — "
-          "no exchange; the pure-Column twin is plan-asserted in pytest")
+          "no exchange")
     audit("fleiss_kappa (annotator agreement)",
           gate.QUERIES["fleiss_kappa"](spark, SF),
           "every post-count stage is bounded by #items x #labels: "
@@ -443,12 +444,12 @@ def main():
     audit("wer (token edit distance, Arrow backend)",
           gate.QUERIES["wer"](spark, SF),
           "one ArrowEvalPython stage for the numpy prefix-min DP over "
-          "the scan — no exchange; the pure-Column twin is plan-asserted "
-          "in pytest and integer-exactly identical")
+          "the scan — no exchange")
     audit("chrf_scores (character n-gram F, chrF2)",
           gate.QUERIES["chrf_scores"](spark, SF),
-          "pure Column projection — zero exchanges, zero Python; six "
-          "orders of substr-built gram folds over the scan")
+          "projection: zero exchanges, ONE ArrowEvalPython for the six "
+          "orders of clipped char-gram counts; the score is a Column "
+          "formula over them")
     audit("krippendorff (nominal inter-annotator alpha)",
           gate.QUERIES["krippendorff"](spark, SF),
           "same two-stage shape as fleiss_kappa: (item,label) counts, "

@@ -153,18 +153,17 @@ def main() -> None:
         agg.n_flagged == len(planted) and agg.id_sum == int(planted.sum())
     )
 
-    # --- repetition stats (both backends) --------------------------------
-    for backend in ("arrow", "column"):
-        t0 = time.time()
-        rep = with_repetition_stats(docs, ns=(2,), backend=backend)
-        chk = rep.agg(
-            F.sum(F.when((F.col("doc_id") % 23 == 0) & (F.col("rep2_dup_frac") > 0.2), 1).otherwise(0)).alias("hit"),
-            F.max(F.when(F.col("doc_id") % 23 != 0, F.col("rep2_dup_frac"))).alias("bg_max"),
-        ).first()
-        out[f"repetition_{backend}_s"] = round(time.time() - t0, 3)
-        out[f"repetition_{backend}_ok"] = bool(
-            chk.hit == len(range(0, N_DOCS, 23)) and chk.bg_max < 0.2
-        )
+    # --- repetition stats -------------------------------------------------
+    t0 = time.time()
+    rep = with_repetition_stats(docs, ns=(2,))
+    chk = rep.agg(
+        F.sum(F.when((F.col("doc_id") % 23 == 0) & (F.col("rep2_dup_frac") > 0.2), 1).otherwise(0)).alias("hit"),
+        F.max(F.when(F.col("doc_id") % 23 != 0, F.col("rep2_dup_frac"))).alias("bg_max"),
+    ).first()
+    out["repetition_s"] = round(time.time() - t0, 3)
+    out["repetition_ok"] = bool(
+        chk.hit == len(range(0, N_DOCS, 23)) and chk.bg_max < 0.2
+    )
 
     # --- stratified sampling (presample tier, skewed strata) -------------
     t0 = time.time()
