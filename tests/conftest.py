@@ -38,3 +38,25 @@ def snapshots(spark):
     from mrmr_spark.sources.transcripts import generate_snapshots_pandas
 
     return spark.createDataFrame(generate_snapshots_pandas(n_convs=60, seed=43)).cache()
+
+
+@pytest.fixture
+def frame_from(spark, tmp_path):
+    """Build a test frame the way a per-row kernel meets its input in a
+    pipeline: ``source="arrow"`` converts a pandas frame through Arrow,
+    ``source="column"`` writes it to Parquet and reads it back through the
+    columnar scan. NULLs must survive either path."""
+    import pandas as pd
+
+    def make(rows, schema, source):
+        names = [c.split()[0] for c in schema.split(",")]
+        df = spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+        if source == "arrow":
+            return df
+        if source != "column":
+            raise ValueError(f"unknown source {source!r}")
+        path = str(tmp_path / "frame.parquet")
+        df.write.mode("overwrite").parquet(path)
+        return spark.read.parquet(path)
+
+    return make

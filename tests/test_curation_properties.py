@@ -45,11 +45,12 @@ def _py_stats(text: str, n: int, split: str = " "):
 
 @SET
 @given(texts_strategy(), st.integers(min_value=2, max_value=4))
-def test_repetition_stats_property(spark, texts, n):
+@pytest.mark.parametrize("source", ["arrow", "column"])
+def test_repetition_stats_property(frame_from, source, texts, n):
     from mrmr_spark.operators.curation import with_repetition_stats
 
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    df = frame_from(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string", source
     )
     # `split` is a regex, as in F.split: the default literal space, any
     # whitespace run, and an escaped dot (which str.split would read as a
@@ -61,7 +62,7 @@ def test_repetition_stats_property(spark, texts, n):
         assert len(out) == len(texts)
         for r in out:
             total, dup, top = _py_stats(r.text, n, split)
-            assert r[f"rep{n}_total"] == total, (split, r.text)
+            assert r[f"rep{n}_total"] == total, (source, split, r.text)
             assert r[f"rep{n}_dup_frac"] == pytest.approx(dup, abs=1e-15)
             assert r[f"rep{n}_top_frac"] == pytest.approx(top, abs=1e-15)
 

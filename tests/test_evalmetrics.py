@@ -150,17 +150,19 @@ ROUGE_CASES = [
 ]
 
 
-def test_rouge_l_matches_python_dp(spark):
-    df = spark.createDataFrame(
+@pytest.mark.parametrize("source", ["arrow", "column"])
+def test_rouge_l_matches_python_dp(frame_from, source):
+    df = frame_from(
         [(i, p, r) for i, (p, r) in enumerate(ROUGE_CASES)],
         "id long, pred string, ref string",
+        source,
     )
     out = rouge_l_scores(df).toPandas().set_index("id")
     for i, (p, r) in enumerate(ROUGE_CASES):
         lcs = _py_lcs(p, r)
         np_, nr_ = len((p or "").split()), len((r or "").split())
         row = out.loc[i]
-        assert row["lcs"] == lcs, (p, r)
+        assert row["lcs"] == lcs, (source, p, r)
         prec = lcs / np_ if np_ else 0.0
         rec = lcs / nr_ if nr_ else 0.0
         fm = 2 * prec * rec / (prec + rec) if prec + rec > 0 else 0.0
@@ -928,17 +930,19 @@ WER_CASES = [
 ]
 
 
-def test_wer_matches_python_dp(spark):
-    df = spark.createDataFrame(
+@pytest.mark.parametrize("source", ["arrow", "column"])
+def test_wer_matches_python_dp(frame_from, source):
+    df = frame_from(
         [(i, p, r) for i, (p, r) in enumerate(WER_CASES)],
         "id long, pred string, ref string",
+        source,
     )
     out = wer_scores(df).toPandas().set_index("id")
     for i, (p, r) in enumerate(WER_CASES):
         d = _py_edit(p, r)
         np_, nr_ = len((p or "").split()), len((r or "").split())
         row = out.loc[i]
-        assert row["edit_dist"] == d, (p, r)
+        assert row["edit_dist"] == d, (source, p, r)
         if nr_ > 0:
             assert abs(row["wer"] - d / nr_) < 1e-12
         elif np_ == 0:
