@@ -5263,9 +5263,9 @@ def _bleu_pairs(spark, sf_dir):
 def q_bleu_scores(spark, sf_dir):
     """Sentence BLEU-4 over constructed (pred, ref) pairs. The oracle
     recomputes every clipped n-gram match count with list lambdas (the
-    same distinct-gram multiset-min the engine folds) plus the brevity
-    penalty and the repeated-sqrt geometric mean, so the value check
-    covers all 4 gram orders and the zero conventions row by row."""
+    same distinct-gram multiset-min the Arrow kernel counts) plus the
+    brevity penalty and the repeated-sqrt geometric mean, so the value
+    check covers all 4 gram orders and the zero conventions row by row."""
     from mrmr_spark.operators.evalmetrics import bleu_scores
 
     out = bleu_scores(_bleu_pairs(spark, sf_dir))
@@ -5381,11 +5381,10 @@ FROM agg
 
 
 def q_rouge_l(spark, sf_dir):
-    """ROUGE-L on the default Arrow backend (pred = first 12 tokens, ref
-    = a 4-token rotation, doc_id%7 subset) against a recursive-CTE oracle
-    that runs the SAME prefix-max LCS recurrence the pure-Column twin
-    folds — so the row is both a DP value check and backend-equivalence
-    evidence (column ≡ arrow is pytest-parametrized on top)."""
+    """ROUGE-L from its one Arrow kernel (pred = first 12 tokens, ref =
+    a 4-token rotation, doc_id%7 subset) against a recursive-CTE oracle
+    that runs the same prefix-max LCS recurrence independently in SQL —
+    a DP value check row by row (a Python-DP oracle test runs on top)."""
     from mrmr_spark.operators.evalmetrics import rouge_l_scores
 
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 7 == 0)
@@ -5448,11 +5447,11 @@ FROM fin
 
 
 def q_wer(spark, sf_dir):
-    """Word error rate on the default Arrow backend (same pred/ref pairs
-    as the rouge row) against a recursive-CTE oracle running the SAME
-    prefix-min edit-distance recurrence the pure-Column twin folds — DP
-    value check + backend-equivalence evidence in one row (column ≡ arrow
-    is exactly-integer-identical, pytest-parametrized on top)."""
+    """Word error rate from its one Arrow kernel (same pred/ref pairs as
+    the rouge row) against a recursive-CTE oracle running the same
+    prefix-min edit-distance recurrence independently in SQL — an
+    exact-integer DP value check row by row (a Python-DP oracle test runs
+    on top)."""
     from mrmr_spark.operators.evalmetrics import wer_scores
 
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 7 == 0)

@@ -47,6 +47,8 @@ Hash families (``hash_fn``):
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -137,6 +139,9 @@ def _hashed_embedding_arrow(
     """
     from pyspark.sql.functions import pandas_udf
 
+    # ``split`` is a regex, as in the Column backends' F.split
+    splitter = re.compile(split)
+
     @pandas_udf("array<double>")
     def _emb(texts: pd.Series) -> pd.Series:
         cache: dict[str, tuple[int, int]] = {}
@@ -158,7 +163,7 @@ def _hashed_embedding_arrow(
         out = []
         for t in texts:
             counts = np.zeros(dim, dtype=np.int64)
-            for w in (t or "").split(split):
+            for w in splitter.split(t or ""):
                 if w:
                     b, s = bs(w)
                     counts[b] += s
@@ -192,10 +197,12 @@ def hashed_embedding(
     backend: str = "group",
 ) -> DataFrame:
     """Append ``out_col``: the ``dim``-dimensional hashed token-count
-    embedding of ``text_col``. Empty tokens are dropped; a document with no
-    tokens (or NULL text) embeds to the zero vector. ``signed`` toggles the
-    ±1 sign stream (unbiased inner products — the feature-hashing trick);
-    ``signed=False`` gives a plain hashed tf histogram.
+    embedding of ``text_col``. Tokens are the pieces of the text split on
+    the regex ``split`` (every backend, like ``F.split``); empty tokens are
+    dropped, and a document with no tokens (or NULL text) embeds to the
+    zero vector. ``signed`` toggles the ±1 sign stream (unbiased inner
+    products — the feature-hashing trick); ``signed=False`` gives a plain
+    hashed tf histogram.
 
     ``backend="group"`` keeps only ``id_col`` plus the embedding through the
     aggregation and joins the vector back onto ``df`` (broadcast-free

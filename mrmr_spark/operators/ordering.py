@@ -27,13 +27,6 @@ def with_row_key(df: DataFrame, cols=("conv_id", "turn_idx"), name: str = "row_k
     return df.withColumn(name, F.concat_ws("#", *[F.col(c).cast("string") for c in cols]))
 
 
-def ts_seconds(col: str | Column = "ts") -> Column:
-    """Timestamp as epoch seconds (double, microsecond precision) — the
-    numeric timeline used by range windows and gap features."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("double")
-
-
 def ts_micros(col: str | Column) -> Column:
     """Integer epoch microseconds; handles TIMESTAMP and TIMESTAMP_NTZ
     (parquet without tz). Gap/duration math uses *differences*, so the

@@ -7,28 +7,35 @@ Two modes, as in the reference:
   ``loops.select_k_elbow``.
 - **evaluate**: score each k-prefix of the selection path on held-out data
   (time holdout = train on past / validate on future; group CV = leave
-  whole groups out). The reference fits sklearn Ridge per (split, k); here
-  EVERY strategy runs as shared scans over the fold-tagged frame: ONE
-  fold-keyed fused stats scan (an indicator-augmented Gram accumulator
-  per fold — any train split's exact imputed/standardized moments AND
-  Gram follow by driver-side Chan merges of the other folds' slots,
-  ``kernels.fused_foldwise_stats``/``finish_loo_stats``) and ONE
-  fold-grouped loss scan scoring every split's models on its own val
-  fold. Every (alpha, k)-prefix solve is a driver-side
-  ``np.linalg.solve`` on the leading submatrix — closed-form ridge, no
-  sklearn, no per-split scans, no persisted split frames (SURVEY.md §7
-  Phase 3). Group CV: 2 scans total at any n_splits (was 3 × n_splits);
-  time holdout: 2 scans, no persist.
+  whole groups out). The reference fits sklearn Ridge per (split, k) in one
+  loop over (train, val) splits; here both strategies are that loop over
+  a fold-tagged frame, run by one evaluator per task
+  (``_ridge_group_cv_scores``, ``_logistic_group_cv_scores``) that scores
+  a given list of val folds, each against the union of the other folds.
+  Group CV tags rows by group hash and scores every fold; time holdout
+  tags train/val as folds 0/1 and scores fold 1 only. The evaluator runs
+  ONE fold-keyed fused stats scan (an indicator-augmented Gram
+  accumulator per fold — any train split's exact imputed/standardized
+  moments AND Gram follow by driver-side Chan merges of the other folds'
+  slots, ``kernels.fused_foldwise_stats``/``finish_loo_stats``). Every
+  (alpha, k)-prefix solve is a driver-side ``np.linalg.solve`` on the
+  leading submatrix — closed-form ridge, no sklearn, no per-split scans,
+  no persisted split frames (SURVEY.md §7 Phase 3). Squared-error
+  losses follow from the same fold accumulators, so rmse costs 1 scan
+  for either strategy; mae adds one fold-grouped loss scan over the
+  scored folds' rows (2 scans).
 
 Classification (metric 'logloss'/'error', auto_k.py:142-161): the
 reference fits sklearn LogisticRegression(C=1.0, lbfgs) per k-prefix on
 the standardized train split. Logistic has no closed form, so here the
 fit runs on the driver over a deterministic bounded subsample of train
 (numpy accelerated-gradient softmax, L2 as in C=1.0) while
-standardization stats AND the validation metric stay distributed. Group
-CV shares ONE bounded collect across all splits' fits (per-split budget
-~(S−1)/S of ``fit_subsample``; identical to per-split draws when
-n ≤ fit_subsample — see ``_logistic_group_cv_scores``).
+standardization stats AND the validation metric stay distributed. All
+scored splits share ONE bounded collect drawn from the folds that train
+some scored split — fold 0 alone for time holdout, every fold for group
+CV (per-split budget ~(S−1)/S of ``fit_subsample``; identical to
+per-split draws when n ≤ fit_subsample — see
+``_logistic_group_cv_scores``).
 
 **Documented deviation from the reference** (auto_k.py:142-161): when a
 ``weight_col`` is given, both the softmax fit and the distributed
@@ -39,15 +46,15 @@ of this engine (the ridge path and every relevance kernel honor
 weights); pass ``weight_col=None`` for reference-exact behavior.
 
 Validation scoring plan (both tasks): ALL (k-prefix × hyperparameter)
-models are scored in ONE ``mapInArrow`` scan of the val split — the
-per-row predictions for every model are a single (n×p)·(p×M) GEMM on
-the standardized Arrow batch, reduced to an (M+1)-float64 accumulator
-per partition. This replaces the round-2 design (|k_grid|×|alphas|
-aggregate expressions of up to max_k terms each in one select), which
-hit Spark's codegen width cliff at the default ``max_k=100`` — the same
-planning/codegen-width cost class that makes every moment and Gram scan
-in ``kernels.py`` an Arrow reduction.
-Expression width is now O(p) regardless of the k grid.
+models are scored in ONE ``mapInArrow`` scan of the scored folds' rows
+— the per-row predictions for every model are a single (n×p)·(p×M) GEMM
+on the standardized Arrow batch, reduced to an (S·(M+1))-float64
+accumulator per partition (squared error skips this scan). This
+replaces the round-2 design (|k_grid|×|alphas| aggregate expressions of
+up to max_k terms each in one select), which hit Spark's codegen width
+cliff at the default ``max_k=100`` — the same planning/codegen-width
+cost class that makes every moment and Gram scan in ``kernels.py`` an
+Arrow reduction. Expression width is now O(p) regardless of the k grid.
 
 The k grid replicates ``_build_k_grid`` exactly (auto_k.py:35-48);
 metric resolution replicates ``_resolve_metric`` (auto_k.py:52-60).
@@ -61,7 +68,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mrmr_spark.select import binning, kernels, relevance
+from mrmr_spark.select import binning, kernels
 
 
 @dataclass
@@ -103,126 +110,6 @@ def build_k_grid(min_k: int, max_k: int) -> list[int]:
     grid.add(min_k)
     grid.add(max_k)
     return sorted(k for k in grid if min_k <= k <= max_k)
-
-
-def _standardized_batch(
-    batch, cols: list[str], imput: np.ndarray, mu: np.ndarray, sd: np.ndarray
-) -> np.ndarray:
-    """(n, p) standardized matrix from an Arrow batch: impute non-finite
-    with the train means, center/scale with the train stats (no f32
-    quantization — auto-k runs quantize_f32=False end to end)."""
-    X = kernels._batch_cols(batch, cols)
-    fin = np.isfinite(X)
-    Xq = np.where(fin, X, imput[None, :])
-    return (Xq - mu[None, :]) / sd[None, :]
-
-
-def _regression_loss_pass(
-    val: DataFrame,
-    path: list[str],
-    y_col: str,
-    weight_col: str | None,
-    imput: np.ndarray,
-    mu: np.ndarray,
-    sd: np.ndarray,
-    y_wmean: float,
-    B: np.ndarray,
-    metric: str,
-) -> np.ndarray:
-    """Weighted mean squared/absolute error of ALL M ridge models on the
-    val split in ONE Arrow scan: predictions for every (k-prefix, alpha)
-    model are one (n×p)·(p×M) GEMM per batch (prefix models are zero-padded
-    beta columns). Communication: one (M+1)-float64 accumulator per
-    partition. Bounded expression width — this is the fix for the round-2
-    codegen-cliff finding at max_k=100."""
-    M = B.shape[1]
-    proj = [F.col(c).cast("double").alias(c) for c in path]
-    proj.append(F.col(y_col).cast("double").alias("_y_"))
-    if weight_col:
-        proj.append(F.col(weight_col).cast("double").alias("_w_"))
-    dfp = val.select(*proj)
-    imput = np.ascontiguousarray(imput, dtype=np.float64)
-    mu = np.ascontiguousarray(mu, dtype=np.float64)
-    sd = np.ascontiguousarray(sd, dtype=np.float64)
-    B = np.ascontiguousarray(B, dtype=np.float64)
-
-    def term(batch) -> np.ndarray:
-        Z = _standardized_batch(batch, path, imput, mu, sd)
-        y = np.asarray(
-            batch.column(batch.schema.get_field_index("_y_")).to_numpy(zero_copy_only=False),
-            dtype=np.float64,
-        )
-        w = (
-            np.asarray(
-                batch.column(batch.schema.get_field_index("_w_")).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            if weight_col
-            else np.ones(Z.shape[0])
-        )
-        # drop rows with a null/NaN val target (their weight too): one bad
-        # y row would make R NaN and poison w@L for ALL M models at once.
-        # The old aggregate-expression path skipped null y implicitly
-        # (Spark sum ignores nulls) and the classification twin masks —
-        # this keeps the three paths consistent.
-        ok = np.isfinite(y)
-        if not ok.all():
-            Z, y, w = Z[ok], y[ok], w[ok]
-        R = (y - y_wmean)[:, None] - Z @ B
-        L = np.abs(R) if metric == "mae" else R * R
-        out = np.empty(M + 1, dtype=np.float64)
-        out[:M] = w @ L
-        out[M] = w.sum()
-        return out
-
-    acc = kernels.arrow_reduce(dfp, term, M + 1)
-    sw = acc[M]
-    if sw <= 0.0:
-        return np.full(M, np.inf)
-    return acc[:M] / sw
-
-
-def _ridge_path_scores(
-    train: DataFrame,
-    val: DataFrame,
-    path: list[str],
-    target_col: str,
-    weight_col: str | None,
-    k_grid: list[int],
-    metric: str | tuple[str, ...],
-) -> dict[int, float] | dict[str, dict[int, float]]:
-    """Fit closed-form ridge on ``train`` for every (alpha, k-prefix); pick
-    alpha per k by... the reference uses RidgeCV on train then one Ridge —
-    here: best alpha by validation score directly (one Gram pass per split,
-    the rest is driver algebra). Validation scoring for ALL (k, alpha)
-    models at once via ONE Arrow GEMM pass (``_regression_loss_pass``).
-
-    ``metric`` may be a tuple of metrics: the metric-independent stats,
-    Gram, and betas are computed once and only the loss pass repeats —
-    returns ``{metric: {k: score}}`` then (used by the parity tests)."""
-    stats = relevance.f_regression_scores(train, path, target_col, weight_col, quantize_f32=False)
-    gram = kernels.gram_pass(
-        train, path, weight_col,
-        stats["impute_means"], stats["wmeans"], stats["wstds"],
-        y_col=target_col, y_wmean=stats["y_wmean"], y_wstd=stats["y_wstd"],
-        quantize_f32=False, clip=None,
-    )
-    sw = gram["sw"]
-    G = gram["R"] * sw
-    g = gram["r_y"] * sw * stats["y_wstd"]
-
-    B, keys = _ridge_betas(G, g, k_grid, len(path))
-
-    metrics = (metric,) if isinstance(metric, str) else tuple(metric)
-    out: dict[str, dict[int, float]] = {}
-    for m in metrics:
-        losses = _regression_loss_pass(
-            val, path, target_col, weight_col,
-            stats["impute_means"], stats["wmeans"], stats["wstds"],
-            float(stats["y_wmean"]), B, m,
-        )
-        out[m] = _min_over_alphas(keys, losses, m)
-    return out[metric] if isinstance(metric, str) else out
 
 
 _RIDGE_ALPHAS = np.logspace(-3, 3, 10)
@@ -280,38 +167,6 @@ def _min_over_alphas(
     return scores
 
 
-def _ridge_holdout_scores(
-    tagged: DataFrame,
-    path: list[str],
-    target_col: str,
-    weight_col: str | None,
-    k_grid: list[int],
-    metric: str,
-) -> dict[int, float]:
-    """Time-holdout ridge evaluate in TWO scans, no persist: the frame is
-    tagged _fold 0 (train) / 1 (val); one fused fold-keyed stats scan
-    yields the train split's statistics (finish_loo_stats with val_fold=1
-    merges only fold 0), and one loss scan scores all (k, alpha) models on
-    the val rows."""
-    p = len(path)
-    accs = kernels.fused_foldwise_stats(
-        tagged, path, target_col, "_fold", 2, weight_col, quantize_f32=False
-    )
-    _require_finite_y_accs(accs)
-    st = kernels.finish_loo_stats(accs, 1, p, quantize_f32=False)
-    ri = _ridge_inputs_from_fused(st)
-    G = ri["R"] * ri["sw"]
-    g = ri["r_y"] * ri["sw"] * ri["y_wstd"]
-    if not (np.isfinite(G).all() and np.isfinite(g).all() and ri["sw"] > 0):
-        return {kk: float("inf") for kk in k_grid}
-    B, keys = _ridge_betas(G, g, k_grid, p)
-    losses = _regression_loss_pass(
-        tagged.where(F.col("_fold") == 1), path, target_col, weight_col,
-        ri["impute_means"], ri["wmeans"], ri["wstds"], ri["y_wmean"], B, metric,
-    )
-    return _min_over_alphas(keys, losses, metric)
-
-
 def _grouped_regression_loss_pass(
     df: DataFrame,
     path: list[str],
@@ -325,11 +180,13 @@ def _grouped_regression_loss_pass(
     B: np.ndarray,
     metric: str,
 ) -> np.ndarray:
-    """Fold-grouped twin of ``_regression_loss_pass``: ONE Arrow scan of the
-    fold-tagged frame scores every split's models on that split's val fold.
-    Each row is val data for exactly the split whose index equals its fold,
-    standardized with THAT split's train stats (``imput``/``mu``/``sd``/
-    ``y_wmean`` are (S, p) / (S,); ``B`` is (S, p, M)). Returns (S, M)
+    """Weighted mean squared/absolute error of ALL M ridge models of every
+    split in ONE Arrow scan of the fold-tagged frame: each row is val data
+    for exactly the split whose index equals its fold, standardized with
+    THAT split's train stats (``imput``/``mu``/``sd``/``y_wmean`` are
+    (S, p) / (S,); ``B`` is (S, p, M) zero-padded prefix betas), and its
+    predictions for all M models are one (n×p)·(p×M) GEMM. Rows with a
+    null/NaN target or a fold outside [0, S) are skipped. Returns (S, M)
     weighted mean losses (inf where a fold had no weight)."""
     S, p, M = B.shape
     proj = [F.col(c).cast("double").alias(c) for c in path]
@@ -398,8 +255,8 @@ def _algebraic_regression_losses(
     Σw·r² = Syy − 2·b'Szy + b'Szz·b with Szz/Szy/Syy shifted from
     fold-mean-centered moments to train-mean-centered ones. Exact up to
     float reassociation vs the row-wise ``_grouped_regression_loss_pass``
-    (parity-tested at 1e-9); only valid for squared loss — mae keeps the
-    row pass."""
+    (matches the NumPy oracle at 1e-9); only valid for squared loss — mae
+    keeps the row pass."""
     M = B.shape[1]
     st = kernels.finish_fold_stats(accs, v, p, ri["impute_means"])
     sw_v = float(st["sw"])
@@ -421,10 +278,11 @@ def _algebraic_regression_losses(
 
 
 class _InsufficientFolds(Exception):
-    """Fewer than 2 hash folds are non-empty: either a single group, or a
-    tiny group cardinality whose hashes collided. The caller decides —
+    """Fewer than 2 folds are non-empty. The caller decides: for group CV
+    (a single group, or a tiny group cardinality whose hashes collided)
     select_k_evaluate retries once with an exact round-robin group→fold
-    map (bounded distinct collect + broadcast join) before giving up."""
+    map (bounded distinct collect + broadcast join) before giving up; for
+    time holdout one side of the cut is empty and it raises."""
 
 
 def _require_finite_y_accs(accs: np.ndarray) -> None:
@@ -432,8 +290,8 @@ def _require_finite_y_accs(accs: np.ndarray) -> None:
     read from the fold accumulators' tail (``[-2]`` = per-fold non-finite-y
     count) — no extra scan. Without this a single NaN/null y row NaN-poisons
     the fused Gram, every (k, alpha) score goes inf, and select_k_evaluate
-    silently returns max_k — while the per-split path (via
-    ``f_regression_scores``) raises. Both paths must raise identically."""
+    silently returns max_k — while every other regression backend (via
+    ``f_regression_scores``) raises."""
     if float(np.asarray(accs)[:, -2].sum()) > 0:
         raise ValueError("Non-finite values in y are not allowed for regression.")
 
@@ -448,6 +306,15 @@ def _occupied_folds(accs: np.ndarray) -> np.ndarray:
     return occ
 
 
+def _scored_rows(folded: DataFrame, val_folds: list[int], n_folds: int) -> DataFrame:
+    """The rows a loss scan reads: all of them when every fold is scored,
+    else only the scored folds' (time holdout sends only its val side
+    through Arrow)."""
+    if len(val_folds) == n_folds:
+        return folded
+    return folded.where(F.col("_fold").isin(val_folds))
+
+
 def _ridge_group_cv_scores(
     folded: DataFrame,
     path: list[str],
@@ -456,20 +323,28 @@ def _ridge_group_cv_scores(
     k_grid: list[int],
     metric: str,
     n_splits: int,
+    val_folds: list[int],
 ) -> dict[int, float]:
-    """Group-CV ridge evaluate in ONE scan for squared-error metrics (TWO
-    for mae; was 3 × n_splits sequential scans): one fold-keyed fused stats
-    pass (every leave-one-fold-out train split's moments AND Gram by
-    driver-side Chan merges of the per-fold accumulators); squared-error
-    validation losses then follow algebraically from the SAME per-fold
-    accumulators (``_algebraic_regression_losses``) — mae is not a
-    quadratic form, so it keeps the fold-grouped row-wise loss pass."""
+    """Fold-CV ridge evaluate over the ``_fold``-tagged frame: split ``v``
+    for each ``v`` in ``val_folds`` validates on fold ``v`` and trains on
+    every other fold; the score per k is the mean over the non-empty
+    scored folds. ONE scan for squared-error metrics (TWO for mae; was
+    3 × n_splits sequential scans): one fold-keyed fused stats pass (every
+    leave-one-fold-out train split's moments AND Gram by driver-side Chan
+    merges of the per-fold accumulators); squared-error validation losses
+    then follow algebraically from the SAME per-fold accumulators
+    (``_algebraic_regression_losses``) — mae is not a quadratic form, so
+    it keeps the fold-grouped row-wise loss pass over the scored folds'
+    rows. Raises ``_InsufficientFolds`` when fewer than 2 folds hold rows."""
     p = len(path)
     accs = kernels.fused_foldwise_stats(
         folded, path, target_col, "_fold", n_splits, weight_col, quantize_f32=False
     )
     _require_finite_y_accs(accs)
     occupied = _occupied_folds(accs)
+    # a val fold with no rows is a split GroupKFold could not produce:
+    # excluded from the mean, like min(n_splits, n_groups)
+    scored = [v for v in val_folds if occupied[v]]
     M = len(k_grid) * len(_RIDGE_ALPHAS)
     B = np.zeros((n_splits, p, M))
     imput = np.zeros((n_splits, p))
@@ -479,9 +354,7 @@ def _ridge_group_cv_scores(
     live = np.zeros(n_splits, dtype=bool)
     ris: list[dict | None] = [None] * n_splits
     keys = None
-    for v in range(n_splits):
-        if not occupied[v]:
-            continue  # no val rows: a split GroupKFold could not produce
+    for v in scored:
         st = kernels.finish_loo_stats(accs, v, p, quantize_f32=False)
         ri = _ridge_inputs_from_fused(st)
         G = ri["R"] * ri["sw"]
@@ -499,22 +372,19 @@ def _ridge_group_cv_scores(
 
     if metric == "mae":
         losses = _grouped_regression_loss_pass(
-            folded, path, target_col, weight_col, "_fold", imput, mus, sds,
-            ymn, B, metric,
+            _scored_rows(folded, val_folds, n_splits), path, target_col,
+            weight_col, "_fold", imput, mus, sds, ymn, B, metric,
         )
     else:
         losses = np.full((n_splits, M), np.inf)
-        for v in range(n_splits):
+        for v in scored:
             if live[v]:
                 losses[v] = _algebraic_regression_losses(accs, v, p, ris[v], B[v])
-    per_split: list[dict[int, float]] = []
-    for v in range(n_splits):
-        if not occupied[v]:
-            continue  # excluded from the mean, like min(n_splits, n_groups)
-        if live[v]:
-            per_split.append(_min_over_alphas(keys, losses[v], metric))
-        else:
-            per_split.append({kk: np.inf for kk in k_grid})
+    per_split = [
+        _min_over_alphas(keys, losses[v], metric) if live[v]
+        else {kk: np.inf for kk in k_grid}
+        for v in scored
+    ]
     return {
         kk: float(np.mean([s[kk] for s in per_split])) for kk in k_grid
     }
@@ -563,87 +433,6 @@ def _softmax_fit(
     return Wb[:k], Wb[k]
 
 
-def _logistic_path_scores(
-    train: DataFrame,
-    val: DataFrame,
-    path: list[str],
-    y_code_col: str,
-    n_classes: int,
-    weight_col: str | None,
-    k_grid: list[int],
-    metric: str | tuple[str, ...],
-    fit_subsample: int,
-    seed: int,
-) -> dict[int, float] | dict[str, dict[int, float]]:
-    """Classification evaluate: per-k softmax fit on a bounded train
-    subsample (driver), logloss/error scored distributed on the FULL val
-    split via one Arrow GEMM pass (reference auto_k.py:142-161; weighted
-    scoring is a documented deviation — see module docstring).
-
-    ``metric`` may be a tuple: the stats scan, the bounded collect, and
-    the softmax fits happen once and only the loss pass repeats — returns
-    ``{metric: {k: score}}`` then (used by the parity tests)."""
-    from mrmr_spark.select.preprocess import deterministic_subsample
-
-    stats = relevance.f_classif_scores(
-        train, path, y_code_col, n_classes, weight_col, quantize_f32=False
-    )
-    mu, sd, imput = stats["wmeans"], stats["wstds"], stats["impute_means"]
-
-    def std_expr(j):
-        c = F.col(path[j]).cast("double")
-        fin = ~F.isnull(c) & ~F.isnan(c) & (F.abs(c) != float("inf"))
-        x = F.when(fin, c).otherwise(F.lit(float(imput[j])))
-        return (x - F.lit(float(mu[j]))) / F.lit(float(sd[j]))
-
-    # bounded driver-side train matrix, standardized JVM-side before collect
-    tr = train
-    ntr = tr.count()
-    if ntr > fit_subsample:
-        tr = deterministic_subsample(tr, fit_subsample, seed)
-        ntr = fit_subsample
-    sel = [std_expr(j).alias(f"z{j}") for j in range(len(path))]
-    sel.append(F.col(y_code_col).cast("int").alias("_y"))
-    if weight_col:
-        sel.append(F.col(weight_col).cast("double").alias("_w"))
-    pdf = tr.select(*sel).toPandas()
-    Z = pdf[[f"z{j}" for j in range(len(path))]].to_numpy(np.float64)
-    y = pdf["_y"].to_numpy(np.int64)
-    wv = pdf["_w"].to_numpy(np.float64) if weight_col else None
-
-    metrics = (metric,) if isinstance(metric, str) else tuple(metric)
-    if len(np.unique(y)) < 2:
-        inf_scores = {kk: float("inf") for kk in k_grid}
-        return inf_scores if isinstance(metric, str) else {m: dict(inf_scores) for m in metrics}
-
-    # one softmax fit per k-prefix; pack all models into a single (p, M·C)
-    # coefficient matrix so the val split is scored in ONE Arrow GEMM pass
-    # (see module docstring — the per-k aggregate-expression select hit the
-    # codegen width cliff at max_k=100)
-    p = len(path)
-    M = len(k_grid)
-    C = n_classes
-    Ws = np.zeros((p, M * C))
-    bs = np.zeros(M * C)
-    for mi, kk in enumerate(k_grid):
-        kk_eff = min(kk, p)
-        # sklearn C=1.0: loss = sum(CE) + 0.5||W||^2  ->  mean-CE lam = 1/n
-        Wk, bk = _softmax_fit(Z[:, :kk_eff], y, n_classes, wv, lam=1.0 / max(ntr, 1))
-        Ws[:kk_eff, mi * C : (mi + 1) * C] = Wk
-        bs[mi * C : (mi + 1) * C] = bk
-
-    out: dict[str, dict[int, float]] = {}
-    for m in metrics:
-        losses = _classification_loss_pass(
-            val, path, y_code_col, weight_col, imput, mu, sd, Ws, bs, C, m
-        )
-        out[m] = {
-            kk: (float(v) if np.isfinite(v) else float("inf"))
-            for kk, v in zip(k_grid, losses)
-        }
-    return out[metric] if isinstance(metric, str) else out
-
-
 def _softmax_losses(
     Z: np.ndarray, y: np.ndarray, M: int, C: int,
     Ws: np.ndarray, bs: np.ndarray, metric: str,
@@ -661,71 +450,6 @@ def _softmax_losses(
     return (S.argmax(axis=2) != y[:, None]).astype(np.float64)
 
 
-def _classification_loss_pass(
-    val: DataFrame,
-    path: list[str],
-    y_code_col: str,
-    weight_col: str | None,
-    imput: np.ndarray,
-    mu: np.ndarray,
-    sd: np.ndarray,
-    Ws: np.ndarray,
-    bs: np.ndarray,
-    n_classes: int,
-    metric: str,
-) -> np.ndarray:
-    """Weighted mean logloss / error rate of ALL M softmax models on the
-    val split in ONE Arrow scan: class scores for every model are one
-    (n×p)·(p×M·C) GEMM per batch, reshaped (n, M, C); logloss is a
-    row-wise logsumexp, error rate is first-argmax (np.argmax, matching
-    the reference's prediction tie-break). Returns the M weighted means."""
-    p = len(path)
-    C = int(n_classes)
-    M = Ws.shape[1] // C
-    proj = [F.col(c).cast("double").alias(c) for c in path]
-    proj.append(F.col(y_code_col).cast("double").alias("_y_"))
-    if weight_col:
-        proj.append(F.col(weight_col).cast("double").alias("_w_"))
-    dfp = val.select(*proj)
-    imput = np.ascontiguousarray(imput, dtype=np.float64)
-    mu = np.ascontiguousarray(mu, dtype=np.float64)
-    sd = np.ascontiguousarray(sd, dtype=np.float64)
-    Ws = np.ascontiguousarray(Ws, dtype=np.float64)
-    bs = np.ascontiguousarray(bs, dtype=np.float64)
-
-    def term(batch) -> np.ndarray:
-        Z = _standardized_batch(batch, path, imput, mu, sd)
-        yraw = np.asarray(
-            batch.column(batch.schema.get_field_index("_y_")).to_numpy(zero_copy_only=False),
-            dtype=np.float64,
-        )
-        w = (
-            np.asarray(
-                batch.column(batch.schema.get_field_index("_w_")).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            if weight_col
-            else np.ones(Z.shape[0])
-        )
-        ok = np.isfinite(yraw)
-        if not ok.all():
-            Z, yraw, w = Z[ok], yraw[ok], w[ok]
-        y = yraw.astype(np.int64)
-        n = Z.shape[0]
-        out = np.zeros(M + 1, dtype=np.float64)
-        if n:
-            L = _softmax_losses(Z, y, M, C, Ws, bs, metric)
-            out[:M] = w @ L
-            out[M] = w.sum()
-        return out
-
-    acc = kernels.arrow_reduce(dfp, term, M + 1)
-    sw = acc[M]
-    if sw <= 0.0:
-        return np.full(M, np.inf)
-    return acc[:M] / sw
-
-
 def _grouped_classification_loss_pass(
     df: DataFrame,
     path: list[str],
@@ -740,12 +464,14 @@ def _grouped_classification_loss_pass(
     n_classes: int,
     metric: str,
 ) -> np.ndarray:
-    """Fold-grouped twin of ``_classification_loss_pass``: ONE Arrow scan
-    of the fold-tagged frame scores every split's softmax models on that
-    split's val fold, each row standardized with ITS split's train stats
-    (``imput``/``mu``/``sd`` are (S, p); ``Ws`` is (S, p, M·C), ``bs``
-    (S, M·C)). Returns (S, M) weighted mean losses (inf where a fold had
-    no weight)."""
+    """Weighted mean logloss / error rate of ALL M softmax models of every
+    split in ONE Arrow scan of the fold-tagged frame: each row is val data
+    for the split whose index equals its fold, standardized with ITS
+    split's train stats (``imput``/``mu``/``sd`` are (S, p); ``Ws`` is
+    (S, p, M·C), ``bs`` (S, M·C)); class scores for every model are one
+    GEMM (``_softmax_losses``). Rows with a null/NaN label or a fold
+    outside [0, S) are skipped. Returns (S, M) weighted mean losses (inf
+    where a fold had no weight)."""
     S, p, MC = Ws.shape
     C = int(n_classes)
     M = MC // C
@@ -783,7 +509,7 @@ def _grouped_classification_loss_pass(
         ok = np.isfinite(yraw)
         for f in np.unique(fold):
             if f < 0 or f >= S:
-                continue  # null/foreign fold tag — see the regression twin
+                continue  # null/foreign fold tag — see the regression pass
             sel = (fold == f) & ok
             if not sel.any():
                 continue
@@ -813,21 +539,26 @@ def _logistic_group_cv_scores(
     fit_subsample: int,
     seed: int,
     n_splits: int,
+    val_folds: list[int],
 ) -> dict[int, float]:
-    """Classification group-CV evaluate with shared scans: ONE fold-keyed
-    fused stats scan (per-split standardization statistics via
-    leave-one-fold-out Chan merges — the y slot of the regression kernel
-    is unused for standardization, so the same accumulator serves), ONE
-    bounded driver collect of a fold-tagged raw sample shared by all
-    splits' softmax fits, and ONE fold-grouped loss scan. Replaces the
-    per-split loop's ~4 jobs × n_splits.
+    """Classification fold-CV evaluate over the ``_fold``-tagged frame
+    (split ``v`` for each ``v`` in ``val_folds`` validates on fold ``v``
+    and trains on the other folds) with shared scans: ONE fold-keyed fused
+    stats scan (per-split standardization statistics via leave-one-fold-out
+    Chan merges — the y slot of the regression kernel is unused for
+    standardization, so the same accumulator serves), ONE bounded driver
+    collect of a fold-tagged raw sample shared by all splits' softmax fits,
+    and ONE fold-grouped loss scan over the scored folds' rows. Replaces
+    the per-split loop's ~4 jobs × n_splits.
 
-    Documented deviation (in addition to the module-docstring ones): the
-    per-split fit sample is the shared ``fit_subsample``-bounded frame
-    filtered to that split's train folds, so each fit sees ~(S−1)/S of
-    the budget rather than a full independent ``fit_subsample`` draw.
-    When n ≤ fit_subsample every split fits on its complete train split —
-    identical to the per-split loop."""
+    The fit sample is drawn from the folds that train some scored split:
+    fold 0 alone for time holdout (a train-only draw), every fold for
+    group CV. Documented deviation (in addition to the module-docstring
+    ones): each split's fit sample is that shared ``fit_subsample``-bounded
+    frame filtered to the split's train folds, so under group CV each fit
+    sees ~(S−1)/S of the budget rather than a full independent
+    ``fit_subsample`` draw. When n ≤ fit_subsample every split fits on its
+    complete train split — identical to a per-split loop."""
     from mrmr_spark.select.preprocess import deterministic_subsample
 
     p = len(path)
@@ -837,18 +568,17 @@ def _logistic_group_cv_scores(
         quantize_f32=False,
     )
     occupied = _occupied_folds(accs)
-    stats = []
-    for v in range(n_splits):
-        st = (kernels.finish_loo_stats(accs, v, p, quantize_f32=False)
-              if occupied[v] else None)
-        stats.append(_ridge_inputs_from_fused(st) if st is not None else None)
+    # empty val folds are excluded from the mean, like min(n_splits, n_groups)
+    scored = [v for v in val_folds if occupied[v]]
 
     # one bounded raw collect shared by every split's fit (row counts per
     # fold come from the accumulator tail — no count() job)
-    n_total = int(sum(float(a[-1]) for a in accs))
+    fit_folds = [f for f in range(n_splits) if any(f != v for v in val_folds)]
     samp = folded
-    if n_total > fit_subsample:
-        samp = deterministic_subsample(folded, fit_subsample, seed)
+    if len(fit_folds) < n_splits:
+        samp = folded.where(F.col("_fold").isin(fit_folds))
+    if int(sum(float(accs[f][-1]) for f in fit_folds)) > fit_subsample:
+        samp = deterministic_subsample(samp, fit_subsample, seed)
     sel = [F.col(c).cast("double").alias(c) for c in path]
     sel.append(F.col(y_code_col).cast("int").alias("_y"))
     sel.append(F.col("_fold").cast("long").alias("_f"))
@@ -867,9 +597,11 @@ def _logistic_group_cv_scores(
     mus = np.zeros((n_splits, p))
     sds = np.ones((n_splits, p))
     live = np.zeros(n_splits, dtype=bool)
-    for v in range(n_splits):
-        ri = stats[v]
-        if ri is None or not (ri["sw"] > 0 and np.isfinite(ri["wmeans"]).all()):
+    for v in scored:
+        ri = _ridge_inputs_from_fused(
+            kernels.finish_loo_stats(accs, v, p, quantize_f32=False)
+        )
+        if not (ri["sw"] > 0 and np.isfinite(ri["wmeans"]).all()):
             continue
         tr = fs != v
         if len(np.unique(ys[tr])) < 2:
@@ -891,88 +623,16 @@ def _logistic_group_cv_scores(
         return {kk: float("inf") for kk in k_grid}
 
     losses = _grouped_classification_loss_pass(
-        folded, path, y_code_col, weight_col, "_fold", imput, mus, sds,
-        Ws_all, bs_all, C, metric,
+        _scored_rows(folded, val_folds, n_splits), path, y_code_col,
+        weight_col, "_fold", imput, mus, sds, Ws_all, bs_all, C, metric,
     )
     per_split = [
         {kk: (float(losses[v, mi]) if live[v] and np.isfinite(losses[v, mi])
               else float("inf"))
          for mi, kk in enumerate(k_grid)}
-        for v in range(n_splits)
-        if occupied[v]  # empty val folds excluded, like min(n_splits, n_groups)
+        for v in scored
     ]
     return {kk: float(np.mean([s[kk] for s in per_split])) for kk in k_grid}
-
-
-def _logistic_holdout_scores(
-    tagged: DataFrame,
-    path: list[str],
-    y_code_col: str,
-    n_classes: int,
-    weight_col: str | None,
-    k_grid: list[int],
-    metric: str,
-    fit_subsample: int,
-    seed: int,
-) -> dict[int, float]:
-    """Classification time-holdout without persists: the frame is tagged
-    _fold 0 (train) / 1 (val). One fused fold-keyed stats scan gives the
-    train split's standardization stats AND its row count (no count job),
-    one bounded collect draws the softmax fit sample from the train rows
-    (identical semantics to the per-split path — the subsample is taken
-    from the train side only), and one loss scan scores all k-prefix
-    models on the val rows."""
-    from mrmr_spark.select.preprocess import deterministic_subsample
-
-    p = len(path)
-    C = int(n_classes)
-    accs = kernels.fused_foldwise_stats(
-        tagged, path, y_code_col, "_fold", 2, weight_col, quantize_f32=False
-    )
-    ri = _ridge_inputs_from_fused(
-        kernels.finish_loo_stats(accs, 1, p, quantize_f32=False)
-    )
-    if not (ri["sw"] > 0 and np.isfinite(ri["wmeans"]).all()):
-        return {kk: float("inf") for kk in k_grid}
-
-    n_train = int(float(accs[0][-1]))
-    tr = tagged.where(F.col("_fold") == 0)
-    if n_train > fit_subsample:
-        tr = deterministic_subsample(tr, fit_subsample, seed)
-        n_fit = fit_subsample
-    else:
-        n_fit = n_train
-    sel = [F.col(c).cast("double").alias(c) for c in path]
-    sel.append(F.col(y_code_col).cast("int").alias("_y"))
-    if weight_col:
-        sel.append(F.col(weight_col).cast("double").alias("_w"))
-    pdf = tr.select(*sel).toPandas()
-    Xs = pdf[path].to_numpy(np.float64)
-    ys = pdf["_y"].to_numpy(np.int64)
-    wv = pdf["_w"].to_numpy(np.float64) if weight_col else None
-    if len(np.unique(ys)) < 2:
-        return {kk: float("inf") for kk in k_grid}
-    fin = np.isfinite(Xs)
-    Xq = np.where(fin, Xs, ri["impute_means"][None, :])
-    Z = (Xq - ri["wmeans"][None, :]) / ri["wstds"][None, :]
-
-    M = len(k_grid)
-    Ws = np.zeros((p, M * C))
-    bs = np.zeros(M * C)
-    for mi, kk in enumerate(k_grid):
-        kk_eff = min(kk, p)
-        Wk, bk = _softmax_fit(Z[:, :kk_eff], ys, C, wv, lam=1.0 / max(n_fit, 1))
-        Ws[:kk_eff, mi * C : (mi + 1) * C] = Wk
-        bs[mi * C : (mi + 1) * C] = bk
-
-    losses = _classification_loss_pass(
-        tagged.where(F.col("_fold") == 1), path, y_code_col, weight_col,
-        ri["impute_means"], ri["wmeans"], ri["wstds"], Ws, bs, C, metric,
-    )
-    return {
-        kk: (float(v) if np.isfinite(v) else float("inf"))
-        for kk, v in zip(k_grid, losses)
-    }
 
 
 def select_k_evaluate(
@@ -988,6 +648,23 @@ def select_k_evaluate(
     """Pick best k over the grid by held-out error (lower is better).
     Regression: closed-form ridge (rmse/mae). Classification: driver
     softmax fit + distributed logloss/error (reference auto_k.py:96-204)."""
+    # bad inputs raise here, before any Spark job
+    if config.strategy == "time_holdout":
+        if time_col is None:
+            raise ValueError("time_holdout strategy requires time_col")
+        if not 0.0 < config.val_frac < 1.0:
+            raise ValueError(
+                f"time_holdout requires 0 < val_frac < 1, got {config.val_frac}"
+            )
+    elif config.strategy == "group_cv":
+        if group_col is None:
+            raise ValueError("group_cv strategy requires group_col")
+        if int(config.n_splits) < 2:
+            raise ValueError(
+                f"group_cv requires n_splits >= 2, got {int(config.n_splits)}"
+            )
+    else:
+        raise ValueError(f"Unknown strategy: {config.strategy}")
     max_k = min(config.max_k, len(path))
     min_k = max(1, min(config.min_k, max_k))
     k_grid = build_k_grid(min_k, max_k)
@@ -1005,13 +682,21 @@ def select_k_evaluate(
         df, labels = factorize_target(df, target_col, "_y_code")
         n_classes = len(labels)
 
-    # NOTE: every strategy now routes through the shared-scan paths;
-    # _ridge_path_scores / _logistic_path_scores remain as the per-split
-    # parity references (exercised by the parity tests).
+    def _run_cv(folded_df, n_folds, val_folds):
+        # one evaluator per task for both strategies (see the module
+        # docstring); classification adds ONE bounded collect shared by
+        # all splits' softmax fits
+        if task == "regression":
+            return _ridge_group_cv_scores(
+                folded_df, path, target_col, weight_col, k_grid, metric,
+                n_folds, val_folds,
+            )
+        return _logistic_group_cv_scores(
+            folded_df, path, "_y_code", n_classes, weight_col, k_grid,
+            metric, config.fit_subsample, config.seed, n_folds, val_folds,
+        )
 
     if config.strategy == "time_holdout":
-        if time_col is None:
-            raise ValueError("time_holdout strategy requires time_col")
         # exact percentile cut + filter — same "train on the oldest
         # 1-val_frac, validate on the newest val_frac" semantics as a
         # percent_rank cut, but with NO single-partition global window
@@ -1026,33 +711,29 @@ def select_k_evaluate(
         if np.isnan(cut_arr[0]):
             raise ValueError(f"time_col '{time_col}' has no non-null values")
         cut_val = float(cut_arr[0])
-        # shared-scan path: tag train/val as folds 0/1, ONE fused stats
-        # scan (fold 0's slot = the train split's exact imputed-moment
-        # statistics, via finish_loo_stats(val_fold=1)) + ONE loss scan
-        # on the val rows (+ for classification the bounded fit collect) —
-        # no persist (was 3-4 jobs over two persisted frames; at 10¹² rows
-        # the persists are exactly the materialization the no-persist
-        # discipline avoids)
-        # null-time rows are dropped (the former where(t<cut)/where(t>=cut)
-        # split excluded them from BOTH sides; a null comparison here would
-        # otherwise produce a null fold -> garbage index in the Arrow
-        # mapper). NaN sorts above every value in Spark, so NaN-time rows
-        # land in the val fold — same as the old t >= cut filter.
+        # one-split fold CV: train/val tagged as folds 0/1 and only fold 1
+        # scored — no persisted split frames (at 10¹² rows the persists
+        # are exactly the materialization the no-persist discipline
+        # avoids). Null-time rows are dropped (the former
+        # where(t<cut)/where(t>=cut) split excluded them from BOTH sides; a
+        # null comparison here would otherwise produce a null fold ->
+        # garbage index in the Arrow mapper). NaN sorts above every value
+        # in Spark, so NaN-time rows land in the val fold — same as the
+        # old t >= cut filter.
         tagged = df.where(t.isNotNull()).withColumn(
-            "_fold", (t >= F.lit(float(cut_val))).cast("long")
+            "_fold", (t >= F.lit(cut_val)).cast("long")
         )
-        if task == "regression":
-            scores = _ridge_holdout_scores(
-                tagged, path, target_col, weight_col, k_grid, metric
-            )
-        else:
-            scores = _logistic_holdout_scores(
-                tagged, path, "_y_code", n_classes, weight_col, k_grid,
-                metric, config.fit_subsample, config.seed,
-            )
-    elif config.strategy == "group_cv":
-        if group_col is None:
-            raise ValueError("group_cv strategy requires group_col")
+        try:
+            scores = _run_cv(tagged, 2, [1])
+        except _InsufficientFolds:
+            # the val side holds at least the rows at the cut, so the
+            # empty side is the train side: a constant time_col, or too
+            # few distinct times for val_frac
+            raise ValueError(
+                f"time_holdout has no train rows: no row has {time_col} < "
+                f"{cut_val!r} (the cut at val_frac={config.val_frac})"
+            ) from None
+    else:
         # NOTE: no distinct-count pre-scan — at 10¹² rows that is a full
         # scan + exchange spent only on clamping n_splits. Fold occupancy
         # is read for free from the fold-keyed accumulator inside the
@@ -1060,31 +741,11 @@ def select_k_evaluate(
         # GroupKFold could not have produced), and < 2 non-empty folds
         # raises the same "at least 2 groups" error.
         n_splits = int(config.n_splits)
-        if n_splits < 2:
-            raise ValueError(
-                f"group_cv requires n_splits >= 2, got {n_splits}"
-            )
-
-        def _run_cv(folded_df, n_s):
-            if task == "regression":
-                # shared-scan path: TWO scans total (fold-keyed fused
-                # stats + fold-grouped loss) instead of 3 × n_splits
-                # sequential scans — no persist at exactly two reads
-                return _ridge_group_cv_scores(
-                    folded_df, path, target_col, weight_col, k_grid,
-                    metric, n_s,
-                )
-            # classification shared-scan twin: 2 scans + ONE bounded
-            # collect shared by all splits' softmax fits (see
-            # _logistic_group_cv_scores for the fit-sample deviation)
-            return _logistic_group_cv_scores(
-                folded_df, path, "_y_code", n_classes, weight_col, k_grid,
-                metric, config.fit_subsample, config.seed, n_s,
-            )
-
         fold = F.pmod(F.xxhash64(F.col(group_col)), F.lit(n_splits))
         try:
-            scores = _run_cv(df.withColumn("_fold", fold), n_splits)
+            scores = _run_cv(
+                df.withColumn("_fold", fold), n_splits, list(range(n_splits))
+            )
         except _InsufficientFolds:
             # tiny group cardinality (or a pathological hash collision):
             # build an exact GroupKFold-style round-robin group→fold map —
@@ -1122,13 +783,11 @@ def select_k_evaluate(
                 ).drop("_grp_key")
             )
             try:
-                scores = _run_cv(remapped, n_s)
+                scores = _run_cv(remapped, n_s, list(range(n_s)))
             except _InsufficientFolds:
                 raise ValueError(
                     "group_cv requires at least 2 groups with rows"
                 ) from None
-    else:
-        raise ValueError(f"Unknown strategy: {config.strategy}")
 
     finite = {kk: v for kk, v in scores.items() if np.isfinite(v)}
     if not finite:

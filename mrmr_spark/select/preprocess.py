@@ -106,9 +106,3 @@ def deterministic_subsample(df: DataFrame, n: int, seed: int = 0, key_cols=None)
     key_cols = key_cols or df.columns
     h = F.xxhash64(*[F.col(c) for c in key_cols], F.lit(seed))
     return df.orderBy(h).limit(n)
-
-
-def prune_constant_columns(stds: np.ndarray, cols: list[str], min_std: float = 1e-12):
-    """Driver-side: indices/names of columns with std > min_std."""
-    valid = np.where(np.asarray(stds) > min_std)[0]
-    return valid, [cols[i] for i in valid]

@@ -468,3 +468,97 @@ def _gauss_jmi_direct(R, r, rel, k, use_min):
         sel.append(j)
         taken[j] = True
     return np.array(sel, dtype=np.int64)
+
+
+# --- auto-k evaluate ---------------------------------------------------------
+
+#: the engine's ridge alpha grid (select/autok.py), which the scores depend on
+RIDGE_ALPHAS = np.logspace(-3, 3, 10)
+
+
+def _train_standardized(X: np.ndarray, w: np.ndarray, tr: np.ndarray) -> np.ndarray:
+    """Every row imputed with the train rows' unweighted mean of finite
+    values, then centered/scaled by the train rows' weighted mean and
+    weighted population std (1 where the variance is <= 1e-12)."""
+    fin = np.isfinite(X)
+    cnt = fin[tr].sum(axis=0)
+    imp = np.where(cnt > 0, np.where(fin, X, 0.0)[tr].sum(axis=0) / np.maximum(cnt, 1), 0.0)
+    Xi = np.where(fin, X, imp)
+    wt = w[tr] / w[tr].sum()
+    mu = wt @ Xi[tr]
+    var = wt @ (Xi[tr] - mu) ** 2
+    sd = np.where(var > 1e-12, np.sqrt(var), 1.0)
+    return (Xi - mu) / sd
+
+
+def _wmean(w: np.ndarray, v: np.ndarray) -> float:
+    return float(w @ v / w.sum())
+
+
+def ridge_fold_cv(X, y, w, fold, val_folds, k_grid, metric: str) -> dict[int, float]:
+    """Weighted ridge auto-k scores over a list of val folds.
+
+    Split ``v`` (one per entry of ``val_folds``) validates on the rows of
+    fold ``v`` and trains on every other row; time holdout is folds 0/1
+    with ``val_folds=[1]``. Per (k-prefix, alpha): weighted closed-form
+    ridge on the standardized train rows, y centered on its weighted train
+    mean; a k scores its best alpha's weighted val rmse or mae, averaged
+    over the splits. ``w=None`` is unweighted.
+    """
+    X = np.asarray(X, dtype=np.float64)
+    y = np.asarray(y, dtype=np.float64)
+    w = np.ones(len(y)) if w is None else np.asarray(w, dtype=np.float64)
+    fold = np.asarray(fold)
+    per_split = []
+    for v in val_folds:
+        tr, va = fold != v, fold == v
+        Z = _train_standardized(X, w, tr)
+        ym = _wmean(w[tr], y[tr])
+        Zw = Z[tr] * w[tr][:, None]
+        G, g = Zw.T @ Z[tr], Zw.T @ (y[tr] - ym)
+        scores = {}
+        for k in k_grid:
+            k_eff = min(k, X.shape[1])
+            best = np.inf
+            for a in RIDGE_ALPHAS:
+                beta = np.linalg.solve(G[:k_eff, :k_eff] + a * np.eye(k_eff), g[:k_eff])
+                r = y[va] - ym - Z[va, :k_eff] @ beta
+                s = (np.sqrt(_wmean(w[va], r * r)) if metric == "rmse"
+                     else _wmean(w[va], np.abs(r)))
+                best = min(best, s)
+            scores[k] = best
+        per_split.append(scores)
+    return {k: float(np.mean([s[k] for s in per_split])) for k in k_grid}
+
+
+def logistic_fold_cv(X, ycodes, w, fold, val_folds, k_grid, metric: str,
+                     n_classes: int) -> dict[int, float]:
+    """Weighted softmax auto-k scores over a list of val folds (splits as in
+    ``ridge_fold_cv``). Per k-prefix: the engine's L2 softmax fit
+    (``_softmax_fit``, sklearn C=1.0 scaling lam = 1/n_train) on every
+    standardized train row; a k scores its weighted val logloss or error
+    rate (first-argmax prediction), averaged over the splits."""
+    from mrmr_spark.select.autok import _softmax_fit
+
+    X = np.asarray(X, dtype=np.float64)
+    y = np.asarray(ycodes, dtype=np.int64)
+    wv = np.ones(len(y)) if w is None else np.asarray(w, dtype=np.float64)
+    fold = np.asarray(fold)
+    per_split = []
+    for v in val_folds:
+        tr, va = fold != v, fold == v
+        Z = _train_standardized(X, wv, tr)
+        scores = {}
+        for k in k_grid:
+            k_eff = min(k, X.shape[1])
+            W, b = _softmax_fit(Z[tr, :k_eff], y[tr], n_classes,
+                                None if w is None else wv[tr], lam=1.0 / tr.sum())
+            S = Z[va, :k_eff] @ W + b
+            if metric == "logloss":
+                S = S - S.max(axis=1, keepdims=True)
+                loss = np.log(np.exp(S).sum(axis=1)) - S[np.arange(len(S)), y[va]]
+            else:
+                loss = (S.argmax(axis=1) != y[va]).astype(np.float64)
+            scores[k] = _wmean(wv[va], loss)
+        per_split.append(scores)
+    return {k: float(np.mean([s[k] for s in per_split])) for k in k_grid}

@@ -6,7 +6,7 @@ These target the round-4 shared-scan algebra specifically: the
 indicator-augmented fused accumulator (``fused_singlepass_stats``), its
 fold-keyed twin + leave-one-fold-out Chan merges (``fused_foldwise_stats``
 / ``finish_loo_stats``), the Gram reduction, the O(p) r-vector pass, and
-the all-models regression loss pass. Randomized NaN/±inf patterns, row
+the fold-grouped all-models loss passes. Randomized NaN/±inf patterns, row
 weights, partition splits and fold taggings are exactly the inputs where
 the affine-imputation / Chan-merge algebra could silently drift from the
 two-pass definition; the oracles below compute the statistics the naive
@@ -196,73 +196,98 @@ def test_r_vector_pass_matches_numpy(sp, params):
     assert got["sw"] == pytest.approx(sw, rel=1e-12)
 
 
+def fold_tags(rng, n, n_folds):
+    """Fold tags 0..n_folds-1 plus out-of-range tags (-1 and n_folds) and
+    nulls, as a nullable column and as the numpy tags (nulls as -1)."""
+    fold = rng.integers(-1, n_folds + 1, size=n)
+    null = rng.random(n) < 0.1
+    tags = pd.array([None if z else int(f) for f, z in zip(fold, null)], dtype="Int64")
+    return tags, np.where(null, -1, fold)
+
+
 @SET
-@given(matrix_strategy(), st.integers(min_value=1, max_value=5))
-def test_regression_loss_pass_matches_numpy(sp, params, n_models):
-    """The all-models val-loss GEMM pass vs numpy, including the
-    non-finite-y row mask (a NaN y row must drop out entirely instead of
-    poisoning every model's accumulated loss)."""
-    from mrmr_spark.select.autok import _regression_loss_pass
+@given(matrix_strategy(), st.integers(min_value=1, max_value=5),
+       st.integers(min_value=1, max_value=3))
+def test_regression_loss_pass_matches_numpy(sp, params, n_models, n_folds):
+    """The fold-grouped all-models val-loss GEMM pass vs numpy per fold,
+    including the non-finite-y row mask (a NaN y row must drop out
+    entirely instead of poisoning every model's accumulated loss) and
+    rows whose fold is null or out of range (skipped)."""
+    from mrmr_spark.select.autok import _grouped_regression_loss_pass
 
     n, p, seed, nan_rate, weighted, parts = params
     X, y, w = make_matrix(n, p, seed, nan_rate, weighted)
     rng = np.random.default_rng(seed + 2)
     y = np.where(rng.random(n) < 0.2, np.nan, y)  # val target holes
-    imput = rng.normal(size=p)
-    mu = rng.normal(size=p)
-    sd = rng.uniform(0.5, 2.0, size=p)
-    y_wmean = float(rng.normal())
-    B = rng.normal(size=(p, n_models))
-    sdf = to_sdf(sp, X, y, w, parts)
+    imput = rng.normal(size=(n_folds, p))
+    mu = rng.normal(size=(n_folds, p))
+    sd = rng.uniform(0.5, 2.0, size=(n_folds, p))
+    y_wmean = rng.normal(size=n_folds)
+    B = rng.normal(size=(n_folds, p, n_models))
+    tags, fold = fold_tags(rng, n, n_folds)
+    sdf = to_sdf(sp, X, y, w, parts, extra={"_fold": tags})
     for metric in ("rmse", "mae"):
-        got = _regression_loss_pass(
+        got = _grouped_regression_loss_pass(
             sdf, [f"x{j}" for j in range(p)], "y", "w" if weighted else None,
-            imput, mu, sd, y_wmean, B, metric,
+            "_fold", imput, mu, sd, y_wmean, B, metric,
         )
-        ok = np.isfinite(y)
-        if not ok.any():
-            assert np.isinf(got).all()
-            continue
-        Z = (np.where(np.isfinite(X[ok]), X[ok], imput[None, :]) - mu[None, :]) / sd[None, :]
-        R = (y[ok] - y_wmean)[:, None] - Z @ B
-        L = np.abs(R) if metric == "mae" else R * R
-        exp = (w[ok] @ L) / w[ok].sum()
-        np.testing.assert_allclose(got, exp, rtol=1e-9, atol=1e-12)
+        for f in range(n_folds):
+            ok = (fold == f) & np.isfinite(y)
+            if not ok.any():
+                assert np.isinf(got[f]).all()
+                continue
+            Xf = np.where(np.isfinite(X[ok]), X[ok], imput[f][None, :])
+            Z = (Xf - mu[f][None, :]) / sd[f][None, :]
+            R = (y[ok] - y_wmean[f])[:, None] - Z @ B[f]
+            L = np.abs(R) if metric == "mae" else R * R
+            exp = (w[ok] @ L) / w[ok].sum()
+            np.testing.assert_allclose(got[f], exp, rtol=1e-9, atol=1e-12)
 
 
 @SET
 @given(matrix_strategy(), st.integers(min_value=2, max_value=3),
-       st.integers(min_value=1, max_value=3))
-def test_classification_loss_pass_matches_numpy(sp, params, n_classes, n_models):
-    """The all-models softmax loss pass (logloss + error) vs numpy."""
-    from mrmr_spark.select.autok import _classification_loss_pass
+       st.integers(min_value=1, max_value=3), st.integers(min_value=1, max_value=3))
+def test_classification_loss_pass_matches_numpy(sp, params, n_classes, n_models, n_folds):
+    """The fold-grouped all-models softmax loss pass (logloss + error) vs
+    numpy per fold, with NaN-label holes and null/out-of-range folds
+    (both skipped)."""
+    from mrmr_spark.select.autok import _grouped_classification_loss_pass
 
     n, p, seed, nan_rate, weighted, parts = params
     X, _, w = make_matrix(n, p, seed, nan_rate, weighted)
     rng = np.random.default_rng(seed + 3)
     y = rng.integers(0, n_classes, size=n).astype(np.float64)
-    imput = rng.normal(size=p)
-    mu = rng.normal(size=p)
-    sd = rng.uniform(0.5, 2.0, size=p)
-    Ws = rng.normal(size=(p, n_models * n_classes))
-    bs = rng.normal(size=n_models * n_classes)
-    sdf = to_sdf(sp, X, y, w, parts)
+    y = np.where(rng.random(n) < 0.2, np.nan, y)  # val label holes
+    imput = rng.normal(size=(n_folds, p))
+    mu = rng.normal(size=(n_folds, p))
+    sd = rng.uniform(0.5, 2.0, size=(n_folds, p))
+    Ws = rng.normal(size=(n_folds, p, n_models * n_classes))
+    bs = rng.normal(size=(n_folds, n_models * n_classes))
+    tags, fold = fold_tags(rng, n, n_folds)
+    sdf = to_sdf(sp, X, y, w, parts, extra={"_fold": tags})
     for metric in ("logloss", "error"):
-        got = _classification_loss_pass(
+        got = _grouped_classification_loss_pass(
             sdf, [f"x{j}" for j in range(p)], "y", "w" if weighted else None,
-            imput, mu, sd, Ws, bs, n_classes, metric,
+            "_fold", imput, mu, sd, Ws, bs, n_classes, metric,
         )
-        Z = (np.where(np.isfinite(X), X, imput[None, :]) - mu[None, :]) / sd[None, :]
-        S = (Z @ Ws + bs[None, :]).reshape(n, n_models, n_classes)
-        yi = y.astype(np.int64)
-        if metric == "logloss":
-            mx = S.max(axis=2, keepdims=True)
-            lse = mx[:, :, 0] + np.log(np.exp(S - mx).sum(axis=2))
-            L = lse - S[np.arange(n)[:, None], np.arange(n_models)[None, :], yi[:, None]]
-        else:
-            L = (S.argmax(axis=2) != yi[:, None]).astype(np.float64)
-        exp = (w @ L) / w.sum()
-        np.testing.assert_allclose(got, exp, rtol=1e-9, atol=1e-12)
+        for f in range(n_folds):
+            ok = (fold == f) & np.isfinite(y)
+            m = int(ok.sum())
+            if not m:
+                assert np.isinf(got[f]).all()
+                continue
+            Xf = np.where(np.isfinite(X[ok]), X[ok], imput[f][None, :])
+            Z = (Xf - mu[f][None, :]) / sd[f][None, :]
+            S = (Z @ Ws[f] + bs[f][None, :]).reshape(m, n_models, n_classes)
+            yi = y[ok].astype(np.int64)
+            if metric == "logloss":
+                mx = S.max(axis=2, keepdims=True)
+                lse = mx[:, :, 0] + np.log(np.exp(S - mx).sum(axis=2))
+                L = lse - S[np.arange(m)[:, None], np.arange(n_models)[None, :], yi[:, None]]
+            else:
+                L = (S.argmax(axis=2) != yi[:, None]).astype(np.float64)
+            exp = (w[ok] @ L) / w[ok].sum()
+            np.testing.assert_allclose(got[f], exp, rtol=1e-9, atol=1e-12)
 
 
 @SET

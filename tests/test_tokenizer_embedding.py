@@ -284,10 +284,15 @@ def test_hashed_embedding_matches_python(spark, docs, signed, normalize):
 
 @pytest.mark.parametrize("signed,normalize,seed", [(True, True, 0), (True, False, 7), (False, True, 3)])
 def test_hashed_embedding_arrow_bit_identical(spark, docs, signed, normalize, seed):
-    kw = dict(dim=8, out_col="emb", hash_fn="poly", signed=signed, normalize=normalize, seed=seed)
-    g = {r.doc_id: r.emb for r in hashed_embedding(docs, backend="group", **kw).collect()}
-    a = {r.doc_id: r.emb for r in hashed_embedding(docs, backend="arrow", **kw).collect()}
-    assert g == a  # exact float equality — integer accumulation + one IEEE divide
+    # ``split`` is a regex on every backend: the dotted doc and the double
+    # space of doc 4 tokenize differently under a literal split
+    dotted = docs.union(spark.createDataFrame([(6, "end. of.a  line.")], docs.schema))
+    for split in (" ", r"\s+", r"\."):
+        kw = dict(dim=8, out_col="emb", hash_fn="poly", signed=signed,
+                  normalize=normalize, seed=seed, split=split)
+        g = {r.doc_id: r.emb for r in hashed_embedding(dotted, backend="group", **kw).collect()}
+        a = {r.doc_id: r.emb for r in hashed_embedding(dotted, backend="arrow", **kw).collect()}
+        assert g == a, split  # exact float equality — integer accumulation + one IEEE divide
 
 
 def test_hashed_embedding_arrow_rejects_xxhash64(spark, docs):

@@ -553,31 +553,38 @@ def main():
 
     # auto-k evaluate: the shared-scan contract — ONE kernel scan for the
     # whole regression strategy (fold-keyed fused stats; the squared-error
-    # losses follow from the fold accumulators on the driver)
+    # losses follow from the fold accumulators on the driver). Time holdout
+    # is the same evaluator with folds {0: train, 1: val}, fold 1 scored.
     from mrmr_spark.select.autok import AutoKConfig, select_k_evaluate
 
     df_ak, cols_ak = feature_frame(12)
-    df_ak = df_ak.withColumn("grp", (F.monotonically_increasing_id() % 20))
-    sel_kernels.PLAN_LOG = []
-    try:
-        select_k_evaluate(
-            df_ak, cols_ak, "y",
-            AutoKConfig(strategy="group_cv", max_k=12, min_k=2, n_splits=4),
-            group_col="grp", task="regression",
-        )
-        scans = [summarize_str(s) for s in sel_kernels.PLAN_LOG]
-    finally:
-        sel_kernels.PLAN_LOG = None
-    name = "auto-k evaluate group_cv (n_splits=4, shared-scan)"
-    sel_sections.append((name, scans,
-        "ONE kernel scan for the WHOLE strategy: fold-keyed fused stats; "
-        "the squared-error losses follow driver-side from the fold "
-        "accumulators; no persisted split frames"))
-    if len(scans) != 1:
-        violations.append(f"{name}: expected 1 scan, saw {len(scans)}")
-    for i, m in enumerate(scans):
-        if m["python_nodes"] != 1 or m["inmemory"] > 0:
-            violations.append(f"{name} scan{i}: unexpected plan shape")
+    row_id = F.monotonically_increasing_id()
+    for name, cfg, kw, frame, expect in (
+        ("auto-k evaluate group_cv (n_splits=4, shared-scan)",
+         AutoKConfig(strategy="group_cv", max_k=12, min_k=2, n_splits=4),
+         {"group_col": "grp"}, df_ak.withColumn("grp", row_id % 20),
+         "ONE kernel scan for the WHOLE strategy: fold-keyed fused stats; "
+         "the squared-error losses follow driver-side from the fold "
+         "accumulators; no persisted split frames"),
+        ("auto-k evaluate time_holdout (rmse, one scored fold)",
+         AutoKConfig(strategy="time_holdout", max_k=12, min_k=2),
+         {"time_col": "t"}, df_ak.withColumn("t", row_id),
+         "ONE kernel scan: the group-CV evaluator over train/val tagged as "
+         "folds 0/1 with only fold 1 scored; the val losses follow "
+         "driver-side from the fold accumulators; no persisted split frames"),
+    ):
+        sel_kernels.PLAN_LOG = []
+        try:
+            select_k_evaluate(frame, cols_ak, "y", cfg, task="regression", **kw)
+            scans = [summarize_str(s) for s in sel_kernels.PLAN_LOG]
+        finally:
+            sel_kernels.PLAN_LOG = None
+        sel_sections.append((name, scans, expect))
+        if len(scans) != 1:
+            violations.append(f"{name}: expected 1 scan, saw {len(scans)}")
+        for i, m in enumerate(scans):
+            if m["python_nodes"] != 1 or m["inmemory"] > 0:
+                violations.append(f"{name} scan{i}: unexpected plan shape")
 
     lines = [
         "# PLANS — physical-plan audit of the key operators",
