@@ -4304,16 +4304,15 @@ SQL_BPE_ENCODE = _bpe_encode_sql(GATE_BPE_MERGES)
 
 def q_hashed_embedding(spark, sf_dir):
     """Feature-hashing text embedding (dim 16, poly hash family — the
-    ANSI-SQL-reproducible twin of the xxhash64 default; families and the
-    group/project backends are pytest-equal). Exploded to one row per
+    ANSI-SQL-reproducible twin of the xxhash64 default; the one Arrow
+    kernel is pytest-checked against a Python oracle for poly and against
+    Spark's own xxhash64 for the default). Exploded to one row per
     (doc, bucket) so EVERY coordinate is value-checked."""
     from mrmr_spark.operators.embedding import hashed_embedding
 
     d = _t(spark, sf_dir, "documents", spread=True)
-    # arrow backend: bit-identical poly-family kernel (pytest
-    # test_hashed_embedding_arrow_bit_identical) without the per-character
-    # interpreted HOF fold — ~6x on the 50k-doc bench corpus
-    out = hashed_embedding(d, dim=16, hash_fn="poly", out_col="emb", backend="arrow")
+    # the Arrow kernel poly-hashes each distinct token once per batch
+    out = hashed_embedding(d, dim=16, hash_fn="poly", out_col="emb")
     return out.select(
         "doc_id", F.posexplode("emb").alias("bucket", "value")
     ).select("doc_id", F.col("bucket").cast("int").alias("bucket"), r6("value").alias("value"))
@@ -4903,7 +4902,7 @@ def q_pca_project(spark, sf_dir):
     )
     W = np.stack([np.asarray(r.e, dtype=np.float64) for r in params[:_PCA_K]])
     mu = np.asarray(params[_PCA_K].e, dtype=np.float64)
-    out = pca_project(e, mean=mu, components=W, backend="arrow")
+    out = pca_project(e, mean=mu, components=W)
     return out.select(
         "vec_id", F.posexplode("pca").alias("j", "y")
     ).select("vec_id", F.col("j").cast("int").alias("j"), r6("y").alias("y"))

@@ -66,30 +66,27 @@ def word_ngrams(text_col: str | Column = "text", n: int = 3, split: str = " ") -
     )
 
 
-def _exploded_gram_keys(
+def _gram_fingerprints(
     df: DataFrame,
     cols: list[str],
     text_col: str,
     n: int,
     split: str,
     hash_fn: str,
-    gram_keys: str,
 ) -> DataFrame:
     """``cols`` + the distinct per-row gram fingerprints ``(g1, g2)``,
-    one output row per (row, distinct gram).
+    one output row per (row, distinct gram). The key construction follows
+    ``hash_fn``:
 
-    gram_keys="tokens" (default): hash each token ONCE, gram key = two
-    seeded xxhash64 over the length-``n`` slice of the token-hash array —
-    no n-token strings are ever built (measured ~30% faster than the
-    string path at n=13 × 160-token docs; the win grows with ``n``).
-    gram_keys="string": concat the gram text and double-hash it — the
-    only choice under ``hash_fn="md5_60"`` (the SQL-reproducible family
-    hashes strings), kept for oracle work and cross-checks. Both carry
-    128 bits, so agreement is collision-free in practice either way.
+    ``"xxhash64"``: hash each token ONCE, gram key = two seeded xxhash64
+    over the length-``n`` slice of the token-hash array — no n-token
+    strings are ever built (measured ~30% faster than the string keys at
+    n=13 × 160-token docs; the win grows with ``n``).
+    ``"md5_60"`` (the SQL-reproducible family hashes strings): concat the
+    gram text and double-hash it, for oracle work and cross-checks. Both
+    carry 128 bits, so agreement is collision-free in practice either way.
     """
-    if gram_keys not in ("tokens", "string"):
-        raise ValueError(f"gram_keys must be 'tokens' or 'string', got {gram_keys!r}")
-    if gram_keys == "string" or hash_fn != "xxhash64":
+    if hash_fn != "xxhash64":
         return df.select(
             *cols,
             F.explode(F.array_distinct(word_ngrams(text_col, n, split))).alias("_g"),
@@ -99,17 +96,7 @@ def _exploded_gram_keys(
             hash64(F.col("_g"), seed=2, hash_fn=hash_fn).alias("g2"),
         )
     toks = F.split(F.col(text_col), split)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    sliced = _bind(
-        th,
-        lambda h: F.when(
-            F.size(h) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(h) - F.lit(n - 1)),
-                lambda i: F.slice(h, i, F.lit(n)),
-            ),
-        ).otherwise(F.array().cast("array<array<bigint>>")),
-    )
+    sliced = _hash_slices(F.transform(toks, lambda t: F.xxhash64(t)), n)
     return df.select(*cols, F.explode(F.array_distinct(sliced)).alias("_hs")).select(
         *cols,
         F.xxhash64(F.lit(1), "_hs").alias("g1"),
@@ -123,18 +110,17 @@ def benchmark_ngram_set(
     n: int = 13,
     split: str = " ",
     hash_fn: str = "xxhash64",
-    gram_keys: str = "tokens",
 ) -> DataFrame:
     """Distinct word-``n``-gram 128-bit fingerprints of an eval/benchmark
     table: columns ``(g1, g2)`` — two independently-seeded 64-bit hashes,
     the same double-hash family ``exact_dedup`` uses, so a collision needs
     a simultaneous 128-bit agreement. The gram text never leaves this
     plan; only the hash set (tiny: eval sets are KBs–MBs) is retained, so
-    it broadcasts. ``gram_keys`` selects the fingerprint construction —
-    see :func:`_exploded_gram_keys`; corpus and benchmark must use the
-    same setting (``decontaminate`` passes it through to both sides)."""
-    return _exploded_gram_keys(
-        benchmark, [], text_col, n, split, hash_fn, gram_keys
+    it broadcasts. ``hash_fn`` selects the fingerprint construction —
+    see :func:`_gram_fingerprints`; corpus and benchmark must use the
+    same family (``decontaminate`` passes it through to both sides)."""
+    return _gram_fingerprints(
+        benchmark, [], text_col, n, split, hash_fn
     ).dropDuplicates(["g1", "g2"])
 
 
@@ -147,7 +133,6 @@ def decontaminate(
     split: str = " ",
     mode: str = "flag",
     hash_fn: str = "xxhash64",
-    gram_keys: str = "tokens",
 ) -> DataFrame:
     """Exact benchmark decontamination by word-``n``-gram overlap (the
     GPT-3 appendix-C / The-Pile scheme: a training document is
@@ -171,9 +156,7 @@ def decontaminate(
     """
     if mode not in ("flag", "drop"):
         raise ValueError(f"mode must be 'flag' or 'drop', got {mode!r}")
-    hits = _decontaminate_hits(
-        corpus, benchmark, text_col, id_col, n, split, hash_fn, gram_keys
-    )
+    hits = _decontaminate_hits(corpus, benchmark, text_col, id_col, n, split, hash_fn)
     if mode == "drop":
         return corpus.join(hits, id_col, "left_anti")
     return corpus.join(hits, id_col, "left").select(
@@ -191,12 +174,9 @@ def _decontaminate_hits(
     n: int,
     split: str,
     hash_fn: str,
-    gram_keys: str = "tokens",
 ) -> DataFrame:
-    bench = benchmark_ngram_set(benchmark, text_col, n, split, hash_fn, gram_keys)
-    corpus_grams = _exploded_gram_keys(
-        corpus, [id_col], text_col, n, split, hash_fn, gram_keys
-    )
+    bench = benchmark_ngram_set(benchmark, text_col, n, split, hash_fn)
+    corpus_grams = _gram_fingerprints(corpus, [id_col], text_col, n, split, hash_fn)
     return (
         corpus_grams.join(F.broadcast(bench), ["g1", "g2"])
         .groupBy(id_col)
@@ -318,7 +298,6 @@ def bigram_lm_counts(
     text_col: str = "text",
     split: str = " ",
     hash_fn: str = "xxhash64",
-    gram_keys: str = "tokens",
     order: int = 2,
 ) -> dict:
     """Train an add-k-smoothable ``order``-gram language model on a
@@ -336,19 +315,14 @@ def bigram_lm_counts(
     is bounded by the observed vocabulary/bigram set, not the corpus.
     ``vocab_size`` is the one driver-side action (a count).
 
-    ``gram_keys="tokens"`` (default): each token is hashed ONCE and
-    gram keys are seeded xxhash64 over the token-hash (unigram) or its
-    2-slice (bigram) — no gram strings are built, ~33% faster on both
-    the training aggregation and the scoring explode (same trick as
-    ``decontaminate``). ``gram_keys="string"`` keeps the concat-and-
-    double-hash family (and is forced under non-xxhash64 ``hash_fn``).
-    The family is recorded in the returned dict so :func:`ngram_lm_score`
+    Under ``hash_fn="xxhash64"`` each token is hashed ONCE and gram keys
+    are seeded xxhash64 over the token-hash (unigram) or its 2-slice
+    (bigram) — no gram strings are built, ~33% faster on both the
+    training aggregation and the scoring explode (same trick as
+    ``decontaminate``); ``md5_60`` double-hashes the gram strings. The
+    family is recorded in the returned dict so :func:`ngram_lm_score`
     always keys the corpus the same way the model was keyed.
     """
-    if gram_keys not in ("tokens", "string"):
-        raise ValueError(f"gram_keys must be 'tokens' or 'string', got {gram_keys!r}")
-    if hash_fn != "xxhash64":
-        gram_keys = "string"
 
     def _cnt_str(gram_col: Column) -> DataFrame:
         return (
@@ -374,7 +348,7 @@ def bigram_lm_counts(
 
     if order < 2:
         raise ValueError("order must be >= 2")
-    if gram_keys == "string":
+    if hash_fn != "xxhash64":
         prefix_col = (
             F.split(F.col(text_col), split)
             if order == 2
@@ -392,7 +366,6 @@ def bigram_lm_counts(
         "bigrams": bigrams,  # the order-n gram counts (name kept for API stability)
         "unigrams": unigrams,  # the (order-1)-gram PREFIX counts
         "vocab_size": vocab.count(),  # |distinct tokens| — the smoothing V
-        "gram_keys": gram_keys,
         "hash_fn": hash_fn,
         "order": order,
     }
@@ -434,12 +407,11 @@ def ngram_lm_score(
     """
     maybe_bc = F.broadcast if broadcast_model else (lambda d: d)
     v = float(model["vocab_size"])
-    gram_keys = model.get("gram_keys", "string")
     model_hash_fn = model.get("hash_fn", hash_fn)
     order = model.get("order", 2)
 
     toks = F.split(F.col(text_col), split)
-    if gram_keys == "tokens":
+    if model_hash_fn == "xxhash64":
         th = F.transform(toks, lambda t: F.xxhash64(t))
         pre_t = "bigint" if order == 2 else "array<bigint>"
         pairs = _bind(
@@ -1054,21 +1026,18 @@ def temperature_sample(
     return out.select(*cols)
 
 
-def _positioned_gram_keys(
+def _positioned_gram_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int,
     split: str,
     hash_fn: str,
-    gram_keys: str,
 ) -> DataFrame:
     """(id, pos, g1, g2) — one row per gram OCCURRENCE (0-based token
     position, NOT distinct: substring dedup needs every position). Key
-    families as :func:`_exploded_gram_keys`."""
-    if gram_keys not in ("tokens", "string"):
-        raise ValueError(f"gram_keys must be 'tokens' or 'string', got {gram_keys!r}")
-    if gram_keys == "string" or hash_fn != "xxhash64":
+    families as :func:`_gram_fingerprints`."""
+    if hash_fn != "xxhash64":
         return df.select(
             id_col, F.posexplode(word_ngrams(text_col, n, split)).alias("pos", "_g")
         ).select(
@@ -1078,17 +1047,7 @@ def _positioned_gram_keys(
             hash64(F.col("_g"), seed=2, hash_fn=hash_fn).alias("g2"),
         )
     toks = F.split(F.col(text_col), split)
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    sliced = _bind(
-        th,
-        lambda h: F.when(
-            F.size(h) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(h) - F.lit(n - 1)),
-                lambda i: F.slice(h, i, F.lit(n)),
-            ),
-        ).otherwise(F.array().cast("array<array<bigint>>")),
-    )
+    sliced = _hash_slices(F.transform(toks, lambda t: F.xxhash64(t)), n)
     return df.select(id_col, F.posexplode(sliced).alias("pos", "_hs")).select(
         id_col,
         "pos",
@@ -1106,7 +1065,6 @@ def duplicate_spans(
     min_df: int = 2,
     keep_first: bool = True,
     hash_fn: str = "xxhash64",
-    gram_keys: str = "tokens",
     pin: list | None = None,
     persist_occ: bool = True,
 ) -> DataFrame:
@@ -1140,7 +1098,7 @@ def duplicate_spans(
         raise ValueError("n must be >= 1")
     if min_df < 2:
         raise ValueError("min_df must be >= 2 (1 would span every token)")
-    occ = _positioned_gram_keys(corpus, id_col, text_col, n, split, hash_fn, gram_keys)
+    occ = _positioned_gram_fingerprints(corpus, id_col, text_col, n, split, hash_fn)
     # persist: BOTH the df-count aggregation and the join stream read occ,
     # and without the pin each re-runs the text explode + double-hash pass
     # (verified: no ReusedExchange — the agg side is exchanged on (g1,g2),
@@ -1212,7 +1170,6 @@ def contamination_spans(
     n: int = 13,
     split: str = " ",
     hash_fn: str = "xxhash64",
-    gram_keys: str = "tokens",
 ) -> DataFrame:
     """SURGICAL decontamination: instead of dropping every document that
     shares an ``n``-gram with the benchmark (:func:`decontaminate`),
@@ -1228,10 +1185,8 @@ def contamination_spans(
     map-side (corpus text never in a shuffle key), and only the hit
     positions — ∝ contamination, not corpus — reach the per-document
     gaps-and-islands windows."""
-    bench = benchmark_ngram_set(benchmark, text_col, n, split, hash_fn, gram_keys)
-    occ = _positioned_gram_keys(
-        corpus, id_col, text_col, n, split, hash_fn, gram_keys
-    )
+    bench = benchmark_ngram_set(benchmark, text_col, n, split, hash_fn)
+    occ = _positioned_gram_fingerprints(corpus, id_col, text_col, n, split, hash_fn)
     hits = occ.join(F.broadcast(bench), ["g1", "g2"])
     return _positions_to_spans(hits, id_col, n)
 

@@ -14,8 +14,6 @@ K = b·r) makes the candidate probability s-curve 1-(1-s^r)^b.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -371,7 +369,6 @@ def verify_candidate_pairs(
     dst: str = "id_b",
     n: int = 5,
     threshold: float = 0.5,
-    backend: str = "column",
     pin: list | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard verify stage for candidate pairs: keep only the
@@ -401,31 +398,13 @@ def verify_candidate_pairs(
     (no evidence, no merge — the safe default for a stage whose output
     feeds transitive clustering).
 
-    Two bit-identical backends (the winnow convention; equality tested):
-
-    - ``backend="column"`` (default): pure-DataFrame shingle arithmetic
-      (the shape the DuckDB oracle mirrors) — the per-pair intersection
-      fans each pair out by one side's shingles (|pairs| x shingles/doc
-      rows) and hash-joins the other side on (id, shingle). Stays inside
-      whole-stage codegen, no Python workers. The candidate-bounded
-      shingle frame is persisted for its three consumers; pass ``pin``
-      (a list) to receive the handle and unpersist after materializing
-      the output — the ``ngram_jaccard_pairs`` convention.
-    - ``backend="arrow"``: join each pair's two texts side by side and
-      compute the distinct-shingle Jaccard per pair in one pandas UDF
-      with a per-batch shingle-set memo. Moves ~O(shingle-width) fewer
-      shuffle bytes per pair (pair rows carry the two texts, not a
-      per-shingle fan-out), so it can win on long documents; pays
-      Python-worker startup on the first scan.
-
-    Measured like-for-like (500k docs / 1M candidate pairs / ~150-char
-    docs, 3 warm repeats, tools/probe_dedup_scale.py): column
-    18.9/12.7/10.4 s vs arrow 64.0/15.5/11.2 s — a warm tie, column 3x
-    cheaper cold, so column is the default; see BENCH.md §6b.
+    Pure-DataFrame shingle arithmetic (the shape the DuckDB oracle
+    mirrors): it stays inside whole-stage codegen and starts no Python
+    workers. The candidate-bounded shingle frame is persisted for its three
+    consumers; pass ``pin`` (a list) to receive the handle and unpersist
+    after materializing the output — the ``ngram_jaccard_pairs`` convention.
     """
     p = pairs.select(src, dst).distinct()
-    if backend == "arrow":
-        return _verify_pairs_arrow(df, p, text_col, id_col, src, dst, n, threshold)
     ids = (
         p.select(F.col(src).alias(id_col))
         .union(p.select(F.col(dst).alias(id_col)))
@@ -456,60 +435,6 @@ def verify_candidate_pairs(
         )
         .where(F.col("jaccard") >= threshold)
     )
-
-
-def _verify_pairs_arrow(
-    df: DataFrame,
-    p: DataFrame,
-    text_col: str,
-    id_col: str,
-    src: str,
-    dst: str,
-    n: int,
-    threshold: float,
-) -> DataFrame:
-    """Arrow backend of :func:`verify_candidate_pairs`: two hash joins pull
-    each pair's texts side by side, one pandas UDF computes the
-    distinct-``n``-gram Jaccard per pair. Same count arithmetic as the
-    column backend (int sizes, one f64 division), so results are
-    bit-identical; a side shorter than ``n`` yields NULL and the pair is
-    dropped by the threshold filter, matching the column backend's inner
-    join against the shingle counts."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _jac(a: pd.Series, b: pd.Series) -> pd.Series:
-        # per-batch memo: a doc's shingle set is built once per Arrow batch
-        # no matter how many pairs reference it
-        memo: dict = {}
-
-        def shingles(t):
-            s = memo.get(t)
-            if s is None:
-                s = frozenset(t[j : j + n] for j in range(len(t) - n + 1))
-                memo[t] = s
-            return s
-
-        out = np.full(len(a), np.nan)
-        for i, (x, y) in enumerate(zip(a, b)):
-            if x is None or y is None or len(x) < n or len(y) < n:
-                continue
-            sa, sb = shingles(x), shingles(y)
-            inter = len(sa & sb)
-            out[i] = inter / (len(sa) + len(sb) - inter)
-        return pd.Series(out)
-
-    texts = df.select(id_col, text_col)
-    joined = (
-        p.join(
-            texts.select(F.col(id_col).alias(src), F.col(text_col).alias("_ta")), src
-        )
-        .join(
-            texts.select(F.col(id_col).alias(dst), F.col(text_col).alias("_tb")), dst
-        )
-        .select(src, dst, _jac("_ta", "_tb").alias("jaccard"))
-    )
-    return joined.where(F.col("jaccard") >= threshold)
 
 
 def connected_components(

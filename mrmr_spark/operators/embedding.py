@@ -9,36 +9,21 @@ similarity family (knn / ann_lsh / ann_ivf / semdedup / embedding_near_dup)
 consumes — text → hashed embedding → ANN/semantic-dedup runs end to end
 with zero external dependencies.
 
-Exactness across backends and the SQL oracle: per-bucket accumulation is
-INTEGER (each token contributes ±1, or its tf), so the sum is
-order-independent and partitioning-independent — no float-reassociation
-drift; the single normalization divide happens once per bucket in f64.
+One kernel: a zero-shuffle vectorized pandas UDF. The tokens of an Arrow
+batch are hashed once per DISTINCT token (a per-batch memo), per-doc
+bucket accumulation is int64, and the single normalization divide is one
+f64 op per bucket. Integer accumulation makes the vector independent of
+token order and partitioning; the squared norm sums integer-valued doubles
+< 2^53, so every summation order yields the same f64. The kernel has no
+state, so it runs unchanged on streaming frames.
 
-Backends (bit-identical, tested):
-
-- ``backend="group"`` (default): explode tokens → hash to (id, bucket) →
-  map-side-combined integer sum → collect per-doc ``map(bucket → sum)`` →
-  one projection renders the dense vector. Shuffle carries at most
-  (doc × distinct-bucket) rows — bounded by min(tokens, dim) per doc —
-  and every stage is whole-stage codegen.
-- ``backend="project"``: zero-shuffle pure projection — per bucket, a
-  higher-order ``aggregate`` over the token array. O(dim · n_tokens)
-  interpreted lambda work per row: the stateless form for streaming
-  admission (composes with any output mode, like dsir_logweight_expr) and
-  tiny dims; the group backend is the batch default.
-- ``backend="arrow"`` (``hash_fn="poly"`` only): zero-shuffle vectorized
-  pandas UDF — tokens of a batch are factorized so each DISTINCT token is
-  poly-hashed once in Python ints (exact), per-doc bucket accumulation is
-  int64 ``np.add.at``, and the one normalization divide is the same f64
-  op. Bit-identical to group/project (tested); the fast path for the
-  poly family, whose per-character interpreted HOF fold is ~50x slower.
-  The xxhash64 family stays on the codegen group backend (the JVM hash
-  is not reproduced in Python).
-
-Hash families (``hash_fn``):
+Hash families (``hash_fn``), both computed in Python ints:
 
 - ``"xxhash64"`` (production default): bucket = pmod(xxhash64(tok, seed),
-  dim); sign from the parity of an independent xxhash64(tok, seed+1).
+  dim); sign from the parity of xxhash64(tok, seed+1) — Spark's
+  ``F.xxhash64(tok, F.lit(seed))``, reproduced bit for bit by
+  :func:`_xxhash64` (so a Column expression over the same tokens is an
+  exact reference).
 - ``"poly"``: the winnowing family's polynomial-mod string hash (base 257 /
   sign base 263, mod 2^31−1) — every step ANSI-SQL-reproducible, so the
   operator is oracle-able end to end (gate row ``hashed_embedding``).
@@ -51,122 +36,121 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _POLY_MOD = 2_147_483_647  # Mersenne prime 2^31 − 1 (winnowing family)
 _POLY_BASE_BUCKET = 257
 _POLY_BASE_SIGN = 263
 
-
-def _poly_hash(tok: Column, base: int) -> Column:
-    """Σ code_i · base^i mod M over the token's characters — fits int64 with
-    per-step mod (acc < 2^31 so acc·base + code < 2^40)."""
-    codes = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(tok), F.lit(1))),
-        lambda i: F.ascii(F.substring(tok, i, F.lit(1))).cast("long"),
-    )
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(base) + c) % F.lit(_POLY_MOD),
-    )
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
 
 
-def _bucket_and_sign(tok: Column, dim: int, seed: int, hash_fn: str, signed: bool):
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit int (Spark's ``XXH64``)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _round(v[j], int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little"))
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _round(0, int.from_bytes(data[i : i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i : i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _lit_bytes(v: int) -> bytes:
+    """The bytes Spark hashes for ``F.lit(v)``: an int, or a bigint when
+    ``v`` is outside int32."""
+    return v.to_bytes(4 if -(2**31) <= v < 2**31 else 8, "little", signed=True)
+
+
+def _signed(h: int) -> int:
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _xxhash64(tok: str, seed: int) -> int:
+    """Spark's signed ``xxhash64(tok, lit(seed))``: the column hashes chain
+    from Spark's default seed 42."""
+    return _signed(_xxh64(_lit_bytes(seed), _xxh64(tok.encode("utf-8"), 42)))
+
+
+def _token_hasher(dim: int, seed: int, hash_fn: str, signed: bool):
+    """``tok -> (bucket, sign)`` for one hash family."""
     if hash_fn == "xxhash64":
-        bucket = F.pmod(F.xxhash64(tok, F.lit(seed)), F.lit(dim))
-        sign = (
-            F.lit(1) - F.lit(2) * F.pmod(F.xxhash64(tok, F.lit(seed + 1)), F.lit(2))
-            if signed
-            else F.lit(1)
-        )
+        kb, ks = _lit_bytes(seed), _lit_bytes(seed + 1)
+
+        def bs(tok: str) -> tuple[int, int]:
+            h = _xxh64(tok.encode("utf-8"), 42)  # shared by both streams
+            b = _signed(_xxh64(kb, h)) % dim  # Python % is pmod for dim > 0
+            return b, (1 - 2 * (_xxh64(ks, h) & 1)) if signed else 1
+
     elif hash_fn == "poly":
-        bucket = F.pmod(_poly_hash(tok, _POLY_BASE_BUCKET) + F.lit(seed), F.lit(dim))
-        sign = (
-            F.lit(1) - F.lit(2) * F.pmod(_poly_hash(tok, _POLY_BASE_SIGN) + F.lit(seed), F.lit(2))
-            if signed
-            else F.lit(1)
-        )
+
+        def bs(tok: str) -> tuple[int, int]:
+            hb = hs = 0
+            for ch in tok:
+                c = ord(ch)
+                hb = (hb * _POLY_BASE_BUCKET + c) % _POLY_MOD
+                hs = (hs * _POLY_BASE_SIGN + c) % _POLY_MOD
+            return (hb + seed) % dim, (1 - 2 * ((hs + seed) % 2)) if signed else 1
+
     else:
         raise ValueError(f"hash_fn must be 'xxhash64' or 'poly', got {hash_fn!r}")
-    return bucket.cast("int"), sign.cast("long")
-
-
-def _dense_from_counts(counts_map: Column, dim: int, normalize: bool) -> Column:
-    """map(bucket → int sum) → dense array<double>, L2-normalized if asked
-    (zero vectors stay zero)."""
-    raw = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.coalesce(F.element_at(counts_map, i.cast("int")), F.lit(0)).cast(
-            "double"
-        ),
-    )
-    if not normalize:
-        return raw
-    return F.get(
-        F.transform(
-            F.array(raw),
-            lambda v: F.get(
-                F.transform(
-                    F.array(
-                        F.sqrt(
-                            F.aggregate(
-                                v, F.lit(0.0), lambda acc, x: acc + x * x
-                            )
-                        )
-                    ),
-                    lambda nrm: F.when(
-                        nrm > 0, F.transform(v, lambda x: x / nrm)
-                    ).otherwise(v),
-                ),
-                0,
-            ),
-        ),
-        0,
-    )
+    return bs
 
 
 def _hashed_embedding_arrow(
-    dim: int, split: str, signed: bool, normalize: bool, seed: int
+    dim: int, split: str, signed: bool, normalize: bool, seed: int, hash_fn: str
 ):
-    """Vectorized poly-family embedding kernel — see the module docstring.
-
-    Exactness: poly hashes are exact Python ints (same per-step mod as the
-    Column fold); bucket sums are int64 (order-independent); the squared
-    norm sums integer-valued doubles < 2^53, so any summation order yields
-    the identical f64, and the single divide is the same IEEE op.
-    """
+    """The embedding kernel — see the module docstring."""
     from pyspark.sql.functions import pandas_udf
 
-    # ``split`` is a regex, as in the Column backends' F.split
-    splitter = re.compile(split)
+    splitter = re.compile(split)  # ``split`` is a regex, as in ``F.split``
+    bs = _token_hasher(dim, seed, hash_fn, signed)
 
     @pandas_udf("array<double>")
     def _emb(texts: pd.Series) -> pd.Series:
         cache: dict[str, tuple[int, int]] = {}
-
-        def bs(tok: str) -> tuple[int, int]:
-            v = cache.get(tok)
-            if v is None:
-                hb = hs = 0
-                for ch in tok:
-                    c = ord(ch)
-                    hb = (hb * _POLY_BASE_BUCKET + c) % _POLY_MOD
-                    hs = (hs * _POLY_BASE_SIGN + c) % _POLY_MOD
-                b = (hb + seed) % dim
-                s = (1 - 2 * ((hs + seed) % 2)) if signed else 1
-                v = (b, s)
-                cache[tok] = v
-            return v
-
         out = []
         for t in texts:
             counts = np.zeros(dim, dtype=np.int64)
-            for w in splitter.split(t or ""):
+            for w in splitter.split(t):
                 if w:
-                    b, s = bs(w)
-                    counts[b] += s
+                    v = cache.get(w)
+                    if v is None:
+                        v = cache[w] = bs(w)
+                    counts[v[0]] += v[1]
             raw = counts.astype(np.float64)
             if normalize:
                 nrm = float(np.sqrt(np.dot(raw, raw)))
@@ -186,7 +170,6 @@ def _hashed_embedding_arrow(
 def hashed_embedding(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
     dim: int = 64,
     out_col: str = "embedding",
     split: str = " ",
@@ -194,82 +177,17 @@ def hashed_embedding(
     normalize: bool = True,
     seed: int = 0,
     hash_fn: str = "xxhash64",
-    backend: str = "group",
 ) -> DataFrame:
     """Append ``out_col``: the ``dim``-dimensional hashed token-count
-    embedding of ``text_col``. Tokens are the pieces of the text split on
-    the regex ``split`` (every backend, like ``F.split``); empty tokens are
-    dropped, and a document with no tokens (or NULL text) embeds to the
-    zero vector. ``signed`` toggles the ±1 sign stream (unbiased inner
-    products — the feature-hashing trick); ``signed=False`` gives a plain
-    hashed tf histogram.
-
-    ``backend="group"`` keeps only ``id_col`` plus the embedding through the
-    aggregation and joins the vector back onto ``df`` (broadcast-free
-    equi-join on ``id_col``); ``backend="project"`` appends it as a pure
-    zero-shuffle projection (streaming-safe). Outputs are bit-identical
-    (integer accumulation; tested).
+    embedding of each row's ``text_col``. Tokens are the pieces of the text
+    split on the regex ``split`` (like ``F.split``); empty tokens are
+    dropped, and a row with no tokens (or NULL text) embeds to the zero
+    vector. ``signed`` toggles the ±1 sign stream (unbiased inner products
+    — the feature-hashing trick); ``signed=False`` gives a plain hashed tf
+    histogram. A pure zero-shuffle projection (one ``ArrowEvalPython``),
+    so it is streaming-safe.
     """
     if dim <= 0:
         raise ValueError(f"dim must be positive, got {dim}")
-    toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), split),
-        lambda w: w != F.lit(""),
-    )
-
-    if backend == "project":
-        def bucket_sum(i: Column) -> Column:
-            return F.aggregate(
-                toks,
-                F.lit(0).cast("long"),
-                lambda acc, t: acc
-                + F.get(
-                    F.transform(
-                        F.array(t),
-                        lambda tok: F.when(
-                            _bucket_and_sign(tok, dim, seed, hash_fn, signed)[0]
-                            == i.cast("int"),
-                            _bucket_and_sign(tok, dim, seed, hash_fn, signed)[1],
-                        ).otherwise(F.lit(0).cast("long")),
-                    ),
-                    0,
-                ),
-            )
-
-        counts_map = F.map_from_arrays(
-            F.sequence(F.lit(0), F.lit(dim - 1)).cast("array<int>"),
-            F.transform(F.sequence(F.lit(0), F.lit(dim - 1)), bucket_sum),
-        )
-        return df.withColumn(out_col, _dense_from_counts(counts_map, dim, normalize))
-
-    if backend == "arrow":
-        if hash_fn != "poly":
-            raise ValueError(
-                "backend='arrow' supports hash_fn='poly' only (the JVM "
-                "xxhash64 family is not reproduced in Python); use "
-                "backend='group' for xxhash64."
-            )
-        emb = _hashed_embedding_arrow(dim, split, signed, normalize, seed)
-        return df.withColumn(out_col, emb(F.coalesce(F.col(text_col), F.lit(""))))
-
-    if backend != "group":
-        raise ValueError(
-            f"backend must be 'group', 'project' or 'arrow', got {backend!r}"
-        )
-
-    tok = F.explode(toks).alias("__tok")
-    exploded = df.select(F.col(id_col), tok)
-    bucket, sign = _bucket_and_sign(F.col("__tok"), dim, seed, hash_fn, signed)
-    sums = (
-        exploded.select(F.col(id_col), bucket.alias("__bucket"), sign.alias("__sign"))
-        .groupBy(id_col, "__bucket")
-        .agg(F.sum("__sign").alias("__sum"))
-        .groupBy(id_col)
-        .agg(F.map_from_entries(F.collect_list(F.struct("__bucket", "__sum"))).alias("__m"))
-    )
-    vec = sums.select(F.col(id_col), _dense_from_counts(F.col("__m"), dim, normalize).alias(out_col))
-    zero = F.array(*[F.lit(0.0) for _ in range(dim)])
-    return (
-        df.join(vec, on=id_col, how="left")
-        .withColumn(out_col, F.coalesce(F.col(out_col), zero))
-    )
+    emb = _hashed_embedding_arrow(dim, split, signed, normalize, seed, hash_fn)
+    return df.withColumn(out_col, emb(F.coalesce(F.col(text_col), F.lit(""))))

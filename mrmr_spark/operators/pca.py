@@ -10,10 +10,9 @@ machinery as every selection kernel: no raw-sum cancellation,
 bit-identical past 64 partitions, driver collect O(d^2) regardless of
 corpus size). The eigendecomposition runs on the driver over the d x d
 scatter (d is the embedding width — 64..4096 in practice — never the
-corpus). Projection is a broadcast matmul: the default Arrow backend is
-one zero-shuffle GEMM pass; the ``column`` twin is a pure
-higher-order-function projection (zero Python) whose arithmetic is
-ANSI-SQL-reproducible — the gate oracles the covariance statistic AND a
+corpus). Projection is one zero-shuffle Arrow GEMM pass per batch with
+the model broadcast in the closure; it has no state, so it also runs on
+streaming frames. The gate oracles the covariance statistic AND a
 fixed-matrix projection against DuckDB re-derivations.
 
 No reference counterpart (kmedved/mrmr has no embedding layer); this is
@@ -27,8 +26,9 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from mrmr_spark.select.kernels import _acc_batch, _ACC_SCHEMA, _chan_merge, _merge_collect
 from mrmr_spark.operators.similarity import _as_double
@@ -144,22 +144,17 @@ def pca_project(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     out_col: str = "pca",
-    backend: str = "arrow",
 ) -> DataFrame:
     """Project embeddings onto the components: y = W (x - mean), optionally
     whitened (divided by sqrt(eigval); zero-variance components emit 0.0
-    rather than inf — the guard is explicit on both backends).
+    rather than inf — the guard is explicit).
 
-    Backends (equality pytest-asserted):
+    One zero-shuffle GEMM pass over each Arrow batch (BLAS does the
+    k x d work per batch). A NULL embedding projects to NULL; an
+    embedding whose length is not the model's d raises a ``ValueError``
+    naming both lengths.
 
-    - ``arrow`` (default): one zero-shuffle GEMM pass over each batch —
-      the 10^12-row path (BLAS does the k x d work per batch).
-    - ``column``: a pure higher-order-function projection (zero Python,
-      zero shuffle — plan-asserted in pytest); every fold is plain +/*
-      over doubles, so the arithmetic is ANSI-SQL-reproducible and the
-      gate value-checks this operator end to end through it.
-
-    Output: ``(id_col, out_col array<double>)``.
+    Output: ``(id_col, out_col array<double>)``; the id keeps its type.
     """
     if model is not None:
         mean = model["mean"] if mean is None else mean
@@ -177,44 +172,38 @@ def pca_project(
     else:
         inv = np.ones(kk)
 
-    if backend == "arrow":
-        Wt = (W * inv[:, None]).T.copy()  # (d, k), whitening folded in
-        off = mu @ Wt  # (k,)
-        proj = _as_double(df, emb_col, "_e").select(id_col, "_e")
+    Wt = (W * inv[:, None]).T.copy()  # (d, k), whitening folded in
+    off = mu @ Wt  # (k,)
+    proj = _as_double(df, emb_col, "_e").select(id_col, "_e")
+    schema = StructType(
+        [proj.schema[id_col], StructField(out_col, ArrayType(DoubleType()))]
+    )
 
-        def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for b in batches:
-                if not b.num_rows:
-                    continue
-                ids_np = b.column(0).to_numpy(zero_copy_only=False)
-                X = (
-                    b.column(1)
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .reshape(b.num_rows, d)
-                    .astype(np.float64)
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            if not b.num_rows:
+                continue
+            emb = b.column(1)
+            lens = pc.list_value_length(emb)  # NULL for a NULL embedding
+            bad = pc.not_equal(lens, d)
+            if pc.any(bad).as_py():
+                found = pc.filter(lens, bad)[0].as_py()
+                raise ValueError(
+                    f"pca_project: embedding length {found} != model d={d}"
                 )
-                Y = X @ Wt - off
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ids_np), pa.array(list(Y), type=pa.list_(pa.float64()))],
-                    [id_col, out_col],
-                )
+            valid = emb.is_valid().to_numpy(zero_copy_only=False)
+            X = (
+                emb.flatten()
+                .to_numpy(zero_copy_only=False)
+                .reshape(int(valid.sum()), d)
+                .astype(np.float64)
+            )
+            Y = X @ Wt - off
+            offsets = np.zeros(b.num_rows + 1, dtype=np.int32)
+            np.cumsum(valid * kk, out=offsets[1:])
+            out = pa.ListArray.from_arrays(
+                pa.array(offsets), pa.array(Y.ravel()), mask=pa.array(~valid)
+            )
+            yield pa.RecordBatch.from_arrays([b.column(0), out], [id_col, out_col])
 
-        return proj.mapInArrow(mapper, f"`{id_col}` long, `{out_col}` array<double>")
-
-    if backend != "column":
-        raise ValueError(f"pca_project: unknown backend {backend!r}")
-
-    e = F.transform(F.col(emb_col), lambda x: x.cast("double"))
-
-    def _dot(vec: Column, w: np.ndarray) -> Column:
-        lits = F.array(*[F.lit(float(v)) for v in w])
-        return F.aggregate(
-            F.zip_with(vec, lits, lambda x, c: x * c), F.lit(0.0), lambda a, x: a + x
-        )
-
-    comps = [
-        ((_dot(e, W[j]) - F.lit(float(mu @ W[j]))) * F.lit(float(inv[j]))).alias(f"_p{j}")
-        for j in range(kk)
-    ]
-    return df.select(F.col(id_col), F.array(*comps).alias(out_col))
+    return proj.mapInArrow(mapper, schema)

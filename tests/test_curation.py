@@ -425,18 +425,15 @@ def test_weighted_sample_deterministic(docs):
 
 @pytest.mark.parametrize("mode", ["flag", "drop"])
 def test_decontaminate_gram_key_backends_identical(docs, mode):
+    """Token-hash-slice keys (xxhash64) and gram-string keys (md5_60)
+    agree."""
     bench = docs.where(F.col("doc_id") % 11 == 0)
     corpus = docs.where(F.col("doc_id") % 11 != 0)
-    a = decontaminate(corpus, bench, n=3, mode=mode, gram_keys="tokens")
-    b = decontaminate(corpus, bench, n=3, mode=mode, gram_keys="string")
+    a = decontaminate(corpus, bench, n=3, mode=mode, hash_fn="xxhash64")
+    b = decontaminate(corpus, bench, n=3, mode=mode, hash_fn="md5_60")
     ka = sorted(tuple(r) for r in a.collect())
     kb = sorted(tuple(r) for r in b.collect())
     assert ka == kb
-
-
-def test_decontaminate_rejects_bad_gram_keys(docs):
-    with pytest.raises(ValueError, match="gram_keys"):
-        decontaminate(docs, docs, gram_keys="oops")
 
 
 def test_hash_split_matches_python_oracle_and_is_stable(docs):
@@ -475,8 +472,8 @@ def test_lm_score_gram_key_backends_identical(docs):
     from mrmr_spark.operators.curation import bigram_lm_counts, ngram_lm_score
 
     ref = docs.where(F.col("doc_id") % 5 == 0)
-    m_tok = bigram_lm_counts(ref, gram_keys="tokens")
-    m_str = bigram_lm_counts(ref, gram_keys="string")
+    m_tok = bigram_lm_counts(ref, hash_fn="xxhash64")
+    m_str = bigram_lm_counts(ref, hash_fn="md5_60")
     assert m_tok["vocab_size"] == m_str["vocab_size"]
     a = {r.doc_id: (r.n_terms, r.avg_logprob) for r in ngram_lm_score(docs, m_tok).collect()}
     b = {r.doc_id: (r.n_terms, r.avg_logprob) for r in ngram_lm_score(docs, m_str).collect()}
@@ -484,9 +481,6 @@ def test_lm_score_gram_key_backends_identical(docs):
     for did in a:
         assert a[did][0] == b[did][0]
         assert a[did][1] == pytest.approx(b[did][1], abs=1e-12)
-    from mrmr_spark.operators.curation import bigram_lm_counts as blc
-    with pytest.raises(ValueError, match="gram_keys"):
-        blc(ref, gram_keys="oops")
 
 
 def test_explode_chunks_tiles_every_chunk(docs):
@@ -523,14 +517,18 @@ def test_explode_chunks_tiles_every_chunk(docs):
 
 
 @pytest.mark.parametrize("order", [2, 3])
-@pytest.mark.parametrize("gram_keys", ["tokens", "string"])
-def test_ngram_lm_any_order_matches_python(docs, order, gram_keys):
+@pytest.mark.parametrize(
+    "hash_fn",
+    # ids name the key construction each family uses
+    [pytest.param("xxhash64", id="tokens"), pytest.param("md5_60", id="string")],
+)
+def test_ngram_lm_any_order_matches_python(docs, order, hash_fn):
     import math
 
     from mrmr_spark.operators.curation import bigram_lm_counts, ngram_lm_score
 
     ref = docs.where(F.col("doc_id") % 5 == 0)
-    model = bigram_lm_counts(ref, gram_keys=gram_keys, order=order)
+    model = bigram_lm_counts(ref, hash_fn=hash_fn, order=order)
     grams, prefixes, vocab = Counter(), Counter(), set()
     for r in ref.collect():
         ws = r.text.split(" ")
@@ -644,7 +642,7 @@ def test_duplicate_spans_gram_key_backends_identical(span_docs):
     from mrmr_spark.operators.curation import duplicate_spans
 
     a = sorted(map(tuple, duplicate_spans(span_docs, n=4).collect()))
-    b = sorted(map(tuple, duplicate_spans(span_docs, n=4, gram_keys="string").collect()))
+    b = sorted(map(tuple, duplicate_spans(span_docs, n=4, hash_fn="md5_60").collect()))
     assert a == b
 
 
@@ -720,8 +718,6 @@ def test_duplicate_spans_validation(span_docs):
         duplicate_spans(span_docs, min_df=1)
     with pytest.raises(ValueError, match="n must"):
         duplicate_spans(span_docs, n=0)
-    with pytest.raises(ValueError, match="gram_keys"):
-        duplicate_spans(span_docs, gram_keys="bogus")
 
 
 # ---------------------------------------------------------------------------
@@ -1050,7 +1046,7 @@ def test_contamination_spans_backends_identical(spark):
     bench = spark.createDataFrame([(0, "the shared eval gram here marker")],
                                   "doc_id long, text string")
     a = sorted(map(tuple, contamination_spans(docs, bench, n=4).collect()))
-    b = sorted(map(tuple, contamination_spans(docs, bench, n=4, gram_keys="string").collect()))
+    b = sorted(map(tuple, contamination_spans(docs, bench, n=4, hash_fn="md5_60").collect()))
     assert a == b and a, "planted overlap must produce spans"
 
 

@@ -106,17 +106,20 @@ def test_ngram_jaccard_max_df_bounds_skew(spark):
     # and the capped join really excluded them (pairs above proves it)
 
 
-@pytest.mark.parametrize("backend", ["arrow", "column"])
-def test_verify_candidate_pairs_exact_and_drops_false(docs, backend):
-    """The exact verify stage, both backends (bit-identical by contract):
-    (a) a true candidate pair passes with the exact Jaccard value
-    (cross-checked against ngram_jaccard_pairs' corpus-wide exact
-    computation); (b) a FALSE candidate pair — the kind a fingerprint-hash
-    collision produces — is dropped; (c) a pair whose doc is shorter than n
-    is dropped (no shingles, no evidence)."""
+@pytest.mark.parametrize("source", ["arrow", "column"])
+def test_verify_candidate_pairs_exact_and_drops_false(docs, frame_from, source):
+    """The exact verify stage, on a corpus converted through Arrow and on
+    one read back through the Parquet scan: (a) a true candidate pair
+    passes with the exact Jaccard value (cross-checked against
+    ngram_jaccard_pairs' corpus-wide exact computation); (b) a FALSE
+    candidate pair — the kind a fingerprint-hash collision produces — is
+    dropped; (c) a pair whose doc is shorter than n, or NULL, is dropped
+    (no shingles, no evidence)."""
     from mrmr_spark.operators.dedup import verify_candidate_pairs
 
-    sdf, pdf = docs
+    _, pdf = docs
+    rows = list(pdf.itertuples(index=False)) + [(99, None)]
+    sdf = frame_from(rows, "doc_id long, text string", source)
     spark = sdf.sparkSession
     # ground truth from the existing exact operator (no df cap => exact)
     exact = ngram_jaccard_pairs(sdf, threshold=0.6, max_df=None).toPandas()
@@ -125,12 +128,10 @@ def test_verify_candidate_pairs_exact_and_drops_false(docs, backend):
     true_pairs = list(truth)
     # false candidates: doc pairs that are NOT near-dups (base docs are
     # independent random word strings)
-    false_pairs = [(10, 25), (11, 30)]
+    false_pairs = [(10, 25), (11, 30), (0, 99)]
     cand = spark.createDataFrame(true_pairs + false_pairs, ["id_a", "id_b"])
     pin = []
-    got = verify_candidate_pairs(
-        sdf, cand, threshold=0.6, backend=backend, pin=pin
-    ).toPandas()
+    got = verify_candidate_pairs(sdf, cand, threshold=0.6, pin=pin).toPandas()
     for h in pin:
         h.unpersist()
     got_pairs = {(int(a), int(b)): j for a, b, j in got.itertuples(index=False)}
@@ -142,7 +143,7 @@ def test_verify_candidate_pairs_exact_and_drops_false(docs, backend):
         pd.DataFrame({"doc_id": [0, 1], "text": ["abc", "abc"]})
     )
     pair = spark.createDataFrame([(0, 1)], ["id_a", "id_b"])
-    assert verify_candidate_pairs(tiny, pair, threshold=0.0, backend=backend).count() == 0
+    assert verify_candidate_pairs(tiny, pair, threshold=0.0).count() == 0
 
 
 def test_minhash_lsh_finds_planted_dups(docs):

@@ -1,7 +1,7 @@
 """PCA / whitening over an embedding column: the moments scan vs numpy
-(np.cov / np.linalg.eigh re-derivation), projection backend equality
-(Arrow GEMM vs the pure-Column twin), whitening variance, the
-deterministic sign convention, and validation errors."""
+(np.cov / np.linalg.eigh re-derivation), the Arrow GEMM projection vs
+numpy and its plan shape, NULL / id-type / wrong-length inputs, whitening
+variance, the deterministic sign convention, and validation errors."""
 
 import numpy as np
 import pandas as pd
@@ -73,33 +73,55 @@ def test_train_matches_numpy_eigh(vectors):
 
 
 def test_project_backends_equal_and_column_plan_pure(vectors):
+    """The Arrow GEMM matches the numpy projection; one Python stage, no
+    exchange."""
     sdf, X = vectors
     m = pca_train(sdf, DIM, k=4)
-    a = (
-        pca_project(sdf, m, backend="arrow")
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    c_df = pca_project(sdf, m, backend="column")
-    plan = c_df._jdf.queryExecution().executedPlan().toString()
+    out = pca_project(sdf, m)
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    assert "Python" not in plan and "ArrowEval" not in plan
-    c = c_df.toPandas().sort_values("vec_id").reset_index(drop=True)
+    assert plan.count("MapInArrow") == 1, plan
+    a = out.toPandas().sort_values("vec_id").reset_index(drop=True)
     A = np.stack(a["pca"].to_numpy())
-    C = np.stack(c["pca"].to_numpy())
-    np.testing.assert_allclose(A, C, rtol=0, atol=1e-9)
-    # and both match the numpy projection
     exp = (X - m["mean"]) @ m["components"].T
     np.testing.assert_allclose(A, exp, rtol=0, atol=1e-9)
 
 
-@pytest.mark.parametrize("backend", ["arrow", "column"])
-def test_whiten_unit_variance(vectors, backend):
-    sdf, _ = vectors
+@pytest.mark.parametrize("case", ["null_embedding", "int_id", "wrong_length"])
+def test_project_input_edge_cases(spark, case):
+    """A NULL embedding projects to NULL, the id keeps its input type, and
+    a wrong-length vector raises a ValueError naming both lengths."""
+    W = np.array([[1.0, 0.0, 2.0], [0.0, 1.0, -1.0]])
+    mu = np.array([0.5, 0.0, 1.0])
+    id_t = "int" if case == "int_id" else "long"
+    rows = [(1, [1.0, 2.0, 3.0]), (2, None if case == "null_embedding" else [0.0, 1.0, 0.0])]
+    if case == "wrong_length":
+        rows.append((3, [1.0, 2.0]))
+    df = spark.createDataFrame(rows, f"vec_id {id_t}, embedding array<double>")
+    out = pca_project(df, mean=mu, components=W)
+    if case == "wrong_length":
+        with pytest.raises(Exception, match=r"ValueError.*length 2 != model d=3"):
+            out.collect()
+        return
+    assert out.schema["vec_id"].dataType == df.schema["vec_id"].dataType
+    got = {r.vec_id: r.pca for r in out.collect()}
+    assert got[1] == pytest.approx(list(W @ (np.array([1.0, 2.0, 3.0]) - mu)))
+    if case == "null_embedding":
+        assert got[2] is None
+    else:
+        assert got[2] == pytest.approx(list(W @ (np.array([0.0, 1.0, 0.0]) - mu)))
+
+
+@pytest.mark.parametrize("source", ["arrow", "column"])
+def test_whiten_unit_variance(vectors, frame_from, source):
+    """Whitening on a frame converted through Arrow and on one read back
+    through the Parquet scan."""
+    _, X = vectors
+    rows = [(i, list(map(float, v))) for i, v in enumerate(X.astype(np.float32))]
+    sdf = frame_from(rows, "vec_id long, embedding array<float>", source)
     k = 6
     m = pca_train(sdf, DIM, k=k)
-    out = pca_project(sdf, m, whiten=True, backend=backend).toPandas()
+    out = pca_project(sdf, m, whiten=True).toPandas()
     Y = np.stack(out["pca"].to_numpy())
     np.testing.assert_allclose(Y.var(axis=0, ddof=1), np.ones(k), rtol=1e-6)
     # whitened components are uncorrelated
@@ -143,5 +165,5 @@ def test_validation_errors(vectors, spark):
         pca_project(sdf, mean=np.zeros(5), components=m["components"])
     with pytest.raises(ValueError, match="needs eigvals"):
         pca_project(sdf, mean=m["mean"], components=m["components"], whiten=True)
-    with pytest.raises(ValueError, match="unknown backend"):
-        pca_project(sdf, m, backend="rdd")
+    with pytest.raises(TypeError):
+        pca_project(sdf, m, backend="column")

@@ -396,7 +396,7 @@ def test_round5_stateless_ops_run_on_streams(spark, doc_stream_dir):
 
 def test_tokenizer_embedding_stateless_on_streams(spark, doc_stream_dir):
     """bpe_encode (arrow mapInPandas, no state) and the hashed embedding's
-    project backend (zero-shuffle projection) run on a streaming frame
+    Arrow kernel (zero-shuffle projection) run on a streaming frame
     unchanged and replay-match the batch result — the live-admission form
     for token budgeting / vectorization of an incoming corpus feed."""
     from mrmr_spark.operators.embedding import hashed_embedding
@@ -408,7 +408,7 @@ def test_tokenizer_embedding_stateless_on_streams(spark, doc_stream_dir):
     def chain(df):
         out = bpe_encode(df, merges)
         out = bpe_token_count(out, merges, out_col="n_bpe")
-        return hashed_embedding(out, dim=8, backend="project", out_col="emb")
+        return hashed_embedding(out, dim=8, out_col="emb")
 
     got = _run_stream(spark, chain(_read_stream(spark, d, schema)), "s_tok_emb")
     batch = chain(spark.createDataFrame(pdf.drop(columns=["slice"]))).toPandas()
@@ -421,10 +421,10 @@ def test_tokenizer_embedding_stateless_on_streams(spark, doc_stream_dir):
 
 
 def test_eval_and_pca_stateless_on_streams(spark, doc_stream_dir):
-    """qa_scores, pass_at_k and the pca_project column backend are
-    stateless projections — they run on a streaming frame unchanged and
-    replay-match the batch result (the live eval-scoring / embedding
-    reduction admission forms)."""
+    """qa_scores, pass_at_k and the pca_project Arrow GEMM are stateless
+    projections — they run on a streaming frame unchanged and replay-match
+    the batch result (the live eval-scoring / embedding reduction
+    admission forms)."""
     import numpy as np
 
     from mrmr_spark.operators.pca import pca_project
@@ -451,7 +451,7 @@ def test_eval_and_pca_stateless_on_streams(spark, doc_stream_dir):
         )
         proj = pca_project(
             out.withColumn("embedding", emb),
-            mean=mu, components=W, backend="column", id_col="doc_id", out_col="pca",
+            mean=mu, components=W, id_col="doc_id", out_col="pca",
         )
         return out.select("doc_id", "f1", "exact_match", "pass_at_5"), proj
 

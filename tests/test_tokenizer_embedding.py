@@ -1,9 +1,11 @@
-"""BPE tokenizer (train + encode, both backends) and feature-hashing
-embedding (both backends, both hash families) against independent Python
-oracles, plus the train→encode segmentation-reproduction invariant and a
-hypothesis sweep on adversarial corpora."""
+"""BPE tokenizer (train + encode, both backends) and the feature-hashing
+embedding kernel (both hash families: poly against a Python oracle,
+xxhash64 against Spark's own hash expressions), plus the train→encode
+segmentation-reproduction invariant and a hypothesis sweep on
+adversarial corpora."""
 
 import math
+import re
 from collections import Counter
 
 import pytest
@@ -15,6 +17,7 @@ from mrmr_spark.operators.embedding import (
     _POLY_BASE_BUCKET,
     _POLY_BASE_SIGN,
     _POLY_MOD,
+    _xxhash64,
     hashed_embedding,
 )
 from mrmr_spark.operators.tokenizer import (
@@ -248,56 +251,118 @@ def _poly(tok, base):
     return acc
 
 
-def py_embedding(text, dim, signed=True, normalize=True, seed=0):
-    v = [0] * dim
-    for w in (text or "").split(" "):
-        if not w:
-            continue
-        b = (_poly(w, _POLY_BASE_BUCKET) + seed) % dim
-        s = 1 - 2 * ((_poly(w, _POLY_BASE_SIGN) + seed) % 2) if signed else 1
-        v[b] += s
+def _finish(v, normalize):
     if not normalize:
         return [float(x) for x in v]
     nrm = math.sqrt(sum(x * x for x in v))
     return [x / nrm if nrm > 0 else float(x) for x in v]
 
 
+def py_embedding(text, dim, signed=True, normalize=True, seed=0, split=" "):
+    v = [0] * dim
+    for w in re.split(split, text or ""):
+        if not w:
+            continue
+        b = (_poly(w, _POLY_BASE_BUCKET) + seed) % dim
+        s = 1 - 2 * ((_poly(w, _POLY_BASE_SIGN) + seed) % 2) if signed else 1
+        v[b] += s
+    return _finish(v, normalize)
+
+
+def spark_xxhash64_embedding(spark, texts, dim, signed=True, normalize=True, seed=0, split=" "):
+    """{text: vector} from Spark's own hash expressions: per token
+    pmod(xxhash64(tok, seed), dim) and the sign from the parity of
+    xxhash64(tok, seed + 1), computed in Spark; only the integer sums and
+    the one normalization divide happen here."""
+    df = spark.createDataFrame([(t,) for t in set(texts)], "text string")
+    toks = F.filter(
+        F.split(F.coalesce(F.col("text"), F.lit("")), split), lambda w: w != F.lit("")
+    )
+    sign = (
+        F.lit(1) - F.lit(2) * F.pmod(F.xxhash64("tok", F.lit(seed + 1)), F.lit(2))
+        if signed
+        else F.lit(1)
+    )
+    rows = (
+        df.select("text", F.explode(toks).alias("tok"))
+        .select("text", F.pmod(F.xxhash64("tok", F.lit(seed)), F.lit(dim)).alias("b"),
+                sign.alias("s"))
+        .collect()
+    )
+    vecs = {t: [0] * dim for t in set(texts)}
+    for r in rows:
+        vecs[r.text][r.b] += r.s
+    return {t: _finish(v, normalize) for t, v in vecs.items()}
+
+
+XXH_TOKENS = ["", "a", "the", "héllo wörld", "日本語テキスト", "x" * 31, "y" * 32,
+              "z" * 40, "abcdefgh" * 5 + "ijklm", "q" * 70]
+XXH_SEEDS = [0, 7, -3, 2**31 - 1, 2**31, 2**40 + 5]
+
+
+def test_xxhash64_port_matches_spark(spark):
+    """The kernel's Python XXH64 reproduces ``F.xxhash64(tok, F.lit(seed))``
+    across the stripe/word/int/byte tails (31/32/40/45/70 bytes), multibyte
+    UTF-8, and int vs bigint literal seeds."""
+    df = spark.createDataFrame([(t,) for t in XXH_TOKENS], "tok string")
+    for seed in XXH_SEEDS:
+        got = {r.tok: r.h for r in df.select("tok", F.xxhash64("tok", F.lit(seed)).alias("h")).collect()}
+        assert got == {t: _xxhash64(t, seed) for t in XXH_TOKENS}, seed
+
+
 @pytest.mark.parametrize("hash_fn", ["xxhash64", "poly"])
 def test_hashed_embedding_backends_identical(spark, docs, hash_fn):
-    g = {r.doc_id: r.emb for r in hashed_embedding(docs, dim=8, out_col="emb", hash_fn=hash_fn, backend="group").collect()}
-    p = {r.doc_id: r.emb for r in hashed_embedding(docs, dim=8, out_col="emb", hash_fn=hash_fn, backend="project").collect()}
-    assert g == p
-    assert g[2] == [0.0] * 8 and g[3] == [0.0] * 8  # NULL / empty → zero vec
+    """The one kernel against each family's reference. Every row embeds its
+    own text: rows sharing an id, or with a NULL id, are not pooled."""
+    extra = spark.createDataFrame([(0, "lane theme"), (None, "the fast")], docs.schema)
+    rows = hashed_embedding(docs.union(extra), dim=8, out_col="emb", hash_fn=hash_fn).collect()
+    texts = [r.text for r in rows]
+    if hash_fn == "xxhash64":
+        ref = spark_xxhash64_embedding(spark, texts, 8)
+    else:
+        ref = {t: py_embedding(t, 8) for t in texts}
+    assert len(rows) == len(DOCS) + 2
+    for r in rows:
+        assert r.emb == ref[r.text], r
+        if r.text in (None, ""):
+            assert r.emb == [0.0] * 8  # NULL / empty → zero vec
+
+
+DOTTED = DOCS + [(6, "end. of.a  line."), (7, "日本語 héllo " + "x" * 40)]
+SPLITS = (" ", r"\s+", r"\.")
 
 
 @pytest.mark.parametrize("signed,normalize", [(True, True), (True, False), (False, True)])
-def test_hashed_embedding_matches_python(spark, docs, signed, normalize):
-    got = {
-        r.doc_id: r.emb
-        for r in hashed_embedding(
-            docs, dim=8, out_col="emb", hash_fn="poly", signed=signed, normalize=normalize
-        ).collect()
-    }
-    for i, t in DOCS:
-        assert got[i] == py_embedding(t, 8, signed, normalize), (i, t)
+def test_hashed_embedding_matches_python(spark, signed, normalize):
+    """poly family against the Python oracle; ``split`` is a regex."""
+    df = spark.createDataFrame(DOTTED, "doc_id long, text string")
+    for split in SPLITS:
+        got = {
+            r.doc_id: r.emb
+            for r in hashed_embedding(
+                df, dim=8, out_col="emb", hash_fn="poly", signed=signed,
+                normalize=normalize, split=split,
+            ).collect()
+        }
+        for i, t in DOTTED:
+            assert got[i] == py_embedding(t, 8, signed, normalize, split=split), (i, t, split)
 
 
-@pytest.mark.parametrize("signed,normalize,seed", [(True, True, 0), (True, False, 7), (False, True, 3)])
-def test_hashed_embedding_arrow_bit_identical(spark, docs, signed, normalize, seed):
-    # ``split`` is a regex on every backend: the dotted doc and the double
-    # space of doc 4 tokenize differently under a literal split
-    dotted = docs.union(spark.createDataFrame([(6, "end. of.a  line.")], docs.schema))
-    for split in (" ", r"\s+", r"\."):
-        kw = dict(dim=8, out_col="emb", hash_fn="poly", signed=signed,
-                  normalize=normalize, seed=seed, split=split)
-        g = {r.doc_id: r.emb for r in hashed_embedding(dotted, backend="group", **kw).collect()}
-        a = {r.doc_id: r.emb for r in hashed_embedding(dotted, backend="arrow", **kw).collect()}
-        assert g == a, split  # exact float equality — integer accumulation + one IEEE divide
-
-
-def test_hashed_embedding_arrow_rejects_xxhash64(spark, docs):
-    with pytest.raises(ValueError, match="arrow"):
-        hashed_embedding(docs, hash_fn="xxhash64", backend="arrow")
+@pytest.mark.parametrize(
+    "signed,normalize,seed",
+    [(True, True, 0), (True, False, 7), (False, True, 3), (True, True, 2**31 - 1)],
+)
+def test_hashed_embedding_arrow_bit_identical(spark, signed, normalize, seed):
+    """xxhash64 family: the Arrow kernel equals Spark's xxhash64 expressions
+    exactly (integer accumulation + one IEEE divide). The dotted doc and
+    the double space of doc 4 tokenize differently under each split."""
+    df = spark.createDataFrame(DOTTED, "doc_id long, text string")
+    texts = [t for _, t in DOTTED]
+    for split in SPLITS:
+        kw = dict(signed=signed, normalize=normalize, seed=seed, split=split)
+        got = {r.doc_id: r.emb for r in hashed_embedding(df, dim=8, out_col="emb", **kw).collect()}
+        ref = spark_xxhash64_embedding(spark, texts, 8, **kw)
+        assert got == {i: ref[t] for i, t in DOTTED}, split
 
 
 def test_hashed_embedding_unit_norm_and_seed(spark, docs):
@@ -315,8 +380,9 @@ def test_hashed_embedding_validation(spark, docs):
         hashed_embedding(docs, dim=0)
     with pytest.raises(ValueError, match="hash_fn"):
         hashed_embedding(docs, hash_fn="nope").collect()
-    with pytest.raises(ValueError, match="backend"):
-        hashed_embedding(docs, backend="nope")
+    for kw in ({"backend": "group"}, {"id_col": "doc_id"}):
+        with pytest.raises(TypeError):
+            hashed_embedding(docs, **kw)
 
 
 def test_hashed_embedding_feeds_similarity(spark, docs):
@@ -334,9 +400,14 @@ def test_hashed_embedding_feeds_similarity(spark, docs):
 
 
 def test_hashed_embedding_project_is_pure_projection(spark, docs):
-    plan = hashed_embedding(docs, dim=4, backend="project")._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "Python" not in plan and "ArrowEval" not in plan
+    """Zero exchanges and exactly one Arrow evaluation, for both families."""
+    for hash_fn in ("xxhash64", "poly"):
+        out = hashed_embedding(docs, dim=4, hash_fn=hash_fn).select(
+            "doc_id", F.posexplode("embedding")
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert plan.count("ArrowEvalPython") == 1, plan
 
 
 # ---------------------------------------------------------------------------

@@ -330,10 +330,9 @@ def main():
           "column twin is a zero-Python replace-chain projection")
     audit("hashed_embedding (feature-hashing text embedding)",
           gate.QUERIES["hashed_embedding"](spark, SF),
-          "explode -> integer map-side-combined sum keyed (doc, bucket) "
-          "(<= min(tokens, dim) rows per doc) -> per-doc map collect -> "
-          "dense projection; zero Python; the project backend is a "
-          "zero-shuffle streaming-safe twin")
+          "projection: zero exchanges, ONE ArrowEvalPython kernel that "
+          "hashes each distinct token once per batch and sums int64 "
+          "buckets per row; posexplode is gate-row presentation only")
     audit("chat_render (SFT chat-template rendering)",
           gate.QUERIES["chat_render"](spark, SF),
           "ONE exchange keyed on the conversation (partial collect_list "

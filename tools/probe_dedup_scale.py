@@ -20,10 +20,8 @@ MRMR_PROBE_VERIFY=<jaccard threshold> -> run the exact
 clustering (this is what eliminates fingerprint-hash-collision false
 pairs — without it, a 500k-doc run measured ~530 spurious pairs from
 base-257 mod 2^31-1 collisions, merging 22 clusters wrongly).
-MRMR_PROBE_VERIFY_BACKEND=column|arrow (default column) selects the
-verify backend; MRMR_PROBE_VERIFY_REPEATS=<k> re-times the verify stage
-k times in one session and reports min + the series (warm-vs-cold — the
-backend comparison receipt is BENCH.md §6b).
+MRMR_PROBE_VERIFY_REPEATS=<k> re-times the verify stage k times in one
+session and reports min + the series (warm-vs-cold, BENCH.md §6b).
 Prints one JSON line with per-stage seconds and the verification verdict.
 """
 
@@ -44,7 +42,6 @@ N_VARIANTS = int(os.environ.get("MRMR_PROBE_VARIANTS", "5"))
 CKPT_DIR = os.environ.get("MRMR_PROBE_CKPT_DIR") or None
 VERIFY = os.environ.get("MRMR_PROBE_VERIFY")
 VERIFY_THRESHOLD = float(VERIFY) if VERIFY else None
-VERIFY_BACKEND = os.environ.get("MRMR_PROBE_VERIFY_BACKEND", "column")
 VERIFY_REPEATS = int(os.environ.get("MRMR_PROBE_VERIFY_REPEATS", "1"))
 
 
@@ -112,17 +109,12 @@ def main():
         h.unpersist()
 
     if VERIFY_THRESHOLD is not None:
-        out["verify_backend"] = VERIFY_BACKEND
         series = []
         for _ in range(VERIFY_REPEATS):
             t0 = time.perf_counter()
             vpin: list = []
             verified = verify_candidate_pairs(
-                docs,
-                pairs,
-                threshold=VERIFY_THRESHOLD,
-                backend=VERIFY_BACKEND,
-                pin=vpin,
+                docs, pairs, threshold=VERIFY_THRESHOLD, pin=vpin
             ).persist()
             out["n_verified"] = verified.count()
             series.append(round(time.perf_counter() - t0, 2))
