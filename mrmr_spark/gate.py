@@ -3374,14 +3374,15 @@ WHERE cum_tokens - n_tokens < budget
 def q_common_lines(spark, sf_dir):
     """RefinedWeb-style boilerplate-line removal: every line occurring in
     >= 3 documents is dropped and the document rebuilt; rewritten text and
-    removal counts value-checked. Runs the `string` key backend (what ANSI
-    SQL computes bit-exactly); pytest proves hash128 ≡ string."""
+    removal counts value-checked. The engine keys lines by their 128-bit
+    fingerprint; the oracle keys on the normalized line string itself, so
+    the row also checks that no fingerprint collides."""
     from mrmr_spark.operators.lines import remove_common_lines
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", F.replace(F.col("text"), F.lit(" the "), F.lit("\n")).alias("text")
     )
-    return remove_common_lines(d, max_df=3, key_backend="string")
+    return remove_common_lines(d, max_df=3)
 
 
 SQL_COMMON_LINES = """
@@ -4208,8 +4209,9 @@ _SEP2 = "chr(31)||chr(31)"
 
 
 def _bpe_wrap_sql(word_expr: str) -> str:
-    """word → the \\x1f-wrapped symbol string (chars + '</w>'), mirroring
-    tokenizer._wrapped_symbols."""
+    """word → the \\x1f-wrapped symbol string (chars + '</w>'): every symbol
+    individually wrapped, adjacent symbols sharing a \\x1f\\x1f boundary, so
+    a merge of (a, b) is one literal replace()."""
     return (
         f"{_SEPC} || array_to_string(list_append(list_transform("
         f"generate_series(1, length({word_expr})), i -> substring({word_expr}, i, 1)),"
@@ -4229,7 +4231,9 @@ def _bpe_chain_sql(expr: str, merges) -> str:
 
 def q_bpe_pair_counts(spark, sf_dir):
     """Corpus-weighted adjacent symbol-pair counts after a fixed merge list
-    — the distributed form of the statistic BPE training maximizes."""
+    — the distributed form of the statistic BPE training maximizes. The
+    engine encodes each word with the Python word kernel; the oracle
+    re-derives the symbols through the replace-chain SQL."""
     from mrmr_spark.operators.tokenizer import bpe_pair_counts, word_counts
 
     wc = word_counts(_t(spark, sf_dir, "documents"))
@@ -4259,10 +4263,10 @@ SQL_BPE_PAIR_COUNTS = _bpe_pair_counts_sql(GATE_BPE_MERGES)
 
 
 def q_bpe_encode(spark, sf_dir):
-    """BPE-encode the corpus under the fixed merge list — engine runs the
-    DEFAULT Arrow backend (memoized per-partition word cache); the oracle
-    re-derives the encoding through the pure replace-chain SQL, so the row
-    doubles as backend-equivalence evidence (column twin pytest-equal)."""
+    """BPE-encode the corpus under the fixed merge list — the engine runs
+    its one encoder (a mapInPandas stage with a memoized per-partition word
+    cache); the oracle re-derives the encoding through the pure
+    replace-chain SQL, an independent implementation."""
     from mrmr_spark.operators.tokenizer import bpe_encode
 
     d = _t(spark, sf_dir, "documents", spread=True)
@@ -4439,7 +4443,7 @@ FROM off
 def q_token_loss_mask(spark, sf_dir):
     """Per-TOKEN loss masks over the rendered conversations (the SFT
     pipeline's last step): render -> turn spans -> BPE with offset mapping
-    -> span containment. Engine runs the DEFAULT Arrow offset backend; the
+    -> span containment. The engine runs the mapInPandas offset kernel; the
     oracle re-derives the whole chain (render string_agg, word offsets via
     a window cumsum, the replace-chain encode, within-word symbol offsets,
     containment EXISTS) in DuckDB — so one row checks rendering, span math,

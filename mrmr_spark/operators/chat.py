@@ -176,7 +176,6 @@ def token_loss_mask(
     assistant_role: str = ASSISTANT_ROLE,
     split: str = " ",
     end_of_word: str | None = None,
-    backend: str = "arrow",
 ) -> DataFrame:
     """The end of the SFT pipeline: per-TOKEN loss masks over the rendered
     conversation — ``(conv_col, tok_idx, token, tok_start, tok_end,
@@ -186,7 +185,7 @@ def token_loss_mask(
     and packs through ``pack_documents``/``explode_chunks`` like any other
     per-token column).
 
-    Masking rule (deterministic, both engines + the SQL oracle share it):
+    Masking rule (deterministic; the SQL oracle shares it):
 
     - a SURFACE token (``tok_start < tok_end``) is loss iff its character
       span lies ENTIRELY inside one assistant turn's text span — the
@@ -198,8 +197,8 @@ def token_loss_mask(
       it ends a word strictly inside assistant text.
 
     Cost shape: the render is one conversation-keyed exchange, the spans
-    window shares that key, tokenization is per-rendered-row (Arrow default
-    / zero-Python column twin via ``tokenizer.token_offsets``), and the
+    window shares that key, tokenization is per-rendered-row (one
+    mapInPandas stage, ``tokenizer.token_offsets``), and the
     spans↔tokens join is conv-keyed on two frames already hashed on the
     conversation. Nothing shuffles per token except the final explode's
     consumers.
@@ -213,7 +212,7 @@ def token_loss_mask(
     )
     toks = token_offsets(
         rendered, merges, text_col="__rendered", out_col="__toks",
-        split=split, end_of_word=eow, backend=backend,
+        split=split, end_of_word=eow,
     )
     spans = (
         turn_spans(

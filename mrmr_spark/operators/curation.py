@@ -1254,6 +1254,24 @@ def _dsir_grams(text_col: str, split: str, ns: tuple) -> Column:
     return arrays[0] if len(arrays) == 1 else F.concat(*arrays)
 
 
+def _dsir_space(ns, n_buckets, hash_fn, split) -> dict:
+    return {"ns": list(ns), "n_buckets": n_buckets, "hash_fn": hash_fn, "split": split}
+
+
+def _check_doc_counts(doc_counts: DataFrame, **expected) -> None:
+    """Reject a :func:`dsir_doc_bucket_counts` frame built in another
+    hashed feature space (bucket ids only compare inside one). Reads the
+    schema on the driver; runs no Spark job."""
+    got = doc_counts.schema["bucket"].metadata.get("dsir")
+    if got is None:
+        raise ValueError(
+            "doc_counts records no DSIR parameters; build it with dsir_doc_bucket_counts"
+        )
+    for k, v in expected.items():
+        if got[k] != v:
+            raise ValueError(f"doc_counts was built with {k}={got[k]!r}, not {v!r}")
+
+
 def dsir_doc_bucket_counts(
     corpus: DataFrame,
     text_col: str = "text",
@@ -1269,14 +1287,19 @@ def dsir_doc_bucket_counts(
     ``doc_counts=``) and the scorer (:func:`dsir_logweights` via
     ``doc_counts=``). Bounded at ``min(grams, n_buckets)`` rows per doc;
     persist it between the two consumers (caller's pin, the usual
-    contract) so the text is exploded and hashed exactly once."""
+    contract) so the text is exploded and hashed exactly once.
+
+    The ``bucket`` column's metadata records the feature space (``ns``,
+    ``n_buckets``, ``hash_fn``, ``split``); both consumers reject a frame
+    built in another one."""
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
     if not ns or any(n < 1 for n in ns):
         raise ValueError("ns must be a non-empty tuple of orders >= 1")
+    space = _dsir_space(ns, n_buckets, hash_fn, split)
     bucket = F.pmod(
         hash64(F.col("_g"), seed=1, hash_fn=hash_fn), F.lit(n_buckets)
-    ).alias("bucket")
+    ).alias("bucket", metadata={"dsir": space})
     return (
         corpus.select(id_col, F.explode(_dsir_grams(text_col, split, ns)).alias("_g"))
         .select(id_col, bucket)
@@ -1315,7 +1338,9 @@ def dsir_bucket_counts(
 
     ``doc_counts``: a precomputed :func:`dsir_doc_bucket_counts` frame for
     this reference — the model reduces from it (sum of exact int counts =
-    identical counts) instead of re-exploding/re-hashing the text.
+    identical counts) instead of re-exploding/re-hashing the text. It must
+    have been built with this call's ``ns``/``n_buckets``/``hash_fn``/
+    ``split`` (checked; ``ValueError`` names the field).
     """
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
@@ -1324,6 +1349,7 @@ def dsir_bucket_counts(
     if reference is None and doc_counts is None:
         raise ValueError("dsir_bucket_counts needs reference or doc_counts; both are None")
     if doc_counts is not None:
+        _check_doc_counts(doc_counts, **_dsir_space(ns, n_buckets, hash_fn, split))
         counts = doc_counts.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
     else:
         bucket = F.pmod(
@@ -1387,7 +1413,9 @@ def dsir_logweights(
     ``decimal_terms=True`` if bit-parity with the per-occurrence fold
     matters there. When the same pool also trains the raw model, one
     persisted doc_counts frame means the pool text is exploded and
-    hashed ONCE end to end instead of twice.
+    hashed ONCE end to end instead of twice. It must have been built with
+    the models' ``ns``/``n_buckets``/``hash_fn`` and this call's ``split``
+    (checked; ``ValueError`` names the field).
     """
     for k in ("n_buckets", "ns", "hash_fn"):
         if target_model[k] != raw_model[k]:
@@ -1400,6 +1428,7 @@ def dsir_logweights(
     ns = target_model["ns"]
     maybe_bc = F.broadcast if broadcast_model else (lambda d: d)
     if doc_counts is not None:
+        _check_doc_counts(doc_counts, **_dsir_space(ns, b, hash_fn, split))
         ex = doc_counts.select(id_col, "bucket", "cnt")
     else:
         ex = corpus.select(

@@ -19,7 +19,11 @@ Scale design (100 TB):
   map-side partial aggregation, and only the (small) per-document
   *drop-position arrays* are joined back — the rebuild is then a local
   Column expression over the original text, so the corpus itself is
-  read once and shuffled never.
+  read once and shuffled never. On a streaming frame the trained key set
+  is applied instead as one stateless Arrow stage (no join, no
+  aggregation). The line key is always the 128-bit fingerprint; the
+  gate's DuckDB oracle keys on the normalized line string itself, so
+  every gate run checks that no fingerprint collides.
 """
 
 from __future__ import annotations
@@ -55,7 +59,6 @@ def remove_common_lines(
     sep: str = "\n",
     normalize: bool = True,
     min_chars: int = 1,
-    key_backend: str = "hash128",
 ) -> DataFrame:
     """Drop every line whose (normalized) text occurs in ``>= max_df``
     distinct documents — the RefinedWeb/CCNet boilerplate-removal pass
@@ -72,11 +75,8 @@ def remove_common_lines(
     default ``min_chars=1`` blank lines never count, so document
     paragraph structure survives the pass.
 
-    ``key_backend``: ``"hash128"`` (default) shuffles a 128-bit
-    double-xxhash64 fingerprint of the normalized line — the 100 TB path;
-    line text is never a shuffle key. ``"string"`` shuffles the
-    normalized line itself — slower, but bit-exactly what an ANSI oracle
-    computes; the gate proves both backends agree.
+    Lines are keyed by a 128-bit double-xxhash64 fingerprint of the
+    normalized line, so line text is never a shuffle key.
     """
     keys = common_line_keys(
         docs,
@@ -86,7 +86,6 @@ def remove_common_lines(
         sep=sep,
         normalize=normalize,
         min_chars=min_chars,
-        key_backend=key_backend,
     )
     return remove_lines_by_keys(
         docs,
@@ -96,28 +95,26 @@ def remove_common_lines(
         sep=sep,
         normalize=normalize,
         min_chars=min_chars,
-        key_backend=key_backend,
     )
 
 
-def _line_keys(key_backend: str):
-    if key_backend == "hash128":
-        return [
-            F.xxhash64("_norm").alias("_k1"),
-            F.xxhash64("_norm", F.lit(_SEED2)).alias("_k2"),
-        ]
-    if key_backend == "string":
-        return [F.col("_norm").alias("_k1"), F.lit(0).alias("_k2")]
-    raise ValueError(f"Unknown key_backend: {key_backend!r}")
+def _line_key(norm: Column, which: int) -> Column:
+    """One half of the 128-bit line fingerprint of a normalized line."""
+    return F.xxhash64(norm) if which == 1 else F.xxhash64(norm, F.lit(_SEED2))
 
 
-def _pos_frame(docs, id_col, text_col, sep, normalize, min_chars, key_backend):
+def _pos_frame(docs, id_col, text_col, sep, normalize, min_chars):
     lines = split_lines(text_col, sep)
     pos = docs.select(
         id_col, F.posexplode(lines).alias("pos", "_line")
     ).withColumn("_norm", _norm_line(F.col("_line"), normalize))
     pos = pos.where(F.length("_norm") >= min_chars)
-    return pos.select(id_col, "pos", *_line_keys(key_backend))
+    return pos.select(
+        id_col,
+        "pos",
+        _line_key(F.col("_norm"), 1).alias("_k1"),
+        _line_key(F.col("_norm"), 2).alias("_k2"),
+    )
 
 
 def common_line_keys(
@@ -128,11 +125,10 @@ def common_line_keys(
     sep: str = "\n",
     normalize: bool = True,
     min_chars: int = 1,
-    key_backend: str = "hash128",
 ) -> DataFrame:
     """Phase 1 of boilerplate removal: the (small) frame of line keys
     occurring in ``>= max_df`` distinct documents — ``(_k1, _k2)`` rows,
-    the 128-bit fingerprint family under the default backend.
+    the two halves of the 128-bit line fingerprint.
 
     Train it on the full corpus or on a SAMPLE with a scaled ``max_df``
     (RefinedWeb computes its boilerplate set per-domain on a fraction of
@@ -141,9 +137,9 @@ def common_line_keys(
 
     Document frequency per line key: distinct (key, doc) then count —
     both shuffles key-partitioned with map-side partial agg; corpus text
-    never in a shuffle key (hash128).
+    never in a shuffle key.
     """
-    pos = _pos_frame(docs, id_col, text_col, sep, normalize, min_chars, key_backend)
+    pos = _pos_frame(docs, id_col, text_col, sep, normalize, min_chars)
     return (
         pos.select("_k1", "_k2", id_col)
         .distinct()
@@ -162,36 +158,30 @@ def remove_lines_by_keys(
     sep: str = "\n",
     normalize: bool = True,
     min_chars: int = 1,
-    key_backend: str = "hash128",
-    apply_backend: str = "join",
 ) -> DataFrame:
     """Phase 2 of boilerplate removal: drop every line whose key is in
     ``keys`` (a ``(_k1, _k2)`` frame from :func:`common_line_keys`) and
     rebuild each document. Same output contract as
-    :func:`remove_common_lines`.
+    :func:`remove_common_lines`; NULL text passes through with
+    ``n_removed_lines = 0``.
 
-    ``apply_backend``:
+    The plan follows the input:
 
-    - ``"join"`` (default): posexplode → leftsemi against ``keys`` →
-      per-doc drop-position arrays joined back — the unbounded batch
-      path (``keys`` may be any size; both joins broadcast the small
-      side under AQE).
-    - ``"broadcast_set"``: ``keys`` is collected ONCE into a driver set
-      and applied as a stateless Arrow ``mapInPandas`` stage — no
-      aggregation, no join, so it runs on STREAMING frames unchanged
-      (the batch backends are pytest-equal). Bounded by driver/executor
-      memory: ~16 bytes per key; guarded at 5M keys.
+    - batch ``docs``: posexplode → leftsemi against ``keys`` → per-doc
+      drop-position arrays joined back (``keys`` may be any size; both
+      joins broadcast the small side under AQE).
+    - streaming ``docs`` (which cannot run that join-back): ``keys`` is
+      collected ONCE into a driver set and applied as a stateless Arrow
+      ``mapInPandas`` stage — no aggregation, no join. Bounded by
+      driver/executor memory: ~16 bytes per key; guarded at 5M keys.
     """
-    _line_keys(key_backend)  # validate backend
-    lines = split_lines(text_col, sep)
-    if apply_backend == "broadcast_set":
+    if docs.isStreaming:
         return _remove_lines_broadcast_set(
-            docs, keys, text_col, sep, normalize, min_chars, key_backend
+            docs, keys, text_col, sep, normalize, min_chars
         )
-    if apply_backend != "join":
-        raise ValueError(f"Unknown apply_backend: {apply_backend!r}")
 
-    pos = _pos_frame(docs, id_col, text_col, sep, normalize, min_chars, key_backend)
+    lines = split_lines(text_col, sep)
+    pos = _pos_frame(docs, id_col, text_col, sep, normalize, min_chars)
     drop_pos = (
         pos.join(keys, ["_k1", "_k2"], "leftsemi")
         .groupBy(id_col)
@@ -223,20 +213,17 @@ def remove_lines_by_keys(
 _MAX_BROADCAST_KEYS = 5_000_000
 
 
-def _remove_lines_broadcast_set(
-    docs, keys, text_col, sep, normalize, min_chars, key_backend
-):
+def _remove_lines_broadcast_set(docs, keys, text_col, sep, normalize, min_chars):
     # The per-line keys are computed by the SAME Spark expressions the
-    # join backend and common_line_keys use (never re-implemented in
+    # join path and common_line_keys use (never re-implemented in
     # Python — Spark's xxhash64 seeding is JVM-specific), carried into
-    # the Arrow stage as an array column; the Python side does ONLY set
-    # membership on the precomputed keys. min_chars-exempt lines carry a
-    # NULL key, which can never be in the set.
+    # the Arrow stage as array columns; the Python side does ONLY set
+    # membership on the precomputed keys.
     rows = keys.select("_k1", "_k2").collect()
     if len(rows) > _MAX_BROADCAST_KEYS:
         raise ValueError(
             f"broadcast_set holds {len(rows)} keys > {_MAX_BROADCAST_KEYS}; "
-            "use apply_backend='join'"
+            "a streaming frame needs a smaller key set (train it with a higher max_df)"
         )
     key_set = {(r["_k1"], r["_k2"]) for r in rows}
     bc = docs.sparkSession.sparkContext.broadcast(key_set)
@@ -247,17 +234,7 @@ def _remove_lines_broadcast_set(
     # degrade to float64 in pandas and corrupt 64-bit hashes); the
     # min_chars exemption travels as a separate boolean mask array.
     def _k(which):
-        def inner(ln):
-            norm = _norm_line(ln, normalize)
-            if key_backend == "hash128":
-                return (
-                    F.xxhash64(norm)
-                    if which == 1
-                    else F.xxhash64(norm, F.lit(_SEED2))
-                )
-            return norm if which == 1 else F.lit(0).cast("long")
-
-        return inner
+        return lambda ln: _line_key(_norm_line(ln, normalize), which)
 
     def _mask(ln):
         return F.length(_norm_line(ln, normalize)) >= min_chars
@@ -283,6 +260,10 @@ def _remove_lines_broadcast_set(
             for t, lk1, lk2, lm in zip(
                 pdf[text_col], pdf["_lk1"], pdf["_lk2"], pdf["_lmask"]
             ):
+                if t is None:
+                    kept_texts.append(None)
+                    removed.append(0)
+                    continue
                 kept, n_rm = [], 0
                 for ln, k1, k2, m in zip(t.split(sep), lk1, lk2, lm):
                     if m and (k1, k2) in ks:

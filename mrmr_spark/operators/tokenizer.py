@@ -19,23 +19,23 @@ Scale decomposition (the HF-tokenizers / SentencePiece shape):
    mass BPE would never merge first anyway) and the result records whether
    it truncated.
 3. :func:`bpe_pair_counts` — the same statistic the trainer maximizes, as a
-   distributed aggregation (symbols after ``merges`` applied → adjacent-pair
-   explode → sum of word counts). This is the fully-distributed alternative
+   distributed aggregation (symbols after ``merges`` applied → adjacent
+   pairs → sum of word counts). This is the fully-distributed alternative
    when even the word table must stay on the cluster: one agg job per merge,
    correct at any scale but paying per-iteration job latency — the bounded
    driver loop is the default for the same reason the reference bounds its
    own driver matrices.
-4. :func:`bpe_encode` — apply a trained merge list to the corpus. Default
-   ``backend="arrow"``: one mapInPandas stage, per-partition distinct-word
+4. :func:`bpe_encode` / :func:`token_offsets` — apply a trained merge list
+   to the corpus: one mapInPandas stage with per-partition distinct-word
    memoization (words repeat; each distinct word is encoded once per
-   partition). ``backend="column"`` is the pure-Column twin (bit-identical,
-   tested): each word's symbol list is rendered as a \\x1f-wrapped string
-   (``\\x1f s1 \\x1f\\x1f s2 \\x1f``) and every merge becomes one literal
-   ``replace`` — left-to-right non-overlapping, exactly the BPE merge rule —
-   so the whole encode is a zero-Python projection that ANSI SQL reproduces
-   verbatim (gate rows ``bpe_encode`` / ``bpe_pair_counts``). The column
-   backend embeds one Replace node per merge, so it is for bounded merge
-   lists (gate/oracle work); real 32k-merge vocabs take the Arrow path.
+   partition).
+
+Every encode — corpus, offsets and pair counts — runs the one Python word
+encoder :func:`_encode_word_py`. Its cost is ∝ merges that fire on the
+word, not the merge-list length, so it serves 32k-merge vocabularies and
+any symbol alphabet alike. The gate's DuckDB oracles re-derive the same
+segmentation independently as a ``replace()`` chain over a
+U+001F-wrapped symbol string.
 
 Merge-application semantics (all paths, trainer included): merges apply in
 RANK ORDER, each merging all its left-to-right non-overlapping occurrences
@@ -56,15 +56,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
-#: symbol separator for the column backend's wrapped-string representation.
-#: U+001F (unit separator) — must not occur inside any symbol; the Arrow
-#: backend is list-based and has no such constraint, which is one reason it
-#: is the production default.
-SEP = "\x1f"
-
 #: end-of-word marker appended as its own symbol (the separate-symbol BPE
 #: variant; Sennrich's original attaches it to the final character — both
-#: are standard, this one keeps the wrapped-string form one-symbol-per-char).
+#: are standard, this one keeps every initial symbol one character wide).
 END_OF_WORD = "</w>"
 
 DEFAULT_SPLIT = " "
@@ -98,68 +92,6 @@ def word_counts(
     if min_count > 1:
         counted = counted.where(F.col("count") >= min_count)
     return counted
-
-
-# ---------------------------------------------------------------------------
-# column-backend symbol algebra (shared by encode + pair counts + gate SQL)
-# ---------------------------------------------------------------------------
-
-
-def _wrapped_symbols(word: Column, end_of_word: str) -> Column:
-    """``\\x1f s1 \\x1f\\x1f s2 \\x1f ... \\x1f sN \\x1f`` over the word's
-    initial symbols (characters + the end-of-word marker): every symbol is
-    individually \\x1f-wrapped and adjacent symbols share a ``\\x1f\\x1f``
-    boundary, so a merge of pair (a, b) is literally
-    ``replace(s, '\\x1f a \\x1f\\x1f b \\x1f', '\\x1f ab \\x1f')`` — all
-    left-to-right non-overlapping occurrences, the BPE merge rule."""
-    syms = F.concat(F.split(word, ""), F.array(F.lit(end_of_word)))
-    return F.concat(F.lit(SEP), F.array_join(syms, SEP + SEP), F.lit(SEP))
-
-
-def _merge_chain(wrapped: Column, merges: list[tuple[str, str]]) -> Column:
-    e = wrapped
-    for a, b in merges:
-        e = F.replace(e, F.lit(SEP + a + SEP + SEP + b + SEP), F.lit(SEP + a + b + SEP))
-    return e
-
-
-def encode_word_expr(
-    word: Column, merges: list[tuple[str, str]], end_of_word: str = END_OF_WORD
-) -> Column:
-    """Pure-Column BPE encode of one word → ``array<string>`` of subword
-    symbols. One literal Replace node per merge — bounded merge lists only
-    (the Arrow backend is the 32k-merge path)."""
-    merged = _merge_chain(_wrapped_symbols(word, end_of_word), merges)
-    return F.split(F.btrim(merged, F.lit(SEP)), SEP + SEP)
-
-
-def bpe_pair_counts(
-    word_counts_df: DataFrame,
-    merges: list[tuple[str, str]] | tuple = (),
-    end_of_word: str = END_OF_WORD,
-) -> DataFrame:
-    """Corpus-weighted adjacent symbol-pair counts ``(sym_a, sym_b,
-    pair_count)`` after applying ``merges`` — the statistic whose argmax is
-    the next BPE merge. Runs on the word-frequency table (vocab-bounded),
-    one agg job: symbols via the column-backend merge chain, adjacent pairs
-    via two shifted slices zipped, counts summed with map-side combine."""
-    syms = encode_word_expr(F.col("word"), list(merges), end_of_word)
-    d = word_counts_df.select(F.col("count"), syms.alias("syms"))
-    n = F.size(F.col("syms"))
-    pairs = F.arrays_zip(
-        F.slice(F.col("syms"), 1, F.greatest(n - 1, F.lit(0))).alias("a"),
-        F.slice(F.col("syms"), 2, F.greatest(n - 1, F.lit(0))).alias("b"),
-    )
-    return (
-        d.select(F.col("count"), F.explode(pairs).alias("p"))
-        .select(
-            F.col("p.a").alias("sym_a"),
-            F.col("p.b").alias("sym_b"),
-            F.col("count"),
-        )
-        .groupBy("sym_a", "sym_b")
-        .agg(F.sum("count").alias("pair_count"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -312,6 +244,50 @@ def _encode_word_py(
         last = best
 
 
+def bpe_pair_counts(
+    word_counts_df: DataFrame,
+    merges: list[tuple[str, str]] | tuple = (),
+    end_of_word: str = END_OF_WORD,
+) -> DataFrame:
+    """Corpus-weighted adjacent symbol-pair counts ``(sym_a, sym_b,
+    pair_count)`` after applying ``merges`` — the statistic whose argmax is
+    the next BPE merge. Runs on the word-frequency table (vocab-bounded),
+    one agg job: one mapInPandas stage encodes each word and emits
+    ``(sym_a, sym_b, count)`` per adjacent pair, then the counts are summed
+    with map-side combine. NULL words contribute no pairs."""
+    merges = list(merges)
+    ranks = {p: i for i, p in enumerate(merges)}
+    schema = StructType(
+        [
+            StructField("sym_a", StringType()),
+            StructField("sym_b", StringType()),
+            StructField("count", LongType()),
+        ]
+    )
+
+    def _pairs(batches):
+        for pdf in batches:
+            sa, sb, cnt = [], [], []
+            for word, c in zip(pdf["word"], pdf["count"]):
+                if word is None:
+                    continue
+                syms = _encode_word_py(word, merges, ranks, end_of_word)
+                for a, b in zip(syms, syms[1:]):
+                    sa.append(a)
+                    sb.append(b)
+                    cnt.append(c)
+            yield pd.DataFrame(
+                {"sym_a": sa, "sym_b": sb, "count": pd.Series(cnt, dtype="int64")}
+            )
+
+    return (
+        word_counts_df.select("word", "count")
+        .mapInPandas(_pairs, schema=schema)
+        .groupBy("sym_a", "sym_b")
+        .agg(F.sum("count").alias("pair_count"))
+    )
+
+
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],
@@ -319,30 +295,18 @@ def bpe_encode(
     out_col: str = "bpe_tokens",
     split: str = DEFAULT_SPLIT,
     end_of_word: str = END_OF_WORD,
-    backend: str = "arrow",
 ) -> DataFrame:
     """Append ``out_col`` (``array<string>``): the document's BPE subword
     sequence — words tokenized by ``split``, each encoded under ``merges``
     in rank order, concatenated in document order. Empty tokens are skipped;
     NULL text encodes to an empty array.
 
-    ``backend="arrow"`` (default): one mapInPandas stage with per-partition
-    distinct-word memoization — each distinct word is encoded once per
-    partition, so cost tracks the partition's vocabulary, not its token
-    count. ``backend="column"``: the zero-Python replace-chain projection
-    (bit-identical, tested; one Replace node per merge — bounded merge
-    lists / the gate-oracle path).
+    ``split`` is a Python regular expression (``re.split``); compare
+    :func:`token_offsets`, which splits on a literal string. One
+    mapInPandas stage with per-partition distinct-word memoization — each
+    distinct word is encoded once per partition, so cost tracks the
+    partition's vocabulary, not its token count.
     """
-    if backend == "column":
-        words = F.filter(F.split(F.col(text_col), split), lambda w: w != F.lit(""))
-        enc = F.flatten(
-            F.transform(words, lambda w: encode_word_expr(w, merges, end_of_word))
-        )
-        enc = F.when(F.col(text_col).isNull(), F.array().cast("array<string>")).otherwise(enc)
-        return df.withColumn(out_col, enc)
-    if backend != "arrow":
-        raise ValueError(f"backend must be 'arrow' or 'column', got {backend!r}")
-
     merges = list(merges)
     ranks = {p: i for i, p in enumerate(merges)}
     splitter = re.compile(split)
@@ -390,81 +354,6 @@ def bpe_token_count(
 # ---------------------------------------------------------------------------
 
 
-def _surface_len_expr(sym: Column, end_of_word: str) -> Column:
-    """Surface character length of a subword symbol: the end-of-word marker
-    is a zero-width sentinel, so a symbol that absorbed it (``er</w>``)
-    counts only its real characters. Caveat (both backends AND the SQL
-    oracle share it, so they can never disagree): corpus text that itself
-    contains the literal marker string can end a merged symbol with marker
-    CHARACTERS and under-count — pick an ``end_of_word`` absent from the
-    corpus (it is a parameter everywhere) when that matters."""
-    return F.length(sym) - F.when(
-        F.endswith(sym, F.lit(end_of_word)), F.lit(len(end_of_word))
-    ).otherwise(F.lit(0))
-
-
-def _offsets_expr(
-    text: Column,
-    merges: list[tuple[str, str]],
-    split: str,
-    end_of_word: str,
-) -> Column:
-    """Pure-Column token offset mapping for one document — tokens in
-    document order, each with its [tok_start, tok_end) character span in
-    the ORIGINAL string. Two nested running-offset folds (words, then
-    symbols within each word), zero Python."""
-    step = F.lit(len(split))
-    words = F.split(F.coalesce(text, F.lit("")), re.escape(split), -1)
-    ws_t = "array<struct<word:string,start:bigint>>"
-    placed = F.aggregate(
-        words,
-        F.struct(
-            F.lit(0).cast("bigint").alias("off"),
-            F.array().cast(ws_t).alias("ws"),
-        ),
-        lambda acc, w: F.struct(
-            (acc["off"] + F.length(w) + step).cast("bigint").alias("off"),
-            F.concat(
-                acc["ws"],
-                F.array(F.struct(w.alias("word"), acc["off"].alias("start"))),
-            ).alias("ws"),
-        ),
-        lambda acc: acc["ws"],
-    )
-    tok_t = "array<struct<token:string,tok_start:bigint,tok_end:bigint>>"
-
-    def _word_tokens(ws):
-        syms = encode_word_expr(ws["word"], merges, end_of_word)
-        return F.aggregate(
-            syms,
-            F.struct(
-                ws["start"].cast("bigint").alias("off"),
-                F.array().cast(tok_t).alias("ts"),
-            ),
-            lambda a, s: F.struct(
-                (a["off"] + _surface_len_expr(s, end_of_word))
-                .cast("bigint")
-                .alias("off"),
-                F.concat(
-                    a["ts"],
-                    F.array(
-                        F.struct(
-                            s.alias("token"),
-                            a["off"].alias("tok_start"),
-                            (a["off"] + _surface_len_expr(s, end_of_word))
-                            .cast("bigint")
-                            .alias("tok_end"),
-                        )
-                    ),
-                ).alias("ts"),
-            ),
-            lambda a: a["ts"],
-        )
-
-    nonempty = F.filter(placed, lambda ws: ws["word"] != F.lit(""))
-    return F.flatten(F.transform(nonempty, _word_tokens))
-
-
 def token_offsets(
     df: DataFrame,
     merges: list[tuple[str, str]],
@@ -472,7 +361,6 @@ def token_offsets(
     out_col: str = "tokens",
     split: str = DEFAULT_SPLIT,
     end_of_word: str = END_OF_WORD,
-    backend: str = "arrow",
 ) -> DataFrame:
     """BPE encode with a character offset mapping — appends ``out_col``
     (``array<struct<token, tok_start, tok_end>>``): the document's subword
@@ -483,28 +371,21 @@ def token_offsets(
     span-level surgery after `duplicate_spans`/`contamination_spans`, or
     highlighting. The end-of-word marker is zero-width, so pure-marker
     tokens sit at their word boundary with ``tok_start == tok_end``.
+    Corpus text that itself contains the literal marker string can end a
+    merged symbol with marker CHARACTERS and under-count its span — pick an
+    ``end_of_word`` absent from the corpus when that matters.
 
-    ``split`` is a LITERAL separator string here (escaped into the split
-    regex): offsets are reconstructed as ``len(word) + len(split)`` running
-    sums, which a general regex cannot support. NULL text maps to an empty
-    token array; empty words (repeated separators) advance the offset but
-    emit no tokens, matching :func:`bpe_encode`.
+    ``split`` is a LITERAL separator string here (``str.split``), unlike
+    :func:`bpe_encode`'s regex: offsets are reconstructed as
+    ``len(word) + len(split)`` running sums, which a general regex cannot
+    support. NULL text maps to an empty token array; empty words (repeated
+    separators) advance the offset but emit no tokens, matching
+    :func:`bpe_encode`.
 
-    ``backend="arrow"`` (default): one mapInPandas stage, per-partition
-    distinct-word memoization (a word's relative offsets are position-free,
-    so the cache works exactly as in :func:`bpe_encode`).
-    ``backend="column"``: the zero-Python nested-fold projection —
-    bit-identical (tested) and ANSI-SQL-reproducible (gate row
-    ``token_loss_mask`` re-derives it in DuckDB); bounded merge lists only,
-    like the other column twins.
+    One mapInPandas stage with per-partition distinct-word memoization (a
+    word's relative offsets are position-free, so the cache works exactly
+    as in :func:`bpe_encode`).
     """
-    if backend == "column":
-        return df.withColumn(
-            out_col, _offsets_expr(F.col(text_col), list(merges), split, end_of_word)
-        )
-    if backend != "arrow":
-        raise ValueError(f"backend must be 'arrow' or 'column', got {backend!r}")
-
     merges = list(merges)
     ranks = {p: i for i, p in enumerate(merges)}
     step = len(split)

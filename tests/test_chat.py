@@ -258,15 +258,16 @@ def py_token_mask(rows, merges, header=DEFAULT_HEADER, footer=DEFAULT_FOOTER,
     return sorted(out)
 
 
-@pytest.mark.parametrize("backend", ["arrow", "column"])
-def test_token_loss_mask_matches_python_oracle(spark, convs, backend):
+@pytest.mark.parametrize("source", ["arrow", "column"])
+def test_token_loss_mask_matches_python_oracle(spark, frame_from, source):
     from mrmr_spark.operators.chat import token_loss_mask
 
-    got = sorted(
-        tuple(r) for r in token_loss_mask(convs, MASK_MERGES, backend=backend).collect()
-    )
+    df = frame_from(ROWS, "conv_id string, turn_idx int, role string, text string", source)
+    got = sorted(tuple(r) for r in token_loss_mask(df, MASK_MERGES).collect())
     assert got == py_token_mask(ROWS, MASK_MERGES)
     assert any(m for *_, m in got) and not all(m for *_, m in got)
+    with pytest.raises(TypeError, match="backend"):
+        token_loss_mask(df, MASK_MERGES, backend="column")
 
 
 def test_token_loss_mask_zero_width_marker_rule(spark):

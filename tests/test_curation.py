@@ -830,6 +830,42 @@ def test_dsir_doc_counts_path_identical(dsir_docs):
         assert pooled[did].log_weight == r.log_weight  # exact
 
 
+def test_dsir_doc_counts_parameter_mismatch(dsir_docs):
+    """A doc_counts frame records the hashed feature space it was built in
+    (surviving persist); a consumer in another space raises a ValueError
+    naming the field, and a frame not built by dsir_doc_bucket_counts is
+    refused."""
+    from mrmr_spark.operators.curation import (
+        dsir_bucket_counts,
+        dsir_doc_bucket_counts,
+        dsir_logweights,
+    )
+
+    docs, target, _, _ = dsir_docs
+    dc = dsir_doc_bucket_counts(docs, ns=(1, 2), n_buckets=64, hash_fn="md5_60").persist()
+    base = {"ns": (1, 2), "n_buckets": 64, "hash_fn": "md5_60"}
+    try:
+        for field, other in (
+            ("n_buckets", 128), ("ns", (1,)), ("hash_fn", "xxhash64"), ("split", "\\s+"),
+        ):
+            with pytest.raises(ValueError, match=field):
+                dsir_bucket_counts(None, doc_counts=dc, **{**base, field: other})
+        tm = dsir_bucket_counts(target, **base)
+        rm = dsir_bucket_counts(None, doc_counts=dc, **base)
+        for field, other in (("n_buckets", 128), ("ns", (1,)), ("hash_fn", "xxhash64")):
+            with pytest.raises(ValueError, match=field):
+                dsir_logweights(
+                    docs, {**tm, field: other}, {**rm, field: other}, doc_counts=dc
+                )
+        with pytest.raises(ValueError, match="split"):
+            dsir_logweights(docs, tm, rm, split="\\s+", doc_counts=dc)
+        bare = dc.select("doc_id", (F.col("bucket") + 0).alias("bucket"), "cnt")
+        with pytest.raises(ValueError, match="dsir_doc_bucket_counts"):
+            dsir_logweights(docs, tm, rm, doc_counts=bare)
+    finally:
+        dc.unpersist()
+
+
 def test_dsir_prefers_target_like_docs(dsir_docs):
     from mrmr_spark.operators.curation import dsir_bucket_counts, dsir_logweights
 

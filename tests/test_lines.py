@@ -75,16 +75,6 @@ def test_remove_common_lines_matches_python_oracle(lined_docs):
     assert any(v[1] == 0 for v in exp.values()), "fixture must keep clean docs"
 
 
-def test_remove_common_lines_backends_identical(lined_docs):
-    df, _ = lined_docs
-    a = remove_common_lines(df, max_df=10, key_backend="hash128")
-    b = remove_common_lines(df, max_df=10, key_backend="string")
-    pd.testing.assert_frame_equal(
-        a.toPandas().sort_values("doc_id").reset_index(drop=True),
-        b.toPandas().sort_values("doc_id").reset_index(drop=True),
-    )
-
-
 def test_remove_common_lines_blank_lines_exempt(spark):
     # Blank lines appear in every doc but min_chars=1 exempts them —
     # paragraph structure survives even at max_df=2.
@@ -105,8 +95,17 @@ def test_remove_common_lines_all_boilerplate_doc(spark):
 
 
 def test_remove_common_lines_rejects_bad_backend(lined_docs):
-    with pytest.raises(ValueError, match="key_backend"):
-        remove_common_lines(lined_docs[0], key_backend="nope")
+    from mrmr_spark.operators.lines import common_line_keys, remove_lines_by_keys
+
+    df, _ = lined_docs
+    with pytest.raises(TypeError, match="key_backend"):
+        remove_common_lines(df, key_backend="string")
+    with pytest.raises(TypeError, match="key_backend"):
+        common_line_keys(df, key_backend="string")
+    keys = common_line_keys(df)
+    for kw in ({"key_backend": "string"}, {"apply_backend": "broadcast_set"}):
+        with pytest.raises(TypeError, match=next(iter(kw))):
+            remove_lines_by_keys(df, keys, **kw)
 
 
 def test_remove_common_lines_never_shuffles_text(lined_docs):
@@ -469,20 +468,36 @@ def test_two_phase_equals_one_shot(lined_docs):
     pd.testing.assert_frame_equal(two, one)
 
 
-@pytest.mark.parametrize("key_backend", ["hash128", "string"])
-def test_broadcast_set_backend_equals_join(lined_docs, key_backend):
+def _file_stream(spark, df, path):
+    df.coalesce(2).write.parquet(path)
+    return spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(path)
+
+
+def _run_to_table(sdf, name):
+    q = sdf.writeStream.format("memory").queryName(name).outputMode("append").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return sdf.sparkSession.table(name).toPandas().sort_values("doc_id").reset_index(drop=True)
+
+
+def test_broadcast_set_backend_equals_join(spark, tmp_path, lined_docs):
+    """A streaming frame takes the broadcast-set path, a batch frame the
+    join; both drop the same lines, here under non-default normalize and
+    min_chars (case-sensitive keys, short lines exempt)."""
     from mrmr_spark.operators.lines import common_line_keys, remove_lines_by_keys
 
     df, _ = lined_docs
-    keys = common_line_keys(df, max_df=10, key_backend=key_backend)
-    a = remove_lines_by_keys(df, keys, key_backend=key_backend).toPandas()
-    b = remove_lines_by_keys(
-        df, keys, key_backend=key_backend, apply_backend="broadcast_set"
-    ).toPandas()
+    opts = {"normalize": False, "min_chars": 3}
+    keys = common_line_keys(df, max_df=10, **opts)
+    src = _file_stream(spark, df, str(tmp_path / "eqstream"))
+    got = _run_to_table(remove_lines_by_keys(src, keys, **opts), "eqstream")
+    batch = remove_lines_by_keys(df, keys, **opts).toPandas()
     pd.testing.assert_frame_equal(
-        a.sort_values("doc_id").reset_index(drop=True),
-        b.sort_values("doc_id").reset_index(drop=True),
+        got, batch.sort_values("doc_id").reset_index(drop=True)
     )
+    assert (got["n_removed_lines"] > 0).any()
 
 
 def test_sample_trained_keys_apply_to_full_corpus(lined_docs):
@@ -502,37 +517,32 @@ def test_sample_trained_keys_apply_to_full_corpus(lined_docs):
         assert got[i] == (1 if i % 2 == 0 else 0)
 
 
-def test_broadcast_set_size_guard(lined_docs, monkeypatch):
+def test_broadcast_set_size_guard(spark, tmp_path, lined_docs, monkeypatch):
+    """The key-set cap fires while the streaming plan is built, before any
+    query starts."""
     import mrmr_spark.operators.lines as L
 
     df, _ = lined_docs
     keys = L.common_line_keys(df, max_df=10)
+    src = _file_stream(spark, df, str(tmp_path / "guardstream"))
     monkeypatch.setattr(L, "_MAX_BROADCAST_KEYS", 1)
     with pytest.raises(ValueError, match="broadcast_set holds"):
-        L.remove_lines_by_keys(df, keys, apply_backend="broadcast_set")
-    with pytest.raises(ValueError, match="apply_backend"):
-        L.remove_lines_by_keys(df, keys, apply_backend="nope")
+        L.remove_lines_by_keys(src, keys)
+    L.remove_lines_by_keys(df, keys)  # the batch join has no cap
 
 
 def test_remove_lines_by_keys_runs_on_streams(spark, tmp_path, lined_docs):
     """The streaming boilerplate pass: keys trained in batch, applied to a
-    file stream via the stateless broadcast_set backend."""
+    file stream via the stateless broadcast_set path. A NULL text passes
+    through with zero removed lines, as in the batch join."""
     from mrmr_spark.operators.lines import common_line_keys, remove_lines_by_keys
 
     df, _ = lined_docs
+    df = df.unionByName(spark.createDataFrame([(1000, None)], df.schema))
     keys = common_line_keys(df, max_df=10)
-    d = str(tmp_path / "linestream")
-    df.coalesce(2).write.parquet(d)
-    src = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(d)
-    q = (
-        remove_lines_by_keys(src, keys, apply_backend="broadcast_set")
-        .writeStream.format("memory").queryName("boilstream")
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table("boilstream").toPandas().sort_values("doc_id").reset_index(drop=True)
+    src = _file_stream(spark, df, str(tmp_path / "linestream"))
+    out = _run_to_table(remove_lines_by_keys(src, keys), "boilstream")
     batch = remove_common_lines(df, max_df=10).toPandas().sort_values("doc_id").reset_index(drop=True)
     pd.testing.assert_frame_equal(out, batch)
+    null_row = out.loc[out["doc_id"] == 1000].iloc[0]
+    assert null_row["text"] is None and null_row["n_removed_lines"] == 0

@@ -395,7 +395,7 @@ def test_round5_stateless_ops_run_on_streams(spark, doc_stream_dir):
 
 
 def test_tokenizer_embedding_stateless_on_streams(spark, doc_stream_dir):
-    """bpe_encode (arrow mapInPandas, no state) and the hashed embedding's
+    """bpe_encode (one mapInPandas stage, no state) and the hashed embedding's
     Arrow kernel (zero-shuffle projection) run on a streaming frame
     unchanged and replay-match the batch result — the live-admission form
     for token budgeting / vectorization of an incoming corpus feed."""

@@ -1,10 +1,11 @@
-"""BPE tokenizer (train + encode, both backends) and the feature-hashing
+"""BPE tokenizer (train, encode, offsets, pair counts) and the feature-hashing
 embedding kernel (both hash families: poly against a Python oracle,
 xxhash64 against Spark's own hash expressions), plus the train→encode
 segmentation-reproduction invariant and a hypothesis sweep on
 adversarial corpora."""
 
 import math
+import random
 import re
 from collections import Counter
 
@@ -22,6 +23,7 @@ from mrmr_spark.operators.embedding import (
 )
 from mrmr_spark.operators.tokenizer import (
     END_OF_WORD,
+    _encode_word_py,
     bpe_encode,
     bpe_pair_counts,
     bpe_token_count,
@@ -45,6 +47,11 @@ DOCS = [
     (4, "a  a the"),
     (5, "faster theme park the"),
 ]
+
+
+# DOCS plus a word carrying U+001F (unit separator), a character any
+# symbol-wrapping encoder must not treat as structure
+DOCS_US = DOCS + [(6, "a\x1fb the\x1f fast")]
 
 
 @pytest.fixture(scope="module")
@@ -140,14 +147,16 @@ def test_bpe_train_validation(spark, docs):
 
 
 # ---------------------------------------------------------------------------
-# encode: backends vs the naive oracle; training-segmentation reproduction
+# encode vs the naive oracle; training-segmentation reproduction
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("backend", ["arrow", "column"])
-def test_bpe_encode_matches_naive(spark, docs, backend):
+@pytest.mark.parametrize("source", ["arrow", "column"])
+def test_bpe_encode_matches_naive(spark, docs, frame_from, source):
     model = bpe_train(word_counts(docs), num_merges=8)
-    rows = bpe_encode(docs, model["merges"], backend=backend).orderBy("doc_id").collect()
+    df = frame_from(DOCS_US, "doc_id long, text string", source)
+    rows = bpe_encode(df, model["merges"]).orderBy("doc_id").collect()
+    assert len(rows) == len(DOCS_US)
     for r in rows:
         exp = []
         for w in (r.text or "").split(" "):
@@ -183,8 +192,10 @@ def test_bpe_token_count(spark, docs):
 
 
 def test_bpe_encode_validation(spark, docs):
-    with pytest.raises(ValueError, match="backend"):
-        bpe_encode(docs, [], backend="nope")
+    with pytest.raises(TypeError, match="backend"):
+        bpe_encode(docs, [], backend="column")
+    with pytest.raises(TypeError, match="backend"):
+        bpe_token_count(docs, [], backend="column")
 
 
 def test_bpe_pair_counts_matches_python(spark, docs):
@@ -202,6 +213,61 @@ def test_bpe_pair_counts_matches_python(spark, docs):
     assert got == dict(exp)
 
 
+def _pair_oracle(word_counts_rows, merges):
+    ranks = {p: i for i, p in enumerate(merges)}
+    exp = Counter()
+    for w, c in word_counts_rows:
+        syms = _encode_word_py(w, merges, ranks, END_OF_WORD)
+        for p in zip(syms, syms[1:]):
+            exp[p] += c
+    return dict(exp)
+
+
+def test_bpe_pair_counts_unit_separator_word(spark):
+    """A word containing U+001F keeps that character as its own symbol."""
+    rows = [("a\x1fb", 3), ("ab", 2), ("\x1f", 1), ("the", 5)]
+    wc = spark.createDataFrame(rows, "word string, count bigint")
+    merges = [("a", "b"), ("t", "h"), ("\x1f", "b")]
+    got = {
+        (r.sym_a, r.sym_b): r.pair_count
+        for r in bpe_pair_counts(wc, merges).collect()
+    }
+    exp = _pair_oracle(rows, merges)
+    assert ("a", "\x1fb") in exp
+    assert got == exp
+
+
+def test_bpe_long_merge_list(spark):
+    """A 600-merge list trained on a synthetic vocabulary: pair counts and
+    the offset encode both run and match the Python oracles."""
+    from mrmr_spark.operators.tokenizer import token_offsets
+
+    rng = random.Random(5)
+    letters = "abcdefghijklmnop"
+    words = {
+        "".join(rng.choice(letters) for _ in range(rng.randint(3, 9)))
+        for _ in range(1500)
+    }
+    rows = [(w, 1 + rng.randrange(50)) for w in sorted(words)]
+    wc = spark.createDataFrame(rows, "word string, count bigint")
+    merges = bpe_train(wc, num_merges=600)["merges"]
+    assert len(merges) == 600
+
+    got = {
+        (r.sym_a, r.sym_b): r.pair_count
+        for r in bpe_pair_counts(wc, merges).collect()
+    }
+    assert got == _pair_oracle(rows, merges)
+
+    texts = [(i, " ".join(w for w, _ in rows[i::40])) for i in range(40)]
+    df = spark.createDataFrame(texts, "doc_id long, text string")
+    offs = {
+        r.doc_id: [tuple(t) for t in r.tokens]
+        for r in token_offsets(df, merges).collect()
+    }
+    assert offs == {i: py_token_offsets(t, merges) for i, t in texts}
+
+
 WORDS = ["a", "b", "ab", "aab", "the", "them", "ba", "aa", "x"]
 
 
@@ -217,17 +283,14 @@ WORDS = ["a", "b", "ab", "aab", "the", "them", "ba", "aa", "x"]
 def test_bpe_property_train_and_encode(spark, texts, num_merges):
     """Adversarial small-alphabet corpora (heavy pair collisions, words that
     are prefixes of each other): trainer == recount-from-scratch oracle and
-    both encode backends == the naive sequential oracle; round-trip: tokens
+    the encoder == the naive sequential oracle; round-trip: tokens
     concatenate back to word + marker."""
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
     model = bpe_train(word_counts(df), num_merges=num_merges)
     exp_merges, _ = naive_train(texts, num_merges)
     assert model["merges"] == exp_merges
 
-    ar = bpe_encode(df, model["merges"], backend="arrow").orderBy("doc_id").collect()
-    co = bpe_encode(df, model["merges"], backend="column").orderBy("doc_id").collect()
-    for ra, rc in zip(ar, co):
-        assert ra.bpe_tokens == rc.bpe_tokens
+    for ra in bpe_encode(df, model["merges"]).orderBy("doc_id").collect():
         exp = []
         for w in (ra.text or "").split(" "):
             if w:
@@ -430,15 +493,16 @@ def py_token_offsets(text, merges, split=" ", eow=END_OF_WORD):
     return toks
 
 
-@pytest.mark.parametrize("backend", ["arrow", "column"])
-def test_token_offsets_matches_python(spark, docs, backend):
+@pytest.mark.parametrize("source", ["arrow", "column"])
+def test_token_offsets_matches_python(spark, frame_from, source):
     from mrmr_spark.operators.tokenizer import token_offsets
 
+    df = frame_from(DOCS_US, "doc_id long, text string", source)
     got = {
         r.doc_id: [tuple(t) for t in r.tokens]
-        for r in token_offsets(docs, OFF_MERGES, backend=backend).collect()
+        for r in token_offsets(df, OFF_MERGES).collect()
     }
-    assert got == {i: py_token_offsets(t, OFF_MERGES) for i, t in DOCS}
+    assert got == {i: py_token_offsets(t, OFF_MERGES) for i, t in DOCS_US}
 
 
 def test_token_offsets_stream_equals_bpe_encode(spark, docs):
@@ -468,7 +532,7 @@ def test_token_offsets_surface_invariant_distributed(spark):
         F.substring(t["token"], 1, F.length(t["token"]) - len(END_OF_WORD)),
     ).otherwise(t["token"])
     bad = (
-        token_offsets(tr, OFF_MERGES, backend="arrow")
+        token_offsets(tr, OFF_MERGES)
         .select("text", F.explode("tokens").alias("t"))
         .where(
             F.substring(
@@ -486,5 +550,5 @@ def test_token_offsets_surface_invariant_distributed(spark):
 def test_token_offsets_validation(spark, docs):
     from mrmr_spark.operators.tokenizer import token_offsets
 
-    with pytest.raises(ValueError, match="backend"):
-        token_offsets(docs, OFF_MERGES, backend="nope")
+    with pytest.raises(TypeError, match="backend"):
+        token_offsets(docs, OFF_MERGES, backend="column")

@@ -189,15 +189,8 @@ def main():
           "hashed model frames -> one per-doc hash aggregate; the only "
           "non-broadcast exchanges are the model count aggs (vocab-bounded) "
           "and the per-doc agg")
-    audit("common_lines (boilerplate-line removal, hash128 production backend)",
-          __import__("mrmr_spark.operators.lines", fromlist=["remove_common_lines"])
-          .remove_common_lines(
-              spark.read.parquet(f"{SF}/documents.parquet").select(
-                  "doc_id",
-                  F.replace(F.col("text"), F.lit(" the "), F.lit("\n")).alias("text"),
-              ),
-              max_df=3,
-          ),
+    audit("common_lines (boilerplate-line removal, 128-bit line key)",
+          gate.QUERIES["common_lines"](spark, SF),
           "corpus text read once, NEVER shuffled: the exploded frame carries "
           "(doc_id, pos, 128-bit line fingerprint) only; line-DF = distinct + "
           "count, both key-partitioned with map-side combine; the frequent set "
@@ -323,11 +316,16 @@ def main():
           "explode -> partial+final hash aggregate (map-side combine): the "
           "shuffle carries distinct-word x partition rows, never token "
           "occurrences; output is vocab-bounded")
-    audit("bpe_encode (trained-merge subword encoding, Arrow default)",
+    audit("bpe_encode (trained-merge subword encoding)",
           gate.QUERIES["bpe_encode"](spark, SF),
           "ONE mapInPandas stage with per-partition distinct-word "
-          "memoization; zero exchanges — embarrassingly parallel; the "
-          "column twin is a zero-Python replace-chain projection")
+          "memoization; zero exchanges — embarrassingly parallel")
+    audit("bpe_pair_counts (distributed BPE pair statistic)",
+          gate.QUERIES["bpe_pair_counts"](spark, SF),
+          "word_counts' aggregate, then ONE mapInPandas stage emitting "
+          "(sym_a, sym_b, count) per adjacent pair, then the map-side-"
+          "combined pair-sum aggregate — its exchange is the only one the "
+          "operator adds; output is bounded by distinct symbol pairs")
     audit("hashed_embedding (feature-hashing text embedding)",
           gate.QUERIES["hashed_embedding"](spark, SF),
           "projection: zero exchanges, ONE ArrowEvalPython kernel that "
@@ -343,7 +341,7 @@ def main():
           "template-constant lengths as pure column arithmetic + ONE "
           "running-offset window over the conversation key — the lag/"
           "rolling partitioning, no rendered text anywhere in the plan")
-    audit("token_loss_mask (per-token SFT loss masks, Arrow default)",
+    audit("token_loss_mask (per-token SFT loss masks)",
           gate.QUERIES["token_loss_mask"](spark, SF),
           "render exchange (conv-keyed) -> ONE mapInPandas offset stage -> "
           "conv-keyed join with the spans aggregate (same key, AQE-"
