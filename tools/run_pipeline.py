@@ -7,6 +7,7 @@ Cluster usage (the production shape the engine targets):
         --conf spark.sql.adaptive.enabled=true \\
         --conf spark.sql.adaptive.skewJoin.enabled=true \\
         --conf spark.sql.codegen.maxFields=2000 \\
+        --conf spark.sql.codegen.cache.maxEntries=2000 \\
         tools/run_pipeline.py --input <iceberg-or-parquet path> \\
         --checkpoint-dir /lake/checkpoints/run1 --k 10
 
