@@ -58,26 +58,6 @@ def _turn_role(role_col: str) -> Column:
     return F.coalesce(F.col(role_col), F.lit(""))
 
 
-def render_turns_py(
-    turns: list[tuple],
-    header: str = DEFAULT_HEADER,
-    footer: str = DEFAULT_FOOTER,
-    bos: str = "",
-) -> str:
-    """Driver/executor-side Python twin of :func:`render_conversations`'s
-    per-conversation string — used by the streaming renderer; MUST stay
-    byte-identical to the Column version (replay-equality tested).
-    ``turns`` is [(order_key, role, text), ...] in any order."""
-    pre, post, has_role = _split_template(header)
-    out = [bos]
-    for _, role, text in sorted(turns, key=lambda t: t[0]):
-        out.append(pre)
-        if has_role:
-            out.append((role or "") + post)
-        out.append((text or "") + footer)
-    return "".join(out)
-
-
 def render_conversations(
     df: DataFrame,
     conv_col: str = "conv_id",

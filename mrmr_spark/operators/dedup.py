@@ -37,6 +37,16 @@ def hash64(col: Column | str, seed: int | None = None, hash_fn: str = "xxhash64"
     raise ValueError(f"Unknown hash_fn: {hash_fn!r}")
 
 
+def content_fingerprint(text_col: str = "text") -> tuple[Column, Column]:
+    """The 128-bit content key of normalized text (lowercased, trimmed):
+    two independent xxhash64 columns. Two 64-bit hashes put the
+    birthday-bound collision probability at ~n²/2¹²⁹ (≈1e-19 at 10¹⁰ docs).
+    Shared by :func:`exact_dedup`, :func:`dedup_against` and the streaming
+    dedup, so batch and stream agree on which documents are equal."""
+    norm = F.lower(F.trim(F.col(text_col)))
+    return F.xxhash64(norm), F.xxhash64(norm, F.lit(0x9E3779B9))
+
+
 def char_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 5) -> DataFrame:
     """Distinct character n-gram shingles per document (JVM codegen)."""
     return (
@@ -58,14 +68,11 @@ def char_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Canonical id + group size per document by normalized-text equality.
 
-    The shuffle key is a 128-bit fingerprint (two independent xxhash64 of
-    the normalized text), NOT the text itself — at 100 TB the document body
-    must never be a shuffle key. Two 64-bit hashes put the birthday-bound
-    collision probability at ~n²/2¹²⁹ (≈1e-19 at 10¹⁰ docs)."""
+    The shuffle key is the 128-bit :func:`content_fingerprint`, NOT the
+    text itself — at 100 TB the document body must never be a shuffle key."""
     from pyspark.sql.window import Window
 
-    norm = F.lower(F.trim(F.col(text_col)))
-    w = Window.partitionBy(F.xxhash64(norm), F.xxhash64(norm, F.lit(0x9E3779B9)))
+    w = Window.partitionBy(*content_fingerprint(text_col))
     return df.select(
         id_col,
         F.min(id_col).over(w).alias("canonical_id"),
@@ -682,8 +689,8 @@ def dedup_against(
     duplicates are a separate concern — compose with
     :func:`exact_dedup` / :func:`dedup_documents` for those.
 
-    - ``mode='exact'``: normalized-text equality via the same 128-bit
-      double-xxhash64 fingerprint as :func:`exact_dedup` — the
+    - ``mode='exact'``: normalized-text equality via the
+      :func:`content_fingerprint` that :func:`exact_dedup` keys on — the
       fingerprints (16 bytes/doc, never the text) are the only thing
       shuffled; the reference side is a distinct fingerprint frame,
       broadcastable when a bounded snapshot is checked against it.
@@ -692,8 +699,7 @@ def dedup_against(
       reference doc estimates Jaccard >= ``min_jaccard``.
     """
     if mode == "exact":
-        norm = F.lower(F.trim(F.col(text_col)))
-        f1, f2 = F.xxhash64(norm), F.xxhash64(norm, F.lit(0x9E3779B9))
+        f1, f2 = content_fingerprint(text_col)
         ref_fps = reference.select(
             f1.alias("_f1"), f2.alias("_f2")
         ).distinct()

@@ -6,10 +6,10 @@ to Structured Streaming ingest — the shape a 100 TB training-data pipeline
 actually runs: documents arrive continuously and must be deduplicated
 against everything already admitted, with bounded state.
 
-Design: identical content key to the batch ``exact_dedup`` — a 128-bit
-fingerprint (two independent xxhash64 of the normalized text), never the
-document body, as the state/shuffle key. Collision probability ~n²/2¹²⁹
-(≈1e-19 at 10¹⁰ docs). Two state regimes:
+Design: identical content key to the batch ``exact_dedup`` — the 128-bit
+``content_fingerprint`` (two independent xxhash64 of the normalized text),
+never the document body, as the state/shuffle key. Collision probability
+~n²/2¹²⁹ (≈1e-19 at 10¹⁰ docs). Two state regimes:
 
 - ``watermark`` given (production): ``dropDuplicatesWithinWatermark`` —
   state per fingerprint is evicted once the event-time watermark passes,
@@ -24,18 +24,17 @@ document body, as the state/shuffle key. Collision probability ~n²/2¹²⁹
 First-arrival semantics: the first row seen for a fingerprint is emitted,
 later duplicates are dropped — the streaming twin of keeping the min-id
 canonical doc per batch dedup group (order of arrival replaces order of
-id). Stateless text operators (token stats, quality, language-ID,
-winnow fingerprints) need no twin at all: they are per-row Column
-expressions and run on a streaming DataFrame unchanged (tested).
+id). Stateless text operators need no twin at all: token stats, quality
+and language-ID are per-row Column expressions and winnow fingerprints an
+Arrow kernel, and all of them run on a streaming DataFrame unchanged
+(tested).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-#: second-hash seed, same constant as operators/dedup.exact_dedup
-_FP_SEED = 0x9E3779B9
+from mrmr_spark.operators.dedup import content_fingerprint
 
 
 def with_content_fingerprint(
@@ -44,10 +43,8 @@ def with_content_fingerprint(
     """Append the 128-bit content fingerprint as two bigint columns
     ``{prefix}1``/``{prefix}2`` (normalized text: lowercased, trimmed —
     the batch exact_dedup key). Works on batch and streaming frames."""
-    norm = F.lower(F.trim(F.col(text_col)))
-    return df.withColumn(f"{prefix}1", F.xxhash64(norm)).withColumn(
-        f"{prefix}2", F.xxhash64(norm, F.lit(_FP_SEED))
-    )
+    f1, f2 = content_fingerprint(text_col)
+    return df.withColumn(f"{prefix}1", f1).withColumn(f"{prefix}2", f2)
 
 
 def streaming_exact_dedup(

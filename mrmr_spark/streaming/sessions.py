@@ -1,41 +1,24 @@
-"""Structured-Streaming surface.
+"""Structured-Streaming session rollups.
 
 The reference is a pure batch library — it has **no streaming surface at
 all** (SURVEY.md §2.I), and the engine's contract is batch feature
-engineering. This module gives the transcript data model a streaming
-ingest path with the SAME session semantics as the batch ``sessionize``
-operator, at two levels:
+engineering. ``streaming_sessionize`` gives the transcript data model a
+streaming ingest path with the SAME session boundaries as the batch
+``sessionize`` operator: per-closed-session rollups via Spark's built-in
+``session_window`` + watermark (declarative, no custom state). Per-turn
+session ids and features stay batch operators (``sessionize``,
+``fe.build_features``).
 
-- ``streaming_sessionize``: per-closed-session rollups via Spark's
-  built-in ``session_window`` + watermark (declarative, no custom state).
-- ``streaming_turn_sessionize``: per-TURN session ids via a custom
-  stateful operator (``applyInPandasWithState``) — the streaming twin of
-  the batch ``sessionize`` column: each arriving turn is tagged with the
-  0-based session id and the gap to the previous turn, with per-conv
-  state (last ts, current session id) carried across micro-batches.
-  For in-order streams the output row set equals the batch operator's
-  (verified in tests by replaying a corpus in several micro-batches).
-
-Use case: incremental per-session rollups / per-turn features feeding the
-same parquet/Iceberg tables the batch FE layer reads.
+Use case: incremental per-session rollups feeding the same
+parquet/Iceberg tables the batch FE layer reads.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 
 def streaming_sessionize(
@@ -52,9 +35,14 @@ def streaming_sessionize(
     The result is append-mode writable once the watermark passes the
     session end; semantics match the batch operator's session boundaries
     for in-order events (late events within the watermark merge sessions,
-    which the batch recompute would also do).
+    which the batch recompute would also do). The gap is passed to
+    ``session_window`` in whole microseconds, the resolution the batch
+    operator compares at, so fractional gaps are not truncated.
     """
-    gap = f"{int(gap_s)} seconds"
+    gap_us = round(gap_s * 1_000_000) if math.isfinite(gap_s) else 0
+    if gap_us < 1:  # a 0 µs window would silently drop every row
+        raise ValueError(f"gap_s must be finite and at least 1 µs, got {gap_s!r}")
+    gap = f"{gap_us} microseconds"
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(F.col(ts_col), gap).alias("session"), F.col(group))
@@ -69,66 +57,4 @@ def streaming_sessionize(
             "n_turns",
             "n_tool_turns",
         )
-    )
-
-
-def streaming_turn_sessionize(
-    stream: DataFrame,
-    gap_s: float = 1800.0,
-    group: str = "conv_id",
-    order: str = "turn_idx",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-turn session ids on a stream: the ``applyInPandasWithState``
-    twin of the batch ``sessionize`` (custom stateful operator; SURVEY.md
-    §2.I streaming mapping).
-
-    State per conversation: (last event ts in µs, current 0-based session
-    id). Each micro-batch's rows for a conversation are sorted by
-    ``order`` and tagged exactly like the batch window pass — gap in
-    integer µs against the previous turn (in-state across batches), new
-    session when gap > gap_s. Output schema: (group, order, ts,
-    session_id, gap_s); gap_s is null for a conversation's first-ever
-    turn. Scales like the batch operator: one hash exchange on the group
-    key; state is two longs per live conversation (bound it with the
-    source's retention / a timeout in production).
-    """
-    out_schema = StructType([
-        StructField(group, StringType()),
-        StructField(order, LongType()),
-        StructField(ts_col, TimestampType()),
-        StructField("session_id", LongType()),
-        StructField("gap_s", DoubleType()),
-    ])
-    state_schema = StructType([
-        StructField("last_us", LongType()),
-        StructField("session_id", LongType()),
-    ])
-    gap_us = int(round(gap_s * 1_000_000))
-
-    def tag(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        last_us, sid = state.get if state.exists else (None, -1)
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(order, kind="mergesort").reset_index(drop=True)
-        ts_us = rows[ts_col].astype("datetime64[us]").astype("int64")
-        sids, gaps = [], []
-        for t in ts_us:
-            if last_us is None:
-                sid, g = sid + 1, None
-            else:
-                g = int(t - last_us)
-                if g > gap_us:
-                    sid += 1
-            sids.append(sid)
-            gaps.append(None if g is None else g / 1_000_000.0)
-            last_us = int(t)
-        state.update((last_us, sid))
-        yield pd.DataFrame({
-            group: key[0], order: rows[order].astype("int64"),
-            ts_col: rows[ts_col], "session_id": pd.array(sids, dtype="int64"),
-            "gap_s": pd.array(gaps, dtype="float64"),
-        })
-
-    return stream.groupBy(group).applyInPandasWithState(
-        tag, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )

@@ -154,64 +154,6 @@ def test_render_is_single_exchange(spark, convs):
     assert "Python" not in plan and "ArrowEval" not in plan
 
 
-def test_streaming_render_matches_batch(spark, tmp_path):
-    """The streaming renderer replayed over micro-batches must emit the
-    batch render_conversations string byte-for-byte for every conversation
-    whose end marker arrived; a conversation without a marker stays in
-    state (not emitted)."""
-    import os
-
-    from mrmr_spark.operators.chat import render_conversations
-    from mrmr_spark.streaming.chat import streaming_render_conversations
-
-    rows = []
-    for conv, n in [("c1", 4), ("c2", 2), ("c3", 3)]:
-        for i in range(n):
-            role = ["user", "assistant", "system"][i % 3]
-            rows.append((conv, i, role, f"{conv} says {i}"))
-        if conv != "c3":  # c3 never closes
-            rows.append((conv, n, "end", None))
-    pdf_cols = "conv_id string, turn_idx int, role string, text string"
-    sdf = spark.createDataFrame(rows, pdf_cols)
-
-    flat = os.path.join(str(tmp_path), "chat_stream")
-    os.makedirs(flat)
-    for i, (lo, hi) in enumerate([(0, 2), (2, 4), (4, 100)]):
-        part = sdf.where(f"turn_idx >= {lo} and turn_idx < {hi}").coalesce(1)
-        d = os.path.join(str(tmp_path), f"cb{i}")
-        part.write.mode("overwrite").parquet(d)
-        f = [x for x in os.listdir(d) if x.endswith(".parquet")][0]
-        os.rename(os.path.join(d, f), os.path.join(flat, f"slice{i}.parquet"))
-
-    stream = (
-        spark.readStream.schema(sdf.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    out = streaming_render_conversations(stream)
-    q = (
-        out.writeStream.format("memory").queryName("chat_stream_render")
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        r.conv_id: (r.text, r.n_turns)
-        for r in spark.table("chat_stream_render").collect()
-    }
-    batch = {
-        r.conv_id: (r.text, r.n_turns)
-        for r in render_conversations(
-            sdf.where("role <> 'end'")
-        ).collect()
-    }
-    assert set(got) == {"c1", "c2"}  # c3 has no end marker
-    for c in got:
-        assert got[c] == batch[c], c
-
-
 # ---------------------------------------------------------------------------
 # token-level loss masks (chat.token_loss_mask)
 # ---------------------------------------------------------------------------

@@ -3,6 +3,9 @@ on randomized small panels (the SURVEY §5 strategy, extended from fixed
 fixtures to generated ones). Deterministic derandomized profile; small
 example counts keep the suite inside the wall-clock budget."""
 
+import math
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -146,23 +149,81 @@ def test_asof_join_matches_merge_asof(sp, fact_ts, snap_ts, strict):
 
 
 # ---------------------------------------------------------------------------
-# The FULL feature matrix vs the streaming twin's pure-Python row kernel
-# (round-5 capstone: `streaming.features._turn_row_features` is an
-# independent second implementation of every batch window expression —
-# already replay-verified against batch on generated corpora; here it
-# becomes a hypothesis oracle on ADVERSARIAL corpora the generator never
-# produces: ts ties inside a conversation, gaps exactly AT the 1800 s
-# session boundary and AT the 3600 s range edge, null/empty/whitespace
-# text, null roles/tools, single-turn conversations.)
+# The FULL feature matrix vs an independent pure-Python row kernel.
+# `_turn_row_features` re-derives every batch window expression one turn at
+# a time, and `_twin_expected` drives it with an explicit per-conversation
+# state loop (gap/session tracking, last-5 ring, trailing-range buffer,
+# next-gap target). Hypothesis feeds it ADVERSARIAL corpora the generator
+# never produces: ts ties inside a conversation, gaps exactly AT the 1800 s
+# session boundary and AT the 3600 s range edge, null/empty/whitespace text,
+# null roles/tools, single-turn conversations.
 # ---------------------------------------------------------------------------
+
+_WS = re.compile(r"\s+")
+
+
+def _turn_row_features(
+    turn_idx: int,
+    gap: float | None,
+    session_id: int,
+    sess_turn: int,
+    text: str | None,
+    role: str | None,
+    tool: str | None,
+    gap1: float | None,
+    gap2: float | None,
+    buf5: list[list[float]],
+    tbuf: list[list[float]],
+    t_us: int,
+    range_us: int,
+) -> dict:
+    """One turn's feature dict, replicating the batch expressions exactly
+    (window aggregates exclude the current row; avg/max ignore null gaps;
+    counts count rows)."""
+    f: dict[str, float | None] = {}
+    f["turn_idx_f"] = float(turn_idx)
+    f["gap_s"] = gap
+    f["gap_s_lag1"] = gap1
+    f["gap_s_lag2"] = gap2
+    if text is None:
+        f["text_len"] = None
+        f["token_count"] = None
+    else:
+        f["text_len"] = float(len(text))
+        f["token_count"] = float(len(_WS.split(text)))
+    f["is_user"] = None if role is None else float(role == "user")
+    f["is_assistant"] = None if role is None else float(role == "assistant")
+    f["is_tool_role"] = None if role is None else float(role == "tool")
+    f["has_tool"] = float(tool is not None)
+    f["session_idx"] = float(session_id)
+    f["sess_turn"] = float(sess_turn)
+
+    # trailing 5 rows, current excluded (buf5 holds [gap, is_assistant,
+    # has_tool, text_len] per prior turn; None encoded as NaN)
+    gaps = [b[0] for b in buf5 if not math.isnan(b[0])]
+    f["n_turns_5"] = float(len(buf5))
+    f["avg_gap_5"] = (sum(gaps) / len(gaps)) if gaps else None
+    f["max_gap_5"] = max(gaps) if gaps else None
+    ia = [b[1] for b in buf5 if not math.isnan(b[1])]  # avg ignores null role
+    f["assistant_frac_5"] = (sum(ia) / len(ia)) if ia else None
+    f["tool_frac_5"] = (sum(b[2] for b in buf5) / len(buf5)) if buf5 else None
+    tls = [b[3] for b in buf5 if not math.isnan(b[3])]
+    f["avg_text_len_5"] = (sum(tls) / len(tls)) if tls else None
+
+    # trailing range_s seconds, current excluded: rows with
+    # us in [t_us - range_us, t_us - 1] (rangeBetween(-range_us, -1))
+    lo = t_us - range_us
+    in_win = [b for b in tbuf if lo <= b[0] <= t_us - 1]
+    rgaps = [b[1] for b in in_win if not math.isnan(b[1])]
+    f["n_turns_3600s"] = float(len(in_win))
+    f["avg_gap_3600s"] = (sum(rgaps) / len(rgaps)) if rgaps else None
+    return f
 
 
 def _twin_expected(pdf, session_gap_s=1800.0, range_s=3600.0):
-    """Per-(conv, turn) feature dicts via the streaming kernel, driven by
-    the same state-update loop `streaming_turn_features` runs (gap/session
-    tracking, last-5 ring, trailing-range buffer, next-gap target)."""
-    from mrmr_spark.streaming.features import _turn_row_features
-
+    """Per-(conv, turn) feature dicts via :func:`_turn_row_features`,
+    driven by a per-conversation state loop (gap/session tracking, last-5
+    ring, trailing-range buffer, next-gap target)."""
     range_us = int(round(range_s * 1_000_000))
     nan = lambda v: float("nan") if v is None else float(v)  # noqa: E731
     out = {}

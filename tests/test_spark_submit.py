@@ -5,10 +5,15 @@ so its sys.path fallback cannot reach the repo checkout). Asserts the
 resumable-pipeline contract end to end: phase manifests written with
 per-partition lineage + metrics, k features selected, and a second
 submit resuming every phase from its checkpoint instead of recomputing.
+
+The zip ships every module, so every module must import: a deletion that
+leaves a dangling import fails the suite, not a user's import.
 """
 
+import importlib
 import json
 import os
+import pkgutil
 import shutil
 import subprocess
 import sys
@@ -25,6 +30,15 @@ def _spark_submit() -> str:
 
 def _run_submit(cmd, env):
     return subprocess.run(cmd, capture_output=True, text=True, timeout=420, env=env)
+
+
+def test_every_module_imports():
+    import mrmr_spark
+
+    names = [m.name for m in pkgutil.walk_packages(mrmr_spark.__path__, "mrmr_spark.")]
+    for name in names:
+        importlib.import_module(name)
+    assert "mrmr_spark.streaming.sessions" in names
 
 
 def test_spark_submit_pyfiles_pipeline_and_resume(tmp_path):

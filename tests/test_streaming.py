@@ -1,20 +1,15 @@
-"""Structured-Streaming surface: the stateful per-turn sessionizer must
-reproduce the batch ``sessionize`` output when a corpus is replayed in
-micro-batches (state carried across batches), and the session_window
-rollup must close the same sessions."""
+"""Structured-Streaming session rollups: the session_window rollup must
+close the same sessions as the batch ``sessionize``, at the gap it was
+given to the microsecond."""
 
 import os
-import time
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from mrmr_spark.operators.sessionize import sessionize
-from mrmr_spark.streaming.sessions import (
-    streaming_sessionize,
-    streaming_turn_sessionize,
-)
+from mrmr_spark.streaming.sessions import streaming_sessionize
 
 
 def _corpus(n_convs=12, max_turns=14, seed=3):
@@ -34,61 +29,33 @@ def _corpus(n_convs=12, max_turns=14, seed=3):
 
 @pytest.fixture(scope="module")
 def replay_dir(spark, tmp_path_factory):
-    """Corpus split into 3 time slices written as separate files — each
-    conversation CONTINUES across slices, so per-conv state must carry."""
+    """Corpus split into 3 turn slices written as separate files; each
+    conversation continues across slices."""
     pdf = _corpus()
-    d = str(tmp_path_factory.mktemp("stream_in"))
     sdf = spark.createDataFrame(pdf)
-    for i, (lo, hi) in enumerate([(0, 4), (4, 8), (8, 100)]):
-        part = sdf.where(f"turn_idx >= {lo} and turn_idx < {hi}")
-        part.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, f"b{i}"))
-    # flatten: one file per slice in a single source dir
-    flat = os.path.join(d, "flat")
-    os.makedirs(flat)
-    for i in range(3):
-        sub = os.path.join(d, f"b{i}")
-        files = [f for f in os.listdir(sub) if f.endswith(".parquet")]
-        assert len(files) == 1
-        os.rename(os.path.join(sub, files[0]), os.path.join(flat, f"slice{i}.parquet"))
+    parts = [
+        sdf.where(f"turn_idx >= {lo} and turn_idx < {hi}")
+        for lo, hi in [(0, 4), (4, 8), (8, 100)]
+    ]
+    flat = _flat_slices(parts, str(tmp_path_factory.mktemp("stream_in")))
     return flat, pdf, sdf
 
 
+def _flat_slices(parts, d):
+    """Write each frame as ONE parquet file into a single source dir, in
+    order, so ``maxFilesPerTrigger=1`` replays them as micro-batches."""
+    flat = os.path.join(d, "flat")
+    os.makedirs(flat)
+    for i, part in enumerate(parts):
+        sub = os.path.join(d, f"b{i}")
+        part.coalesce(1).write.mode("overwrite").parquet(sub)
+        files = [f for f in os.listdir(sub) if f.endswith(".parquet")]
+        assert len(files) == 1
+        os.rename(os.path.join(sub, files[0]), os.path.join(flat, f"slice{i}.parquet"))
+    return flat
+
+
 GAP = 1800.0
-
-
-def test_stateful_turn_sessionize_matches_batch(spark, replay_dir):
-    flat, pdf, sdf = replay_dir
-    stream = (
-        spark.readStream.schema(sdf.schema)
-        .option("maxFilesPerTrigger", 1)   # one slice per micro-batch
-        .parquet(flat)
-    )
-    out = streaming_turn_sessionize(stream, gap_s=GAP)
-    q = (
-        out.writeStream.format("memory").queryName("turn_sessions")
-        .outputMode("append").start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = (
-        spark.table("turn_sessions")
-        .orderBy("conv_id", "turn_idx")
-        .toPandas()
-    )
-    exp = (
-        sessionize(sdf, gap_s=GAP)
-        .select("conv_id", "turn_idx", "session_id", "gap_s")
-        .orderBy("conv_id", "turn_idx")
-        .toPandas()
-    )
-    assert len(got) == len(pdf)
-    assert got["conv_id"].tolist() == exp["conv_id"].tolist()
-    assert got["session_id"].tolist() == exp["session_id"].tolist()
-    g, e = got["gap_s"], exp["gap_s"]
-    assert (g.isna() == e.isna()).all()
-    np.testing.assert_allclose(g.dropna(), e.dropna(), rtol=0)
 
 
 def test_session_window_rollup_closes_batch_sessions(spark, replay_dir):
@@ -119,170 +86,50 @@ def test_session_window_rollup_closes_batch_sessions(spark, replay_dir):
         assert (r.conv_id, r.n_turns) in exp_counts
 
 
-@pytest.mark.parametrize("idle_timeout_s", [None, 7200.0])
-def test_streaming_turn_features_match_batch(spark, tmp_path, idle_timeout_s):
-    """The streaming FE twin: replaying a transcript corpus in micro-batches
-    must reproduce the batch build_features matrix restricted to rows whose
-    target is known (emit-on-target-complete), value for value. The second
-    variant runs the ProcessingTimeTimeout state-eviction path (the 100 TB
-    state bound) with a timeout far beyond the test's wall clock, so
-    eviction never fires and replay equality must still hold.
-
-    The evict variant CANNOT wait on processAllAvailable() or availableNow
-    termination: with ProcessingTimeTimeout registered the engine keeps
-    scheduling micro-batches to fire timers (observed: thousands of empty
-    batches, neither wait returns). The test instead polls the sink until
-    every labeled row has arrived, then stops the query — which is also the
-    production shape: a timer-bearing query runs forever by design (with a
-    trigger interval bounding the empty-batch rate)."""
-    from mrmr_spark.fe import build_features
-    from mrmr_spark.fe.pipeline import FEATURE_COLS
-    from mrmr_spark.sources.transcripts import generate_transcripts_pandas
-    from mrmr_spark.streaming.features import streaming_turn_features
-
-    pdf = generate_transcripts_pandas(n_convs=25, mean_turns=12, seed=9)
+def test_session_window_keeps_fractional_gap(spark, tmp_path):
+    """A 1800.9 s gap must not be truncated to 1800 s: turns 1800.5 s apart
+    stay in ONE session per conversation, as in batch ``sessionize``. A
+    far-future sentinel turn in a second micro-batch moves the watermark
+    past every session, so append mode emits them all."""
+    gap_s = 1800.9
+    t0 = pd.Timestamp("2024-03-01")
+    rows = [
+        (c, i, t0 + pd.Timedelta(microseconds=i * 1_800_500_000), "user", None)
+        for c in ("a", "b") for i in range(5)
+    ]
+    cols = ["conv_id", "turn_idx", "ts", "role", "tool"]
+    pdf = pd.DataFrame(rows, columns=cols).astype({"ts": "datetime64[us]", "tool": object})
     sdf = spark.createDataFrame(pdf)
-
-    flat = os.path.join(str(tmp_path), "flat")
-    os.makedirs(flat)
-    for i, (lo, hi) in enumerate([(0, 3), (3, 7), (7, 10_000)]):
-        part = sdf.where(f"turn_idx >= {lo} and turn_idx < {hi}").coalesce(1)
-        d = os.path.join(str(tmp_path), f"b{i}")
-        part.write.mode("overwrite").parquet(d)
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1
-        os.rename(os.path.join(d, files[0]), os.path.join(flat, f"slice{i}.parquet"))
-
+    sentinel = spark.createDataFrame(
+        [("zz", 0, (t0 + pd.Timedelta(days=30)).to_pydatetime(), "user", None)], sdf.schema
+    )
+    flat = _flat_slices([sdf, sentinel], str(tmp_path))
     stream = (
         spark.readStream.schema(sdf.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(flat)
     )
-    exp_rows = build_features(sdf).where("target_next_gap IS NOT NULL").count()
-    out = streaming_turn_features(stream, idle_timeout_s=idle_timeout_s)
-    sink = f"turn_features_{'evict' if idle_timeout_s else 'plain'}"
+    out = streaming_sessionize(stream, gap_s=gap_s, watermark="0 seconds")
     q = (
-        out.writeStream.format("memory").queryName(sink)
+        out.writeStream.format("memory").queryName("session_fractional_gap")
         .outputMode("append").start()
     )
     try:
-        if idle_timeout_s is None:
-            q.processAllAvailable()
-        else:
-            deadline = time.time() + 300
-            while spark.table(sink).count() < exp_rows:
-                assert time.time() < deadline, "sink never reached expected rows"
-                assert q.exception() is None
-                time.sleep(1.0)
+        q.processAllAvailable()
     finally:
         q.stop()
-
-    cols = ["conv_id", "turn_idx", "ts", *FEATURE_COLS, "target_next_gap"]
-    got = (
-        spark.table(sink).select(*cols)
-        .orderBy("conv_id", "turn_idx").toPandas()
+    got = sorted(
+        (r.conv_id, r.n_turns)
+        for r in spark.table("session_fractional_gap").collect()
+        if r.conv_id != "zz"
     )
-    exp = (
-        build_features(sdf).where("target_next_gap IS NOT NULL").select(*cols)
-        .orderBy("conv_id", "turn_idx").toPandas()
+    exp = sorted(
+        (r.conv_id, r["count"])
+        for r in sessionize(sdf, gap_s=gap_s).groupBy("conv_id", "session_id").count().collect()
     )
-    assert len(got) == len(exp) > 0
-    assert got["conv_id"].tolist() == exp["conv_id"].tolist()
-    assert got["turn_idx"].tolist() == exp["turn_idx"].tolist()
-    assert (
-        got["ts"].astype("datetime64[us]").tolist()
-        == exp["ts"].astype("datetime64[us]").tolist()
-    )
-    for c in [*FEATURE_COLS, "target_next_gap"]:
-        g, e = got[c], exp[c]
-        assert (g.isna() == e.isna()).all(), c
-        np.testing.assert_allclose(g.dropna(), e.dropna(), rtol=1e-12, err_msg=c)
+    assert exp == [("a", 5), ("b", 5)]
+    assert got == exp
 
-
-def test_streaming_turn_features_restart_from_checkpoint(spark, tmp_path):
-    """Recovery contract (round-5 hardening): the applyInPandasWithState
-    JSON-blob state survives a query stop + restart from its checkpoint
-    dir. Run 1 sees only the first time slice, is stopped, and run 2 —
-    a NEW query object on the SAME checkpoint — processes the rest; the
-    union of emitted rows must equal the batch matrix value for value
-    (pending-turn state, the last-5 ring and the 1h buffer all restored
-    from the state store, nothing re-emitted, nothing lost).
-
-    The sink is the parquet file sink: unlike the memory sink it supports
-    checkpoint recovery (exactly-once via _spark_metadata), which is also
-    the production shape for a restartable feature stream."""
-    from mrmr_spark.fe import build_features
-    from mrmr_spark.fe.pipeline import FEATURE_COLS
-    from mrmr_spark.sources.transcripts import generate_transcripts_pandas
-    from mrmr_spark.streaming.features import streaming_turn_features
-
-    pdf = generate_transcripts_pandas(n_convs=20, mean_turns=12, seed=17)
-    sdf = spark.createDataFrame(pdf)
-
-    flat = os.path.join(str(tmp_path), "flat")
-    os.makedirs(flat)
-    slices = []
-    for i, (lo, hi) in enumerate([(0, 3), (3, 7), (7, 10_000)]):
-        part = sdf.where(f"turn_idx >= {lo} and turn_idx < {hi}").coalesce(1)
-        d = os.path.join(str(tmp_path), f"b{i}")
-        part.write.mode("overwrite").parquet(d)
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) == 1
-        slices.append((os.path.join(d, files[0]), os.path.join(flat, f"slice{i}.parquet")))
-    # only slice 0 visible to run 1
-    os.rename(*slices[0])
-
-    out_dir = os.path.join(str(tmp_path), "out")
-    ck_dir = os.path.join(str(tmp_path), "ckpt")
-
-    def start_query():
-        stream = (
-            spark.readStream.schema(sdf.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(flat)
-        )
-        return (
-            streaming_turn_features(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck_dir)
-            .outputMode("append")
-            .start()
-        )
-
-    q1 = start_query()
-    try:
-        q1.processAllAvailable()
-    finally:
-        q1.stop()
-    n_run1 = spark.read.parquet(out_dir).count()
-
-    exp = (
-        build_features(sdf).where("target_next_gap IS NOT NULL")
-        .select("conv_id", "turn_idx", "ts", *FEATURE_COLS, "target_next_gap")
-        .orderBy("conv_id", "turn_idx").toPandas()
-    )
-    # the restart must genuinely continue MID-corpus: run 1 emitted some
-    # labeled rows (every conv with >=2 turns in slice 0) but not all
-    assert 0 < n_run1 < len(exp)
-
-    for s in slices[1:]:
-        os.rename(*s)
-    q2 = start_query()
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    cols = ["conv_id", "turn_idx", "ts", *FEATURE_COLS, "target_next_gap"]
-    got = (
-        spark.read.parquet(out_dir).select(*cols)
-        .orderBy("conv_id", "turn_idx").toPandas()
-    )
-    assert len(got) == len(exp) > 0
-    assert got["conv_id"].tolist() == exp["conv_id"].tolist()
-    assert got["turn_idx"].tolist() == exp["turn_idx"].tolist()
-    for c in [*FEATURE_COLS, "target_next_gap"]:
-        g, e = got[c], exp[c]
-        assert (g.isna() == e.isna()).all(), c
-        np.testing.assert_allclose(g.dropna(), e.dropna(), rtol=1e-12, err_msg=c)
+    for bad in (0.0, -1.0, 1e-7, float("nan"), float("inf")):
+        with pytest.raises(ValueError, match="gap_s"):
+            streaming_sessionize(stream, gap_s=bad)

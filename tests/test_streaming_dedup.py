@@ -119,8 +119,9 @@ def test_fingerprint_matches_batch_exact_dedup_key(spark, doc_stream_dir):
 
 
 def test_stateless_text_ops_run_on_streams(spark, doc_stream_dir):
-    """token stats / quality / winnow fingerprints are per-row Column
-    expressions — they run on a streaming frame with no twin needed."""
+    """token stats / quality (per-row Column expressions) and winnow
+    fingerprints (an Arrow kernel) run on a streaming frame with no twin
+    needed."""
     from mrmr_spark.operators.textstats import winnow_fingerprints, with_text_stats
 
     d, schema, pdf = doc_stream_dir
@@ -143,7 +144,7 @@ def test_stateless_text_ops_run_on_streams(spark, doc_stream_dir):
 
 @pytest.fixture(scope="module")
 def contam_stream_dir(spark, tmp_path_factory):
-    """3 slices of 3-token-vocab docs; some share a 3-gram with the bench."""
+    """3 slices of 12-word docs over a 9-word vocab (many repeated n-grams)."""
     rng = __import__("random").Random(3)
     vocab = [f"v{i}" for i in range(9)]
     rows = []
@@ -160,51 +161,6 @@ def contam_stream_dir(spark, tmp_path_factory):
         os.rename(os.path.join(sub, f), os.path.join(d, f"slice{i}.parquet"))
     schema = sdf.drop("slice").schema
     return d, schema, sdf.drop("slice")
-
-
-def test_streaming_decontaminate_replays_batch(spark, contam_stream_dir):
-    from mrmr_spark.operators.curation import decontaminate
-    from mrmr_spark.streaming.curation import (
-        collect_benchmark_grams,
-        streaming_decontaminate,
-    )
-
-    d, schema, batch = contam_stream_dir
-    bench = batch.where("doc_id % 13 = 0")
-    corpus = batch.where("doc_id % 13 != 0")
-
-    exp = {
-        r.doc_id: (r.contaminated, r.n_hit_grams)
-        for r in decontaminate(corpus, bench, n=3, mode="flag").collect()
-    }
-    assert any(f for f, _ in exp.values()), "fixture must plant contamination"
-
-    grams = collect_benchmark_grams(bench, n=3)
-    stream = _read_stream(spark, d, schema).where("doc_id % 13 != 0")
-    got_pdf = _run_stream(
-        spark, streaming_decontaminate(stream, grams, n=3), "contam_flag"
-    )
-    got = {
-        int(r.doc_id): (bool(r.contaminated), int(r.n_hit_grams))
-        for r in got_pdf.itertuples()
-    }
-    assert got == exp
-
-    # drop mode: survivors == batch drop survivors
-    stream2 = _read_stream(spark, d, schema).where("doc_id % 13 != 0")
-    kept = _run_stream(
-        spark, streaming_decontaminate(stream2, grams, n=3, mode="drop"), "contam_drop"
-    )
-    batch_kept = {r.doc_id for r in decontaminate(corpus, bench, n=3, mode="drop").collect()}
-    assert set(kept["doc_id"].astype(int)) == batch_kept
-
-
-def test_streaming_decontaminate_rejects_bad_mode(spark, contam_stream_dir):
-    from mrmr_spark.streaming.curation import streaming_decontaminate
-
-    _, _, batch = contam_stream_dir
-    with pytest.raises(ValueError, match="mode"):
-        streaming_decontaminate(batch, {"a b c"}, mode="oops")
 
 
 def test_repetition_stats_runs_on_streams(spark, contam_stream_dir):
@@ -325,43 +281,6 @@ def test_dsir_logweight_expr_runs_on_streams(spark, tmp_path_factory):
         n, w = exp[int(r.doc_id)]
         assert r.n_features == n and r.log_weight == w
     assert any(v[1] > 0 for v in exp.values()) and any(v[1] < 0 for v in exp.values())
-
-
-def test_streaming_contamination_trim_replays_batch(spark, contam_stream_dir):
-    """Surgical decontamination on a stream: replay equality vs batch
-    contamination_spans + trim_duplicate_spans on the same corpus."""
-    from mrmr_spark.operators.curation import (
-        contamination_spans,
-        trim_duplicate_spans,
-    )
-    from mrmr_spark.streaming.curation import (
-        collect_benchmark_grams,
-        streaming_contamination_trim,
-    )
-
-    d, schema, batch_df = contam_stream_dir
-    bench = batch_df.where(F.col("doc_id") % 10 == 0)
-    corpus = batch_df.where(F.col("doc_id") % 10 != 0)
-    n = 3
-    grams = collect_benchmark_grams(bench, n=n)
-    assert grams
-
-    want = {
-        r.doc_id: (r.text, r.n_removed_tokens)
-        for r in trim_duplicate_spans(
-            corpus, contamination_spans(corpus, bench, n=n)
-        ).collect()
-    }
-    stream = _read_stream(spark, d, schema).where(F.col("doc_id") % 10 != 0)
-    out = _run_stream(
-        spark, streaming_contamination_trim(stream, grams, n=n), "strim"
-    )
-    got = {
-        int(r.doc_id): (r.text, int(r.n_removed_tokens)) for r in out.itertuples()
-    }
-    assert got == want
-    assert any(v[1] > 0 for v in want.values()), "fixture must trim something"
-    assert any(v[1] == 0 for v in want.values())
 
 
 def test_round5_stateless_ops_run_on_streams(spark, doc_stream_dir):
