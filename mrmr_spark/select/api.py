@@ -70,6 +70,16 @@ def _prefilter(rel: np.ndarray, k: int, top_m: int | None):
     return valid_idx
 
 
+def _check_option(name: str, value, allowed: tuple) -> None:
+    """Reject a misspelled option before any Spark job runs: an unknown
+    value would otherwise fall through to some default branch and run the
+    wrong method without a word."""
+    if value not in allowed:
+        raise ValueError(
+            f"Unknown {name}: {value!r}. Valid options: {list(allowed)}"
+        )
+
+
 def _maybe_subsample(df, subsample, seed, key_cols=None):
     """Returns ``(df, sampled)`` — callers deciding persist need to know
     whether the lineage is now a global sort-limit (re-executing it per
@@ -123,13 +133,16 @@ def select_mrmr(
     objective) or held-out evaluation (closed-form ridge; api.py:283-374).
     """
     _valid_rel = {"regression": ("f", "rf"), "classification": ("f", "ks", "rf")}
-    if task not in _valid_rel:
-        raise ValueError(f"Unknown task: {task!r}")
+    _check_option("task", task, tuple(_valid_rel))
     if relevance not in _valid_rel[task]:
         raise ValueError(
             f"relevance='{relevance}' not valid for task='{task}'. "
             f"Valid options: {sorted(_valid_rel[task])}"
         )
+    _check_option("estimator", estimator, ("classic", "gaussian"))
+    _check_option("formula", formula, ("quotient", "difference"))
+    if estimator == "gaussian" and task != "regression":
+        raise ValueError("estimator='gaussian' is regression-only; use 'classic'.")
     if k == "auto":
         from mrmr_spark.select.autok import AutoKConfig, select_k_evaluate
 
@@ -142,8 +155,11 @@ def select_mrmr(
             cache = build_cache(df, feature_cols, weight_col=weight_col,
                                 subsample=subsample, seed=seed)
             method = "mrmr_quot" if formula == "quotient" else "mrmr_diff"
-            res = select_cached(cache, target_col, cfg.max_k, method=method,
-                                top_m=top_m, return_objective=True)
+            try:
+                res = select_cached(cache, target_col, cfg.max_k, method=method,
+                                    top_m=top_m, return_objective=True)
+            finally:
+                cache.unpersist()
             kk = loops.select_k_elbow(
                 res.extras["objective"], cfg.min_k, len(res.names),
                 cfg.elbow_min_rel_gain, cfg.elbow_patience,
@@ -169,13 +185,14 @@ def select_mrmr(
     if estimator == "gaussian":
         from mrmr_spark.select.cache import build_cache, select_cached
 
-        if task != "regression":
-            raise ValueError("estimator='gaussian' is regression-only; use 'classic'.")
         cache = build_cache(
             df, feature_cols, weight_col=weight_col, subsample=subsample, seed=seed
         )
         method = "mrmr_quot" if formula == "quotient" else "mrmr_diff"
-        return select_cached(cache, target_col, k, method=method, top_m=top_m)
+        try:
+            return select_cached(cache, target_col, k, method=method, top_m=top_m)
+        finally:
+            cache.unpersist()
 
     assert_numeric(df, feature_cols)
     df, wcol = ensure_weight_column(df, weight_col)
@@ -235,8 +252,8 @@ def select_mrmr(
         and len(feature_cols) <= FUSED_REGRESSION_MAX_P
         and single_pass is not False
     ):
-        # fused classification fast path — the single-scan twin of the
-        # regression branch above: ONE no-persist Arrow scan yields the
+        # fused classification fast path — the single-scan counterpart of
+        # the regression branch above: ONE no-persist Arrow scan yields the
         # weighted-ANOVA F relevance AND the full |corr| redundancy
         # matrix (kernels.fused_singlepass_class_stats). ks/rf fall
         # through to the persisted general path (they re-read the
@@ -366,6 +383,9 @@ def select_jmi(
     runtime), so the O(n²) cost caps the usable n. A small-n estimator in
     the reference too (tree queries per candidate per step).
     """
+    _check_option("task", task, ("regression", "classification"))
+    _check_option("estimator", estimator, ("auto", "r2", "binned", "ksg"))
+    _check_option("aggregation", aggregation, ("sum", "min"))
     if estimator == "auto":
         estimator = "binned" if task == "classification" else "r2"
     if estimator in ("r2", "ksg") and task == "classification":
@@ -444,13 +464,11 @@ def select_jmi(
             aggregation, n_bins, quantize_f32, labels,
             distributed=(subsample is None),
         )
-    elif estimator == "ksg":
+    else:
         sel_local = _jmi_ksg(
             df, cand_cols, target_col, stats, cand, rel, k, aggregation,
             quantize_f32, ksg_subsample, seed,
         )
-    else:
-        raise ValueError(f"Unknown estimator: {estimator}")
 
     if pinned is not None:
         pinned.unpersist()
@@ -587,11 +605,15 @@ def select_cefsplus(
     return_objective: bool = False,
 ) -> SelectionResult:
     """CEFS+ log-det selection via the gaussian copula cache
-    (api.py:896-983). Regression only."""
+    (api.py:896-983). Regression only. The cache is built for this call
+    and released when it returns or raises."""
     from mrmr_spark.select.cache import build_cache, select_cached
 
     cache = build_cache(df, feature_cols, weight_col=weight_col, subsample=subsample, seed=seed)
-    return select_cached(
-        cache, target_col, k, method="cefsplus", top_m=top_m,
-        corr_prune=corr_prune, return_objective=return_objective,
-    )
+    try:
+        return select_cached(
+            cache, target_col, k, method="cefsplus", top_m=top_m,
+            corr_prune=corr_prune, return_objective=return_objective,
+        )
+    finally:
+        cache.unpersist()

@@ -15,9 +15,11 @@ Two modes, as in the reference:
   Group CV tags rows by group hash and scores every fold; time holdout
   tags train/val as folds 0/1 and scores fold 1 only. The evaluator runs
   ONE fold-keyed fused stats scan (an indicator-augmented Gram
-  accumulator per fold — any train split's exact imputed/standardized
-  moments AND Gram follow by driver-side Chan merges of the other folds'
-  slots, ``kernels.fused_foldwise_stats``/``finish_loo_stats``). Every
+  accumulator per fold — any train split's exact imputed moments AND
+  Gram follow by driver-side Chan merges of the other folds' slots,
+  ``kernels.fused_foldwise_stats``/``finish_loo_stats``, and its
+  standardization is the same ``relevance._standardized_corr`` tail the
+  relevance paths use). Every
   (alpha, k)-prefix solve is a driver-side ``np.linalg.solve`` on the
   leading submatrix — closed-form ridge, no sklearn, no per-split scans,
   no persisted split frames (SURVEY.md §7 Phase 3). Squared-error
@@ -47,6 +49,8 @@ weights); pass ``weight_col=None`` for reference-exact behavior.
 
 Validation scoring plan (both tasks): ALL (k-prefix × hyperparameter)
 models are scored in ONE ``mapInArrow`` scan of the scored folds' rows
+(``_grouped_loss_pass``; the task supplies only the per-row loss —
+``_ridge_row_loss`` for mae, ``_softmax_row_loss`` for logloss/error)
 — the per-row predictions for every model are a single (n×p)·(p×M) GEMM
 on the standardized Arrow batch, reduced to an (S·(M+1))-float64
 accumulator per partition (squared error skips this scan). This
@@ -69,6 +73,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mrmr_spark.select import binning, kernels
+from mrmr_spark.select.relevance import (
+    _require_finite_y,
+    _standardized_corr,
+    _weighted_stds,
+)
 
 
 @dataclass
@@ -115,28 +124,6 @@ def build_k_grid(min_k: int, max_k: int) -> list[int]:
 _RIDGE_ALPHAS = np.logspace(-3, 3, 10)
 
 
-def _ridge_inputs_from_fused(st: dict) -> dict:
-    """Standardized ridge inputs (R, r_y, stds) from a fused imputed-moment
-    stats dict (kernels._finish_fused_acc) — the same driver algebra as
-    relevance.fused_regression_stats' tail."""
-    sw = float(st["sw"])
-    C, c_y, y_ss = st["C"], st["c_y"], float(st["c_yy"])
-    with np.errstate(invalid="ignore", divide="ignore"):
-        x_ss = np.diag(C).copy()
-        var = x_ss / sw
-        wstds = np.where(var > 1e-12, np.sqrt(var), 1.0)
-        y_var = y_ss / sw
-        y_wstd = float(np.sqrt(y_var)) if y_var > 1e-12 else 1.0
-        denom = np.outer(wstds, wstds) * sw
-        R = 0.5 * (C + C.T) / denom
-        r_y = c_y / (wstds * y_wstd * sw)
-    return {
-        "sw": sw, "wmeans": st["col_wmeans"], "wstds": wstds,
-        "impute_means": st["impute_means"], "y_wmean": float(st["y_wmean"]),
-        "y_wstd": y_wstd, "R": R, "r_y": r_y,
-    }
-
-
 def _ridge_betas(G: np.ndarray, g: np.ndarray, k_grid: list[int], p: int):
     """All (k-prefix × alpha) closed-form ridge solutions as zero-padded
     beta columns; returns (B[p, M], keys[(k, alpha_idx)])."""
@@ -167,7 +154,7 @@ def _min_over_alphas(
     return scores
 
 
-def _grouped_regression_loss_pass(
+def _grouped_loss_pass(
     df: DataFrame,
     path: list[str],
     y_col: str,
@@ -176,73 +163,58 @@ def _grouped_regression_loss_pass(
     imput: np.ndarray,
     mu: np.ndarray,
     sd: np.ndarray,
-    y_wmean: np.ndarray,
-    B: np.ndarray,
-    metric: str,
+    n_models: int,
+    row_loss,
 ) -> np.ndarray:
-    """Weighted mean squared/absolute error of ALL M ridge models of every
+    """Weighted mean validation loss of ALL ``n_models`` models of every
     split in ONE Arrow scan of the fold-tagged frame: each row is val data
-    for exactly the split whose index equals its fold, standardized with
-    THAT split's train stats (``imput``/``mu``/``sd``/``y_wmean`` are
-    (S, p) / (S,); ``B`` is (S, p, M) zero-padded prefix betas), and its
-    predictions for all M models are one (n×p)·(p×M) GEMM. Rows with a
-    null/NaN target or a fold outside [0, S) are skipped. Returns (S, M)
-    weighted mean losses (inf where a fold had no weight)."""
-    S, p, M = B.shape
-    proj = [F.col(c).cast("double").alias(c) for c in path]
-    proj.append(F.col(y_col).cast("double").alias("_y_"))
-    proj.append(F.col(fold_col).cast("long").alias("_f_"))
-    if weight_col:
-        proj.append(F.col(weight_col).cast("double").alias("_w_"))
-    dfp = df.select(*proj)
+    for exactly the split whose index equals its fold, imputed and
+    standardized with THAT split's train stats (``imput``/``mu``/``sd``
+    are (S, p)), and ``row_loss(f, Z, y)`` returns its (n, M) per-row
+    losses under split f's models — one GEMM on the standardized batch
+    (``_ridge_row_loss``, ``_softmax_row_loss``). Rows with a null/NaN
+    target or a fold outside [0, S) are skipped. Returns (S, M) weighted
+    mean losses (inf where a fold had no weight)."""
+    S, M = len(imput), int(n_models)
+    dfp = kernels._project(
+        df, path, _y_=y_col, _f_=F.col(fold_col).cast("long"), _w_=weight_col
+    )
+    wkey = "_w_" if weight_col else None
     imput = np.ascontiguousarray(imput, dtype=np.float64)
     mu = np.ascontiguousarray(mu, dtype=np.float64)
     sd = np.ascontiguousarray(sd, dtype=np.float64)
-    y_wmean = np.ascontiguousarray(y_wmean, dtype=np.float64)
-    B = np.ascontiguousarray(B, dtype=np.float64)
 
     def term(batch) -> np.ndarray:
         X = kernels._batch_cols(batch, path)
-        y = np.asarray(
-            batch.column(batch.schema.get_field_index("_y_")).to_numpy(zero_copy_only=False),
-            dtype=np.float64,
-        )
-        fold = np.asarray(
-            batch.column(batch.schema.get_field_index("_f_")).to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )
-        w = (
-            np.asarray(
-                batch.column(batch.schema.get_field_index("_w_")).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            if weight_col
-            else np.ones(X.shape[0])
-        )
+        y = kernels._batch_vec(batch, "_y_")
+        w = kernels._batch_vec(batch, wkey)
         out = np.zeros((S, M + 1), dtype=np.float64)
-        ok = np.isfinite(y)
-        for f in np.unique(fold):
-            if f < 0 or f >= S:
-                # null fold (NaN wraps to INT64_MIN) or foreign tag: a
-                # negative in [-S,-1] would silently credit another fold's
-                # slot — skip, like fused_foldwise_stats' range guard
-                continue
-            sel = (fold == f) & ok
-            if not sel.any():
-                continue
-            fin = np.isfinite(X[sel])
-            Xq = np.where(fin, X[sel], imput[f][None, :])
+        fold = kernels._batch_vec(batch, "_f_")
+        for f, sel in kernels._fold_rows(fold, S, np.isfinite(y)):
+            Xf, yf, wf = (X, y, w) if sel is None else (X[sel], y[sel], w[sel])
+            Xq = np.where(np.isfinite(Xf), Xf, imput[f][None, :])
             Z = (Xq - mu[f][None, :]) / sd[f][None, :]
-            R = (y[sel] - y_wmean[f])[:, None] - Z @ B[f]
-            L = np.abs(R) if metric == "mae" else R * R
-            out[f, :M] += w[sel] @ L
-            out[f, M] += w[sel].sum()
+            out[f, :M] += wf @ row_loss(f, Z, yf)
+            out[f, M] += wf.sum()
         return out.ravel()
 
     acc = kernels.arrow_reduce(dfp, term, S * (M + 1)).reshape(S, M + 1)
     with np.errstate(invalid="ignore", divide="ignore"):
-        losses = np.where(acc[:, M:] > 0.0, acc[:, :M] / acc[:, M:], np.inf)
-    return losses
+        return np.where(acc[:, M:] > 0.0, acc[:, :M] / acc[:, M:], np.inf)
+
+
+def _ridge_row_loss(y_wmean: np.ndarray, B: np.ndarray, metric: str):
+    """Per-row squared (or, for mae, absolute) residuals of split f's ridge
+    models: ``y_wmean`` is (S,), ``B`` (S, p, M) zero-padded prefix
+    betas."""
+    y_wmean = np.ascontiguousarray(y_wmean, dtype=np.float64)
+    B = np.ascontiguousarray(B, dtype=np.float64)
+
+    def loss(f: int, Z: np.ndarray, y: np.ndarray) -> np.ndarray:
+        R = (y - y_wmean[f])[:, None] - Z @ B[f]
+        return np.abs(R) if metric == "mae" else R * R
+
+    return loss
 
 
 def _algebraic_regression_losses(
@@ -254,7 +226,7 @@ def _algebraic_regression_losses(
     fold accumulators) under the train split's impute/center/scale stats —
     Σw·r² = Syy − 2·b'Szy + b'Szz·b with Szz/Szy/Syy shifted from
     fold-mean-centered moments to train-mean-centered ones. Exact up to
-    float reassociation vs the row-wise ``_grouped_regression_loss_pass``
+    float reassociation vs the row-wise ``_grouped_loss_pass``
     (matches the NumPy oracle at 1e-9); only valid for squared loss — mae
     keeps the row pass."""
     M = B.shape[1]
@@ -262,7 +234,7 @@ def _algebraic_regression_losses(
     sw_v = float(st["sw"])
     if sw_v <= 0.0:
         return np.full(M, np.inf)
-    d = st["col_wmeans"] - ri["wmeans"]
+    d = st["col_wmeans"] - ri["col_wmeans"]
     dy = float(st["y_wmean"]) - ri["y_wmean"]
     Sxx = st["C"] + sw_v * np.outer(d, d)
     Sxy = st["c_y"] + sw_v * d * dy
@@ -283,17 +255,6 @@ class _InsufficientFolds(Exception):
     select_k_evaluate retries once with an exact round-robin group→fold
     map (bounded distinct collect + broadcast join) before giving up; for
     time holdout one side of the cut is empty and it raises."""
-
-
-def _require_finite_y_accs(accs: np.ndarray) -> None:
-    """Reference y-validation on the shared-scan regression evaluates,
-    read from the fold accumulators' tail (``[-2]`` = per-fold non-finite-y
-    count) — no extra scan. Without this a single NaN/null y row NaN-poisons
-    the fused Gram, every (k, alpha) score goes inf, and select_k_evaluate
-    silently returns max_k — while every other regression backend (via
-    ``f_regression_scores``) raises."""
-    if float(np.asarray(accs)[:, -2].sum()) > 0:
-        raise ValueError("Non-finite values in y are not allowed for regression.")
 
 
 def _occupied_folds(accs: np.ndarray) -> np.ndarray:
@@ -340,7 +301,8 @@ def _ridge_group_cv_scores(
     accs = kernels.fused_foldwise_stats(
         folded, path, target_col, "_fold", n_splits, weight_col, quantize_f32=False
     )
-    _require_finite_y_accs(accs)
+    # the per-fold non-finite-y counts ride the fold accumulators' tail
+    _require_finite_y(accs[:, -2].sum())
     occupied = _occupied_folds(accs)
     # a val fold with no rows is a split GroupKFold could not produce:
     # excluded from the mean, like min(n_splits, n_groups)
@@ -356,14 +318,14 @@ def _ridge_group_cv_scores(
     keys = None
     for v in scored:
         st = kernels.finish_loo_stats(accs, v, p, quantize_f32=False)
-        ri = _ridge_inputs_from_fused(st)
+        ri = {**st, **_standardized_corr(st["C"], st["sw"], st["c_y"], st["c_yy"])}
         G = ri["R"] * ri["sw"]
         g = ri["r_y"] * ri["sw"] * ri["y_wstd"]
         if not (np.isfinite(G).all() and np.isfinite(g).all() and ri["sw"] > 0):
             continue  # degenerate train split -> inf scores for this fold
         B[v], keys = _ridge_betas(G, g, k_grid, p)
         imput[v], mus[v], sds[v], ymn[v] = (
-            ri["impute_means"], ri["wmeans"], ri["wstds"], ri["y_wmean"],
+            ri["impute_means"], ri["col_wmeans"], ri["wstds"], ri["y_wmean"],
         )
         ris[v] = ri
         live[v] = True
@@ -371,9 +333,9 @@ def _ridge_group_cv_scores(
         return {kk: float("inf") for kk in k_grid}
 
     if metric == "mae":
-        losses = _grouped_regression_loss_pass(
+        losses = _grouped_loss_pass(
             _scored_rows(folded, val_folds, n_splits), path, target_col,
-            weight_col, "_fold", imput, mus, sds, ymn, B, metric,
+            weight_col, "_fold", imput, mus, sds, M, _ridge_row_loss(ymn, B, metric),
         )
     else:
         losses = np.full((n_splits, M), np.inf)
@@ -450,82 +412,18 @@ def _softmax_losses(
     return (S.argmax(axis=2) != y[:, None]).astype(np.float64)
 
 
-def _grouped_classification_loss_pass(
-    df: DataFrame,
-    path: list[str],
-    y_code_col: str,
-    weight_col: str | None,
-    fold_col: str,
-    imput: np.ndarray,
-    mu: np.ndarray,
-    sd: np.ndarray,
-    Ws: np.ndarray,
-    bs: np.ndarray,
-    n_classes: int,
-    metric: str,
-) -> np.ndarray:
-    """Weighted mean logloss / error rate of ALL M softmax models of every
-    split in ONE Arrow scan of the fold-tagged frame: each row is val data
-    for the split whose index equals its fold, standardized with ITS
-    split's train stats (``imput``/``mu``/``sd`` are (S, p); ``Ws`` is
-    (S, p, M·C), ``bs`` (S, M·C)); class scores for every model are one
-    GEMM (``_softmax_losses``). Rows with a null/NaN label or a fold
-    outside [0, S) are skipped. Returns (S, M) weighted mean losses (inf
-    where a fold had no weight)."""
-    S, p, MC = Ws.shape
+def _softmax_row_loss(Ws: np.ndarray, bs: np.ndarray, n_classes: int, metric: str):
+    """Per-row logloss / error of split f's softmax models: ``Ws`` is
+    (S, p, M·C), ``bs`` (S, M·C); labels arrive as float codes."""
     C = int(n_classes)
-    M = MC // C
-    proj = [F.col(c).cast("double").alias(c) for c in path]
-    proj.append(F.col(y_code_col).cast("double").alias("_y_"))
-    proj.append(F.col(fold_col).cast("long").alias("_f_"))
-    if weight_col:
-        proj.append(F.col(weight_col).cast("double").alias("_w_"))
-    dfp = df.select(*proj)
-    imput = np.ascontiguousarray(imput, dtype=np.float64)
-    mu = np.ascontiguousarray(mu, dtype=np.float64)
-    sd = np.ascontiguousarray(sd, dtype=np.float64)
+    M = Ws.shape[2] // C
     Ws = np.ascontiguousarray(Ws, dtype=np.float64)
     bs = np.ascontiguousarray(bs, dtype=np.float64)
 
-    def term(batch) -> np.ndarray:
-        X = kernels._batch_cols(batch, path)
-        yraw = np.asarray(
-            batch.column(batch.schema.get_field_index("_y_")).to_numpy(zero_copy_only=False),
-            dtype=np.float64,
-        )
-        fold = np.asarray(
-            batch.column(batch.schema.get_field_index("_f_")).to_numpy(zero_copy_only=False),
-            dtype=np.int64,
-        )
-        w = (
-            np.asarray(
-                batch.column(batch.schema.get_field_index("_w_")).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            if weight_col
-            else np.ones(X.shape[0])
-        )
-        out = np.zeros((S, M + 1), dtype=np.float64)
-        ok = np.isfinite(yraw)
-        for f in np.unique(fold):
-            if f < 0 or f >= S:
-                continue  # null/foreign fold tag — see the regression pass
-            sel = (fold == f) & ok
-            if not sel.any():
-                continue
-            fin = np.isfinite(X[sel])
-            Xq = np.where(fin, X[sel], imput[f][None, :])
-            Z = (Xq - mu[f][None, :]) / sd[f][None, :]
-            y = yraw[sel].astype(np.int64)
-            L = _softmax_losses(Z, y, M, C, Ws[f], bs[f], metric)
-            out[f, :M] += w[sel] @ L
-            out[f, M] += w[sel].sum()
-        return out.ravel()
+    def loss(f: int, Z: np.ndarray, y: np.ndarray) -> np.ndarray:
+        return _softmax_losses(Z, y.astype(np.int64), M, C, Ws[f], bs[f], metric)
 
-    acc = kernels.arrow_reduce(dfp, term, S * (M + 1)).reshape(S, M + 1)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        losses = np.where(acc[:, M:] > 0.0, acc[:, :M] / acc[:, M:], np.inf)
-    return losses
+    return loss
 
 
 def _logistic_group_cv_scores(
@@ -598,17 +496,16 @@ def _logistic_group_cv_scores(
     sds = np.ones((n_splits, p))
     live = np.zeros(n_splits, dtype=bool)
     for v in scored:
-        ri = _ridge_inputs_from_fused(
-            kernels.finish_loo_stats(accs, v, p, quantize_f32=False)
-        )
-        if not (ri["sw"] > 0 and np.isfinite(ri["wmeans"]).all()):
+        st = kernels.finish_loo_stats(accs, v, p, quantize_f32=False)
+        if not (st["sw"] > 0 and np.isfinite(st["col_wmeans"]).all()):
             continue
         tr = fs != v
         if len(np.unique(ys[tr])) < 2:
             continue
+        wstds = _weighted_stds(np.diag(st["C"]), st["sw"])
         fin = np.isfinite(Xs[tr])
-        Xq = np.where(fin, Xs[tr], ri["impute_means"][None, :])
-        Z = (Xq - ri["wmeans"][None, :]) / ri["wstds"][None, :]
+        Xq = np.where(fin, Xs[tr], st["impute_means"][None, :])
+        Z = (Xq - st["col_wmeans"][None, :]) / wstds[None, :]
         yv = ys[tr]
         wtr = wv[tr] if wv is not None else None
         m = int(tr.sum())
@@ -617,14 +514,15 @@ def _logistic_group_cv_scores(
             Wk, bk = _softmax_fit(Z[:, :kk_eff], yv, C, wtr, lam=1.0 / max(m, 1))
             Ws_all[v, :kk_eff, mi * C : (mi + 1) * C] = Wk
             bs_all[v, mi * C : (mi + 1) * C] = bk
-        imput[v], mus[v], sds[v] = ri["impute_means"], ri["wmeans"], ri["wstds"]
+        imput[v], mus[v], sds[v] = st["impute_means"], st["col_wmeans"], wstds
         live[v] = True
     if not live.any():
         return {kk: float("inf") for kk in k_grid}
 
-    losses = _grouped_classification_loss_pass(
+    losses = _grouped_loss_pass(
         _scored_rows(folded, val_folds, n_splits), path, y_code_col,
-        weight_col, "_fold", imput, mus, sds, Ws_all, bs_all, C, metric,
+        weight_col, "_fold", imput, mus, sds, M,
+        _softmax_row_loss(Ws_all, bs_all, C, metric),
     )
     per_split = [
         {kk: (float(losses[v, mi]) if live[v] and np.isfinite(losses[v, mi])

@@ -23,6 +23,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mrmr_spark.select.kernels import _batch_vec
+
 
 def exact_percentile_edges(
     df: DataFrame,
@@ -257,24 +259,14 @@ def bin_codes_df(
                 continue
             arrays = []
             for c in cols:
-                x = np.asarray(
-                    b.column(b.schema.get_field_index(c)).to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                )
+                x = _batch_vec(b, c)
                 if const[c]:
                     codes = np.zeros(len(x), dtype=np.int16)
                 else:
                     codes = np.digitize(x, interior[c]).astype(np.int16)
                 arrays.append(pa.array(codes, type=pa.int16()))
             for e in extra_cols:
-                arrays.append(
-                    pa.array(
-                        np.asarray(
-                            b.column(b.schema.get_field_index(e)).to_numpy(zero_copy_only=False),
-                            dtype=np.float64,
-                        )
-                    )
-                )
+                arrays.append(pa.array(_batch_vec(b, e)))
             yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
     return df.mapInArrow(mapper, spark_schema)

@@ -23,13 +23,14 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mrmr_spark.select import kernels, loops
-from mrmr_spark.select.api import SelectionResult, _default_top_m
+from mrmr_spark.select.api import SelectionResult, _check_option, _default_top_m
 from mrmr_spark.select.copula import rank_gauss_transform
 from mrmr_spark.select.preprocess import (
     assert_numeric,
     deterministic_subsample,
     ensure_weight_column,
 )
+from mrmr_spark.select.relevance import _require_finite_y
 
 ROW_KEY = "_cache_rk"
 
@@ -156,6 +157,13 @@ def select_cached(
     return_objective: bool = False,
 ) -> SelectionResult:
     """Gaussian-path selection on a pre-built cache (cefsplus.py:448-535)."""
+    _check_option("method", method, ("cefsplus", "mrmr_quot", "mrmr_diff", "jmi", "jmim"))
+    # the reference rejects a non-finite y; the copula would rank it as an
+    # ordinary value. One small aggregate over the persisted source
+    # (<= subsample rows) — the input lineage is never re-read.
+    yv = F.col(target_col).cast("double")
+    bad = yv.isNull() | F.isnan(yv) | (F.abs(yv) == float("inf"))
+    _require_finite_y(cache.src.select(F.count(F.when(bad, 1))).first()[0])
     # y copula transform on the SAME subsampled rows/weights (f32 cast first,
     # matching to_numpy(y, float32) at cefsplus.py:460)
     ysrc = cache.src.select(
@@ -225,12 +233,10 @@ def select_cached(
             R_cand, rel_cand, k_actual,
             use_quotient=(method == "mrmr_quot"), redundancy="gaussian_mi",
         )
-    elif method in ("jmi", "jmim"):
+    else:
         sel_local = loops.jmi_greedy_r2(
             R_cand, r_cand, rel_cand, k_actual, use_min=(method == "jmim")
         )
-    else:
-        raise ValueError(f"Unknown method: {method}")
 
     sel_valid = cand[sel_local]
     sel_original = cache.valid_cols[sel_valid]

@@ -1,20 +1,35 @@
 """Distributed reduction kernels for the selection layer.
 
-Every selection statistic — O(p) moments (imputation means, weighted and
-centered moments, per-class ANOVA sums) and the O(p²) Gram (the redundancy
-matrix) — is ONE ``mapInArrow`` block reduction: per partition, NumPy
-accumulates the statistic over Arrow batches (``G += Zᵀ(w⊙Z)`` for the
-Gram, per-batch centering plus Chan merging for the moments), then the
+Every selection statistic is ONE ``mapInArrow`` block reduction: per
+partition, NumPy accumulates the statistic over Arrow batches, then the
 driver merges the per-partition accumulators:
 
     mapInArrow(partition -> float64 accumulator vector)  ->  driver merge
 
-Each partition emits ONE row containing its accumulator (serialized float64
-bytes), i.e. communication is ``numPartitions × out_len × 8`` bytes — for the
-flagship Gram reduction at top_m=1250 that is ~12.5MB/partition (SURVEY.md
-§4.2). Beyond ~64 partitions a two-level combine keeps the driver collect
-flat: we optionally repartition the tiny accumulator rows and reduce once
-more executor-side before the final collect.
+Three kinds of scan remain, one kernel each:
+
+- **Moment scans** (O(p) / O(C·p) accumulators, never a p×p Gram):
+  ``moments_singlepass_pass`` (imputation means, weighted moments,
+  relevance, constant-column pruning) and ``class_moments_singlepass_pass``
+  (per-class ANOVA blocks).
+- **Augmented-accumulator scans**: ``fused_foldwise_stats`` accumulates,
+  per fold, the centered Gram of the indicator-augmented vector
+  ``[f⊙x_q, f, y_q]`` plus exact finite sums; the imputed moments, Gram
+  and y-covariances of any union of folds follow by driver algebra. The
+  unkeyed scan is the one-fold case. ``fused_singlepass_class_stats`` is
+  the classification form (``[f⊙x_q, f]`` plus per-class blocks).
+- **Gram scans** on driver-standardized columns: ``gram_pass``
+  (``G += Zᵀ(w⊙Z)``, the redundancy matrix, optionally with y) and
+  ``r_vector_pass`` (the corr-with-target vector alone).
+
+Moments are centered per batch and Chan-merged (stable at any
+|mean|/std). Each partition emits ONE row containing its accumulator
+(serialized float64 bytes), i.e. communication is ``numPartitions ×
+out_len × 8`` bytes — for the flagship Gram reduction at top_m=1250 that
+is ~12.5MB/partition (SURVEY.md §4.2). Beyond ~64 partitions a two-level
+combine keeps the driver collect flat: the tiny accumulator rows are
+repartitioned and reduced once more executor-side before the final
+collect.
 
 All kernels cast inputs float64->float32->float64 when ``quantize_f32`` —
 the reference's precision contract (X validated float64, imputed, cast
@@ -29,7 +44,7 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: accumulator rows carry their source partition id so every downstream
@@ -60,14 +75,52 @@ def _acc_batch(acc: np.ndarray, pid: int | None = None) -> pa.RecordBatch:
     )
 
 
+def _project(df: DataFrame, cols: list[str], **extra: str | Column | None) -> DataFrame:
+    """mapInArrow cannot column-prune: select exactly what a kernel reads —
+    the feature columns as doubles under their own names, plus each
+    ``alias=column`` extra (a name or a Column) as a double. A None extra
+    (no weight column, say) is left out."""
+    return df.select(
+        *[F.col(c).cast("double").alias(c) for c in cols],
+        *[
+            (F.col(c) if isinstance(c, str) else c).cast("double").alias(a)
+            for a, c in extra.items()
+            if c is not None
+        ],
+    )
+
+
+def _batch_vec(batch: pa.RecordBatch, name: str | None, dtype=np.float64) -> np.ndarray:
+    """One Arrow column as a NumPy vector (nulls -> NaN). ``name=None`` —
+    a kernel run without a weight column — gives unit weights."""
+    if name is None:
+        return np.ones(batch.num_rows, dtype=dtype)
+    col = batch.column(batch.schema.get_field_index(name))
+    return np.asarray(col.to_numpy(zero_copy_only=False), dtype=dtype)
+
+
 def _batch_cols(batch: pa.RecordBatch, cols: list[str]) -> np.ndarray:
     """(n, len(cols)) float64 matrix from an Arrow batch (zero-copy per col
     where possible; nulls -> NaN)."""
-    arrs = []
-    for c in cols:
-        col = batch.column(batch.schema.get_field_index(c))
-        arrs.append(np.asarray(col.to_numpy(zero_copy_only=False), dtype=np.float64))
+    arrs = [_batch_vec(batch, c) for c in cols]
     return np.column_stack(arrs) if arrs else np.empty((batch.num_rows, 0))
+
+
+def _fold_rows(fold: np.ndarray, n_folds: int, ok: np.ndarray | None = None):
+    """Yield ``(f, sel)`` for each fold tagged in one batch, ``sel`` being
+    the row mask of fold ``f`` — or None when the whole batch is fold ``f``
+    (always so for a one-fold scan), so callers skip the mask copies. Rows
+    with a null tag (NaN), a tag outside [0, n_folds) or ``ok`` False are
+    skipped: a negative tag would otherwise index another fold's slot."""
+    valid = np.isfinite(fold) & (fold >= 0) & (fold < n_folds)
+    if ok is not None:
+        valid &= ok
+    if valid.all() and fold.min() == fold.max():
+        yield int(fold[0]), None
+        return
+    fold_i = np.where(valid, fold, 0).astype(np.int64)
+    for f in np.unique(fold_i[valid]):
+        yield int(f), valid & (fold_i == f)
 
 
 def _merge_collect(reduced: DataFrame, n_parts: int, merge_two) -> np.ndarray | None:
@@ -115,6 +168,13 @@ def _merge_collect(reduced: DataFrame, n_parts: int, merge_two) -> np.ndarray | 
     return total
 
 
+def _scan(dfp: DataFrame, n_parts: int, mapper, merge_two, out_len: int) -> np.ndarray:
+    """Run one accumulator scan: ``mapper`` over ``dfp``'s Arrow batches,
+    then the deterministic merge. An empty input gives zeros."""
+    total = _merge_collect(dfp.mapInArrow(mapper, _ACC_SCHEMA), n_parts, merge_two)
+    return total if total is not None else np.zeros(out_len)
+
+
 def arrow_reduce(
     df: DataFrame,
     partition_term: Callable[[pa.RecordBatch], np.ndarray],
@@ -137,20 +197,30 @@ def arrow_reduce(
         if nonempty:
             yield _acc_batch(acc)
 
-    total = _merge_collect(
-        df.mapInArrow(mapper, _ACC_SCHEMA),
-        df.rdd.getNumPartitions(),
-        lambda a, b: a + b,
-    )
-    return total if total is not None else np.zeros(out_len, dtype=np.float64)
+    return _scan(df, df.rdd.getNumPartitions(), mapper, lambda a, b: a + b, out_len)
 
 
 def _quantize(X: np.ndarray, quantize_f32: bool) -> np.ndarray:
     return X.astype(np.float32).astype(np.float64) if quantize_f32 else X
 
 
+def _finite_split(X: np.ndarray, quantize_f32: bool):
+    """``(fin, a, rawsum, nfin)`` of one batch: the finite mask, the
+    quantized finite values with holes at 0 (``a = f⊙x_q``; no mask
+    multiply is needed because ``_quantize(0.0) == 0.0``), and the exact
+    raw-f64 finite sums and counts behind the imputation means."""
+    fin = np.isfinite(X)
+    Xz = np.where(fin, X, 0.0)
+    return fin, _quantize(Xz, quantize_f32), Xz.sum(axis=0), fin.sum(axis=0).astype(np.float64)
+
+
+def _impute_means(rawsum: np.ndarray, nfin: np.ndarray, quantize_f32: bool) -> np.ndarray:
+    """Per-column finite means (0 for an all-non-finite column)."""
+    return _quantize(np.where(nfin > 0, rawsum / np.maximum(nfin, 1), 0.0), quantize_f32)
+
+
 # ---------------------------------------------------------------------------
-# Single-pass fused statistics (no persist): indicator-augmented Gram
+# Centered blocks and their Chan merges
 # ---------------------------------------------------------------------------
 
 def _chan_merge(sw_a, mu_a, C_a, sw_b, mu_b, C_b):
@@ -166,6 +236,59 @@ def _chan_merge(sw_a, mu_a, C_a, sw_b, mu_b, C_b):
     C = C_a + C_b + (sw_a * sw_b / tot) * np.outer(d, d)
     mu = mu_a + (sw_b / tot) * d
     return tot, mu, C
+
+
+def _centered_slot(V: np.ndarray, w: np.ndarray) -> np.ndarray:
+    """``[Σw, mean(q), centered Gram(q²)]`` of one batch's rows of ``V``
+    (all zeros when the batch carries no weight, so a merge skips it)."""
+    q = V.shape[1]
+    slot = np.zeros(1 + q + q * q)
+    swb = float(w.sum())
+    if swb > 0.0:
+        mub = (w @ V) / swb
+        Vc = V - mub[None, :]
+        slot[0] = swb
+        slot[1 : 1 + q] = mub
+        slot[1 + q :] = (Vc.T @ (Vc * w[:, None])).ravel()
+    return slot
+
+
+def _fused_slot_merge(a: np.ndarray, b: np.ndarray, q: int) -> np.ndarray:
+    """Merge two slots ``[sw, mu(q), C(q²), raw tail...]``: Chan for the
+    centered triple, plain sum for the raw tail."""
+    sw_m, mu_m, C_m = _chan_merge(
+        float(a[0]), a[1 : 1 + q], a[1 + q : 1 + q + q * q].reshape(q, q),
+        float(b[0]), b[1 : 1 + q], b[1 + q : 1 + q + q * q].reshape(q, q),
+    )
+    return np.concatenate(
+        [[sw_m], np.asarray(mu_m).ravel(), np.asarray(C_m).ravel(),
+         a[1 + q + q * q :] + b[1 + q + q * q :]]
+    )
+
+
+def _imputed_moments(mu: np.ndarray, C: np.ndarray, m: np.ndarray, p: int) -> dict:
+    """Weighted means and centered Gram of the imputed columns, from the
+    centered block of the augmented vector ``[a, f(, y)]`` (a = f⊙x_q,
+    f = finite mask). The column imputed with means m is
+    ``x_imp = a + m⊙(1−f)`` — affine in (a, f) — so its weighted mean is
+    ``mu_a + m(1−mu_f)`` and
+
+        C_imp[i,j] = C[a_i,a_j] − m_j·C[a_i,f_j] − m_i·C[a_j,f_i]
+                     + m_i·m_j·C[f_i,f_j]
+
+    When the block carries a y slot (``C`` is (2p+1)²), also the
+    y-covariances ``Cay − m⊙Cfy``, y's centered sum of squares and its
+    weighted mean."""
+    afm = C[:p, p : 2 * p] * m[None, :]
+    out = {
+        "C": C[:p, :p] - afm - afm.T + np.outer(m, m) * C[p : 2 * p, p : 2 * p],
+        "col_wmeans": mu[:p] + m * (1.0 - mu[p : 2 * p]),
+    }
+    if C.shape[0] > 2 * p:
+        out["c_y"] = C[:p, 2 * p] - m * C[p : 2 * p, 2 * p]
+        out["c_yy"] = float(C[2 * p, 2 * p])
+        out["y_wmean"] = float(mu[2 * p])
+    return out
 
 
 def _class_batch_block(A_: np.ndarray, F_: np.ndarray, wc: np.ndarray, p: int):
@@ -216,9 +339,27 @@ def _class_block_merge(cls: np.ndarray, c: int, swb: float, stb: np.ndarray, p: 
     cls[c, 0] = tot
 
 
+def _class_batch_update(
+    cls: np.ndarray, Xq: np.ndarray, fin: np.ndarray, yc: np.ndarray,
+    w: np.ndarray, p: int,
+) -> None:
+    """Chan-merge one batch's per-class centered blocks into ``cls`` (one
+    row per class). Rows with a null/NaN class code or a code outside
+    [0, C) are skipped: malformed input, not a crash."""
+    ok = np.isfinite(yc)
+    yi = yc[ok].astype(np.int64)
+    Xo, fo, wo = Xq[ok], fin[ok].astype(np.float64), w[ok]
+    for c in np.unique(yi):
+        if not (0 <= c < cls.shape[0]):
+            continue
+        m_ = yi == c
+        swb_c, stb = _class_batch_block(Xo[m_], fo[m_], wo[m_], p)
+        _class_block_merge(cls, c, swb_c, stb, p)
+
+
 def _class_blocks_merge(blk_a: np.ndarray, blk_b: np.ndarray, p: int) -> np.ndarray:
     """Pairwise Chan merge of two per-class centered block matrices
-    (C × (1+5p)) — the cross-accumulator twin of ``_class_block_merge``."""
+    (C × (1+5p))."""
     out = blk_a.copy()
     for c in range(blk_a.shape[0]):
         if blk_b[c, 0] > 0.0:
@@ -250,220 +391,71 @@ def _class_anova_moments(
     return class_w, B, A
 
 
-def fused_singlepass_stats(
-    df: DataFrame,
-    feature_cols: list[str],
-    y_col: str,
-    weight_col: str | None = None,
-    quantize_f32: bool = True,
-) -> dict:
-    """ONE ``mapInArrow`` scan — no persist, no second pass — computing
-    everything the two-pass (means scan + centered-Gram scan) path computes,
-    bit-comparable at float64 rounding:
+# ---------------------------------------------------------------------------
+# The augmented accumulator: [sw, mu(q), C(q²), rawsum(p), nfin(p), ybad, n]
+# ---------------------------------------------------------------------------
 
-    Imputation needs global means, which classically forces pass 1 before
-    the centered Gram of pass 2. Instead this kernel accumulates the
-    centered Gram of the INDICATOR-AUGMENTED vector
-    ``V = [f⊙x_q, f, y_q]`` (f = finite mask) with per-batch centering and
-    Chan merging (stable), plus exact raw-f64 finite sums. Because the
-    imputed column is affine in the augmented variables —
-    ``x_imp = (f⊙x) − m⊙f + m`` for impute means m — the centered imputed
-    Gram, weighted means, relevance moments and y-covariances all follow
-    from driver-side algebra:
-
-        C_imp[i,j] = C[a_i,a_j] − m_j·C[a_i,f_j] − m_i·C[a_j,f_i]
-                     + m_i·m_j·C[f_i,f_j]
-
-    At 100 TB this halves the job's memory traffic vs persist+2 scans (the
-    in-memory columnar encode is the single most expensive phase of the
-    e2e pipeline and is entirely skipped) and leaves the upstream
-    window/shuffle stage as the only exchange. Cost: one Arrow transfer of
-    the (p+1)-column matrix into Python workers and a (2p+1)-wide GEMM per
-    batch. Communication: one (2p+1)²+O(p) float64 accumulator per
-    partition.
-    """
-    p = len(feature_cols)
-    q = 2 * p + 1
-    cols = list(feature_cols)
-    wname = weight_col
-    yname = y_col
-
-    proj = [F.col(c).cast("double").alias(c) for c in cols]
-    proj.append(F.col(yname).cast("double").alias("_y_"))
-    if wname:
-        proj.append(F.col(wname).cast("double").alias("_w_"))
-    dfp = df.select(*proj)
-
-    # accumulator layout: [sw, mu(q), C(q²), rawsum(p), nfin(p), ybad, n]
-    out_len = 1 + q + q * q + 2 * p + 2
-
-    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sw = 0.0
-        mu = np.zeros(q)
-        C = np.zeros((q, q))
-        rawsum = np.zeros(p)
-        nfin = np.zeros(p)
-        ybad = 0.0
-        n = 0.0
-        nonempty = False
-        for b in batches:
-            if not b.num_rows:
-                continue
-            nonempty = True
-            X = _batch_cols(b, cols)
-            y = np.asarray(
-                b.column(b.schema.get_field_index("_y_")).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            w = (
-                np.asarray(
-                    b.column(b.schema.get_field_index("_w_")).to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                )
-                if wname
-                else np.ones(X.shape[0])
-            )
-            swb, mub, Cb, rs, nf, yb, nn = _fused_batch_block(X, y, w, p, quantize_f32)
-            rawsum += rs
-            nfin += nf
-            ybad += yb
-            n += nn
-            if swb <= 0.0:
-                continue
-            sw, mu, C = _chan_merge(sw, mu, C, swb, mub, Cb)
-        if nonempty:
-            acc = np.concatenate([[sw], mu, C.ravel(), rawsum, nfin, [ybad, n]])
-            yield _acc_batch(acc)
-
-    def merge_two(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        return _fused_slot_merge(a, b, q)
-
-    total = _merge_collect(
-        dfp.mapInArrow(mapper, _ACC_SCHEMA), df.rdd.getNumPartitions(), merge_two
-    )
-    if total is None:
-        total = np.zeros(out_len)
-    return _finish_fused_acc(total, p, quantize_f32)
-
-
-def _fused_batch_block(X, y, w, p: int, quantize_f32: bool):
-    """One batch's contribution to the indicator-augmented accumulator:
-    ``(swb, mub, Cb, rawsum, nfin, ybad, n)`` for V = [f⊙x_q, f, y_q].
+def _fused_batch_slot(X, y, w, p: int, quantize_f32: bool) -> np.ndarray:
+    """One batch's augmented accumulator slot for ``V = [f⊙x_q, f, y_q]``.
     ``ybad`` counts non-finite y rows so callers can enforce the
     reference's y-validation without a separate scan."""
     q = 2 * p + 1
-    fin = np.isfinite(X)
-    Xz = np.where(fin, X, 0.0)
-    rawsum = Xz.sum(axis=0)
-    nfin = fin.sum(axis=0).astype(np.float64)
-    n = float(X.shape[0])
-    ybad = float((~np.isfinite(y)).sum())
+    fin, Xq, rawsum, nfin = _finite_split(X, quantize_f32)
     V = np.empty((X.shape[0], q))
-    # Xz is already zero where non-finite and _quantize(0.0) == 0.0, so no
-    # mask multiply is needed here (this runs in the hottest scan)
-    V[:, :p] = _quantize(Xz, quantize_f32)
+    V[:, :p] = Xq
     V[:, p : 2 * p] = fin
     V[:, 2 * p] = _quantize(y, quantize_f32)
-    swb = float(w.sum())
-    if swb <= 0.0:
-        return 0.0, None, None, rawsum, nfin, ybad, n
-    mub = (w @ V) / swb
-    Vc = V - mub[None, :]
-    Cb = Vc.T @ (Vc * w[:, None])
-    return swb, mub, Cb, rawsum, nfin, ybad, n
-
-
-def _fused_slot_merge(a: np.ndarray, b: np.ndarray, q: int) -> np.ndarray:
-    """Merge two fused accumulators [sw, mu(q), C(q²), raw-sums...]: Chan
-    for the centered triple, plain sum for the raw tail."""
-    sw_m, mu_m, C_m = _chan_merge(
-        float(a[0]), a[1 : 1 + q], a[1 + q : 1 + q + q * q].reshape(q, q),
-        float(b[0]), b[1 : 1 + q], b[1 + q : 1 + q + q * q].reshape(q, q),
-    )
+    ybad = float((~np.isfinite(y)).sum())
     return np.concatenate(
-        [[sw_m], np.asarray(mu_m).ravel(), np.asarray(C_m).ravel(),
-         a[1 + q + q * q :] + b[1 + q + q * q :]]
+        [_centered_slot(V, w), rawsum, nfin, [ybad, float(X.shape[0])]]
     )
-
-
-def _finish_fused_acc(total: np.ndarray, p: int, quantize_f32: bool) -> dict:
-    """Driver algebra from a fused accumulator to the imputed-moment stats
-    dict (see ``fused_singlepass_stats`` for the derivation)."""
-    q = 2 * p + 1
-    sw = float(total[0])
-    mu = total[1 : 1 + q]
-    C = total[1 + q : 1 + q + q * q].reshape(q, q)
-    rawsum = total[1 + q + q * q : 1 + q + q * q + p]
-    nfin = total[1 + q + q * q + p : 1 + q + q * q + 2 * p]
-    y_nonfinite = float(total[-2])
-    n = float(total[-1])
-
-    impute_means = _quantize(
-        np.where(nfin > 0, rawsum / np.maximum(nfin, 1), 0.0), quantize_f32
-    )
-    m = impute_means
-    mu_a, mu_f, y_wmean = mu[:p], mu[p : 2 * p], float(mu[2 * p])
-    Caa = C[:p, :p]
-    Caf = C[:p, p : 2 * p]
-    Cff = C[p : 2 * p, p : 2 * p]
-    Cay = C[:p, 2 * p]
-    Cfy = C[p : 2 * p, 2 * p]
-    y_ss = float(C[2 * p, 2 * p])
-
-    afm = Caf * m[None, :]
-    C_imp = Caa - afm - afm.T + np.outer(m, m) * Cff
-    c_y = Cay - m * Cfy
-    col_wmeans = mu_a + m * (1.0 - mu_f)
-    return {
-        # np scalar: an empty frame (sw=0) must degrade to nan statistics
-        # exactly like the two-pass path (Python float 0.0 would raise
-        # ZeroDivisionError in the shared driver tail instead)
-        "sw": np.float64(sw),
-        "n": n,
-        "y_nonfinite": y_nonfinite,
-        "impute_means": impute_means,
-        "col_wmeans": col_wmeans,
-        "y_wmean": y_wmean,
-        "C": C_imp,
-        "c_y": c_y,
-        "c_yy": y_ss,
-    }
 
 
 def fused_foldwise_stats(
     df: DataFrame,
     feature_cols: list[str],
     y_col: str,
-    fold_col: str,
+    fold_col: str | Column,
     n_folds: int,
     weight_col: str | None = None,
     quantize_f32: bool = False,
 ) -> np.ndarray:
-    """ONE ``mapInArrow`` scan of the fold-tagged frame producing an
-    independent fused accumulator PER FOLD (shape ``(n_folds, slot)``).
+    """ONE ``mapInArrow`` scan — no persist, no second pass — producing an
+    independent augmented accumulator PER FOLD (shape ``(n_folds, slot)``).
+    ``fold_col`` names the fold column, or is a Column (``F.lit(0)`` with
+    ``n_folds=1`` is the unkeyed scan, see
+    ``relevance.fused_regression_stats``).
 
-    This is the shared-scan backbone of auto-k group CV: the per-split
-    (moments + Gram) scans collapse into this single pass, and any
-    leave-one-fold-out train split's full imputed-moment statistics follow
-    driver-side by Chan-merging the other folds' slots
-    (``finish_loo_stats``) — the augmented-Gram algebra makes the
-    per-split imputation/standardization exact even though every fold was
-    accumulated blind to which split it will serve. Communication:
-    ``n_folds`` fused accumulators per partition (n_folds × (2p+1)²
-    doubles — bounded by the same O(p²) budget as the fused kernels,
-    ×n_splits).
+    Imputation needs global means, which classically forces a means pass
+    before the centered Gram pass. Instead each slot accumulates the
+    centered Gram of the INDICATOR-AUGMENTED vector ``V = [f⊙x_q, f, y_q]``
+    (f = finite mask) with per-batch centering and Chan merging (stable),
+    plus exact raw-f64 finite sums, a non-finite-y count and the row
+    count. Because the imputed column is affine in the augmented
+    variables, the centered imputed Gram, weighted means, relevance
+    moments and y-covariances of any union of folds follow on the driver
+    (``_imputed_moments``): ``finish_loo_stats`` Chan-merges every fold
+    but one (a leave-one-fold-out train split — exact even though each
+    fold was accumulated blind to the split it will serve);
+    ``finish_fold_stats`` finishes one fold under caller-supplied impute
+    means. Auto-k group CV reads every split from this one scan.
+
+    A batch whose rows all fall in one fold (every batch of the unkeyed
+    scan) is used whole, with no mask copy. Rows with a null fold, or one
+    outside [0, n_folds), are skipped. Cost: one Arrow transfer of the
+    (p+2)-column matrix into Python workers and a (2p+1)-wide GEMM per
+    batch; communication is ``n_folds`` slots of ~(2p+1)² doubles per
+    partition.
     """
     p = len(feature_cols)
     q = 2 * p + 1
-    cols = list(feature_cols)
     slot = 1 + q + q * q + 2 * p + 2
-
-    proj = [F.col(c).cast("double").alias(c) for c in cols]
-    proj.append(F.col(y_col).cast("double").alias("_y_"))
-    proj.append(F.col(fold_col).cast("long").alias("_f_"))
-    if weight_col:
-        proj.append(F.col(weight_col).cast("double").alias("_w_"))
-    dfp = df.select(*proj)
+    fold = F.col(fold_col) if isinstance(fold_col, str) else fold_col
+    # long first: a fold is an integer tag (a null one arrives as NaN)
+    dfp = _project(
+        df, feature_cols, _y_=y_col, _f_=fold.cast("long"), _w_=weight_col
+    )
+    wkey = "_w_" if weight_col else None
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         acc = np.zeros((n_folds, slot))
@@ -472,45 +464,14 @@ def fused_foldwise_stats(
             if not b.num_rows:
                 continue
             nonempty = True
-            X = _batch_cols(b, cols)
-            y = np.asarray(
-                b.column(b.schema.get_field_index("_y_")).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            # a null fold would arrive as NaN and wrap to INT64_MIN below —
-            # guard the range instead of indexing blind (negative codes
-            # would otherwise silently merge into the LAST fold)
-            fold = np.asarray(
-                b.column(b.schema.get_field_index("_f_")).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            w = (
-                np.asarray(
-                    b.column(b.schema.get_field_index("_w_")).to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
+            X = _batch_cols(b, feature_cols)
+            y = _batch_vec(b, "_y_")
+            w = _batch_vec(b, wkey)
+            for f, sel in _fold_rows(_batch_vec(b, "_f_"), n_folds):
+                rows = (X, y, w) if sel is None else (X[sel], y[sel], w[sel])
+                acc[f] = _fused_slot_merge(
+                    acc[f], _fused_batch_slot(*rows, p, quantize_f32), q
                 )
-                if weight_col
-                else np.ones(X.shape[0])
-            )
-            valid = np.isfinite(fold) & (fold >= 0) & (fold < n_folds)
-            fold_i = np.where(valid, fold, 0).astype(np.int64)
-            for f in np.unique(fold_i[valid]):
-                sel = valid & (fold_i == f)
-                swb, mub, Cb, rs, nf, yb, nn = _fused_batch_block(
-                    X[sel], y[sel], w[sel], p, quantize_f32
-                )
-                a = acc[f]
-                a[1 + q + q * q :] += np.concatenate([rs, nf, [yb, nn]])
-                if swb <= 0.0:
-                    continue
-                sw_m, mu_m, C_m = _chan_merge(
-                    float(a[0]), a[1 : 1 + q],
-                    a[1 + q : 1 + q + q * q].reshape(q, q),
-                    swb, mub, Cb,
-                )
-                a[0] = sw_m
-                a[1 : 1 + q] = np.asarray(mu_m).ravel()
-                a[1 + q : 1 + q + q * q] = np.asarray(C_m).ravel()
         if nonempty:
             yield _acc_batch(acc.ravel())
 
@@ -521,12 +482,33 @@ def fused_foldwise_stats(
             [_fused_slot_merge(A[f], B[f], q) for f in range(n_folds)]
         ).ravel()
 
-    total = _merge_collect(
-        dfp.mapInArrow(mapper, _ACC_SCHEMA), df.rdd.getNumPartitions(), merge_two
-    )
-    if total is None:
-        total = np.zeros(n_folds * slot)
+    total = _scan(dfp, df.rdd.getNumPartitions(), mapper, merge_two, n_folds * slot)
     return total.reshape(n_folds, slot)
+
+
+def _finish_fused_acc(
+    total: np.ndarray, p: int, quantize_f32: bool,
+    impute_means: np.ndarray | None = None,
+) -> dict:
+    """Driver algebra from one augmented accumulator to the imputed-moment
+    stats dict. The impute means are the accumulator's own finite means
+    unless ``impute_means`` is given."""
+    q = 2 * p + 1
+    o = 1 + q + q * q
+    if impute_means is None:
+        m = _impute_means(total[o : o + p], total[o + p : o + 2 * p], quantize_f32)
+    else:
+        m = np.asarray(impute_means, dtype=np.float64)
+    return {
+        # np scalar: an empty frame (sw=0) must degrade to nan statistics
+        # (a Python float 0.0 would raise ZeroDivisionError in the driver
+        # tail instead)
+        "sw": np.float64(total[0]),
+        "n": float(total[-1]),
+        "y_nonfinite": float(total[-2]),
+        "impute_means": m,
+        **_imputed_moments(total[1 : 1 + q], total[1 + q : o].reshape(q, q), m, p),
+    }
 
 
 def finish_loo_stats(
@@ -555,35 +537,89 @@ def finish_fold_stats(
 ) -> dict:
     """ONE fold's imputed-moment statistics under a CALLER-SUPPLIED impute
     vector (the train split's means, not the fold's own) — the val-side
-    counterpart of ``finish_loo_stats``. Same augmented-Gram algebra as
-    ``_finish_fused_acc``: with a = f⊙x and indicator f, the imputed column
-    is a + m·(1−f), so its (sw-scaled, fold-mean-centered) covariance is
-    Caa − Caf·m' − m·Caf' + (m m')⊙Cff, its y-covariance Cay − m⊙Cfy, and
-    its weighted mean mu_a + m·(1−mu_f). Lets ridge validation losses be
+    counterpart of ``finish_loo_stats``. Lets ridge validation losses be
     evaluated driver-side from the ONE fused stats scan (see
     autok._algebraic_regression_losses) instead of a second data pass."""
-    q = 2 * p + 1
-    total = fold_accs[fold]
-    sw = float(total[0])
-    mu = total[1 : 1 + q]
-    C = total[1 + q : 1 + q + q * q].reshape(q, q)
-    m = np.asarray(impute_means, dtype=np.float64)
-    mu_a, mu_f, y_wmean = mu[:p], mu[p : 2 * p], float(mu[2 * p])
-    Caa = C[:p, :p]
-    Caf = C[:p, p : 2 * p]
-    Cff = C[p : 2 * p, p : 2 * p]
-    Cay = C[:p, 2 * p]
-    Cfy = C[p : 2 * p, 2 * p]
-    y_ss = float(C[2 * p, 2 * p])
-    afm = Caf * m[None, :]
-    return {
-        "sw": np.float64(sw),
-        "C": Caa - afm - afm.T + np.outer(m, m) * Cff,
-        "c_y": Cay - m * Cfy,
-        "c_yy": y_ss,
-        "col_wmeans": mu_a + m * (1.0 - mu_f),
-        "y_wmean": y_wmean,
-    }
+    return _finish_fused_acc(fold_accs[fold], p, False, impute_means)
+
+
+# ---------------------------------------------------------------------------
+# Classification: per-class centered blocks (+ the augmented Gram)
+# ---------------------------------------------------------------------------
+
+def _class_scan(
+    df: DataFrame,
+    feature_cols: list[str],
+    ycode_col: str,
+    n_classes: int,
+    weight_col: str | None,
+    quantize_f32: bool,
+    with_gram: bool,
+):
+    """ONE ``mapInArrow`` scan behind both classification kernels: exact
+    raw-f64 finite sums, per-class CENTERED blocks ``(sw_c, mu_a, mu_f,
+    Caa, Caf, Cff)`` of the indicator pair ``(a = f⊙x_q, f)`` (per-batch
+    centering + Chan merge — stable at any |mean|/std, unlike raw Σw·a²
+    sums cancelled against the global mean), and, ``with_gram``, the
+    centered Gram slot ``[sw, mu(2p), G((2p)²)]`` of ``V = [f⊙x_q, f]``.
+
+    Returns ``(rawsum, nfin, n, cls, gram)`` (``gram`` empty without the
+    Gram). Communication: ``2p + 1 + C·(5p+1)`` (+ ``(2p)² + 2p + 1``)
+    float64 per partition."""
+    p = len(feature_cols)
+    q = 2 * p
+    C_CLS = int(n_classes)
+    head = 2 * p + 1
+    cls_block = 1 + 5 * p
+    cls_len = C_CLS * cls_block
+    gram_len = 1 + q + q * q if with_gram else 0
+    dfp = _project(df, feature_cols, _yc_=ycode_col, _w_=weight_col)
+    wkey = "_w_" if weight_col else None
+
+    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rawsum = np.zeros(p)
+        nfin = np.zeros(p)
+        n = 0.0
+        cls = np.zeros((C_CLS, cls_block))
+        gram = np.zeros(gram_len)
+        nonempty = False
+        for b in batches:
+            if not b.num_rows:
+                continue
+            nonempty = True
+            X = _batch_cols(b, feature_cols)
+            w = _batch_vec(b, wkey)
+            fin, Xq, rs, nf = _finite_split(X, quantize_f32)
+            rawsum += rs
+            nfin += nf
+            n += X.shape[0]
+            if with_gram:
+                V = np.concatenate([Xq, fin.astype(np.float64)], axis=1)
+                gram = _fused_slot_merge(gram, _centered_slot(V, w), q)
+            _class_batch_update(cls, Xq, fin, _batch_vec(b, "_yc_"), w, p)
+        if nonempty:
+            yield _acc_batch(np.concatenate([rawsum, nfin, [n], cls.ravel(), gram]))
+
+    def merge_two(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        # raw sums, finite counts and n are plain sums; the per-class
+        # blocks and the Gram slot Chan-merge
+        cls_m = _class_blocks_merge(
+            a[head : head + cls_len].reshape(C_CLS, cls_block),
+            b[head : head + cls_len].reshape(C_CLS, cls_block),
+            p,
+        )
+        parts = [a[:head] + b[:head], cls_m.ravel()]
+        if with_gram:
+            parts.append(_fused_slot_merge(a[head + cls_len :], b[head + cls_len :], q))
+        return np.concatenate(parts)
+
+    total = _scan(
+        dfp, df.rdd.getNumPartitions(), mapper, merge_two, head + cls_len + gram_len
+    )
+    return (
+        total[:p], total[p : 2 * p], float(total[2 * p]),
+        total[head : head + cls_len].reshape(C_CLS, cls_block), total[head + cls_len :],
+    )
 
 
 def fused_singlepass_class_stats(
@@ -594,155 +630,72 @@ def fused_singlepass_class_stats(
     weight_col: str | None = None,
     quantize_f32: bool = True,
 ) -> dict:
-    """Classification twin of ``fused_singlepass_stats``: ONE ``mapInArrow``
-    scan — no persist, no separate means/class/Gram passes — computing
-    everything the weighted-ANOVA relevance + |corr| redundancy pipeline
-    needs:
-
-    - the centered Gram of the indicator-augmented vector ``V = [f⊙x_q, f]``
-      (per-batch centering + Chan merge) → imputed correlation matrix via
-      the same affine algebra as the regression kernel;
-    - per-class CENTERED blocks ``(sw_c, mu_a, mu_f, Caa, Caf, Cff)``,
-      centered per batch and Chan-merged like the Gram block → exact
-      per-class imputed ANOVA moments on the driver
-      (``_class_anova_moments``). Raw Σw·a² sums cancelled against the
-      global mean would lose ~all precision at |mean|/std ≳ 1e3 — the
-      round-3 advice finding; the centered scheme is stable at any scale;
-    - exact raw-f64 finite sums for the imputation means.
-
-    Communication: one ``(2p)² + C·(5p+1) + O(p)`` float64 accumulator per
-    partition. Rows with a null/NaN class code are skipped (factorization
-    rejects missing labels upstream, so this only guards malformed input).
-    """
+    """Classification form of the augmented-accumulator scan: ONE
+    ``mapInArrow`` scan — no persist, no separate means/class/Gram passes —
+    computing everything the weighted-ANOVA relevance + |corr| redundancy
+    pipeline needs: the imputed correlation Gram (``_imputed_moments`` on
+    the ``[f⊙x_q, f]`` block) and the exact per-class imputed ANOVA
+    moments (``_class_anova_moments``). Rows with a null/NaN class code
+    are left out of the class blocks (factorization rejects missing labels
+    upstream, so this only guards malformed input)."""
     p = len(feature_cols)
     q = 2 * p
-    C_CLS = int(n_classes)
-    cols = list(feature_cols)
-    wname = weight_col
-
-    proj = [F.col(c).cast("double").alias(c) for c in cols]
-    proj.append(F.col(ycode_col).cast("double").alias("_yc_"))
-    if wname:
-        proj.append(F.col(wname).cast("double").alias("_w_"))
-    dfp = df.select(*proj)
-
-    # accumulator: [sw, mu(q), G(q²), rawsum(p), nfin(p), n,
-    #               per-class (sw_c, mu_a(p), mu_f(p), Caa(p), Caf(p), Cff(p)) × C]
-    base = 1 + q + q * q + 2 * p + 1
-    cls_block = 1 + 5 * p
-    out_len = base + C_CLS * cls_block
-
-    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sw = 0.0
-        mu = np.zeros(q)
-        G = np.zeros((q, q))
-        rawsum = np.zeros(p)
-        nfin = np.zeros(p)
-        n = 0.0
-        cls = np.zeros((C_CLS, cls_block))
-        nonempty = False
-        for b in batches:
-            if not b.num_rows:
-                continue
-            nonempty = True
-            X = _batch_cols(b, cols)
-            yc = np.asarray(
-                b.column(b.schema.get_field_index("_yc_")).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            w = (
-                np.asarray(
-                    b.column(b.schema.get_field_index("_w_")).to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                )
-                if wname
-                else np.ones(X.shape[0])
-            )
-            fin = np.isfinite(X)
-            Xz = np.where(fin, X, 0.0)
-            rawsum += Xz.sum(axis=0)
-            nfin += fin.sum(axis=0)
-            n += X.shape[0]
-            # Xz already zero where non-finite; no mask multiply needed
-            Xq = _quantize(Xz, quantize_f32)
-            V = np.concatenate([Xq, fin.astype(np.float64)], axis=1)
-            swb = float(w.sum())
-            if swb > 0.0:
-                mub = (w @ V) / swb
-                Vc = V - mub[None, :]
-                Gb = Vc.T @ (Vc * w[:, None])
-                sw, mu, G = _chan_merge(sw, mu, G, swb, mub, Gb)
-            ok = np.isfinite(yc)
-            yi = yc[ok].astype(np.int64)
-            Xo, fo, wo = Xq[ok], fin[ok].astype(np.float64), w[ok]
-            for c in np.unique(yi):
-                if not (0 <= c < C_CLS):  # malformed code: skip, don't crash
-                    continue
-                m_ = yi == c
-                swb_c, stb = _class_batch_block(Xo[m_], fo[m_], wo[m_], p)
-                _class_block_merge(cls, c, swb_c, stb, p)
-        if nonempty:
-            acc = np.concatenate(
-                [[sw], mu, G.ravel(), rawsum, nfin, [n], cls.ravel()]
-            )
-            yield _acc_batch(acc)
-
-    def merge_two(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        sw_m, mu_m, G_m = _chan_merge(
-            float(a[0]), a[1 : 1 + q], a[1 + q : 1 + q + q * q].reshape(q, q),
-            float(b[0]), b[1 : 1 + q], b[1 + q : 1 + q + q * q].reshape(q, q),
-        )
-        # raw sums, finite counts and n are plain sums; the per-class
-        # centered blocks Chan-merge like the Gram block
-        cls_m = _class_blocks_merge(
-            a[base:].reshape(C_CLS, cls_block),
-            b[base:].reshape(C_CLS, cls_block),
-            p,
-        )
-        return np.concatenate(
-            [[sw_m], np.asarray(mu_m).ravel(), np.asarray(G_m).ravel(),
-             a[1 + q + q * q : base] + b[1 + q + q * q : base], cls_m.ravel()]
-        )
-
-    total = _merge_collect(
-        dfp.mapInArrow(mapper, _ACC_SCHEMA), df.rdd.getNumPartitions(), merge_two
+    rawsum, nfin, n, cls, gram = _class_scan(
+        df, feature_cols, ycode_col, n_classes, weight_col, quantize_f32, True
     )
-    if total is None:
-        total = np.zeros(out_len)
-    sw = float(total[0])
-    mu = total[1 : 1 + q]
-    G = total[1 + q : 1 + q + q * q].reshape(q, q)
-    rawsum = total[1 + q + q * q : 1 + q + q * q + p]
-    nfin = total[1 + q + q * q + p : 1 + q + q * q + 2 * p]
-    n = float(total[base - 1])
-    cls = total[base:].reshape(C_CLS, cls_block)
-
-    impute_means = _quantize(
-        np.where(nfin > 0, rawsum / np.maximum(nfin, 1), 0.0), quantize_f32
-    )
-    m = impute_means
-    mu_a, mu_f = mu[:p], mu[p:]
-    Caa = G[:p, :p]
-    Caf = G[:p, p:]
-    Cff = G[p:, p:]
-    afm = Caf * m[None, :]
-    C_imp = Caa - afm - afm.T + np.outer(m, m) * Cff
-    col_wmeans = mu_a + m * (1.0 - mu_f)
-
+    m = _impute_means(rawsum, nfin, quantize_f32)
+    st = _imputed_moments(gram[1 : 1 + q], gram[1 + q :].reshape(q, q), m, p)
     # centered at the global weighted mean — from the per-class centered
     # blocks (no raw-sum cancellation)
-    class_w, B, A = _class_anova_moments(cls, m, col_wmeans, p)
+    class_w, B, A = _class_anova_moments(cls, m, st["col_wmeans"], p)
     return {
-        "sw": np.float64(sw),
+        "sw": np.float64(gram[0]),
         "n": n,
-        "impute_means": impute_means,
-        "col_wmeans": col_wmeans,
-        "C": C_imp,
+        "impute_means": m,
+        "col_wmeans": st["col_wmeans"],
+        "C": st["C"],
         "class_w": class_w,
         "B": B,
         "A": A,
     }
 
+
+def class_moments_singlepass_pass(
+    df: DataFrame,
+    feature_cols: list[str],
+    ycode_col: str,
+    n_classes: int,
+    weight_col: str | None = None,
+    quantize_f32: bool = True,
+) -> dict:
+    """The O(C·p) classification moments scan (no Gram): the ANOVA moments
+    follow from the per-class centered blocks by the same affine
+    identities as ``fused_singlepass_class_stats``."""
+    p = len(feature_cols)
+    rawsum, nfin, n, cls, _ = _class_scan(
+        df, feature_cols, ycode_col, n_classes, weight_col, quantize_f32, False
+    )
+    m = _impute_means(rawsum, nfin, quantize_f32)
+    class_w = cls[:, 0]
+    sw = float(class_w.sum())
+    # global weighted mean of the imputed columns from the class blocks
+    mu_imp_c = cls[:, 1 : 1 + p] + m[None, :] * (1.0 - cls[:, 1 + p : 1 + 2 * p])
+    col_wmeans = (class_w @ mu_imp_c) / sw if sw > 0 else np.zeros(p)
+    class_w, B, A = _class_anova_moments(cls, m, col_wmeans, p)
+    return {
+        "sw": np.float64(sw),
+        "n": n,
+        "impute_means": m,
+        "col_wmeans": col_wmeans,
+        "class_w": class_w,
+        "B": B,
+        "A": A,
+    }
+
+
+# ---------------------------------------------------------------------------
+# The O(p) moments scan
+# ---------------------------------------------------------------------------
 
 def _colwise_chan_merge(sw_a, st_a, sw_b, st_b, p):
     """Vectorized per-column Chan merge for the O(p) moments kernel.
@@ -784,20 +737,13 @@ def moments_singlepass_pass(
     the indicator pair ``(f⊙x_q, f)`` and y, centered per batch and
     Chan-merged (stable), plus exact raw-f64 finite sums. O(p) accumulator
     — never the p×p Gram. Driver algebra (the same affine identities as the
-    fused Gram kernels) yields impute means, weighted means, x_ss, xy_cov,
-    y_ss and the unweighted centered sumsq used for constant-column
-    pruning."""
+    augmented-accumulator kernels) yields impute means, weighted means,
+    x_ss, xy_cov, y_ss and the unweighted centered sumsq used for
+    constant-column pruning."""
     p = len(feature_cols)
-    cols = list(feature_cols)
     HAS_Y = y_col is not None
-    wname = weight_col
-
-    proj = [F.col(c).cast("double").alias(c) for c in cols]
-    if HAS_Y:
-        proj.append(F.col(y_col).cast("double").alias("_y_"))
-    if wname:
-        proj.append(F.col(wname).cast("double").alias("_w_"))
-    dfp = df.select(*proj)
+    dfp = _project(df, feature_cols, _y_=y_col, _w_=weight_col)
+    wkey = "_w_" if weight_col else None
 
     st_len = (2 * p + 1) + 5 * p + 1
     # acc: [sw, st(st_len), rawsum(p), nfin(p), sumq(p), sumsqq(p), ybad, n]
@@ -817,29 +763,12 @@ def moments_singlepass_pass(
             if not b.num_rows:
                 continue
             nonempty = True
-            X = _batch_cols(b, cols)
-            y = (
-                np.asarray(
-                    b.column(b.schema.get_field_index("_y_")).to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                )
-                if HAS_Y
-                else np.zeros(X.shape[0])
-            )
-            w = (
-                np.asarray(
-                    b.column(b.schema.get_field_index("_w_")).to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                )
-                if wname
-                else np.ones(X.shape[0])
-            )
-            fin = np.isfinite(X)
-            Xz = np.where(fin, X, 0.0)
-            rawsum += Xz.sum(axis=0)
-            nfin += fin.sum(axis=0)
-            # Xz already zero where non-finite; no mask multiply needed
-            Aq = _quantize(Xz, quantize_f32)
+            X = _batch_cols(b, feature_cols)
+            y = _batch_vec(b, "_y_") if HAS_Y else np.zeros(X.shape[0])
+            w = _batch_vec(b, wkey)
+            fin, Aq, rs, nf = _finite_split(X, quantize_f32)
+            rawsum += rs
+            nfin += nf
             sumq += Aq.sum(axis=0)
             sumsqq += (Aq * Aq).sum(axis=0)
             if HAS_Y:
@@ -877,11 +806,7 @@ def moments_singlepass_pass(
         )
         return np.concatenate([[sw_m], st_m, a[1 + st_len :] + b[1 + st_len :]])
 
-    total = _merge_collect(
-        dfp.mapInArrow(mapper, _ACC_SCHEMA), df.rdd.getNumPartitions(), merge_two
-    )
-    if total is None:
-        total = np.zeros(out_len)
+    total = _scan(dfp, df.rdd.getNumPartitions(), mapper, merge_two, out_len)
 
     sw = float(total[0])
     st = total[1 : 1 + st_len]
@@ -900,10 +825,7 @@ def moments_singlepass_pass(
     Cfy = st[o + 4 * p : o + 5 * p]
     Cyy = float(st[o + 5 * p])
 
-    impute_means = _quantize(
-        np.where(nfin > 0, rawsum / np.maximum(nfin, 1), 0.0), quantize_f32
-    )
-    m = impute_means
+    m = _impute_means(rawsum, nfin, quantize_f32)
     # affine identities: x_imp = a + m(1−f) ⇒ shifts vanish in covariances
     x_ss = Caa - 2.0 * m * Caf + m * m * Cff
     xy_cov = Cay - m * Cfy
@@ -912,7 +834,7 @@ def moments_singlepass_pass(
     # non-finite entries contribute exactly 0 (imputed to m)
     x_ss_unw = sumsqq - 2.0 * m * sumq + m * m * nfin
     return {
-        "impute_means": impute_means,
+        "impute_means": m,
         "col_wmeans": col_wmeans,
         "sw": np.float64(sw),
         "n": n,
@@ -925,115 +847,9 @@ def moments_singlepass_pass(
     }
 
 
-def class_moments_singlepass_pass(
-    df: DataFrame,
-    feature_cols: list[str],
-    ycode_col: str,
-    n_classes: int,
-    weight_col: str | None = None,
-    quantize_f32: bool = True,
-) -> dict:
-    """The O(C·p) classification moments scan (no Gram): per-class CENTERED
-    weighted blocks of the indicator pair ``(f⊙x_q, f)`` (per-batch
-    centering + Chan merge — stable at any |mean|/std, unlike the raw
-    Σw·a² sums this replaced) plus exact f64 finite sums; the ANOVA
-    moments follow from the same affine identities as the fused
-    classification kernel (``_class_anova_moments``)."""
-    p = len(feature_cols)
-    C_CLS = int(n_classes)
-    cols = list(feature_cols)
-    wname = weight_col
-
-    proj = [F.col(c).cast("double").alias(c) for c in cols]
-    proj.append(F.col(ycode_col).cast("double").alias("_yc_"))
-    if wname:
-        proj.append(F.col(wname).cast("double").alias("_w_"))
-    dfp = df.select(*proj)
-
-    cls_block = 1 + 5 * p
-    # acc: [rawsum(p), nfin(p), n, per-class centered blocks (C×cls_block)]
-    out_len = 2 * p + 1 + C_CLS * cls_block
-
-    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rawsum = np.zeros(p)
-        nfin = np.zeros(p)
-        n = 0.0
-        cls = np.zeros((C_CLS, cls_block))
-        nonempty = False
-        for b in batches:
-            if not b.num_rows:
-                continue
-            nonempty = True
-            X = _batch_cols(b, cols)
-            yc = np.asarray(
-                b.column(b.schema.get_field_index("_yc_")).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            w = (
-                np.asarray(
-                    b.column(b.schema.get_field_index("_w_")).to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                )
-                if wname
-                else np.ones(X.shape[0])
-            )
-            fin = np.isfinite(X)
-            Xz = np.where(fin, X, 0.0)
-            rawsum += Xz.sum(axis=0)
-            nfin += fin.sum(axis=0)
-            n += X.shape[0]
-            # Xz already zero where non-finite; no mask multiply needed
-            Xq = _quantize(Xz, quantize_f32)
-            ok = np.isfinite(yc)
-            yi = yc[ok].astype(np.int64)
-            Xo, fo, wo = Xq[ok], fin[ok].astype(np.float64), w[ok]
-            for c in np.unique(yi):
-                if not (0 <= c < C_CLS):
-                    continue
-                m_ = yi == c
-                swb_c, stb = _class_batch_block(Xo[m_], fo[m_], wo[m_], p)
-                _class_block_merge(cls, c, swb_c, stb, p)
-        if nonempty:
-            acc = np.concatenate([rawsum, nfin, [n], cls.ravel()])
-            yield _acc_batch(acc)
-
-    def merge_two(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-        head = a[: 2 * p + 1] + b[: 2 * p + 1]  # raw sums, finite counts, n
-        cls_m = _class_blocks_merge(
-            a[2 * p + 1 :].reshape(C_CLS, cls_block),
-            b[2 * p + 1 :].reshape(C_CLS, cls_block),
-            p,
-        )
-        return np.concatenate([head, cls_m.ravel()])
-
-    total = _merge_collect(
-        dfp.mapInArrow(mapper, _ACC_SCHEMA), df.rdd.getNumPartitions(), merge_two
-    )
-    if total is None:
-        total = np.zeros(out_len)
-
-    rawsum, nfin, n = total[:p], total[p : 2 * p], float(total[2 * p])
-    cls = total[2 * p + 1 :].reshape(C_CLS, cls_block)
-    impute_means = _quantize(
-        np.where(nfin > 0, rawsum / np.maximum(nfin, 1), 0.0), quantize_f32
-    )
-    m = impute_means
-    class_w = cls[:, 0]
-    sw = float(class_w.sum())
-    # global weighted mean of the imputed columns from the class blocks
-    mu_imp_c = cls[:, 1 : 1 + p] + m[None, :] * (1.0 - cls[:, 1 + p : 1 + 2 * p])
-    col_wmeans = (class_w @ mu_imp_c) / sw if sw > 0 else np.zeros(p)
-    class_w, B, A = _class_anova_moments(cls, m, col_wmeans, p)
-    return {
-        "sw": np.float64(sw),
-        "n": n,
-        "impute_means": impute_means,
-        "col_wmeans": col_wmeans,
-        "class_w": class_w,
-        "B": B,
-        "A": A,
-    }
-
+# ---------------------------------------------------------------------------
+# Gram scans on driver-standardized columns
+# ---------------------------------------------------------------------------
 
 def gram_pass(
     df: DataFrame,
@@ -1061,35 +877,17 @@ def gram_pass(
     mq = np.asarray(impute_means, dtype=np.float64)
     HAS_Y = y_col is not None
     q = p + (1 if HAS_Y else 0)
-
-    # mapInArrow cannot column-prune: project exactly what the kernel reads
-    proj = [F.col(c).cast("double").alias(c) for c in cols]
-    if weight_col:
-        proj.append(F.col(weight_col).cast("double").alias(weight_col))
-    if HAS_Y:
-        proj.append(F.col(y_col).cast("double").alias(y_col))
-    df = df.select(*proj)
+    dfp = _project(df, cols, _w_=weight_col, _y_=y_col)
+    wkey = "_w_" if weight_col else None
 
     def term(batch: pa.RecordBatch) -> np.ndarray:
         X = _batch_cols(batch, cols)
-        n = X.shape[0]
-        w = (
-            np.asarray(
-                batch.column(batch.schema.get_field_index(weight_col)).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            if weight_col
-            else np.ones(n)
-        )
+        w = _batch_vec(batch, wkey)
         fin = np.isfinite(X)
         Xq = np.where(fin, _quantize(np.where(fin, X, 0.0), quantize_f32), mq[None, :])
         Z = (Xq - mu[None, :]) / sd[None, :]
         if HAS_Y:
-            y = np.asarray(
-                batch.column(batch.schema.get_field_index(y_col)).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            zy = (_quantize(y, quantize_f32) - y_wmean) / y_wstd
+            zy = (_quantize(_batch_vec(batch, "_y_"), quantize_f32) - y_wmean) / y_wstd
             Z = np.column_stack([Z, zy])
         G = Z.T @ (Z * w[:, None])
         out = np.empty(q * q + 1, dtype=np.float64)
@@ -1097,7 +895,7 @@ def gram_pass(
         out[q * q] = w.sum()
         return out
 
-    acc = arrow_reduce(df, term, q * q + 1)
+    acc = arrow_reduce(dfp, term, q * q + 1)
     G = acc[: q * q].reshape(q, q)
     sw = float(acc[q * q])
     return _finish_gram(G, sw, p, HAS_Y, clip, normalize)
@@ -1156,29 +954,15 @@ def r_vector_pass(
     """
     p = len(feature_cols)
     cols = list(feature_cols)
-    proj = [F.col(c).cast("double").alias(c) for c in cols]
-    proj.append(F.col(y_col).cast("double").alias(y_col))
-    if weight_col:
-        proj.append(F.col(weight_col).cast("double").alias(weight_col))
-    dfp = df.select(*proj)
+    dfp = _project(df, cols, _y_=y_col, _w_=weight_col)
+    wkey = "_w_" if weight_col else None
 
     def term(batch: pa.RecordBatch) -> np.ndarray:
         X = _batch_cols(batch, cols)
-        n = X.shape[0]
-        w = (
-            np.asarray(
-                batch.column(batch.schema.get_field_index(weight_col)).to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            )
-            if weight_col
-            else np.ones(n)
-        )
+        w = _batch_vec(batch, wkey)
         fin = np.isfinite(X)
         Z = np.where(fin, _quantize(np.where(fin, X, 0.0), quantize_f32), 0.0)
-        y = np.asarray(
-            batch.column(batch.schema.get_field_index(y_col)).to_numpy(zero_copy_only=False),
-            dtype=np.float64,
-        )
+        y = _batch_vec(batch, "_y_")
         zy = _quantize(np.where(np.isfinite(y), y, 0.0), quantize_f32)
         wzy = w * zy
         out = np.empty(p + 2, dtype=np.float64)

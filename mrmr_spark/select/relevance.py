@@ -13,6 +13,12 @@ formulas and every numerical guard replicate the reference exactly:
   NOTE the reference ignores sample weights here; so do we.
 - rf relevance (relevance.py:134-161): random-forest impurity importances
   (approximate tier: Spark ML RF, not sklearn — set-level parity only).
+
+The driver algebra that finishes the scans lives here once and is shared
+with ``cache`` and ``autok``: the F-score (``_f_scores``), the
+standardization of a centered imputed Gram into stds, R and r_y
+(``_standardized_corr``, ``_weighted_stds``) and the non-finite-y check
+(``_require_finite_y``).
 """
 
 from __future__ import annotations
@@ -24,13 +30,53 @@ from pyspark.sql import functions as F
 from mrmr_spark.select import kernels
 
 
-def _require_finite_y(stats: dict) -> None:
-    """Reference y-validation (/root/reference/sift/_preprocess.py:199-201),
-    enforced from a counter folded into the existing moment pass — no extra
-    scan. Without it a non-finite y would NaN-poison every score (silently
-    empty selection)."""
-    if float(stats.get("y_nonfinite", 0.0)) > 0:
+def _require_finite_y(n_nonfinite: float) -> None:
+    """Reference y-validation (/root/reference/sift/_preprocess.py:199-201)
+    from a non-finite-y count that rides an existing scan (the gaussian
+    path counts it with one small aggregate over its persisted cache
+    source). Without it a non-finite y would NaN-poison every score
+    (silently empty selection) or, through the copula, be ranked as an
+    ordinary value."""
+    if float(n_nonfinite) > 0:
         raise ValueError("Non-finite values in y are not allowed for regression.")
+
+
+def _f_scores(x_ss: np.ndarray, xy: np.ndarray, y_ss: float, sw) -> np.ndarray:
+    """f_regression from centered moments: weighted Pearson r per column,
+    F = r²/(1−r²)·(Σw − 2), r² clipped at 0.99999, zero-variance → 0."""
+    scores = np.zeros(len(x_ss), dtype=np.float64)
+    ok = (x_ss >= 1e-12) & (y_ss >= 1e-12)
+    r = np.zeros_like(scores)
+    # errstate: an empty frame (sw = 0) degrades to nan statistics by
+    # design — silence only the intended invalid/zero divides
+    with np.errstate(invalid="ignore", divide="ignore"):
+        r[ok] = xy[ok] / np.sqrt(x_ss[ok] * y_ss)
+        r2 = np.minimum(r * r, 0.99999)
+        scores[ok] = (r2[ok] / (1.0 - r2[ok])) * (sw - 2.0)
+    return scores
+
+
+def _weighted_stds(ss, sw):
+    """Weighted std ``sqrt(ss/Σw)`` per column (or of one scalar sum of
+    squares); 1 where the variance is ≤ 1e-12, so a constant column is
+    left unscaled."""
+    with np.errstate(invalid="ignore", divide="ignore"):  # sw=0 nan-degrade
+        var = ss / sw
+        return np.where(var > 1e-12, np.sqrt(var), 1.0)
+
+
+def _standardized_corr(C: np.ndarray, sw, c_y=None, y_ss=None) -> dict:
+    """Standardization of a centered imputed Gram (z = (x−μ)/σ): the
+    weighted stds from its diagonal and ``R = ½(C+Cᵀ)/(σσᵀ·Σw)``; given
+    the y-covariances ``c_y`` and y's sum of squares, also ``y_wstd`` and
+    the feature↔target correlations ``r_y``."""
+    wstds = _weighted_stds(np.diag(C), sw)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        out = {"wstds": wstds, "R": 0.5 * (C + C.T) / (np.outer(wstds, wstds) * sw)}
+        if c_y is not None:
+            out["y_wstd"] = float(_weighted_stds(y_ss, sw))
+            out["r_y"] = c_y / (wstds * out["y_wstd"] * sw)
+    return out
 
 
 def f_regression_scores(
@@ -40,40 +86,24 @@ def f_regression_scores(
     weight_col: str | None = None,
     quantize_f32: bool = True,
 ) -> dict:
-    """Returns {'scores', 'x_ss', 'xy_cov', 'y_ss', 'sw', 'wmeans',
-    'wstds', 'impute_means', ...} from ONE O(p)-accumulator Arrow scan
-    (kernels.moments_singlepass_pass) — the moments are reused by the Gram
-    pass so the full classic-mRMR pipeline costs exactly 2 scans."""
+    """Returns {'scores', 'sw', 'wmeans', 'wstds', 'impute_means', ...}
+    from ONE O(p)-accumulator Arrow scan (kernels.moments_singlepass_pass)
+    — the moments are reused by the Gram pass so the full classic-mRMR
+    pipeline costs exactly 2 scans."""
     p1 = kernels.moments_singlepass_pass(
         df, feature_cols, y_col, weight_col, quantize_f32
     )
+    _require_finite_y(p1["y_nonfinite"])
     sw = p1["sw"]
-    y_wmean = p1["wy"] / sw
-    x_ss, xy, y_ss = p1["x_ss"], p1["xy_cov"], p1["y_ss"]
-    x_ss_unw = p1["x_ss_unw"]
-
-    _require_finite_y(p1)
-    scores = np.zeros(len(feature_cols), dtype=np.float64)
-    ok = (x_ss >= 1e-12) & (y_ss >= 1e-12)
-    r = np.zeros_like(scores)
-    # errstate: an empty frame (sw = 0) degrades to nan statistics by
-    # design — silence only the intended invalid/zero divides
-    with np.errstate(invalid="ignore", divide="ignore"):
-        r[ok] = xy[ok] / np.sqrt(x_ss[ok] * y_ss)
-        r2 = np.minimum(r * r, 0.99999)
-        scores[ok] = (r2[ok] / (1.0 - r2[ok])) * (sw - 2.0)
-        var = x_ss / sw
-        wstds = np.where(var > 1e-12, np.sqrt(var), 1.0)
-        y_var = y_ss / sw
     return {
-        "scores": scores,
+        "scores": _f_scores(p1["x_ss"], p1["xy_cov"], p1["y_ss"], sw),
         "sw": sw,
         "wmeans": p1["col_wmeans"],
-        "wstds": wstds,
+        "wstds": _weighted_stds(p1["x_ss"], sw),
         "impute_means": p1["impute_means"],
-        "y_wmean": y_wmean,
-        "y_wstd": float(np.sqrt(y_var)) if y_var > 1e-12 else 1.0,
-        "x_ss_unw": x_ss_unw,
+        "y_wmean": p1["wy"] / sw,
+        "y_wstd": float(_weighted_stds(p1["y_ss"], sw)),
+        "x_ss_unw": p1["x_ss_unw"],
         "n": p1["n"],
         "pass1": p1,
     }
@@ -98,70 +128,44 @@ def fused_regression_stats(
       (kernels.moments_singlepass_pass), pass 2 = the Arrow centered Gram
       scan (kernels.gram_pass); the caller persists the matrix between
       passes.
-    - ``single_pass=True``: ONE ``mapInArrow`` scan via the
-      indicator-augmented Gram (kernels.fused_singlepass_stats) — NO
-      persist needed; the caller should NOT cache. Halves memory traffic:
-      the columnar cache encode it avoids is the dominant phase of the e2e
-      pipeline at scale.
+    - ``single_pass=True``: ONE ``mapInArrow`` scan — the augmented
+      accumulator of ``kernels.fused_foldwise_stats`` with a single
+      literal fold. NO persist needed; the caller should NOT cache. Halves
+      memory traffic: the columnar cache encode it avoids is the dominant
+      phase of the e2e pipeline at scale.
     """
     if single_pass:
-        st = kernels.fused_singlepass_stats(
-            df, feature_cols, y_col, weight_col, quantize_f32
+        accs = kernels.fused_foldwise_stats(
+            df, feature_cols, y_col, F.lit(0), 1, weight_col, quantize_f32
         )
-        sw, y_wmean = st["sw"], st["y_wmean"]
-        C, c_y, y_ss = st["C"], st["c_y"], st["c_yy"]
-        col_wmeans, impute_means, n = st["col_wmeans"], st["impute_means"], st["n"]
-        p1 = st
+        p1 = kernels._finish_fused_acc(accs[0], len(feature_cols), quantize_f32)
+        C, c_y, y_ss, y_wmean = p1["C"], p1["c_y"], p1["c_yy"], p1["y_wmean"]
     else:
         p1 = kernels.moments_singlepass_pass(
             df, feature_cols, y_col, weight_col, quantize_f32
         )
-        sw = p1["sw"]
-        y_wmean = p1["wy"] / sw
+        y_wmean = p1["wy"] / p1["sw"]
         cg = kernels.gram_pass(
             df, feature_cols, weight_col, p1["impute_means"], p1["col_wmeans"],
             np.ones(len(feature_cols)), y_col=y_col, y_wmean=y_wmean,
             quantize_f32=quantize_f32, clip=None, normalize=False,
         )
         C, c_y, y_ss = cg["C"], cg["c_y"], cg["c_yy"]
-        col_wmeans, impute_means, n = p1["col_wmeans"], p1["impute_means"], p1["n"]
 
-    _require_finite_y(p1)
-    x_ss = np.diag(C).copy()
-    xy = c_y
-
-    p = len(feature_cols)
-    scores = np.zeros(p, dtype=np.float64)
-    ok = (x_ss >= 1e-12) & (y_ss >= 1e-12)
-    r = np.zeros(p)
-    # errstate: an empty frame (sw = 0) degrades to nan statistics by
-    # design — silence only the intended invalid/zero divides
-    with np.errstate(invalid="ignore", divide="ignore"):
-        r[ok] = xy[ok] / np.sqrt(x_ss[ok] * y_ss)
-        r2 = np.minimum(r * r, 0.99999)
-        scores[ok] = (r2[ok] / (1.0 - r2[ok])) * (sw - 2.0)
-
-        var = x_ss / sw
-        wstds = np.where(var > 1e-12, np.sqrt(var), 1.0)
-        y_var = y_ss / sw
-        y_wstd = float(np.sqrt(y_var)) if y_var > 1e-12 else 1.0
-
-        # standardized correlation structures (driver algebra, z = (x−μ)/σ)
-        denom = np.outer(wstds, wstds) * sw
-        R = 0.5 * (C + C.T) / denom
-        r_y_vec = c_y / (wstds * y_wstd * sw)
-
+    _require_finite_y(p1["y_nonfinite"])
+    sw = p1["sw"]
+    std = _standardized_corr(C, sw, c_y, y_ss)
     return {
-        "scores": scores,
+        "scores": _f_scores(np.diag(C), c_y, y_ss, sw),
         "sw": sw,
-        "wmeans": col_wmeans,
-        "wstds": wstds,
-        "impute_means": impute_means,
+        "wmeans": p1["col_wmeans"],
+        "wstds": std["wstds"],
+        "impute_means": p1["impute_means"],
         "y_wmean": y_wmean,
-        "y_wstd": y_wstd,
-        "n": n,
-        "R": R,
-        "r_y": r_y_vec,
+        "y_wstd": std["y_wstd"],
+        "n": p1["n"],
+        "R": std["R"],
+        "r_y": std["r_y"],
         "pass1": p1,
     }
 
@@ -196,30 +200,24 @@ def fused_classification_stats(
     """Fused classification fast path: ONE no-persist Arrow scan
     (kernels.fused_singlepass_class_stats) yields the weighted-ANOVA F
     relevance AND the full |corr| redundancy matrix — the classification
-    twin of ``fused_regression_stats(single_pass=True)``. Statistic parity
-    with the persisted multi-pass path at float64 rounding."""
+    counterpart of ``fused_regression_stats(single_pass=True)``. Statistic
+    parity with the persisted multi-pass path at float64 rounding."""
     st = kernels.fused_singlepass_class_stats(
         df, feature_cols, ycode_col, n_classes, weight_col, quantize_f32
     )
     sw = st["sw"]
-    scores, ssb, ssw = _anova_f_from_moments(
+    scores, _, _ = _anova_f_from_moments(
         st["A"], st["B"], st["class_w"], sw, n_classes
     )
-    C = st["C"]
-    x_ss = np.diag(C).copy()
-    with np.errstate(invalid="ignore", divide="ignore"):  # sw=0 nan-degrade
-        var = x_ss / sw
-        wstds = np.where(var > 1e-12, np.sqrt(var), 1.0)
-        denom = np.outer(wstds, wstds) * sw
-        R = 0.5 * (C + C.T) / denom
+    std = _standardized_corr(st["C"], sw)
     return {
         "scores": scores,
         "sw": sw,
         "wmeans": st["col_wmeans"],
-        "wstds": wstds,
+        "wstds": std["wstds"],
         "impute_means": st["impute_means"],
         "n": st["n"],
-        "R": R,
+        "R": std["R"],
         "class_w": st["class_w"],
     }
 
@@ -244,14 +242,12 @@ def f_classif_scores(
         A, B, class_w, sw, n_classes
     )
 
-    # weighted variance for downstream standardization: total SS = SSB + SSW
-    var = (ss_between + ss_within) / sw
-    wstds = np.where(var > 1e-12, np.sqrt(var), 1.0)
     return {
         "scores": scores,
         "sw": sw,
         "wmeans": cm["col_wmeans"],
-        "wstds": wstds,
+        # weighted std for downstream standardization: total SS = SSB + SSW
+        "wstds": _weighted_stds(ss_between + ss_within, sw),
         "impute_means": cm["impute_means"],
         "n": cm["n"],
         "pass1": cm,

@@ -446,7 +446,7 @@ def test_regression_loss_pass_parity(spark):
     loss of every fold (same impute/standardize/GEMM algebra, float64),
     skipping rows with a NaN target, a null fold or an out-of-range
     fold."""
-    from mrmr_spark.select.autok import _grouped_regression_loss_pass
+    from mrmr_spark.select.autok import _grouped_loss_pass, _ridge_row_loss
 
     rng = np.random.default_rng(11)
     n, p, M, S = 400, 6, 9, 3
@@ -468,8 +468,8 @@ def test_regression_loss_pass_parity(spark):
     B = rng.normal(size=(S, p, M))
 
     for metric in ("rmse", "mae"):
-        got = _grouped_regression_loss_pass(
-            df, cols, "y", "w", "fold", imput, mu, sd, ym, B, metric
+        got = _grouped_loss_pass(
+            df, cols, "y", "w", "fold", imput, mu, sd, M, _ridge_row_loss(ym, B, metric)
         )
         assert got.shape == (S, M)
         for f in range(S):
@@ -481,7 +481,7 @@ def test_regression_loss_pass_parity(spark):
 
 
 def test_classification_loss_pass_parity(spark):
-    from mrmr_spark.select.autok import _grouped_classification_loss_pass
+    from mrmr_spark.select.autok import _grouped_loss_pass, _softmax_row_loss
 
     rng = np.random.default_rng(12)
     n, p, M, C, S = 300, 5, 4, 3, 3
@@ -501,10 +501,11 @@ def test_classification_loss_pass_parity(spark):
     Ws = rng.normal(size=(S, p, M * C))
     bs = rng.normal(size=(S, M * C))
 
-    got_ll = _grouped_classification_loss_pass(
-        df, cols, "yc", "w", "fold", imput, mu, sd, Ws, bs, C, "logloss")
-    got_er = _grouped_classification_loss_pass(
-        df, cols, "yc", "w", "fold", imput, mu, sd, Ws, bs, C, "error")
+    got_ll, got_er = (
+        _grouped_loss_pass(df, cols, "yc", "w", "fold", imput, mu, sd, M,
+                           _softmax_row_loss(Ws, bs, C, metric))
+        for metric in ("logloss", "error")
+    )
     for f in range(S):
         sel = (fold == f) & np.isfinite(y)
         yi = y[sel].astype(np.int64)

@@ -2,11 +2,12 @@
 numpy oracles on randomized small matrices (SURVEY §5 strategy, extended
 from the fixed-fixture parity suites to generated inputs).
 
-These target the round-4 shared-scan algebra specifically: the
-indicator-augmented fused accumulator (``fused_singlepass_stats``), its
-fold-keyed twin + leave-one-fold-out Chan merges (``fused_foldwise_stats``
-/ ``finish_loo_stats``), the Gram reduction, the O(p) r-vector pass, and
-the fold-grouped all-models loss passes. Randomized NaN/±inf patterns, row
+These target the shared-scan algebra specifically: the
+indicator-augmented accumulator (``fused_foldwise_stats``) in its unkeyed
+one-fold form (``fused_regression_stats(single_pass=True)``) and keyed with
+leave-one-fold-out Chan merges (``finish_loo_stats``), the Gram reduction,
+the O(p) r-vector pass, and the fold-grouped all-models loss pass with its
+ridge and softmax row losses. Randomized NaN/±inf patterns, row
 weights, partition splits and fold taggings are exactly the inputs where
 the affine-imputation / Chan-merge algebra could silently drift from the
 two-pass definition; the oracles below compute the statistics the naive
@@ -24,6 +25,12 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from mrmr_spark.select import kernels
+from mrmr_spark.select.autok import (
+    _grouped_loss_pass,
+    _ridge_row_loss,
+    _softmax_row_loss,
+)
+from mrmr_spark.select.relevance import fused_regression_stats
 
 SET = settings(
     max_examples=6,
@@ -113,10 +120,10 @@ def test_fused_singlepass_matches_numpy(sp, params):
     n, p, seed, nan_rate, weighted, parts = params
     X, y, w = make_matrix(n, p, seed, nan_rate, weighted)
     sdf = to_sdf(sp, X, y, w, parts)
-    got = kernels.fused_singlepass_stats(
+    got = fused_regression_stats(
         sdf, [f"x{j}" for j in range(p)], "y",
-        "w" if weighted else None, quantize_f32=False,
-    )
+        "w" if weighted else None, quantize_f32=False, single_pass=True,
+    )["pass1"]
     assert_stats_close(got, np_imputed_stats(X, y, w))
 
 
@@ -125,27 +132,39 @@ def test_fused_singlepass_matches_numpy(sp, params):
 def test_foldwise_loo_matches_subset(sp, params, n_folds):
     """finish_loo_stats(v) over the fold-keyed accumulators must equal the
     naive statistics of exactly the rows whose fold != v — the LOO Chan
-    merge is the trickiest new algebra of the shared-scan auto-k."""
+    merge is the trickiest algebra of the shared-scan auto-k. Run on
+    randomly partitioned rows (masked per-fold blocks) and on a frame
+    whose every batch holds a single fold (the whole-batch branch)."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
     n, p, seed, nan_rate, weighted, parts = params
     X, y, w = make_matrix(n, p, seed, nan_rate, weighted)
     rng = np.random.default_rng(seed + 1)
     fold = rng.integers(0, n_folds, size=n)
     sdf = to_sdf(sp, X, y, w, parts, extra={"_fold": fold})
-    accs = kernels.fused_foldwise_stats(
-        sdf, [f"x{j}" for j in range(p)], "y", "_fold", n_folds,
-        "w" if weighted else None, quantize_f32=False,
+    one_fold_batches = reduce(
+        DataFrame.union,
+        [sdf.where(F.col("_fold") == f).coalesce(1) for f in range(n_folds)],
     )
-    # per-fold occupancy tail == raw row counts
-    np.testing.assert_array_equal(
-        accs[:, -1], np.bincount(fold, minlength=n_folds).astype(float)
-    )
-    for v in range(n_folds):
-        tr = fold != v
-        got = kernels.finish_loo_stats(accs, v, p, quantize_f32=False)
-        if not tr.any():
-            assert float(got["sw"]) == 0.0
-            continue
-        assert_stats_close(got, np_imputed_stats(X[tr], y[tr], w[tr]))
+    for frame in (sdf, one_fold_batches):
+        accs = kernels.fused_foldwise_stats(
+            frame, [f"x{j}" for j in range(p)], "y", "_fold", n_folds,
+            "w" if weighted else None, quantize_f32=False,
+        )
+        # per-fold occupancy tail == raw row counts
+        np.testing.assert_array_equal(
+            accs[:, -1], np.bincount(fold, minlength=n_folds).astype(float)
+        )
+        for v in range(n_folds):
+            tr = fold != v
+            got = kernels.finish_loo_stats(accs, v, p, quantize_f32=False)
+            if not tr.any():
+                assert float(got["sw"]) == 0.0
+                continue
+            assert_stats_close(got, np_imputed_stats(X[tr], y[tr], w[tr]))
 
 
 @SET
@@ -213,8 +232,6 @@ def test_regression_loss_pass_matches_numpy(sp, params, n_models, n_folds):
     including the non-finite-y row mask (a NaN y row must drop out
     entirely instead of poisoning every model's accumulated loss) and
     rows whose fold is null or out of range (skipped)."""
-    from mrmr_spark.select.autok import _grouped_regression_loss_pass
-
     n, p, seed, nan_rate, weighted, parts = params
     X, y, w = make_matrix(n, p, seed, nan_rate, weighted)
     rng = np.random.default_rng(seed + 2)
@@ -227,9 +244,9 @@ def test_regression_loss_pass_matches_numpy(sp, params, n_models, n_folds):
     tags, fold = fold_tags(rng, n, n_folds)
     sdf = to_sdf(sp, X, y, w, parts, extra={"_fold": tags})
     for metric in ("rmse", "mae"):
-        got = _grouped_regression_loss_pass(
+        got = _grouped_loss_pass(
             sdf, [f"x{j}" for j in range(p)], "y", "w" if weighted else None,
-            "_fold", imput, mu, sd, y_wmean, B, metric,
+            "_fold", imput, mu, sd, n_models, _ridge_row_loss(y_wmean, B, metric),
         )
         for f in range(n_folds):
             ok = (fold == f) & np.isfinite(y)
@@ -251,8 +268,6 @@ def test_classification_loss_pass_matches_numpy(sp, params, n_classes, n_models,
     """The fold-grouped all-models softmax loss pass (logloss + error) vs
     numpy per fold, with NaN-label holes and null/out-of-range folds
     (both skipped)."""
-    from mrmr_spark.select.autok import _grouped_classification_loss_pass
-
     n, p, seed, nan_rate, weighted, parts = params
     X, _, w = make_matrix(n, p, seed, nan_rate, weighted)
     rng = np.random.default_rng(seed + 3)
@@ -266,9 +281,10 @@ def test_classification_loss_pass_matches_numpy(sp, params, n_classes, n_models,
     tags, fold = fold_tags(rng, n, n_folds)
     sdf = to_sdf(sp, X, y, w, parts, extra={"_fold": tags})
     for metric in ("logloss", "error"):
-        got = _grouped_classification_loss_pass(
+        got = _grouped_loss_pass(
             sdf, [f"x{j}" for j in range(p)], "y", "w" if weighted else None,
-            "_fold", imput, mu, sd, Ws, bs, n_classes, metric,
+            "_fold", imput, mu, sd, n_models,
+            _softmax_row_loss(Ws, bs, n_classes, metric),
         )
         for f in range(n_folds):
             ok = (fold == f) & np.isfinite(y)

@@ -825,7 +825,6 @@ def test_fused_kernels_tree_combine_many_partitions(spark):
     # split at 8 partitions (NaN contamination included)
     from pyspark.sql import functions as F
 
-    from mrmr_spark.select import kernels
     from mrmr_spark.select.kernels import fused_foldwise_stats, finish_loo_stats
 
     n_folds = 3
@@ -836,10 +835,10 @@ def test_fused_kernels_tree_combine_many_partitions(spark):
     accs = fused_foldwise_stats(folded, cols, "y", "_fold", n_folds, None,
                                 quantize_f32=False)
     st = finish_loo_stats(accs, 0, p, quantize_f32=False)
-    direct = kernels.fused_singlepass_stats(
+    direct = fused_regression_stats(
         folded.where(F.col("_fold") != 0).repartition(8), cols, "y", None,
-        quantize_f32=False,
-    )
+        quantize_f32=False, single_pass=True,
+    )["pass1"]
     for key in ("impute_means", "col_wmeans", "c_y"):
         np.testing.assert_allclose(st[key], direct[key], rtol=1e-9,
                                    atol=1e-12, err_msg=key)

@@ -476,7 +476,7 @@ def main():
     # numpy, so their plans are invisible from any returned DataFrame. The
     # PLAN_LOG tap records each kernel scan's executed plan at collect time.
     from mrmr_spark.select import kernels as sel_kernels
-    from mrmr_spark.select.api import select_mrmr
+    from mrmr_spark.select.api import select_jmi, select_mrmr
 
     def feature_frame(p: int, n: int = 20_000, classes: int = 0):
         cols = [F.sin(F.col("id") * (j + 1)).alias(f"f{j}") for j in range(p)]
@@ -487,11 +487,12 @@ def main():
     sel_sections = []
     violations = []
 
-    def audit_selection(name, p, expect_scans, expect, classes=0, **kw):
+    def audit_selection(name, p, expect_scans, expect, classes=0,
+                        select=select_mrmr, persisted=False, **kw):
         df, cols = feature_frame(p, classes=classes)
         sel_kernels.PLAN_LOG = []
         try:
-            select_mrmr(df, cols, "y", k=5, subsample=None, **kw)
+            select(df, cols, "y", k=5, subsample=None, **kw)
             scans = [summarize_str(s) for s in sel_kernels.PLAN_LOG]
         finally:
             sel_kernels.PLAN_LOG = None
@@ -504,7 +505,10 @@ def main():
                                   f"saw {m['python_nodes']}")
             if m["exchanges"] + m["range_or_single_exchanges"] > 0:
                 violations.append(f"{name} scan{i}: unexpected exchange")
-            if m["inmemory"] > 0:
+            if persisted and m["inmemory"] == 0:
+                violations.append(f"{name} scan{i}: expected an InMemoryRelation "
+                                  "(the path persists by design)")
+            if not persisted and m["inmemory"] > 0:
                 violations.append(f"{name} scan{i}: unexpected InMemoryRelation "
                                   "(path should run no-persist)")
 
@@ -520,9 +524,22 @@ def main():
         "0 exchanges, 0 InMemoryRelation on either scan")
     audit_selection(
         "select_mrmr fused classification (p=20, default plan)", 20, 1,
-        "single-scan twin of the regression fast path: weighted-ANOVA F "
-        "relevance AND the full |corr| redundancy from ONE MapInArrow scan",
+        "single-scan counterpart of the regression fast path: weighted-ANOVA "
+        "F relevance AND the full |corr| redundancy from ONE MapInArrow scan",
         classes=3, task="classification", relevance="f")
+    audit_selection(
+        "select_mrmr wide classification (p=200: class-moments scan + candidate Gram)",
+        200, 2,
+        "TWO MapInArrow scans over the persisted frame — the O(C·p) "
+        "per-class moments scan (ANOVA F relevance), then the Gram on the "
+        "top_m candidates; the label distinct() reads the lineage a third "
+        "time, so the path persists by design (InMemoryRelation in both)",
+        classes=3, task="classification", relevance="f", persisted=True)
+    audit_selection(
+        "select_jmi r2 (p=20, default plan)", 20, 1,
+        "the same ONE no-persist augmented-accumulator scan as the fused "
+        "mRMR path (relevance, R and r_y together); 0 exchanges",
+        select=select_jmi)
 
     # gaussian cache build: the pruning moments are one Arrow scan at every
     # width; it reads the source the cache persists (its own pin)
@@ -615,7 +632,8 @@ def main():
         "their plans are captured at collect time. Every moments and Gram scan",
         "is a MapInArrow reduction. Asserted per scan: exactly one Python stage",
         "(the Arrow reduction), zero exchanges, and zero InMemoryRelation on the",
-        "no-persist paths (`build_cache` reads the source it persists itself).",
+        "no-persist paths (`build_cache` reads the source it persists itself;",
+        "the wide classification path persists by design and must show it).",
         "",
         "| selection path | scan | hash exch | other exch | codegen spans | python nodes | in-memory |",
         "|---|---|---|---|---|---|---|",
