@@ -66,9 +66,7 @@ def _moments_scan(df: DataFrame, dim: int, emb_col: str) -> tuple[float, np.ndar
         )
         return np.concatenate([[sw], mu, C.ravel()])
 
-    acc = _merge_collect(
-        proj.mapInArrow(mapper, _ACC_SCHEMA), proj.rdd.getNumPartitions(), merge
-    )
+    acc = _merge_collect(proj.mapInArrow(mapper, _ACC_SCHEMA), merge)
     if acc is None:
         raise ValueError("pca: corpus has no rows — cannot fit moments")
     return float(acc[0]), acc[1 : 1 + dim], acc[1 + dim :].reshape(dim, dim)

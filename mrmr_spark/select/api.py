@@ -30,6 +30,7 @@ from mrmr_spark.select.preprocess import (
     deterministic_subsample,
     ensure_weight_column,
     factorize_target,
+    private_plan,
 )
 
 
@@ -144,7 +145,7 @@ def select_mrmr(
     if estimator == "gaussian" and task != "regression":
         raise ValueError("estimator='gaussian' is regression-only; use 'classic'.")
     if k == "auto":
-        from mrmr_spark.select.autok import AutoKConfig, select_k_evaluate
+        from mrmr_spark.select.autok import AutoKConfig, check_config, select_k_evaluate
 
         cfg = auto_k_config or AutoKConfig(
             strategy="time_holdout" if time_col else "group_cv"
@@ -167,6 +168,7 @@ def select_mrmr(
             res.names = res.names[:kk]
             res.indices = res.indices[:kk]
             return res
+        check_config(cfg, task, group_col, time_col)
         res = select_mrmr(
             df, feature_cols, target_col, cfg.max_k, task=task,
             weight_col=weight_col, relevance=relevance, estimator=estimator,
@@ -219,7 +221,7 @@ def select_mrmr(
                 df, feature_cols, target_col, wcol, quantize_f32, single_pass=True
             )
         else:
-            df = df.persist()
+            df = private_plan(df).persist()
             try:
                 stats = rel_est.fused_regression_stats(
                     df, feature_cols, target_col, wcol, quantize_f32
@@ -294,7 +296,7 @@ def select_mrmr(
     # costs two full-source sorts to avoid caching ~subsample rows — so a
     # sampled lineage always persists (the tradeoff inverts).
     do_persist = relevance != "f" or task == "classification" or sampled
-    pinned = df.persist() if do_persist else None
+    pinned = private_plan(df).persist() if do_persist else None
     if pinned is not None:
         df = pinned
     if task == "classification":
@@ -419,7 +421,7 @@ def select_jmi(
     # ksg genuinely re-read (edge/code/histogram scans, driver collect), and
     # a subsampled lineage (global sort-limit) persists — see select_mrmr.
     do_persist = estimator != "r2" or sampled
-    pinned = df.persist() if do_persist else None
+    pinned = private_plan(df).persist() if do_persist else None
     if pinned is not None:
         df = pinned
     labels = None

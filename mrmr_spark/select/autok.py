@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mrmr_spark.select import binning, kernels
+from mrmr_spark.select.api import _check_option
 from mrmr_spark.select.relevance import (
     _require_finite_y,
     _standardized_corr,
@@ -97,15 +98,38 @@ class AutoKConfig:
     seed: int = 42
 
 
+_METRICS = {"regression": ("rmse", "mae"), "classification": ("logloss", "error")}
+
+
 def resolve_metric(metric: str, task: str) -> str:
-    """Replicates reference _resolve_metric (auto_k.py:52-60)."""
+    """Replicates reference _resolve_metric (auto_k.py:52-60), and rejects
+    an unknown name (it would otherwise score as some other metric)."""
     if metric == "auto":
-        return "rmse" if task == "regression" else "logloss"
-    if task == "regression" and metric in ("logloss", "error"):
-        raise ValueError(f"metric='{metric}' is invalid for task='regression'")
-    if task == "classification" and metric in ("rmse", "mae"):
-        raise ValueError(f"metric='{metric}' is invalid for task='classification'")
+        return _METRICS[task][0]
+    _check_option("metric", metric, ("auto",) + sum(_METRICS.values(), ()))
+    if metric not in _METRICS[task]:
+        raise ValueError(f"metric='{metric}' is invalid for task='{task}'")
     return metric
+
+
+def check_config(
+    config: AutoKConfig, task: str, group_col: str | None, time_col: str | None
+) -> str:
+    """Reject a bad evaluate-mode configuration before any Spark job runs;
+    returns the resolved metric."""
+    _check_option("task", task, tuple(_METRICS))
+    _check_option("k_method", config.k_method, ("evaluate", "elbow"))
+    _check_option("strategy", config.strategy, ("time_holdout", "group_cv"))
+    if config.strategy == "time_holdout":
+        if time_col is None:
+            raise ValueError("time_holdout strategy requires time_col")
+        if not 0.0 < config.val_frac < 1.0:
+            raise ValueError(f"time_holdout requires 0 < val_frac < 1, got {config.val_frac}")
+    elif group_col is None:
+        raise ValueError("group_cv strategy requires group_col")
+    elif int(config.n_splits) < 2:
+        raise ValueError(f"group_cv requires n_splits >= 2, got {int(config.n_splits)}")
+    return resolve_metric(config.metric, task)
 
 
 def build_k_grid(min_k: int, max_k: int) -> list[int]:
@@ -546,28 +570,11 @@ def select_k_evaluate(
     """Pick best k over the grid by held-out error (lower is better).
     Regression: closed-form ridge (rmse/mae). Classification: driver
     softmax fit + distributed logloss/error (reference auto_k.py:96-204)."""
-    # bad inputs raise here, before any Spark job
-    if config.strategy == "time_holdout":
-        if time_col is None:
-            raise ValueError("time_holdout strategy requires time_col")
-        if not 0.0 < config.val_frac < 1.0:
-            raise ValueError(
-                f"time_holdout requires 0 < val_frac < 1, got {config.val_frac}"
-            )
-    elif config.strategy == "group_cv":
-        if group_col is None:
-            raise ValueError("group_cv strategy requires group_col")
-        if int(config.n_splits) < 2:
-            raise ValueError(
-                f"group_cv requires n_splits >= 2, got {int(config.n_splits)}"
-            )
-    else:
-        raise ValueError(f"Unknown strategy: {config.strategy}")
+    metric = check_config(config, task, group_col, time_col)
     max_k = min(config.max_k, len(path))
     min_k = max(1, min(config.min_k, max_k))
     k_grid = build_k_grid(min_k, max_k)
     path = path[:max_k]
-    metric = resolve_metric(config.metric, task)
     if not path or not k_grid:
         # nothing to evaluate (empty candidate path, e.g. no feature
         # passed the relevance validity filter)

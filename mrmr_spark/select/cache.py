@@ -23,12 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mrmr_spark.select import kernels, loops
-from mrmr_spark.select.api import SelectionResult, _check_option, _default_top_m
+from mrmr_spark.select.api import SelectionResult, _check_option, _default_top_m, _imputed_expr
 from mrmr_spark.select.copula import rank_gauss_transform
 from mrmr_spark.select.preprocess import (
     assert_numeric,
     deterministic_subsample,
     ensure_weight_column,
+    private_plan,
 )
 from mrmr_spark.select.relevance import _require_finite_y
 
@@ -49,12 +50,6 @@ class FeatureCache:
     def unpersist(self):
         self.src.unpersist()
         self.z.unpersist()
-
-
-def _imputed(c: str, mean: float):
-    col = F.col(c).cast("double")
-    finite = ~F.isnull(col) & ~F.isnan(col) & (F.abs(col) != float("inf"))
-    return F.when(finite, col).otherwise(F.lit(float(mean)))
 
 
 def build_cache(
@@ -96,8 +91,8 @@ def build_cache(
         if row_key_col
         else F.monotonically_increasing_id()
     )
-    src = df.withColumn("weight", wexpr).withColumn(
-        ROW_KEY, rkexpr
+    src = private_plan(
+        df.withColumn("weight", wexpr).withColumn(ROW_KEY, rkexpr)
     ).persist(StorageLevel.MEMORY_AND_DISK)
     n_rows = src.count()  # pin row keys
     if row_key_col is not None:
@@ -124,13 +119,14 @@ def build_cache(
     imputed = src.select(
         ROW_KEY,
         "weight",
-        *[_imputed(c, p1["impute_means"][i]).alias(c) for i, c in zip(valid, valid_names)],
+        *[_imputed_expr(c, p1["impute_means"][i], False).alias(c)
+          for i, c in zip(valid, valid_names)],
     )
     pins: list = []
-    z = rank_gauss_transform(
+    z = private_plan(rank_gauss_transform(
         imputed, valid_names, "weight", ROW_KEY, z_prefix="z_", store_f32=True,
         pin=pins, n_rows=n_rows, driver_max_cells=driver_max_cells,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )).persist(StorageLevel.MEMORY_AND_DISK)
     z.count()
     for dep in pins:  # the ranged melt is only needed until Z materializes
         dep.unpersist()

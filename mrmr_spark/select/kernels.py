@@ -64,11 +64,10 @@ TREE_COMBINE_THRESHOLD = 64
 PLAN_LOG: list[str] | None = None
 
 
-def _acc_batch(acc: np.ndarray, pid: int | None = None) -> pa.RecordBatch:
+def _acc_batch(acc: np.ndarray) -> pa.RecordBatch:
     """One (source-partition-id, accumulator-bytes) row."""
-    if pid is None:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx is not None else 0
     return pa.RecordBatch.from_arrays(
         [pa.array([pid], type=pa.int64()), pa.array([acc.tobytes()])],
         ["pid", "acc"],
@@ -123,11 +122,25 @@ def _fold_rows(fold: np.ndarray, n_folds: int, ok: np.ndarray | None = None):
         yield int(f), valid & (fold_i == f)
 
 
-def _merge_collect(reduced: DataFrame, n_parts: int, merge_two) -> np.ndarray | None:
+def _merge_sorted(pairs, merge_two) -> tuple[int, np.ndarray] | None:
+    """Merge (pid, accumulator bytes) pairs in sorted pid order; returns
+    (min pid, accumulator), or None when there are no pairs."""
+    merged = None
+    for pid, acc in sorted(pairs, key=lambda t: t[0]):
+        cur = np.frombuffer(acc, dtype=np.float64)
+        merged = (pid, cur.copy()) if merged is None else (merged[0], merge_two(merged[1], cur))
+    return merged
+
+
+def _merge_collect(reduced: DataFrame, merge_two) -> np.ndarray | None:
     """Deterministically merge (pid, acc) accumulator rows into one vector.
 
-    Above ``TREE_COMBINE_THRESHOLD`` source partitions, a hash-on-pid
-    executor-side pre-merge keeps the driver collect flat (without it the
+    Everything runs on ``reduced``'s own execution, so the input lineage
+    runs once. (Under AQE, a partition count asked of any other frame first
+    runs the lineage's shuffle stages, and the collect runs them again.)
+
+    Above ``TREE_COMBINE_THRESHOLD`` partitions, executor-side combines of
+    contiguous pid ranges keep the driver collect flat (without them the
     driver collects one accumulator per partition — e.g. ~13 KB × 100k
     partitions ≈ 1.3 GB on a 1000-executor job). Every merge — inside the
     combine tasks and on the driver — runs in sorted source-pid order, and
@@ -139,39 +152,26 @@ def _merge_collect(reduced: DataFrame, n_parts: int, merge_two) -> np.ndarray | 
     (Chan for centered blocks, plain sum for raw sums). Returns None when
     the input was empty.
     """
+    rdd = reduced.rdd
+    n_parts = rdd.getNumPartitions()
     if n_parts > TREE_COMBINE_THRESHOLD:
 
-        def combine(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            pairs: list[tuple[int, np.ndarray]] = []
-            for b in batches:
-                pids = b.column(0).to_pylist()
-                col = b.column(1)
-                for i in range(b.num_rows):
-                    pairs.append(
-                        (int(pids[i]), np.frombuffer(col[i].as_py(), dtype=np.float64))
-                    )
-            if pairs:
-                pairs.sort(key=lambda t: t[0])
-                acc = pairs[0][1].copy()
-                for _, cur in pairs[1:]:
-                    acc = merge_two(acc, cur)
-                yield _acc_batch(acc, pid=pairs[0][0])
+        def combine(rows):
+            merged = _merge_sorted(rows, merge_two)
+            if merged is not None:
+                yield merged[0], merged[1].tobytes()
 
-        reduced = reduced.repartition(8, F.col("pid")).mapInArrow(combine, _ACC_SCHEMA)
-
-    total = None
-    for row in sorted(reduced.collect(), key=lambda r: r.pid):
-        cur = np.frombuffer(row.acc, dtype=np.float64)
-        total = cur.copy() if total is None else merge_two(total, cur)
+        rdd = rdd.partitionBy(8, lambda pid: pid * 8 // n_parts).mapPartitions(combine)
+    merged = _merge_sorted(rdd.collect(), merge_two)
     if PLAN_LOG is not None:
         PLAN_LOG.append(reduced._jdf.queryExecution().executedPlan().toString())
-    return total
+    return None if merged is None else merged[1]
 
 
-def _scan(dfp: DataFrame, n_parts: int, mapper, merge_two, out_len: int) -> np.ndarray:
+def _scan(dfp: DataFrame, mapper, merge_two, out_len: int) -> np.ndarray:
     """Run one accumulator scan: ``mapper`` over ``dfp``'s Arrow batches,
     then the deterministic merge. An empty input gives zeros."""
-    total = _merge_collect(dfp.mapInArrow(mapper, _ACC_SCHEMA), n_parts, merge_two)
+    total = _merge_collect(dfp.mapInArrow(mapper, _ACC_SCHEMA), merge_two)
     return total if total is not None else np.zeros(out_len)
 
 
@@ -197,7 +197,7 @@ def arrow_reduce(
         if nonempty:
             yield _acc_batch(acc)
 
-    return _scan(df, df.rdd.getNumPartitions(), mapper, lambda a, b: a + b, out_len)
+    return _scan(df, mapper, lambda a, b: a + b, out_len)
 
 
 def _quantize(X: np.ndarray, quantize_f32: bool) -> np.ndarray:
@@ -482,7 +482,7 @@ def fused_foldwise_stats(
             [_fused_slot_merge(A[f], B[f], q) for f in range(n_folds)]
         ).ravel()
 
-    total = _scan(dfp, df.rdd.getNumPartitions(), mapper, merge_two, n_folds * slot)
+    total = _scan(dfp, mapper, merge_two, n_folds * slot)
     return total.reshape(n_folds, slot)
 
 
@@ -613,9 +613,7 @@ def _class_scan(
             parts.append(_fused_slot_merge(a[head + cls_len :], b[head + cls_len :], q))
         return np.concatenate(parts)
 
-    total = _scan(
-        dfp, df.rdd.getNumPartitions(), mapper, merge_two, head + cls_len + gram_len
-    )
+    total = _scan(dfp, mapper, merge_two, head + cls_len + gram_len)
     return (
         total[:p], total[p : 2 * p], float(total[2 * p]),
         total[head : head + cls_len].reshape(C_CLS, cls_block), total[head + cls_len :],
@@ -806,7 +804,7 @@ def moments_singlepass_pass(
         )
         return np.concatenate([[sw_m], st_m, a[1 + st_len :] + b[1 + st_len :]])
 
-    total = _scan(dfp, df.rdd.getNumPartitions(), mapper, merge_two, out_len)
+    total = _scan(dfp, mapper, merge_two, out_len)
 
     sw = float(total[0])
     st = total[1 : 1 + st_len]

@@ -16,11 +16,22 @@ Spark-side equivalents of the reference's preprocessing contracts:
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 NUMERIC_TYPES = {"double", "float", "int", "bigint", "smallint", "tinyint", "decimal"}
+
+_PLAN_TAGS = itertools.count()
+
+
+def private_plan(df: DataFrame) -> DataFrame:
+    """``df`` behind a constant filter with a fresh tag, which the optimizer
+    folds away. Spark keeps one cache entry per equal plan, so a library
+    persist/unpersist of ``df`` itself would drop a caller's cache of it."""
+    return df.where(F.lit(next(_PLAN_TAGS)).isNotNull())
 
 
 def assert_numeric(df: DataFrame, cols: list[str]) -> None:

@@ -46,6 +46,11 @@ DEFAULT_CONF = {
     # on the critical path of every job. 2000 keeps the working set resident.
     # Static conf: only applies when get_spark starts the context.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # Python call-site capture: PySpark wraps every functions/Column call to
+    # record its file:line, at about three py4j round trips and a stack walk
+    # per call; that was a quarter to two thirds of driver plan-building
+    # time. Off, Spark errors lose the Python "DataFrame query context".
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # shuffle/spill files on tmpfs: in this sandbox /tmp is a real disk and
     # becomes the scaling bottleneck at high task concurrency; on a real
     # cluster this is the usual fast local SSD setting

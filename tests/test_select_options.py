@@ -12,9 +12,18 @@ import pandas as pd
 import pytest
 
 from mrmr_spark.select import select_cefsplus, select_jmi, select_mrmr
+from mrmr_spark.select.autok import AutoKConfig, select_k_evaluate
 from mrmr_spark.select.cache import build_cache, select_cached
 
 COLS = ["x0", "x1", "x2"]
+
+
+def _auto(task="regression", group_col="x2", time_col=None, **cfg):
+    """select_mrmr(k="auto") under ``AutoKConfig(**cfg)``."""
+    return lambda df, c: select_mrmr(
+        df, COLS, "y", "auto", task=task, auto_k_config=AutoKConfig(**cfg),
+        group_col=group_col, time_col=time_col,
+    )
 
 
 def _pdf(nan_y: bool, seed: int = 5) -> pd.DataFrame:
@@ -36,8 +45,6 @@ def frames(spark):
 
 @pytest.fixture(scope="module")
 def nan_y_cache(spark):
-    # other data than frames["nan_y"]: Spark shares one cache entry between
-    # equal plans, so the entry points' own caches must not equal this one
     cache = build_cache(spark.createDataFrame(_pdf(True, seed=6)), COLS, subsample=None)
     yield cache
     cache.unpersist()
@@ -72,6 +79,26 @@ CASES = [
     ("cefsplus-nan-y", "nan_y",
      lambda df, c: select_cefsplus(df, COLS, "y", 2, subsample=None),
      "Non-finite values in y", None),
+    # a bad AutoKConfig is rejected before the selection path runs
+    ("autok-strategy", "ok", _auto(strategy="foo"), "Unknown strategy: 'foo'", 0),
+    ("autok-k-method", "ok", _auto(k_method="elbw"), "Unknown k_method: 'elbw'", 0),
+    ("autok-metric-name", "ok", _auto(strategy="group_cv", metric="rmsee"),
+     "Unknown metric: 'rmsee'", 0),
+    ("autok-metric-name-classification", "ok",
+     _auto(task="classification", strategy="group_cv", metric="foo"),
+     "Unknown metric: 'foo'", 0),
+    ("autok-metric-task", "ok", _auto(strategy="group_cv", metric="logloss"),
+     "metric='logloss' is invalid for task='regression'", 0),
+    ("autok-n-splits", "ok", _auto(strategy="group_cv", n_splits=1),
+     "n_splits >= 2", 0),
+    ("autok-val-frac", "ok", _auto(time_col="x2", val_frac=1.5), "0 < val_frac < 1", 0),
+    ("autok-group-col", "ok", _auto(group_col=None, strategy="group_cv"),
+     "requires group_col", 0),
+    ("autok-time-col", "ok", _auto(strategy="time_holdout"), "requires time_col", 0),
+    ("evaluate-metric-name", "ok",
+     lambda df, c: select_k_evaluate(
+         df, COLS, "y", AutoKConfig(strategy="group_cv", metric="rmsee"), group_col="x2"),
+     "Unknown metric: 'rmsee'", 0),
 ]
 
 
