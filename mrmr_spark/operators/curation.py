@@ -66,6 +66,27 @@ def word_ngrams(text_col: str | Column = "text", n: int = 3, split: str = " ") -
     )
 
 
+def _gram_values(text_col: str, n: int, split: str, hash_fn: str) -> Column:
+    """The per-row word ``n``-grams to key, as :func:`_gram_key` hashes
+    them. Under ``"xxhash64"`` each token is hashed ONCE and a gram is the
+    length-``n`` slice of the token-hash array (the token hash itself at
+    n=1) — no n-token strings are ever built (measured ~30% faster than
+    the string keys at n=13 × 160-token docs; the win grows with ``n``).
+    Otherwise (the SQL-reproducible ``"md5_60"`` family hashes strings)
+    a gram is its text: the tokens at n=1, else :func:`word_ngrams`."""
+    toks = F.split(F.col(text_col), split)
+    if hash_fn == "xxhash64":
+        return _hash_slices(F.transform(toks, lambda t: F.xxhash64(t)), n)
+    return toks if n == 1 else word_ngrams(text_col, n, split)
+
+
+def _gram_key(gram: str, hash_fn: str) -> list[Column]:
+    """The 128-bit gram fingerprint ``(g1, g2)``: two seeded 64-bit hashes
+    of the ``gram`` column under ``hash_fn``. Collision-free in practice
+    under either family."""
+    return [hash64(F.col(gram), seed=s, hash_fn=hash_fn).alias(f"g{s}") for s in (1, 2)]
+
+
 def _gram_fingerprints(
     df: DataFrame,
     cols: list[str],
@@ -75,32 +96,11 @@ def _gram_fingerprints(
     hash_fn: str,
 ) -> DataFrame:
     """``cols`` + the distinct per-row gram fingerprints ``(g1, g2)``,
-    one output row per (row, distinct gram). The key construction follows
-    ``hash_fn``:
-
-    ``"xxhash64"``: hash each token ONCE, gram key = two seeded xxhash64
-    over the length-``n`` slice of the token-hash array — no n-token
-    strings are ever built (measured ~30% faster than the string keys at
-    n=13 × 160-token docs; the win grows with ``n``).
-    ``"md5_60"`` (the SQL-reproducible family hashes strings): concat the
-    gram text and double-hash it, for oracle work and cross-checks. Both
-    carry 128 bits, so agreement is collision-free in practice either way.
-    """
-    if hash_fn != "xxhash64":
-        return df.select(
-            *cols,
-            F.explode(F.array_distinct(word_ngrams(text_col, n, split))).alias("_g"),
-        ).select(
-            *cols,
-            hash64(F.col("_g"), seed=1, hash_fn=hash_fn).alias("g1"),
-            hash64(F.col("_g"), seed=2, hash_fn=hash_fn).alias("g2"),
-        )
-    toks = F.split(F.col(text_col), split)
-    sliced = _hash_slices(F.transform(toks, lambda t: F.xxhash64(t)), n)
-    return df.select(*cols, F.explode(F.array_distinct(sliced)).alias("_hs")).select(
-        *cols,
-        F.xxhash64(F.lit(1), "_hs").alias("g1"),
-        F.xxhash64(F.lit(2), "_hs").alias("g2"),
+    one output row per (row, distinct gram); keys as :func:`_gram_values`
+    and :func:`_gram_key`."""
+    grams = F.array_distinct(_gram_values(text_col, n, split, hash_fn))
+    return df.select(*cols, F.explode(grams).alias("_hs")).select(
+        *cols, *_gram_key("_hs", hash_fn)
     )
 
 
@@ -324,44 +324,19 @@ def bigram_lm_counts(
     always keys the corpus the same way the model was keyed.
     """
 
-    def _cnt_str(gram_col: Column) -> DataFrame:
+    def _cnt(n: int) -> DataFrame:
         return (
-            reference.select(F.explode(gram_col).alias("_g"))
-            .select(
-                hash64(F.col("_g"), seed=1, hash_fn=hash_fn).alias("g1"),
-                hash64(F.col("_g"), seed=2, hash_fn=hash_fn).alias("g2"),
-            )
-            .groupBy("g1", "g2")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-
-    def _cnt_key(key_col: Column) -> DataFrame:
-        return (
-            reference.select(F.explode(key_col).alias("_k"))
-            .select(
-                F.xxhash64(F.lit(1), "_k").alias("g1"),
-                F.xxhash64(F.lit(2), "_k").alias("g2"),
-            )
+            reference.select(F.explode(_gram_values(text_col, n, split, hash_fn)).alias("_hs"))
+            .select(*_gram_key("_hs", hash_fn))
             .groupBy("g1", "g2")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
     if order < 2:
         raise ValueError("order must be >= 2")
-    if hash_fn != "xxhash64":
-        prefix_col = (
-            F.split(F.col(text_col), split)
-            if order == 2
-            else word_ngrams(text_col, order - 1, split)
-        )
-        unigrams = _cnt_str(prefix_col)
-        bigrams = _cnt_str(word_ngrams(text_col, order, split))
-        vocab = _cnt_str(F.split(F.col(text_col), split)) if order > 2 else unigrams
-    else:
-        th = F.transform(F.split(F.col(text_col), split), lambda t: F.xxhash64(t))
-        unigrams = _cnt_key(_hash_slices(th, order - 1))
-        bigrams = _cnt_key(_hash_slices(th, order))
-        vocab = _cnt_key(th) if order > 2 else unigrams
+    unigrams = _cnt(order - 1)
+    bigrams = _cnt(order)
+    vocab = _cnt(1) if order > 2 else unigrams
     return {
         "bigrams": bigrams,  # the order-n gram counts (name kept for API stability)
         "unigrams": unigrams,  # the (order-1)-gram PREFIX counts
@@ -1037,22 +1012,9 @@ def _positioned_gram_fingerprints(
     """(id, pos, g1, g2) — one row per gram OCCURRENCE (0-based token
     position, NOT distinct: substring dedup needs every position). Key
     families as :func:`_gram_fingerprints`."""
-    if hash_fn != "xxhash64":
-        return df.select(
-            id_col, F.posexplode(word_ngrams(text_col, n, split)).alias("pos", "_g")
-        ).select(
-            id_col,
-            "pos",
-            hash64(F.col("_g"), seed=1, hash_fn=hash_fn).alias("g1"),
-            hash64(F.col("_g"), seed=2, hash_fn=hash_fn).alias("g2"),
-        )
-    toks = F.split(F.col(text_col), split)
-    sliced = _hash_slices(F.transform(toks, lambda t: F.xxhash64(t)), n)
-    return df.select(id_col, F.posexplode(sliced).alias("pos", "_hs")).select(
-        id_col,
-        "pos",
-        F.xxhash64(F.lit(1), "_hs").alias("g1"),
-        F.xxhash64(F.lit(2), "_hs").alias("g2"),
+    grams = _gram_values(text_col, n, split, hash_fn)
+    return df.select(id_col, F.posexplode(grams).alias("pos", "_hs")).select(
+        id_col, "pos", *_gram_key("_hs", hash_fn)
     )
 
 

@@ -8,15 +8,20 @@ in place of the pandas matrix:
                          task="regression")
     result.names  # ranked selected features
 
-Spark lifecycle per call (SURVEY.md §3.1): pass 1 imputation/means scan,
-pass 2 centered-moment scan (→ relevance, driver), pass 3 Gram block
-reduction on the top_m candidates (→ redundancy matrix, driver), greedy loop
-on the driver. No shuffle anywhere except the aggregations' partial→final
-exchanges; communication is O(p) + O(top_m²) doubles.
+Spark lifecycle of classic mRMR and JMI-r2 per call (SURVEY.md §3.1): a
+classification target first collects its labels (one ``distinct()``). Up
+to ``FUSED_REGRESSION_MAX_P`` features, ONE fused Arrow scan yields
+imputation, relevance and the full redundancy matrix together; wider, an
+O(p) moments scan (→ imputation, relevance) is followed by a Gram
+reduction on the top_m candidates (→ redundancy). The greedy loop runs on
+the driver. No shuffle anywhere except the aggregations' partial→final
+exchanges; communication is O(p²) doubles on the fused scan and
+O(p) + O(top_m²) on the wide one.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -81,26 +86,123 @@ def _check_option(name: str, value, allowed: tuple) -> None:
         )
 
 
-def _maybe_subsample(df, subsample, seed, key_cols=None):
-    """Returns ``(df, sampled)`` — callers deciding persist need to know
-    whether the lineage is now a global sort-limit (re-executing it per
-    scan would double full-source reads for a ~subsample-row cache)."""
-    if subsample is None:
-        return df, False
-    n = df.count()
-    if n <= subsample:
-        return df, False
-    return deterministic_subsample(df, subsample, seed, key_cols), True
+def _prepare(df, feature_cols, target_col, weight_col, subsample, seed):
+    """Validate, normalize the weights, subsample, and keep only the
+    columns the scans read. Returns ``(df, wcol, sampled)``: callers
+    deciding persist need to know whether the lineage is now a global
+    sort-limit (re-executing it per scan would double full-source reads
+    for a ~subsample-row cache)."""
+    assert_numeric(df, feature_cols)
+    df, wcol = ensure_weight_column(df, weight_col)
+    sampled = False
+    if subsample is not None and df.count() > subsample:
+        df, sampled = deterministic_subsample(df, subsample, seed), True
+    keep = list(feature_cols) + [target_col] + ([wcol] if wcol else [])
+    return df.select(*keep), wcol, sampled
 
 
-#: widest feature set served by the fused regression fast path (one scan
-#: computes the FULL (p+1)² augmented Gram — relevance, redundancy and
-#: imputation in a single reduction). Communication is O(p²) doubles per
-#: partition, so the bound caps accumulator size; beyond it the general
-#: path prefilters candidates by relevance before the Gram. Round-3
-#: measurement at p=40 (rich FE mode, 1.09M rows): fused single-pass
-#: 2.97 s vs the general path's 9.78 s, identical selections.
+@contextmanager
+def _pinned(df, persist: bool):
+    """``df`` itself, or a private persisted copy released on exit."""
+    if not persist:
+        yield df
+        return
+    pinned = private_plan(df).persist()
+    try:
+        yield pinned
+    finally:
+        pinned.unpersist()
+
+
+#: widest feature set served by the fused scan (one scan computes the FULL
+#: (p+1)² augmented Gram — relevance, redundancy and imputation in a single
+#: reduction). Communication is O(p²) doubles per partition, so the bound
+#: caps accumulator size; beyond it the wide route prefilters candidates by
+#: relevance before the Gram. Round-3 measurement at p=40 (rich FE mode,
+#: 1.09M rows): fused single-pass 2.97 s vs the wide route's 9.78 s,
+#: identical selections.
 FUSED_REGRESSION_MAX_P = 64
+
+
+def _scan_stats(df, feature_cols, target_col, task, wcol, relevance, fused, quantize_f32):
+    """The statistics step. Classification first codes the labels
+    (``_y_code``, one ``distinct()``). Then ONE scan: the fused scan
+    (relevance, the full R and, for regression, r_y) or the O(p) moments
+    scan. ks/rf rescore relevance on top of whichever scan ran. Returns
+    ``(df, stats, labels)`` with ``df`` carrying the label codes."""
+    labels, y = None, target_col
+    if task == "classification":
+        df, labels = factorize_target(df, target_col, "_y_code")
+        y = "_y_code"
+        scan = rel_est.fused_classification_stats if fused else rel_est.f_classif_scores
+        stats = scan(df, feature_cols, y, len(labels), wcol, quantize_f32)
+    elif fused:
+        stats = rel_est.fused_regression_stats(
+            df, feature_cols, y, wcol, quantize_f32, True  # the one-scan plan
+        )
+    else:
+        stats = rel_est.f_regression_scores(df, feature_cols, y, wcol, quantize_f32)
+    if relevance == "ks":
+        stats["scores"] = rel_est.ks_classif_scores(
+            df, feature_cols, y, len(labels), stats["impute_means"], quantize_f32
+        )
+    elif relevance == "rf":
+        stats["scores"] = rel_est.rf_relevance_scores(
+            df, feature_cols, y, task, stats["impute_means"], wcol, quantize_f32
+        )
+    return df, stats, labels
+
+
+def _corr_select(
+    df, feature_cols, target_col, k, task, wcol, relevance, top_m, sampled,
+    quantize_f32, greedy, with_y=False,
+) -> SelectionResult:
+    """Relevance + |corr| redundancy selection (classic mRMR, JMI-r2): the
+    statistics step, the rel>0 / top_m prefilter, the candidates'
+    correlations, then ``greedy(R_cand, r_y_cand, rel_cand)`` on the
+    driver (``r_y_cand`` only ``with_y``).
+
+    The feature count alone picks the scan: up to FUSED_REGRESSION_MAX_P
+    the fused scan already holds R (and r_y); wider, the Gram runs on the
+    candidates after the moments scan. The input lineage executes once
+    per scan, plus once for the label ``distinct()``, and each run
+    re-reads the source. Persist when ks/rf re-read the matrix (ECDF melt,
+    forest fit), when the lineage would run ≥3 times, or when it is a
+    sampled global sort-limit that would run ≥2 times (two full-source
+    sorts to avoid caching ~subsample rows). Otherwise run no-persist: at
+    10¹²-row ``subsample=None`` a MEMORY_AND_DISK persist is exactly the
+    materialization the one-scan design avoids.
+    """
+    fused = len(feature_cols) <= FUSED_REGRESSION_MAX_P
+    runs = (task == "classification") + (1 if fused else 2)
+    persist = relevance != "f" or runs >= 3 or (sampled and runs >= 2)
+    with _pinned(df, persist) as df:
+        df, stats, labels = _scan_stats(
+            df, feature_cols, target_col, task, wcol, relevance, fused, quantize_f32
+        )
+        rel = stats["scores"]
+        cand = _prefilter(rel, k, top_m)
+        if cand.size == 0:
+            return SelectionResult([], np.empty(0, np.int64), rel, feature_cols, labels)
+        if fused:
+            R_cand = stats["R"][np.ix_(cand, cand)]
+            r_y = stats["r_y"][cand] if with_y else None
+        else:
+            y_kw = dict(y_col=target_col, y_wmean=stats["y_wmean"],
+                        y_wstd=stats["y_wstd"]) if with_y else {}
+            gram = kernels.gram_pass(
+                df, [feature_cols[i] for i in cand], wcol,
+                stats["impute_means"][cand], stats["wmeans"][cand],
+                stats["wstds"][cand], quantize_f32=quantize_f32,
+                clip=None,  # classic corr-with-last is unclipped (loops.py:42-55)
+                **y_kw,
+            )
+            R_cand, r_y = gram["R"], gram.get("r_y")
+    idx = cand[greedy(R_cand, r_y, rel[cand])]
+    return SelectionResult(
+        [feature_cols[i] for i in idx], idx, rel, feature_cols, labels,
+        extras={"R_cand": R_cand, "cand": cand},
+    )
 
 
 def select_mrmr(
@@ -121,7 +223,6 @@ def select_mrmr(
     auto_k_config=None,
     group_col: str | None = None,
     time_col: str | None = None,
-    single_pass: bool | None = None,
 ) -> SelectionResult:
     """Minimum-Redundancy-Maximum-Relevance over a Spark DataFrame.
 
@@ -196,164 +297,14 @@ def select_mrmr(
         finally:
             cache.unpersist()
 
-    assert_numeric(df, feature_cols)
-    df, wcol = ensure_weight_column(df, weight_col)
-    df, sampled = _maybe_subsample(df, subsample, seed)
-    keep = list(feature_cols) + [target_col] + ([wcol] if wcol else [])
-    df = df.select(*keep)
-
-    labels = None
-    if task == "regression" and len(feature_cols) <= FUSED_REGRESSION_MAX_P:
-        # fused fast path — ONE no-persist Arrow scan (indicator-augmented
-        # Gram + Chan merging) is the DEFAULT: round-3 re-measurement
-        # (after worker-BLAS pinning) shows it beats the persisted 2-scan
-        # path at EVERY scale tested — 1.7 s vs 4.2 s at 1.09M rows,
-        # 7.4 s vs 8.2 s at 8.7M, 3.0 s vs 9.8 s at p=40 — with identical
-        # selections (1e-11 statistic parity). It is also the only viable
-        # plan at 100 TB (the matrix is never materialized), so the fast
-        # plan and the scale plan are the same one; no sizing heuristic is
-        # needed. ``single_pass=False`` forces the persisted 2-scan path
-        # (kept as the parity reference; used automatically for
-        # relevance='rf', which re-reads the matrix for the forest fit).
-        use_sp = (single_pass is not False) and relevance != "rf"
-        if use_sp:
-            stats = rel_est.fused_regression_stats(
-                df, feature_cols, target_col, wcol, quantize_f32, single_pass=True
-            )
-        else:
-            df = private_plan(df).persist()
-            try:
-                stats = rel_est.fused_regression_stats(
-                    df, feature_cols, target_col, wcol, quantize_f32
-                )
-                if relevance == "rf":
-                    stats["scores"] = rel_est.rf_relevance_scores(
-                        df, feature_cols, target_col, task,
-                        stats["impute_means"], wcol, quantize_f32,
-                    )
-            finally:
-                df.unpersist()
-        rel = stats["scores"]
-        cand = _prefilter(rel, k, top_m)
-        if cand.size == 0:
-            return SelectionResult([], np.empty(0, np.int64), rel, feature_cols, labels)
-        R_cand = stats["R"][np.ix_(cand, cand)]
-        sel_local = loops.mrmr_greedy(
-            R_cand, rel[cand], k, use_quotient=(formula == "quotient"),
-            redundancy="abs_corr",
-        )
-        idx = cand[sel_local]
-        return SelectionResult(
-            [feature_cols[i] for i in idx], idx, rel, feature_cols, labels,
-            extras={"R_cand": R_cand, "cand": cand},
-        )
-
-    if (
-        task == "classification"
-        and relevance == "f"
-        and len(feature_cols) <= FUSED_REGRESSION_MAX_P
-        and single_pass is not False
-    ):
-        # fused classification fast path — the single-scan counterpart of
-        # the regression branch above: ONE no-persist Arrow scan yields the
-        # weighted-ANOVA F relevance AND the full |corr| redundancy
-        # matrix (kernels.fused_singlepass_class_stats). ks/rf fall
-        # through to the persisted general path (they re-read the
-        # matrix); ``single_pass=False`` forces it too (parity reference).
-        df, labels = factorize_target(df, target_col, "_y_code")
-        stats = rel_est.fused_classification_stats(
-            df, feature_cols, "_y_code", len(labels), wcol, quantize_f32
-        )
-        rel = stats["scores"]
-        cand = _prefilter(rel, k, top_m)
-        if cand.size == 0:
-            return SelectionResult([], np.empty(0, np.int64), rel, feature_cols, labels)
-        R_cand = stats["R"][np.ix_(cand, cand)]
-        sel_local = loops.mrmr_greedy(
-            R_cand, rel[cand], k, use_quotient=(formula == "quotient"),
-            redundancy="abs_corr",
-        )
-        idx = cand[sel_local]
-        return SelectionResult(
-            [feature_cols[i] for i in idx], idx, rel, feature_cols, labels,
-            extras={"R_cand": R_cand, "cand": cand},
-        )
-
-    # general path: relevance scans -> prefilter -> Gram on candidates;
-    # persist pays for itself once >= 3 executions read the lineage.
-    # Regression relevance='f' reads it exactly twice (ONE Arrow moments
-    # scan + the candidate Gram), so it runs no-persist like the fused
-    # fast paths — at 10¹²-row subsample=None a MEMORY_AND_DISK persist
-    # would be exactly the materialization the single-pass redesign exists
-    # to avoid. Classification ALWAYS executes the lineage a third time:
-    # factorize_target's label distinct() runs before the moments scan —
-    # cheap at a column-pruned parquet source but a full re-execution over
-    # window/join lineage — so classification persists (the distinct is
-    # then also the cache-populating pass). ks/rf genuinely re-read (ECDF
-    # melt / forest fits) and keep the persist too. The no-persist reasoning
-    # assumes df IS the source lineage: when a subsample was taken, df is a
-    # global sort-limit over the full input, and re-executing THAT per scan
-    # costs two full-source sorts to avoid caching ~subsample rows — so a
-    # sampled lineage always persists (the tradeoff inverts).
-    do_persist = relevance != "f" or task == "classification" or sampled
-    pinned = private_plan(df).persist() if do_persist else None
-    if pinned is not None:
-        df = pinned
-    if task == "classification":
-        # NOTE: factorize_target rebinds df to a derived frame; its scans
-        # still hit the persisted parent, but unpersist must target
-        # ``pinned``, not the rebound df (which was never persisted).
-        df, labels = factorize_target(df, target_col, "_y_code")
-        stats = rel_est.f_classif_scores(
-            df, feature_cols, "_y_code", len(labels), wcol, quantize_f32
-        )
-        if relevance == "ks":
-            stats["scores"] = rel_est.ks_classif_scores(
-                df, feature_cols, "_y_code", len(labels),
-                stats["impute_means"], quantize_f32,
-            )
-        elif relevance == "rf":
-            stats["scores"] = rel_est.rf_relevance_scores(
-                df, feature_cols, "_y_code", task,
-                stats["impute_means"], wcol, quantize_f32,
-            )
-    else:
-        stats = rel_est.f_regression_scores(
-            df, feature_cols, target_col, wcol, quantize_f32
-        )
-        if relevance == "rf":
-            stats["scores"] = rel_est.rf_relevance_scores(
-                df, feature_cols, target_col, task,
-                stats["impute_means"], wcol, quantize_f32,
-            )
-
-    rel = stats["scores"]
-    cand = _prefilter(rel, k, top_m)
-    if cand.size == 0:
-        if pinned is not None:
-            pinned.unpersist()
-        return SelectionResult([], np.empty(0, np.int64), rel, feature_cols, labels)
-
-    cand_cols = [feature_cols[i] for i in cand]
-    gram = kernels.gram_pass(
-        df,
-        cand_cols,
-        wcol,
-        stats["impute_means"][cand],
-        stats["wmeans"][cand],
-        stats["wstds"][cand],
-        quantize_f32=quantize_f32,
-        clip=None,  # classic corr-with-last is unclipped (loops.py:42-55)
-    )
-    sel_local = loops.mrmr_greedy(
-        gram["R"], rel[cand], k, use_quotient=(formula == "quotient"), redundancy="abs_corr"
-    )
-    if pinned is not None:
-        pinned.unpersist()
-    idx = cand[sel_local]
-    return SelectionResult(
-        [feature_cols[i] for i in idx], idx, rel, feature_cols, labels,
-        extras={"R_cand": gram["R"], "cand": cand},
+    df, wcol, sampled = _prepare(df, feature_cols, target_col, weight_col, subsample, seed)
+    use_quotient = formula == "quotient"
+    return _corr_select(
+        df, feature_cols, target_col, k, task, wcol, relevance, top_m, sampled,
+        quantize_f32,
+        lambda R, r_y, rel: loops.mrmr_greedy(
+            R, rel, k, use_quotient=use_quotient, redundancy="abs_corr"
+        ),
     )
 
 
@@ -393,87 +344,39 @@ def select_jmi(
     if estimator in ("r2", "ksg") and task == "classification":
         raise ValueError(f"estimator='{estimator}' is regression-only; use 'binned'.")
 
-    assert_numeric(df, feature_cols)
-    df, wcol = ensure_weight_column(df, weight_col)
-    df, sampled = _maybe_subsample(df, subsample, seed)
-    keep = list(feature_cols) + [target_col] + ([wcol] if wcol else [])
-    df = df.select(*keep)
+    df, wcol, sampled = _prepare(df, feature_cols, target_col, weight_col, subsample, seed)
+    use_min = aggregation == "min"
+    if estimator == "r2":
+        return _corr_select(
+            df, feature_cols, target_col, k, task, wcol, "f", top_m, sampled,
+            quantize_f32,
+            lambda R, r_y, rel: loops.jmi_greedy_r2(R, r_y, rel, k, use_min=use_min),
+            with_y=True,
+        )
 
-    if estimator == "r2" and len(feature_cols) <= FUSED_REGRESSION_MAX_P:
-        # same default as select_mrmr: one no-persist Arrow scan
-        stats = rel_est.fused_regression_stats(
-            df, feature_cols, target_col, wcol, quantize_f32, single_pass=True
+    # binned and ksg read the moments scan's x_ss_unw and need no R; they
+    # re-read the matrix (edge/code/histogram scans, driver collect), so
+    # the frame is always persisted
+    with _pinned(df, True) as df:
+        df, stats, labels = _scan_stats(
+            df, feature_cols, target_col, task, wcol, "f", False, quantize_f32
         )
         rel = stats["scores"]
         cand = _prefilter(rel, k, top_m)
         if cand.size == 0:
-            return SelectionResult([], np.empty(0, np.int64), rel, feature_cols, None)
-        sel_local = loops.jmi_greedy_r2(
-            stats["R"][np.ix_(cand, cand)], stats["r_y"][cand], rel[cand], k,
-            use_min=(aggregation == "min"),
-        )
-        idx = cand[sel_local]
-        return SelectionResult([feature_cols[i] for i in idx], idx, rel, feature_cols, None)
-
-    # r2 beyond the fused width reads the matrix exactly twice (moments scan
-    # + Gram-with-y on the candidates) — below the >=3-scan persist
-    # threshold, so it runs no-persist like select_mrmr's f-path. binned and
-    # ksg genuinely re-read (edge/code/histogram scans, driver collect), and
-    # a subsampled lineage (global sort-limit) persists — see select_mrmr.
-    do_persist = estimator != "r2" or sampled
-    pinned = private_plan(df).persist() if do_persist else None
-    if pinned is not None:
-        df = pinned
-    labels = None
-    if task == "classification":
-        df, labels = factorize_target(df, target_col, "_y_code")
-        stats = rel_est.f_classif_scores(
-            df, feature_cols, "_y_code", len(labels), wcol, quantize_f32
-        )
-    else:
-        stats = rel_est.f_regression_scores(
-            df, feature_cols, target_col, wcol, quantize_f32
-        )
-
-    rel = stats["scores"]
-    cand = _prefilter(rel, k, top_m)
-    if cand.size == 0:
-        if pinned is not None:
-            pinned.unpersist()
-        return SelectionResult([], np.empty(0, np.int64), rel, feature_cols, labels)
-    cand_cols = [feature_cols[i] for i in cand]
-
-    if estimator == "r2":
-        gram = kernels.gram_pass(
-            df,
-            cand_cols,
-            wcol,
-            stats["impute_means"][cand],
-            stats["wmeans"][cand],
-            stats["wstds"][cand],
-            y_col=target_col,
-            y_wmean=stats["y_wmean"],
-            y_wstd=stats["y_wstd"],
-            quantize_f32=quantize_f32,
-            clip=None,
-        )
-        sel_local = loops.jmi_greedy_r2(
-            gram["R"], gram["r_y"], rel[cand], k, use_min=(aggregation == "min")
-        )
-    elif estimator == "binned":
-        sel_local = _jmi_binned(
-            df, cand_cols, target_col, task, wcol, stats, cand, rel, k,
-            aggregation, n_bins, quantize_f32, labels,
-            distributed=(subsample is None),
-        )
-    else:
-        sel_local = _jmi_ksg(
-            df, cand_cols, target_col, stats, cand, rel, k, aggregation,
-            quantize_f32, ksg_subsample, seed,
-        )
-
-    if pinned is not None:
-        pinned.unpersist()
+            return SelectionResult([], np.empty(0, np.int64), rel, feature_cols, labels)
+        cand_cols = [feature_cols[i] for i in cand]
+        if estimator == "binned":
+            sel_local = _jmi_binned(
+                df, cand_cols, target_col, task, wcol, stats, cand, rel, k,
+                aggregation, n_bins, quantize_f32, labels,
+                distributed=(subsample is None),
+            )
+        else:
+            sel_local = _jmi_ksg(
+                df, cand_cols, target_col, stats, cand, rel, k, aggregation,
+                quantize_f32, ksg_subsample, seed,
+            )
     idx = cand[sel_local]
     return SelectionResult([feature_cols[i] for i in idx], idx, rel, feature_cols, labels)
 
@@ -571,8 +474,6 @@ def _jmi_ksg(
 ):
     """Collect the imputed candidate matrix (ksg_subsample-bounded) and run
     the KSG greedy loop on the driver (loops.jmi_greedy_ksg)."""
-    from mrmr_spark.select.preprocess import deterministic_subsample
-
     imput = stats["impute_means"][cand]
     sel = [
         _imputed_expr(c, imput[i], quantize_f32).alias(f"_i_{c}")

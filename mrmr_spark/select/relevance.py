@@ -95,13 +95,15 @@ def f_regression_scores(
     )
     _require_finite_y(p1["y_nonfinite"])
     sw = p1["sw"]
+    with np.errstate(invalid="ignore", divide="ignore"):  # sw=0 nan-degrade
+        y_wmean = p1["wy"] / sw
     return {
         "scores": _f_scores(p1["x_ss"], p1["xy_cov"], p1["y_ss"], sw),
         "sw": sw,
         "wmeans": p1["col_wmeans"],
         "wstds": _weighted_stds(p1["x_ss"], sw),
         "impute_means": p1["impute_means"],
-        "y_wmean": p1["wy"] / sw,
+        "y_wmean": y_wmean,
         "y_wstd": float(_weighted_stds(p1["y_ss"], sw)),
         "x_ss_unw": p1["x_ss_unw"],
         "n": p1["n"],
@@ -126,13 +128,13 @@ def fused_regression_stats(
 
     - ``single_pass=False``: pass 1 = the O(p) Arrow moments scan
       (kernels.moments_singlepass_pass), pass 2 = the Arrow centered Gram
-      scan (kernels.gram_pass); the caller persists the matrix between
-      passes.
+      scan (kernels.gram_pass) — the two-scan parity reference; the
+      selection API does not run it.
     - ``single_pass=True``: ONE ``mapInArrow`` scan — the augmented
       accumulator of ``kernels.fused_foldwise_stats`` with a single
-      literal fold. NO persist needed; the caller should NOT cache. Halves
-      memory traffic: the columnar cache encode it avoids is the dominant
-      phase of the e2e pipeline at scale.
+      literal fold, the plan ``select_mrmr``/``select_jmi`` run. NO
+      persist needed. Halves memory traffic: the columnar cache encode it
+      avoids is the dominant phase of the e2e pipeline at scale.
     """
     if single_pass:
         accs = kernels.fused_foldwise_stats(
@@ -197,11 +199,13 @@ def fused_classification_stats(
     weight_col: str | None = None,
     quantize_f32: bool = True,
 ) -> dict:
-    """Fused classification fast path: ONE no-persist Arrow scan
+    """Fused classification statistics: ONE Arrow scan
     (kernels.fused_singlepass_class_stats) yields the weighted-ANOVA F
     relevance AND the full |corr| redundancy matrix — the classification
-    counterpart of ``fused_regression_stats(single_pass=True)``. Statistic
-    parity with the persisted multi-pass path at float64 rounding."""
+    counterpart of ``fused_regression_stats(single_pass=True)``, run by
+    ``select_mrmr`` up to ``FUSED_REGRESSION_MAX_P`` features. Statistic
+    parity at float64 rounding with the wide route's class-moments scan
+    (:func:`f_classif_scores`) plus candidate Gram."""
     st = kernels.fused_singlepass_class_stats(
         df, feature_cols, ycode_col, n_classes, weight_col, quantize_f32
     )

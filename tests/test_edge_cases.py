@@ -25,24 +25,26 @@ def test_constant_and_allnan_features_skipped(edge_df):
     assert select_mrmr(edge_df, ["x0", "x1", "allnan"], "y", 3).names == ["x0", "x1"]
 
 
-def test_nonfinite_regression_target_raises_on_both_backends(edge_df):
+def test_nonfinite_regression_target_raises_on_both_backends(edge_df, monkeypatch):
     """Reference contract (_preprocess.py:199-201): non-finite regression y
-    raises. The single-pass and two-pass plans must enforce it identically
-    — without the check, a non-finite y NaN-poisons every score (silently
-    empty selection)."""
+    raises. The fused route and the wide route (the fused bound at 0) must
+    enforce it identically — without the check, a non-finite y
+    NaN-poisons every score (silently empty selection)."""
     from pyspark.sql import functions as F
+
+    from mrmr_spark.select import api
 
     cols = ["x0", "x1", "x2"]
     for bad in (None, float("nan")):
         df_bad = edge_df.withColumn(
             "yb", F.when(F.col("x1") > 1.5, F.lit(bad)).otherwise(F.col("y"))
         )
-        for sp in (True, False):
+        for max_p in (api.FUSED_REGRESSION_MAX_P, 0):
+            monkeypatch.setattr(api, "FUSED_REGRESSION_MAX_P", max_p)
             with pytest.raises(ValueError, match="Non-finite values in y"):
                 select_mrmr(df_bad, cols, "yb", 2, task="regression",
-                            single_pass=sp, subsample=None)
-    # and at a wider p=30 on the two-pass plan (Arrow moments scan +
-    # Gram)
+                            subsample=None)
+    # and at a wider p=30 on the wide route (Arrow moments scan + Gram)
     rng = np.random.default_rng(5)
     n, p = 150, 30
     wide = pd.DataFrame(rng.normal(size=(n, p)), columns=[f"w{j}" for j in range(p)])
@@ -50,9 +52,9 @@ def test_nonfinite_regression_target_raises_on_both_backends(edge_df):
     sdfw = edge_df.sparkSession.createDataFrame(wide)
     with pytest.raises(ValueError, match="Non-finite values in y"):
         select_mrmr(sdfw, [f"w{j}" for j in range(p)], "yb", 2,
-                    task="regression", single_pass=False, subsample=None)
-    assert select_mrmr(edge_df, ["x0", "allnan"], "y", 2,
-                       single_pass=True).names == ["x0"]
+                    task="regression", subsample=None)
+    monkeypatch.undo()
+    assert select_mrmr(edge_df, ["x0", "allnan"], "y", 2).names == ["x0"]
 
 
 def test_nonfinite_classification_target_raises(edge_df):
@@ -76,10 +78,14 @@ def test_nonfinite_classification_target_raises(edge_df):
                 cols, "yc", 2, task="classification", subsample=None)
 
 
-def test_degenerate_frames_return_empty(edge_df):
+def test_degenerate_frames_return_empty(edge_df, monkeypatch):
+    from mrmr_spark.select import api
+
     empty = edge_df.where("y > 1e18")
     assert select_mrmr(empty, ["x0", "x1"], "y", 2).names == []
-    assert select_mrmr(empty, ["x0", "x1"], "y", 2, single_pass=True).names == []
+    with monkeypatch.context() as m:  # the wide route
+        m.setattr(api, "FUSED_REGRESSION_MAX_P", 0)
+        assert select_mrmr(empty, ["x0", "x1"], "y", 2).names == []
     assert select_jmi(empty, ["x0", "x1"], "y", 2).names == []
     assert select_mrmr(edge_df.limit(1), ["x0", "x1"], "y", 2).names == []
     assert select_mrmr(edge_df, ["x0", "x1"], "y", 0).names == []

@@ -72,6 +72,10 @@ CASES = [
     # factorize_target's label distinct(), then the fused scan
     ("mrmr-classification",
      lambda df: select_mrmr(df, COLS, "yc", 2, task="classification", subsample=None), 2),
+    # the row count that decides to subsample, then one sort-limit into the
+    # persist: the label distinct() and the fused scan read the cached sample
+    ("mrmr-classification-sampled",
+     lambda df: select_mrmr(df, COLS, "yc", 2, task="classification", subsample=N // 2), 2),
     # the O(p) moments scan, then the Gram on the candidates (no persist)
     ("mrmr-general-wide",
      lambda df: select_mrmr(df, WIDE, "y", 2, subsample=None), 2),

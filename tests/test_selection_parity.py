@@ -499,30 +499,34 @@ def test_jmi_binned_distributed_matches_collected(fixture_small):
 
 
 def test_single_pass_default_and_forced_2scan(fixture_small, monkeypatch):
-    """The no-persist single-pass backend is the DEFAULT plan for the fused
-    regression path (round-3 measurement: faster at every scale tested AND
-    the only viable plan at 100 TB); ``single_pass=False`` forces the
-    persisted 2-scan parity reference — and both select identically."""
+    """The no-persist single-pass scan is the plan up to
+    FUSED_REGRESSION_MAX_P features (round-3 measurement: faster at every
+    scale tested AND the only viable plan at 100 TB); with the bound at 0
+    the same call takes the wide two-scan route (moments scan + candidate
+    Gram) — and both select identically."""
+    import inspect
+
     from mrmr_spark.select import api as api_mod
     from mrmr_spark.select import relevance as rel_mod
 
     pdf, sdf, cols = fixture_small
 
-    seen = {}
+    seen = []
     orig = rel_mod.fused_regression_stats
 
     def spy(*a, **kw):
-        seen["single_pass"] = kw.get("single_pass", False)
+        bound = inspect.signature(orig).bind(*a, **kw)
+        seen.append(bound.arguments.get("single_pass", False))
         return orig(*a, **kw)
 
     monkeypatch.setattr(api_mod.rel_est, "fused_regression_stats", spy)
 
     r_sp = select_mrmr(sdf, cols, "target_reg", 3, task="regression")
-    assert seen["single_pass"] is True  # default = one no-persist Arrow scan
+    assert seen == [True]  # default = one no-persist Arrow scan
 
-    r_2s = select_mrmr(sdf, cols, "target_reg", 3, task="regression",
-                       single_pass=False)
-    assert seen["single_pass"] is False
+    monkeypatch.setattr(api_mod, "FUSED_REGRESSION_MAX_P", 0)
+    r_2s = select_mrmr(sdf, cols, "target_reg", 3, task="regression")
+    assert seen == [True]  # the wide route runs no fused scan
     assert r_sp.names == r_2s.names
 
 
@@ -847,7 +851,7 @@ def test_fused_kernels_tree_combine_many_partitions(spark):
     folded.unpersist()
 
 
-def test_fused_classification_matches_multipass(spark):
+def test_fused_classification_matches_multipass(spark, monkeypatch):
     """The one-scan classification backend (augmented Gram + per-class
     imputed-moment algebra) must reproduce the persisted multi-pass path's
     ANOVA-F scores, standardization stats and correlation matrix — under
@@ -888,18 +892,23 @@ def test_fused_classification_matches_multipass(spark):
         np.testing.assert_allclose(fused["R"], gram["R"], rtol=1e-9, atol=1e-12)
     assert np.argmax(fused["scores"]) == 0  # the planted signal wins
 
-    # end-to-end: the fused default and the forced multi-pass path select
+    # end-to-end: the fused default and the wide route (bound at 0) select
     # identically through select_mrmr
+    from mrmr_spark.select import api as api_mod
+
     a = select_mrmr(sdf, cols, "y", 3, task="classification")
-    b = select_mrmr(sdf, cols, "y", 3, task="classification", single_pass=False)
+    monkeypatch.setattr(api_mod, "FUSED_REGRESSION_MAX_P", 0)
+    b = select_mrmr(sdf, cols, "y", 3, task="classification")
     assert a.names == b.names and a.labels == b.labels
 
 
-def test_single_pass_backend_matches_two_pass(spark):
-    """The no-persist single-Arrow-scan backend (indicator-augmented Gram +
-    Chan merge + affine imputation algebra) must reproduce the persisted
-    2-scan JVM backend's statistics and selections — including under NaN/inf
+def test_single_pass_backend_matches_two_pass(spark, monkeypatch):
+    """The no-persist single-Arrow-scan plan (indicator-augmented Gram +
+    Chan merge + affine imputation algebra) must reproduce the two-scan
+    plan's statistics (Arrow moments scan + Gram) and, through
+    select_mrmr, the wide route's selections — including under NaN/inf
     contamination and weights."""
+    from mrmr_spark.select import api as api_mod
     from mrmr_spark.select.relevance import fused_regression_stats
 
     rng = np.random.default_rng(11)
@@ -925,8 +934,8 @@ def test_single_pass_backend_matches_two_pass(spark):
         np.testing.assert_allclose(s1["R"], s2["R"], rtol=1e-7, atol=1e-10)
 
     a = select_mrmr(sdf, cols, "y", 5, task="regression", subsample=None)
-    b = select_mrmr(sdf, cols, "y", 5, task="regression", subsample=None,
-                    single_pass=True)
+    monkeypatch.setattr(api_mod, "FUSED_REGRESSION_MAX_P", 0)
+    b = select_mrmr(sdf, cols, "y", 5, task="regression", subsample=None)
     assert a.names == b.names
 
 
